@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pos_api_pipeline_spark.llm.dedup import (
     DEFAULT_MAX_BUCKET,
@@ -25,6 +26,7 @@ from pos_api_pipeline_spark.llm.dedup import (
     _resolve_collapse,
     _resolve_collapse_stats,
 )
+from pos_api_pipeline_spark.session import local_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -315,9 +317,10 @@ def kmeans_centroids(
     rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    return spark.createDataFrame(
-        rows, "centroid_id int, cvec_c array<double>"
-    )
+    return local_frame(spark, rows, T.StructType([
+        T.StructField("centroid_id", T.IntegerType()),
+        T.StructField("cvec_c", T.ArrayType(T.DoubleType())),
+    ]))
 
 
 def deterministic_centroids(
@@ -1713,9 +1716,11 @@ def pq_codebooks_kmeans(
             key=lambda c: (sum(x * x for x in c), c[0] if c else 0.0),
         )
         rows.extend((s, i, c) for i, c in enumerate(centers))
-    return spark.createDataFrame(
-        rows, "subspace int, code int, cb_slice array<double>"
-    )
+    return local_frame(spark, rows, T.StructType([
+        T.StructField("subspace", T.IntegerType()),
+        T.StructField("code", T.IntegerType()),
+        T.StructField("cb_slice", T.ArrayType(T.DoubleType())),
+    ]))
 
 
 def pq_quantization_error(

@@ -4,8 +4,12 @@ The three entry points of the reference, rebuilt Spark-first:
 
 - ``daily_incremental_run`` (reference: main.py:24-75): watermark →
   fetch → transform → merge-upsert → watermark advance. The transform
-  chain is one lazy Catalyst plan; the only actions are the lake
-  write and the tiny watermark max().
+  chain is one lazy Catalyst plan. A non-empty tick runs four actions
+  over the batch: the ``isEmpty`` check, the lake merge write, the
+  watermark ``max()`` and the final ``count()`` of curated rows (plus
+  the items SCD2 merge when an items fetcher is given); an empty batch
+  stops after the first. The batch is a ``LocalRelation``, so none of
+  them starts a Python worker.
 - ``monthly_report_data`` (reference:
   reporting/monthly_report.py:634-692): two-month partition-pruned
   scan → window dedup → clean → combo explode → analytics fan-out

@@ -498,8 +498,9 @@ def q_weekday_purchases_preserved(spark, sf_dir):
         .agg(F.countDistinct("user_id").alias("unique_users"))
     )
     # Day dimension built JVM-side (spark.range + element_at): a
-    # Python createDataFrame here costs seconds of Arrow round-trip
-    # per call and shows up in the bench.
+    # createDataFrame over a Python list here is a PythonRDD whose
+    # slices rerun in Python workers on every action, seconds per call
+    # in the bench.
     name_arr = F.array(*[F.lit(d) for d in WEEKDAY_ORDER])
     dim = spark.range(1, 8).select(
         F.element_at(name_arr, F.col("id").cast("int")).alias("day_of_week"),

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pos_api_pipeline_spark.llm import dedup as D
 from pos_api_pipeline_spark.llm import similarity as S
@@ -24,6 +25,7 @@ from pos_api_pipeline_spark.plans.registry import (
     _t,
     register,
 )
+from pos_api_pipeline_spark.session import local_frame
 
 # DuckDB token-array fragment shared by several oracles (whitespace
 # split with empties removed — mirrors llm.text.tokens).
@@ -3010,9 +3012,13 @@ def q_bpe_learned_merges(spark, sf_dir):
     rows = [
         (i + 1, l, r, l + r, t) for i, (l, r, t) in enumerate(merges)
     ]
-    return spark.createDataFrame(
-        rows, "rank int, left string, right string, merged string, total bigint"
-    )
+    return local_frame(spark, rows, T.StructType([
+        T.StructField("rank", T.IntegerType()),
+        T.StructField("left", T.StringType()),
+        T.StructField("right", T.StringType()),
+        T.StructField("merged", T.StringType()),
+        T.StructField("total", T.LongType()),
+    ]))
 
 
 # ---------------------------------------------------------------------------

@@ -11,8 +11,10 @@ session timezone pinned to UTC so results are oracle-comparable
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -70,6 +72,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: StructType) -> DataFrame:
+    """Land driver-built rows (dicts, or tuples in schema order) as an
+    Arrow-backed ``LocalRelation``.
+
+    ``spark.createDataFrame`` on a Python list parallelizes it into
+    ``defaultParallelism`` slices behind a PythonRDD, so every action
+    over the frame reruns that many Python-worker tasks. An Arrow table
+    below ``spark.sql.execution.arrow.localRelationThreshold`` becomes
+    a JVM ``LocalRelation`` instead: Catalyst folds filters and
+    projections into it and no action starts a Python worker.
+
+    Each row still goes through the type verifier the list path runs,
+    because pyarrow alone widens silently (an int into a double field)
+    where the declared schema must reject.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    records = []
+    for row in rows:
+        verify(row)
+        records.append(row if isinstance(row, dict) else dict(zip(schema.names, row)))
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def read_parquet(spark: SparkSession, path: str):

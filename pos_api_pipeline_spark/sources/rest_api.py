@@ -5,7 +5,18 @@ pagination and client-side watermark filtering (reference:
 etl/extract.py:44-167, 299-344). The Spark-first design keeps the
 HTTP layer thin and injectable (``fetch_page``), lands rows into a
 DataFrame under the declared nested schema, and pushes the watermark
-comparison into the plan (Catalyst folds it into the scan filter).
+comparison into the plan.
+
+A fetched page lands as one Arrow table, which Spark turns into a JVM
+``LocalRelation`` (``session.local_frame``). A page is a few hundred
+receipts, far below ``spark.sql.execution.arrow.localRelationThreshold``.
+Catalyst folds the watermark filter into the relation, and the tick's
+actions over the batch (the empty check, the lake merge, the watermark
+max) run as JVM tasks without a Python worker. Handing the page to
+``createDataFrame`` as a Python list instead gives a PythonRDD split into
+``defaultParallelism`` slices that every action re-runs in Python
+workers. Every row still passes the schema's type verifier first, so
+schema drift fails loudly at the boundary.
 
 At real scale the idiomatic upgrade is landing raw JSON to object
 storage and ``spark.read.schema(...).json`` (see json_source), or a
@@ -23,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark.schemas import ITEM_SCHEMA, RECEIPT_SCHEMA
+from pos_api_pipeline_spark.session import local_frame
 
 # fetch_page(cursor) -> (rows, next_cursor | None)
 FetchPage = Callable[[str | None], tuple[list[dict], str | None]]
@@ -51,11 +63,11 @@ def paginate(
 def receipts_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Materialize fetched receipt documents under the declared nested
     schema (no inference — schema drift fails loudly at the boundary)."""
-    return spark.createDataFrame(rows, RECEIPT_SCHEMA)
+    return local_frame(spark, rows, RECEIPT_SCHEMA)
 
 
 def items_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    return spark.createDataFrame(rows, ITEM_SCHEMA)
+    return local_frame(spark, rows, ITEM_SCHEMA)
 
 
 def fetch_all_historical(

@@ -19,6 +19,8 @@ import zoneinfo
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pos_api_pipeline_spark import lake
+
 STATE_KEY = "last_successful_extraction_timestamp"
 
 
@@ -63,10 +65,12 @@ def watermark_from_lake(spark, lake_path: str) -> str | None:
     (reference: etl/extract.py:254-296 reads only the
     lexicographically-latest partition; with Hive-partitioned data
     Catalyst prunes to the same files from a max() over the partition
-    columns, so we express the intent directly)."""
-    try:
-        df = spark.read.parquet(lake_path)
-    except Exception:  # noqa: BLE001 — empty lake
+    columns, so we express the intent directly).
+
+    Only a missing lake means "no watermark"; any read error on an
+    existing one (corrupt footer, permissions) propagates."""
+    if not lake.lake_exists(spark, lake_path):
         return None
+    df = spark.read.parquet(lake_path)
     row = df.agg(F.max("shifted_time").alias("wm")).collect()[0]
     return row.wm.strftime("%Y-%m-%dT%H:%M:%S.000Z") if row.wm else None

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark import lake
+from pos_api_pipeline_spark.plans import pipelines
 from pos_api_pipeline_spark.sources import json_source, rest_api, state
 
 
@@ -108,6 +109,48 @@ def test_rest_incremental_watermark_filter(spark):
         spark, fetch, last_timestamp="2025-07-01T12:00:00Z"
     )
     assert [r.receipt_number for r in out.collect()] == ["1-1"]
+    # The page is a JVM LocalRelation, not a PythonRDD whose slices
+    # rerun in Python workers on every action.
+    items = rest_api.items_to_df(
+        spark, [{"id": "i1", "item_name": "Burger", "price": 50.0}]
+    )
+    for df in (out, items):
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in analyzed
+        assert "LogicalRDD" not in analyzed
+
+
+@pytest.mark.parametrize(
+    "line_items",
+    [
+        [{"item_name": "Burger", "cost": 20}],  # int where double is declared
+        [{"item_name": "Burger", "price": "50.0"}],
+        "Burger",  # not a list
+    ],
+)
+def test_rest_page_schema_drift_raises(spark, line_items):
+    row = {"receipt_number": "1-1", "created_at": "2025-07-02T00:00:00Z",
+           "line_items": line_items}
+    with pytest.raises(TypeError):
+        rest_api.receipts_to_df(spark, [row])
+
+
+def test_rest_empty_page_leaves_watermark(spark, tmp_path):
+    def fetch(cursor):
+        return [], None
+
+    empty = rest_api.fetch_incremental(spark, fetch, "2025-07-01T00:00:00Z")
+    assert empty.isEmpty()
+    assert empty.schema == rest_api.RECEIPT_SCHEMA
+
+    state_file = tmp_path / "state.json"
+    state_file.write_text(json.dumps({state.STATE_KEY: "2025-07-01T00:00:00Z"}))
+    before = (state_file.read_text(), state_file.stat().st_mtime_ns)
+    lake_path = str(tmp_path / "lake")
+    status = pipelines.daily_incremental_run(spark, fetch, lake_path, str(state_file))
+    assert status == {"rows": 0, "watermark": "2025-07-01T00:00:00Z"}
+    assert (state_file.read_text(), state_file.stat().st_mtime_ns) == before
+    assert not os.path.exists(lake_path)
 
 
 def test_rest_pagination(spark):
@@ -213,6 +256,12 @@ def test_watermark_from_lake(spark, tmp_path):
     lake.write_partitioned(df, path)
     assert state.watermark_from_lake(spark, path) == "2025-07-21T10:00:00.000Z"
     assert state.watermark_from_lake(spark, str(tmp_path / "missing")) is None
+    # An existing but unreadable lake is an error, not "no watermark".
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="(?i)footer"):
+        state.watermark_from_lake(spark, str(corrupt))
 
 
 def test_csv_and_single_parquet_sinks(spark, tmp_path):
