@@ -789,7 +789,6 @@ def repeated_substring_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_docs: int = 2,
-    strategy: str = "window",
 ) -> DataFrame:
     """Cross-document repeated-substring detection at the k-token
     grain — the fixed-length form of Lee et al. 2022's exact
@@ -800,55 +799,39 @@ def repeated_substring_spans(
     a 200-token license block shared by thousands of pages comes back
     as one span per page, not 193 window hits.
 
-    Shape (``strategy="window"``, default): one positional gram
-    explode (linear in corpus tokens), then document frequency as
-    window algebra over the hash partition — dense_rank by id, max
-    over the partition — so the gram tree is evaluated ONCE and the
-    corpus makes exactly one shuffle (on the 60-bit gram hash) before
-    the per-doc island merge. The join twin (``strategy="join"``:
-    groupBy hash → semi join back) evaluates the tokenize+hash tree
-    twice because lambda-bearing plans defeat exchange reuse —
-    measured 1.9× slower at sf0.1 — but remains available because an
-    AQE skew split can break up a pathologically hot JOIN partition,
-    while a WINDOW partition (one gram in millions of docs) must
-    spill through a single task. The only quadratic-looking step —
-    span growth — is arithmetic inside the per-doc window, never a
-    self-join. A suffix array finds variable-length maximal repeats;
-    at cluster scale the fixed-k windowed form is the standard
-    approximation (tune k to the minimum span you care about).
+    Shape: one positional gram explode (linear in corpus tokens),
+    then document frequency as window algebra over the hash
+    partition — dense_rank by id, max over the partition — so the
+    gram tree is evaluated ONCE and the corpus makes exactly one
+    shuffle (on the 60-bit gram hash) before the per-doc island
+    merge. Measured 1.9× faster at sf0.1 than a groupBy-hash + semi
+    join back, which evaluates the tokenize+hash tree twice because
+    lambda-bearing plans defeat exchange reuse. The only
+    quadratic-looking step — span growth — is arithmetic inside the
+    per-doc window, never a self-join. A suffix array finds
+    variable-length maximal repeats; at cluster scale the fixed-k
+    windowed form is the standard approximation (tune k to the
+    minimum span you care about).
 
     Output: (id, span_start, span_end, n_grams, span_tokens) with
-    token positions 0-based inclusive. Both strategies are
-    output-identical (equality-checked at sf0.1).
+    token positions 0-based inclusive.
     """
     from pyspark.sql import Window
 
-    if strategy not in ("window", "join"):
-        raise ValueError(
-            f"strategy must be 'window' or 'join', got {strategy!r}"
-        )
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k!r}")
     toked, ex = _positional_grams(df, k, text_col, id_col)
-    if strategy == "window":
-        # Document frequency without a second pass: dense_rank by id
-        # inside the hash partition, then its max over the partition
-        # = countDistinct(id) — one sort, two Window ops, same
-        # exchange. The partition buffer spills (not OOMs) on hot
-        # grams; see the docstring for when to prefer "join".
-        wh = Window.partitionBy("h").orderBy("id")
-        flagged = (
-            ex.withColumn("_dr", F.dense_rank().over(wh))
-            .withColumn("_nd", F.max("_dr").over(Window.partitionBy("h")))
-            .filter(F.col("_nd") >= min_docs)
-            .select("id", "pos")
-        )
-    else:
-        hot = (
-            ex.groupBy("h")
-            .agg(F.countDistinct("id").alias("nd"))
-            .filter(F.col("nd") >= min_docs)
-            .select("h")
-        )
-        flagged = ex.join(hot, "h", "left_semi")
+    # Document frequency without a second pass: dense_rank by id
+    # inside the hash partition, then its max over the partition =
+    # countDistinct(id) — one sort, two Window ops, same exchange.
+    # The partition buffer spills (not OOMs) on hot grams.
+    wh = Window.partitionBy("h").orderBy("id")
+    flagged = (
+        ex.withColumn("_dr", F.dense_rank().over(wh))
+        .withColumn("_nd", F.max("_dr").over(Window.partitionBy("h")))
+        .filter(F.col("_nd") >= min_docs)
+        .select("id", "pos")
+    )
     return _gram_islands_to_spans(flagged, toked, k, id_col)
 
 

@@ -646,9 +646,7 @@ def ngram_jaccard_pairs(
     from web-scale dedup pipelines (e.g. CCNet). The cost is exact
     recall for pairs whose ONLY overlap is capped shingles — pairs
     that at DF > 1000 have Jaccard ≈ 0 anyway. Pass ``max_df=None``
-    for the exact inverted index, or use ``ngram_jaccard_pairs_prefix``
-    which prunes hot shingles exactly (PPJoin) at the price of two
-    extra shuffles.
+    for the exact inverted index.
 
     Join keys are 60-bit shingle hashes (portable_hash64): collisions
     are ~2^-60 — negligible. Jaccard is exact integer arithmetic —
@@ -782,125 +780,6 @@ def _ngram_jaccard_pairs_collapsed(
     # linear expansion guard bounding replica-family fan-out.
     return _expand_rep_pairs(
         rep_pairs, grouped, ["shared", "jaccard"], max_family
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    order_by_frequency: bool = True,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs with PPJoin-style prefix filtering —
-    output-equivalent to ``ngram_jaccard_pairs`` but prunes the
-    candidate join exactly instead of meeting on every shared shingle.
-
-    The filter (Chaudhuri et al. SSJoin; Bayardo et al. All-Pairs):
-    order each doc's shingles by a global total order (ascending
-    corpus frequency, rarest first) and keep only the first
-    ``|x| − ⌈t·|x|⌉ + 1`` as its *prefix*. If J(A,B) ≥ t then the
-    smallest common shingle lies in BOTH prefixes — were it outside
-    A's prefix, the overlap could be at most ⌈t·|A|⌉ − 1 < t·|A|,
-    contradicting J ≥ t. So equi-joining exploded prefixes loses no
-    qualifying pair, while a hot shingle shared by many docs only
-    enters the join from docs where it is prefix-rare. A size filter
-    (t·|A| ≤ |B|) prunes further before verification; candidates are
-    then verified exactly on the full shingle sets.
-
-    Cost shape: one extra shuffle to count shingle frequencies and one
-    to sort each doc's shingles, in exchange for a candidate stream
-    that scales with *rare*-shingle collisions. On low-entropy corpora
-    (the pathological case for the plain inverted index) this is the
-    difference between quadratic blowup and near-linear work.
-    """
-    eps = 1e-9  # guard float ceil at exact multiples; longer prefix is safe
-    # No eager size()>0 filter: pushing it below the projection would
-    # inline the shingle tree into the scan filter. Empty docs flow
-    # through harmlessly (their prefix explodes to a filtered null;
-    # they can never appear in a candidate pair).
-    shingled = with_shingles(df, text_col, id_col, n, hashed=True).withColumn(
-        "n_shingles", F.size("shingles")
-    )
-    prefix_len = (
-        F.col("n_shingles")
-        - F.ceil(F.lit(threshold) * F.col("n_shingles") - F.lit(eps))
-        + 1
-    ).cast("int")
-    if order_by_frequency:
-        # Rarest-first global order (the PPJoin heuristic): two extra
-        # shuffles (frequency count; per-doc sort) buy the smallest
-        # possible candidate set — the right trade when collisions
-        # dominate, i.e. big corpora with hot shingles.
-        exploded = shingled.select(
-            "id", "n_shingles", F.explode_outer("shingles").alias("shingle")
-        ).filter(F.col("shingle").isNotNull())
-        freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        ordered = (
-            exploded.join(freq, on="shingle")
-            .groupBy("id", "n_shingles")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("df_"), F.col("shingle")))
-                ).alias("ord")
-            )
-        )
-        pref = ordered.select(
-            "id",
-            "n_shingles",
-            F.explode_outer(
-                F.transform(
-                    F.slice("ord", F.lit(1), prefix_len), lambda s: s["shingle"]
-                )
-            ).alias("shingle"),
-        ).filter(F.col("shingle").isNotNull())
-    else:
-        # Hash-value order: any fixed total order keeps the filter
-        # exact; sorting each doc's hashes is pure codegen — no
-        # frequency shuffle — at the cost of a larger candidate set.
-        pref = shingled.select(
-            "id",
-            "n_shingles",
-            F.explode_outer(
-                F.slice(F.array_sort("shingles"), F.lit(1), prefix_len)
-            ).alias("shingle"),
-        ).filter(F.col("shingle").isNotNull())
-    a, b = pref.alias("a"), pref.alias("b")
-    min_b = F.ceil(F.lit(threshold) * F.col("a.n_shingles") - F.lit(eps))
-    min_a = F.ceil(F.lit(threshold) * F.col("b.n_shingles") - F.lit(eps))
-    cand = (
-        a.join(b, on="shingle")
-        .filter(
-            (F.col("a.id") < F.col("b.id"))
-            & (F.col("b.n_shingles") >= min_b)
-            & (F.col("a.n_shingles") >= min_a)
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    full = shingled.select("id", "shingles", "n_shingles")
-    ver = cand.join(
-        full.select(
-            F.col("id").alias("id_a"),
-            F.col("shingles").alias("sa"),
-            F.col("n_shingles").alias("na"),
-        ),
-        on="id_a",
-    ).join(
-        full.select(
-            F.col("id").alias("id_b"),
-            F.col("shingles").alias("sb"),
-            F.col("n_shingles").alias("nb"),
-        ),
-        on="id_b",
-    )
-    shared = F.size(F.array_intersect("sa", "sb")).cast("long")
-    out = ver.withColumn("shared", shared).withColumn(
-        "jaccard", F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    )
-    return out.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "shared", "jaccard"
     )
 
 

@@ -538,7 +538,6 @@ def bigram_logprob(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "window",
 ) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's
     OWN bigram MLE model — one Markov order up from
@@ -551,21 +550,12 @@ def bigram_logprob(
 
     Shape: one explode to ALL bigram occurrences (not distinct —
     frequency is the signal), then a (doc, bigram) partial-agg
-    groupBy. From there two strategies, output-identical
-    (equality-tested):
-
-    - ``"window"`` (default): C(w1 w2) and C(w1 ·) as sum windows
-      over the tf frame partitioned by the gram / its first word —
-      no model join, the tf stream is sorted twice. Measured ≥ the
-      join form at every probed scale and 1.56× faster at sf1
-      (6.3 s vs 9.8 s), where the model outgrows AQE's broadcast
-      and the join pays a full shuffle of both sides.
-    - ``"join"``: the model derived by two more partial-agg groupBys
-      and joined back with no broadcast hint (AQE broadcasts while
-      the vocabulary is small). Kept because an AQE skew split can
-      break up a pathologically hot JOIN key, while a hot WINDOW
-      partition (one bigram dominating the corpus) must spill
-      through a single task.
+    groupBy. C(w1 w2) and C(w1 ·) are sum windows over that tf frame
+    partitioned by the gram / its first word — no model join, the tf
+    stream is sorted twice. Measured 1.56× faster at sf1 (6.3 s vs
+    9.8 s) than deriving the model by groupBy and joining it back,
+    where the model outgrows AQE's broadcast and the join pays a
+    full shuffle of both sides.
 
     Determinism across engines: ln() rounded to 6 dp, accumulated as
     DECIMAL (order-independent), one double division at the end.
@@ -573,10 +563,8 @@ def bigram_logprob(
     Output: (id, n_bigrams, mean_logprob); null score for documents
     with fewer than two tokens.
     """
-    if strategy not in ("window", "join"):
-        raise ValueError(
-            f"strategy must be 'window' or 'join', got {strategy!r}"
-        )
+    from pyspark.sql import Window
+
     toks = F.transform(tokens(text_col), lambda t: F.lower(t))
     tc = F.col("_toks")
     k = F.size(tc) - 1
@@ -597,55 +585,23 @@ def bigram_logprob(
         F.col(id_col).alias("id"), toks.alias("_toks")
     ).select("id", F.explode_outer(grams).alias("g"))
     tf = gram_rows.groupBy("id", "g").agg(F.count("g").alias("tf"))
-    if strategy == "window":
-        from pyspark.sql import Window
-
-        scored = (
-            tf.withColumn("w1", F.split(F.col("g"), " ").getItem(0))
-            .withColumn("cg", F.sum("tf").over(Window.partitionBy("g")))
-            .withColumn("c1", F.sum("tf").over(Window.partitionBy("w1")))
-            .withColumn(
-                "lp",
-                F.when(
-                    F.col("tf") > 0,
-                    F.round(F.log(F.col("cg") / F.col("c1")), 6)
-                    .cast("decimal(28,6)"),
-                ),
-            )
-        )
-        agg = scored.groupBy("id").agg(
-            F.sum("tf").alias("n_bigrams"),
-            F.sum(F.col("tf") * F.col("lp")).alias("slp"),
-        )
-    else:
-        cg = tf.groupBy("g").agg(F.sum("tf").alias("cg"))
-        ctx = (
-            cg.withColumn("w1", F.split(F.col("g"), " ").getItem(0))
-            .groupBy("w1")
-            .agg(F.sum("cg").alias("c1"))
-        )
-        lp = (
-            cg.withColumn("w1", F.split(F.col("g"), " ").getItem(0))
-            .join(ctx, "w1")
-            .select(
-                "g",
+    scored = (
+        tf.withColumn("w1", F.split(F.col("g"), " ").getItem(0))
+        .withColumn("cg", F.sum("tf").over(Window.partitionBy("g")))
+        .withColumn("c1", F.sum("tf").over(Window.partitionBy("w1")))
+        .withColumn(
+            "lp",
+            F.when(
+                F.col("tf") > 0,
                 F.round(F.log(F.col("cg") / F.col("c1")), 6)
-                .cast("decimal(28,6)")
-                .alias("lp"),
-            )
+                .cast("decimal(28,6)"),
+            ),
         )
-        # LEFT join: every real gram matches the model by construction
-        # (it was trained on this same tf frame), and the NULL-gram
-        # marker rows ride through with lp NULL instead of dying in an
-        # inner join and forcing the id join-back.
-        agg = (
-            tf.join(lp, "g", "left")
-            .groupBy("id")
-            .agg(
-                F.sum("tf").alias("n_bigrams"),
-                F.sum(F.col("tf") * F.col("lp")).alias("slp"),
-            )
-        )
+    )
+    agg = scored.groupBy("id").agg(
+        F.sum("tf").alias("n_bigrams"),
+        F.sum(F.col("tf") * F.col("lp")).alias("slp"),
+    )
     return agg.select(
         F.col("id").alias(id_col),
         F.col("n_bigrams").cast("long").alias("n_bigrams"),

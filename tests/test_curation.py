@@ -4,6 +4,7 @@ frames; the sf-scale hash gate lives in the registry oracles."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark.llm.curation import (
@@ -300,8 +301,8 @@ def test_repeated_substring_spans_merges_adjacent_islands(spark):
 
 
 def test_repeated_substring_strategies_agree(spark):
-    """The window (single-scan) and join (AQE-skew-splittable) DF
-    strategies must be output-identical."""
+    """Two docs sharing a 10-token prefix get exactly one span each;
+    the doc with no overlap gets none."""
     from pos_api_pipeline_spark.llm.curation import repeated_substring_spans
 
     shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -311,11 +312,8 @@ def test_repeated_substring_strategies_agree(spark):
         (2, "completely different words with no overlap at all here"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        repeated_substring_spans(df, k=4, strategy="window").collect()
-    )
-    b = sorted(repeated_substring_spans(df, k=4, strategy="join").collect())
-    assert a == b and len(a) == 2  # docs 0 and 1 share one span each
+    spans = repeated_substring_spans(df, k=4).collect()
+    assert len(spans) == 2  # docs 0 and 1 share one span each
 
 
 def test_contaminated_spans_surgical_ranges(spark):
@@ -385,11 +383,12 @@ def test_remove_contaminated_spans_null_text_normalized(spark):
     assert out[1].n_tokens == 0 and out[1].n_tokens_removed == 0
 
 
-def test_repeated_substring_spans_rejects_bad_strategy(spark):
-    import pytest as _pytest
-
+@pytest.mark.parametrize("k", [0, -1])
+def test_repeated_substring_spans_rejects_nonpositive_k(spark, k):
+    # unchecked, 0 yields spans that end before they start and -1
+    # fails inside an executor task; both must fail on the driver
     from pos_api_pipeline_spark.llm.curation import repeated_substring_spans
 
-    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="strategy"):
-        repeated_substring_spans(df, k=2, strategy="windows")
+    df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="k must be"):
+        repeated_substring_spans(df, k=k)

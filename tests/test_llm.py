@@ -132,28 +132,6 @@ def test_dedupe_corpus_methods(docs):
         dedup.dedupe_corpus(docs, method="nope")
 
 
-def test_prefix_jaccard_matches_plain(spark):
-    from pos_api_pipeline_spark.session import read_parquet
-
-    docs = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-    base = {
-        (r.id_a, r.id_b, r.shared, round(r.jaccard, 12))
-        for r in dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.2).collect()
-    }
-    assert base  # the fixture corpus has near-dup pairs at this threshold
-    # The prefix filter is exact under ANY global total order: both the
-    # rarest-first (PPJoin) and hash-value orders must reproduce the
-    # plain inverted-index join bit-for-bit.
-    for by_freq in (True, False):
-        got = {
-            (r.id_a, r.id_b, r.shared, round(r.jaccard, 12))
-            for r in dedup.ngram_jaccard_pairs_prefix(
-                docs, n=3, threshold=0.2, order_by_frequency=by_freq
-            ).collect()
-        }
-        assert got == base
-
-
 def test_with_shingles_matches_column_api(spark):
     docs = spark.createDataFrame(
         [(1, "The quick Brown fox jumps"), (2, "tiny"), (3, "a b c")],

@@ -193,6 +193,19 @@ def test_unigram_logprob_single_corpus_pass(spark):
     assert plan.count("Scan parquet") == 0, plan.count("Scan parquet")
 
 
+def test_sa_repeated_spans_gram_cover_shape(spark):
+    """repeated_spans_exact is the repeated-L-gram sieve: one (h1, h2)
+    count shuffle, one LeftSemi broadcast of the repeated grams back
+    onto the checkpointed gram stream, one per-doc islands shuffle —
+    and no sort-merge join. Counted like tools/plan_audit.py
+    (PLAN_SNAPSHOT.json: exchanges 2, bhj 1, smj 0)."""
+    plan = plan_of(spark, "sa_repeated_spans_exact")
+    assert len(re.findall(r"\bExchange\b", plan)) == 2, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert re.search(r"BroadcastHashJoin [^\n]*LeftSemi", plan), plan
+    assert "SortMergeJoin" not in plan, plan
+
+
 # Queries whose algorithm intentionally scores a broadcast candidate
 # set against every row (brute-force baseline / tiny broadcast side) —
 # the ONLY places a nested-loop/cartesian strategy is acceptable.
@@ -201,12 +214,6 @@ CROSS_JOIN_OK = {
     # one-row Bloom-filter scalar carry (dense word array) probed
     # map-side before the exact verify
     "contamination_bloom_check",
-    # suffix-array adjacency: the ≤ 32-row per-partition
-    # first/last bounds frame finds each partition's next non-empty
-    # successor with a bounded non-equi self-join (suffix.py
-    # _adjacent_pairs) — O(_RANK_PARTS²) rows, never corpus-scale
-    "sa_repeated_spans_exact",
-    "sa_deduped_docs",
     "lsh_ann_topk",
     "ivf_ann_topk",
     # IVF/SemDeDup centroid assignment scores the corpus against a

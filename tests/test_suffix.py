@@ -1,7 +1,8 @@
-"""repeated_spans_exact (llm/suffix.py): distributed suffix-array
-prefix doubling vs an independent brute-force reference, plus the
-semantics the fixed-k gram form cannot express (within-document
-repeats) and the plan discipline (no single-partition windows)."""
+"""repeated_spans_exact (llm/suffix.py): the repeated-L-gram cover
+vs an independent brute-force reference that enumerates every
+substring (short and long min_len alike), plus the semantics the
+fixed-k gram form cannot express (within-document repeats), argument
+validation, and the plan discipline (no single-partition windows)."""
 
 from __future__ import annotations
 
@@ -11,9 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark.llm.suffix import (
-    _global_dense_rank,
+    remove_repeated_spans,
     repeated_spans_exact,
-    suffix_rank_levels,
 )
 
 
@@ -114,51 +114,8 @@ def test_empty_and_short_docs(spark):
     assert _spark_spans(spark, docs, 2) == []
 
 
-def test_adjacent_pairs_match_total_order(spark):
-    # the self-join-free adjacency: every consecutive pair of the
-    # global (k, id, pos) order must appear exactly once, INCLUDING
-    # the ≤ _RANK_PARTS cross-partition boundary pairs (500 rows over
-    # 32 range partitions ⇒ ~31 boundary pairs exercised)
-    from pos_api_pipeline_spark.llm.suffix import _adjacent_pairs
-
-    rng = random.Random(7)
-    rows = [(rng.randrange(100), i // 7, i % 7) for i in range(500)]
-    df = spark.createDataFrame(rows, "k long, id long, pos long")
-    got = {
-        (r.ka, r.ia, r.pa, r.kb, r.ib, r.pb)
-        for r in _adjacent_pairs(
-            df,
-            ["k", "id", "pos"],
-            ["k", "id", "pos"],
-            ["ka", "ia", "pa"],
-            ["kb", "ib", "pb"],
-        ).collect()
-    }
-    ordered = sorted(rows)
-    want = {
-        (*ordered[i], *ordered[i + 1]) for i in range(len(ordered) - 1)
-    }
-    assert got == want
-
-
-def test_levels_converge_to_full_suffix_classes(spark):
-    df = spark.createDataFrame(
-        [(0, "x y z x y"), (1, "x y")], "doc_id long, text string"
-    )
-    levels, lens, max_len = suffix_rank_levels(df)
-    assert max_len == 5
-    final = {(r.id, r.pos): r.rank for r in levels[-1].collect()}
-    # suffix "x y" appears at (0,3) and (1,0): identical → equal rank
-    assert final[(0, 3)] == final[(1, 0)]
-    # suffix "y" at (0,4) and (1,1): identical → equal rank
-    assert final[(0, 4)] == final[(1, 1)]
-    # distinct suffixes get distinct ranks
-    vals = list(final.values())
-    assert len(set(vals)) == len(vals) - 2
-
-
 def test_no_single_partition_window(spark):
-    # the scale discipline: ranking must never funnel the corpus
+    # the scale discipline: the sieve must never funnel the corpus
     # through one task — assert no empty-partitionBy Window exchange
     df = spark.createDataFrame(
         [(d, "a b c d e f g h i j") for d in range(4)],
@@ -173,67 +130,48 @@ def test_no_single_partition_window(spark):
     assert "SinglePartition" not in plan
 
 
-def test_lazy_rank_mode_order_preserving(spark):
-    df = spark.range(1000).select((F.col("id") % 37).alias("k"))
-    ranked = _global_dense_rank(df, ["k"]).collect()
-    by_key = {}
-    for r in ranked:
-        by_key.setdefault(r.k, set()).add(r.rank)
-    # equal keys → one rank; larger key → strictly larger rank
-    assert all(len(v) == 1 for v in by_key.values())
-    ks = sorted(by_key)
-    rs = [next(iter(by_key[k])) for k in ks]
-    assert rs == sorted(rs) and len(set(rs)) == len(rs)
-
-
-def test_both_strategies_agree_and_match_brute(spark):
+def test_matches_brute_force_dense_six_word_corpus(spark):
     rng = random.Random(99)
     vocab = [f"v{i}" for i in range(6)]
     docs = {
         d: [rng.choice(vocab) for _ in range(rng.randint(0, 35))]
         for d in range(25)
     }
-    df = spark.createDataFrame(
-        [(d, " ".join(t)) for d, t in docs.items()], "doc_id long, text string"
-    )
-    want = _brute_spans(docs, 4)
-    for strat in ("gram", "direct", "double"):
-        rows = repeated_spans_exact(df, min_len=4, strategy=strat).collect()
-        got = sorted(
-            (r.doc_id, r.span_start, r.span_end, r.n_tokens) for r in rows
-        )
-        assert got == want, strat
+    assert _spark_spans(spark, docs, 4) == _brute_spans(docs, 4)
 
 
-def test_auto_threshold_picks_double_for_long_docs(spark):
-    # force auto past BOTH thresholds (gram_max_len below min_len,
-    # direct_max_len below the doc length): the double path must
-    # still be exact
-    block = [f"z{i}" for i in range(10)]
-    docs = {0: block + ["a"] + block, 1: block}
-    df = spark.createDataFrame(
-        [(d, " ".join(t)) for d, t in docs.items()], "doc_id long, text string"
-    )
-    rows = repeated_spans_exact(
-        df, min_len=10, strategy="auto", direct_max_len=4, gram_max_len=9
-    ).collect()
-    got = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.n_tokens) for r in rows
-    )
-    assert got == _brute_spans(docs, 10)
+def test_matches_brute_force_long_min_len(spark):
+    # min_len well above 64: an 80-token block planted in two docs
+    # must come back whole at min_len=70, the same spans the brute
+    # force finds (the gram cover is exact at any L)
+    rng = random.Random(3)
+    vocab = [f"r{i}" for i in range(50)]
+    block = [f"b{i}" for i in range(80)]
+    docs = {
+        0: ["u0"] + block,
+        1: block + ["v0"],
+        2: [rng.choice(vocab) for _ in range(90)],
+        3: block[:69] + [rng.choice(vocab) for _ in range(10)],
+    }
+    got = _spark_spans(spark, docs, 70)
+    assert got == _brute_spans(docs, 70)
+    assert got == [(0, 1, 80, 80), (1, 0, 79, 80)]
 
-
-def test_rejects_unknown_strategy(spark):
-    df = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        repeated_spans_exact(df, strategy="bogus")
-
+@pytest.mark.parametrize("min_len", [0, -1])
+def test_rejects_nonpositive_min_len(spark, min_len):
+    # unchecked, 0 yields spans that end before they start and -1
+    # fails inside an executor task; both must fail on the driver
+    df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="min_len"):
+        repeated_spans_exact(df, min_len=min_len)
+    with pytest.raises(ValueError, match="min_len"):
+        remove_repeated_spans(df, min_len=min_len)
 
 def test_hot_identical_corpus_stays_linear(spark):
-    # skew stress: thousands of byte-identical docs → every suffix
-    # has thousands of exact twins. The sort key (suf, id, pos)
-    # splits tie groups across range partitions, so no task inherits
-    # the whole cluster; adjacency stays one pair per rank step.
+    # skew stress: thousands of byte-identical docs → every gram has
+    # thousands of exact twins. The count-≥-2 sieve is a partial-agg
+    # groupBy + semi join (AQE can split the hot key), so the work
+    # stays one row per gram occurrence, never a pair blowup.
     import time as _time
 
     n = 3000
@@ -253,8 +191,6 @@ def test_hot_identical_corpus_stays_linear(spark):
 
 
 def test_remove_repeated_spans_excises_every_occurrence(spark):
-    from pos_api_pipeline_spark.llm.suffix import remove_repeated_spans
-
     block = "a b c d e f g h".split()
     docs = {
         0: ["u0"] + block + ["u1"],
@@ -275,30 +211,10 @@ def test_remove_repeated_spans_excises_every_occurrence(spark):
     assert got[2] == ("w0 w1 w2", 3, 0)
 
 
-def test_bigram_logprob_strategies_agree(spark):
-    # the sf1 crossover measurement: window >= join at every probed
-    # scale (1.56x at sf1) -> window default; join kept for AQE skew
-    from pos_api_pipeline_spark.llm.text import bigram_logprob
-
-    docs = spark.createDataFrame(
-        [(d, " ".join(f"w{(d * 3 + i) % 11}" for i in range(15)))
-         for d in range(40)],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, bigram_logprob(docs, strategy="window").collect()))
-    b = sorted(map(tuple, bigram_logprob(docs, strategy="join").collect()))
-    assert a == b
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        bigram_logprob(docs, strategy="nope")
-
-
 def test_empty_return_inherits_id_type(spark):
     """min_len > max doc length must not change the id column's type:
     a string-keyed corpus gets a string id back (r8 advice — the old
     hardcoded 'id long' empty frame broke downstream unions/joins)."""
-    from pos_api_pipeline_spark.llm.suffix import remove_repeated_spans
-
     df = spark.createDataFrame(
         [("doc-a", "a b c"), ("doc-b", "a b c")], "doc_id string, text string"
     )
