@@ -10,11 +10,12 @@ shingle-Jaccard shuffles on shingle then on pair.
 
 from __future__ import annotations
 
-import os
+import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pos_api_pipeline_spark.llm.exprcache import memo_expr
 from pos_api_pipeline_spark.llm.text import spread_small_scan, tokens
 
 
@@ -104,16 +105,16 @@ DEFAULT_MAX_BUCKET = 10_000
 #: alone at that point.
 COLLAPSE_AUTO_MAX_DISTINCT = 0.75
 
-#: (applicationId, analyzed-plan semanticHash, text_col) →
-#: (distinct ratio, full-probe (rows, hll_distinct) | None).
-#: Keyed on the owning SparkContext's applicationId
-#: so a session restart in the same process never serves a stale
-#: ratio, and FIFO-bounded (r11, ADVICE) so a long-lived driver
-#: building many distinct plans can't grow it without limit.
-#: Repeated builds of the same query (bench runs each query 3×)
-#: still probe the corpus once. Stale only if the files under an
-#: identical plan change mid-session — same tradeoff as Spark's own
-#: relation statistics cache.
+#: (applicationId, analyzed-plan semanticHash, input-file digest,
+#: text_col) → (distinct ratio, full-probe (rows, hll_distinct) | None).
+#: Keyed on the owning SparkContext's applicationId so a session
+#: restart in the same process never serves a stale ratio, and on a
+#: digest of the sorted ``df.inputFiles()`` listing because the plan
+#: hash alone compares file sources by root path: a file appended or
+#: removed under the same path is a new key and re-probes. FIFO-bounded
+#: so a long-lived driver building many distinct plans can't grow it
+#: without limit. Repeated builds of the same query over the same
+#: files (bench runs each query 3×) still probe the corpus once.
 _distinct_ratio_cache: dict = {}
 _DISTINCT_RATIO_CACHE_MAX = 256
 
@@ -143,8 +144,7 @@ COLLAPSE_PROBE_MAX_FILES = 32
 #: files (e.g. whole-file copies landing between stride picks) can
 #: read as distinct and cost the collapse win — a plan-choice
 #: (speed) miss only, never a correctness miss, since collapse is
-#: output-neutral. ``SPARK_GRAFT_COLLAPSE_PROBE=full`` pins the
-#: exact full-corpus probe back.
+#: output-neutral.
 COLLAPSE_ESCALATE_MAX = 0.95
 
 
@@ -167,18 +167,15 @@ def _probe_file_subset(files: list) -> list:
     return [files[int(i * stride)] for i in range(n_pick)]
 
 
-def _sampled_probe_frame(df: DataFrame, text_col: str):
-    """The file-subset frame for the sampled probe, or None when the
-    corpus isn't probe-able this way (non-file-backed, too few
-    files, non-parquet leaves, or the probed column doesn't survive
-    to the raw files — e.g. a derived/normalized text column). A
-    transformed corpus (filters/joins above the scan) still probes:
-    the RAW file ratio approximates the post-transform ratio, which
-    is fine for an output-neutral plan choice."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
+def _sampled_probe_frame(df: DataFrame, text_col: str, files: list):
+    """The file-subset frame for the sampled probe over ``files``
+    (``df.inputFiles()``), or None when the corpus isn't probe-able
+    this way (non-file-backed, too few files, non-parquet leaves, or
+    the probed column doesn't survive to the raw files — e.g. a
+    derived/normalized text column). A transformed corpus
+    (filters/joins above the scan) still probes: the RAW file ratio
+    approximates the post-transform ratio, which is fine for an
+    output-neutral plan choice."""
     if len(files) < COLLAPSE_PROBE_MIN_FILES:
         return None
     if not all(f.endswith(".parquet") for f in files):
@@ -216,7 +213,9 @@ def _resolve_collapse(
     column in a single aggregation (the 5 % default rsd is plenty
     against a 0.75 threshold). Explicit True/False pins the choice
     (replica-dense ingests know they're replica-dense;
-    already-deduped frames skip the probe entirely).
+    already-deduped frames skip the probe entirely) and keeps
+    detector construction fully lazy — the auto probe is one bounded
+    action at plan-build time.
 
     .. versionchanged:: round 12
        The probe is SAMPLED by default: a deterministic stride-picked
@@ -229,18 +228,8 @@ def _resolve_collapse(
        ratio in (0.75, ``COLLAPSE_ESCALATE_MAX``] → escalate to the
        exact full probe (gray zone only); above → uncollapsed.
        Non-file-backed / single-file / non-parquet corpora fall back
-       to the full probe. ``SPARK_GRAFT_COLLAPSE_PROBE=full`` pins
-       the full probe for every corpus. Decision agreement vs the
-       full probe is measured per corpus in
-       BENCH_collapse_probe_r12.json.
-
-    NOTE for latency-sensitive plan BUILDERS: the default still makes
-    detector construction partially eager (one bounded probe action
-    before any action on the returned frame). Set the env var
-    ``SPARK_GRAFT_COLLAPSE_AUTO=0`` to keep construction fully lazy —
-    ``collapse_exact=None`` then resolves to False (the
-    uncollapsed plan, safe at every duplicate density) with no probe.
-    See SCALE.md §public-API notes."""
+       to the full probe. Decision agreement vs the full probe is
+       measured per corpus in BENCH_collapse_probe_r12.json."""
     return _resolve_collapse_stats(df, text_col, collapse_exact)[0]
 
 
@@ -250,57 +239,38 @@ def _resolve_collapse_stats(
     """``_resolve_collapse`` plus the probe's FULL-corpus stats when
     an exact full pass contributed to the decision: returns
     ``(collapse, (row_count, hll_distinct) | None)``. The stats are
-    ``None`` for pinned decisions, the kill switch, and sampled-only
-    probes — a file-subset's distinct count is only a LOWER bound on
-    the corpus's, so it can never certify a memory guard away (see
+    ``None`` for pinned decisions and sampled-only probes — a
+    file-subset's distinct count is only a LOWER bound on the
+    corpus's, so it can never certify a memory guard away (see
     ``_cap_guard_skippable``). Full stats come from the
-    single-file/in-memory fallback, a gray-band escalation, or
-    ``SPARK_GRAFT_COLLAPSE_PROBE=full``."""
+    single-file/in-memory fallback or a gray-band escalation."""
     if collapse_exact is not None:
         return collapse_exact, None
-    if os.environ.get("SPARK_GRAFT_COLLAPSE_AUTO", "1").lower() in (
-        "0",
-        "off",
-        "false",
-    ):
-        return False, None
-    probe_mode = os.environ.get(
-        "SPARK_GRAFT_COLLAPSE_PROBE", "sampled"
-    ).lower()
-    try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            text_col,
-            probe_mode,
-        )
-    except Exception:  # non-JVM frames (tests' mocks): probe uncached
-        key = None
-    cached = _distinct_ratio_cache.get(key) if key is not None else None
+    # An in-memory frame lists no files; its semanticHash already
+    # covers its data.
+    files = df.inputFiles()
+    key = (
+        df.sparkSession.sparkContext.applicationId,
+        df._jdf.queryExecution().analyzed().semanticHash(),
+        hashlib.sha1("\n".join(sorted(files)).encode()).hexdigest(),
+        text_col,
+    )
+    cached = _distinct_ratio_cache.get(key)
     if cached is None:
         full_stats: tuple[int, int] | None = None
-        sampled = (
-            _sampled_probe_frame(df, text_col)
-            if probe_mode != "full"
-            else None
-        )
+        sampled = _sampled_probe_frame(df, text_col, files)
         if sampled is not None:
             ratio = _distinct_ratio(sampled, text_col)
             if COLLAPSE_AUTO_MAX_DISTINCT < ratio <= COLLAPSE_ESCALATE_MAX:
                 full_stats = _distinct_stats(df, text_col)
-                n, d = full_stats
-                ratio = (d / n) if n else 1.0
         else:
             full_stats = _distinct_stats(df, text_col)
+        if full_stats is not None:
             n, d = full_stats
             ratio = (d / n) if n else 1.0
-        cached = (ratio, full_stats)
-        if key is not None:
-            while len(_distinct_ratio_cache) >= _DISTINCT_RATIO_CACHE_MAX:
-                _distinct_ratio_cache.pop(
-                    next(iter(_distinct_ratio_cache))
-                )
-            _distinct_ratio_cache[key] = cached
+        while len(_distinct_ratio_cache) >= _DISTINCT_RATIO_CACHE_MAX:
+            _distinct_ratio_cache.pop(next(iter(_distinct_ratio_cache)))
+        cached = _distinct_ratio_cache[key] = (ratio, full_stats)
     ratio, full_stats = cached
     return ratio <= COLLAPSE_AUTO_MAX_DISTINCT, full_stats
 
@@ -332,23 +302,11 @@ def _cap_guard_skippable(
     corpus ROWS (the exact row count bounds every bucket); collapsed
     buckets hold distinct GROUPS (the HLL distinct estimate bounds
     them, derated by ``_HLL_DISTINCT_SAFETY``). ``None`` stats
-    (pinned / kill switch / sampled-only probe) never skip.
-
-    CAVEAT — the stats ride the same applicationId-keyed probe cache
-    as the collapse decision, whose documented staleness tradeoff
-    ("files under an identical plan change mid-session") was
-    output-neutral for the collapse choice but here gates a MEMORY
-    guard: a long-lived driver that re-ingests a corpus mid-session
-    under an identical plan can stale-certify the guard away while a
-    bucket has grown past the cap (the output stays correct via the
-    in-array star cap; the memory bound does not). Such drivers
-    should set ``SPARK_GRAFT_CAP_GUARD_CERTIFY=0``, which disables
-    certification entirely and keeps the guard in every plan."""
+    (pinned / sampled-only probe) never skip. The stats ride the
+    probe cache, which is keyed on the input files as well as the
+    plan, so a corpus re-ingested mid-session is re-probed before
+    it can certify anything."""
     if full_stats is None or max_bucket is None:
-        return False
-    if os.environ.get(
-        "SPARK_GRAFT_CAP_GUARD_CERTIFY", "1"
-    ).lower() in ("0", "off", "false"):
         return False
     n, d = full_stats
     bound = d * _HLL_DISTINCT_SAFETY if collapsed else n
@@ -1604,33 +1562,28 @@ def simhash_table(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
     keep_cols: tuple[str, ...] = (),
-    _force_perbit: bool = False,
 ) -> DataFrame:
-    """(id, sh) simhash table in the scale shape: explode token
-    hashes to rows, one groupBy computing the bit-vote sums as
+    """(id, sh) 64-bit simhash table in the scale shape: explode
+    token hashes to rows, one groupBy computing the bit-vote sums as
     partial aggregates, then assemble the fingerprint. Same
     rationale as minhash_signatures — the per-bit aggregate over a
-    shared token array re-hashes every token ``bits`` times.
+    shared token array re-hashes every token 64 times.
 
-    For the default ``bits=64`` the vote sums are SWAR-packed: word
-    g holds the counts of bits g, g+16, g+32, g+48 as four 16-bit
-    lanes (``(h >> g) & 0x0001000100010001`` per token), so the
-    aggregate carries 16 longs instead of 64 and the per-token work
-    is 16 shift+ANDs instead of 64 conditional sums. Output is
-    BIT-IDENTICAL to the per-bit form (parity-tested). Contract:
-    **< 32768 tokens per document** — lane 3 of a packed word sums
-    ``count << 48``, so 2^15 tokens could overflow the signed long
-    (and 2^16 would carry between lanes); the assembled fingerprint
-    raises a clear error for any doc at or past the limit (docs big
-    enough to overflow mid-aggregate fail the ANSI sum check
-    instead — either way no silent corruption). Other ``bits``
-    values keep the per-bit path.
+    The vote sums are SWAR-packed: word g holds the counts of bits
+    g, g+16, g+32, g+48 as four 16-bit lanes
+    (``(h >> g) & 0x0001000100010001`` per token), so the aggregate
+    carries 16 longs instead of 64 and the per-token work is 16
+    shift+ANDs instead of 64 conditional sums. Output is
+    BIT-IDENTICAL to the scalar ``simhash`` column (parity-tested).
+    Contract: **< 32768 tokens per document** — lane 3 of a packed
+    word sums ``count << 48``, so 2^15 tokens could overflow the
+    signed long (and 2^16 would carry between lanes); the assembled
+    fingerprint raises a clear error for any doc at or past the
+    limit (docs big enough to overflow mid-aggregate fail the ANSI
+    sum check instead — either way no silent corruption).
 
     Documents with zero tokens drop out."""
-    from pos_api_pipeline_spark.llm.exprcache import memo_expr
-
     toks = F.transform(tokens(text_col), lambda t: portable_hash64(F.lower(t)))
     # r13: token hashing is scan-stage work — spread low-split inputs
     # (no-op at scale; see text.spread_small_scan).
@@ -1641,50 +1594,7 @@ def simhash_table(
     tok_rows = base.select(
         "id", *keep_cols, F.explode_outer(toks).alias("h")
     ).filter(F.col("h").isNotNull())
-    if bits == 64 and not _force_perbit:
-        return _simhash_swar(tok_rows, keep_cols, memo_expr)
-    return _simhash_perbit(tok_rows, bits, keep_cols, memo_expr)
-
-
-def _simhash_perbit(
-    tok_rows: DataFrame, bits: int, keep_cols, memo_expr
-) -> DataFrame:
-    """Per-bit vote sums (simhash_table's general-``bits`` path, and
-    the parity reference for the SWAR fast path)."""
-    # Pure bit arithmetic in the aggregate: sum bit i directly (0/1,
-    # no conditional) plus one token count; the ±1 vote is recovered
-    # as 2·ones > n, which is branchless and measured 3.5× faster
-    # than 64 CASE-WHEN sums at sf0.1. Tie (2·ones == n) leaves the
-    # bit clear, exactly like vote sum 0 under the ±1 formulation.
-    # The 64 vote columns and the fingerprint assembly are memoized
-    # per context (llm.exprcache): rebuilding them per call measured
-    # ~2.7 s of driver-side construction, more than the execution.
-    vote_cols = [
-        memo_expr(
-            ("simhash_vote", i),
-            lambda i=i: F.sum(
-                F.shiftright("h", i).bitwiseAND(F.lit(1))
-            ).alias(f"v{i}"),
-        )
-        for i in range(bits)
-    ]
-    votes = tok_rows.groupBy("id", *keep_cols).agg(
-        F.count(F.lit(1)).alias("_n"), *vote_cols
-    )
-
-    def build_sh():
-        sh = F.lit(0).cast("long")
-        for i in range(bits):
-            sh = sh.bitwiseOR(
-                F.when(
-                    F.col(f"v{i}") * 2 > F.col("_n"),
-                    F.shiftleft(F.lit(1).cast("long"), i),
-                ).otherwise(F.lit(0).cast("long"))
-            )
-        return sh
-
-    sh = memo_expr(("simhash_sh", bits), build_sh)
-    return votes.select("id", *keep_cols, sh.alias("sh"))
+    return _simhash_swar(tok_rows, keep_cols)
 
 
 # Four 16-bit lanes per packed word; <2^15 tokens/doc keeps lane 3's
@@ -1693,9 +1603,9 @@ _SWAR_LANE_MASK = 0x0001_0001_0001_0001
 _SWAR_TOKEN_LIMIT = 1 << 15
 
 
-def _simhash_swar(tok_rows: DataFrame, keep_cols, memo_expr) -> DataFrame:
+def _simhash_swar(tok_rows: DataFrame, keep_cols) -> DataFrame:
     """64-bit SimHash fingerprints from exploded token-hash rows via
-    SWAR-packed vote sums (simhash_table's bits=64 fast path).
+    SWAR-packed vote sums (simhash_table's aggregation).
 
     ``(h >> g) & 0x0001000100010001`` places bits g, g+16, g+32,
     g+48 of token hash ``h`` into the four lane slots of word g in
@@ -1740,7 +1650,7 @@ def _simhash_swar(tok_rows: DataFrame, keep_cols, memo_expr) -> DataFrame:
                     F.col("id").cast("string"),
                     F.lit(" has "),
                     n.cast("string"),
-                    F.lit(" — chunk the document or use bits != 64"),
+                    F.lit(" — chunk the document"),
                 )
             ).cast("long")
         )
@@ -1750,11 +1660,11 @@ def _simhash_swar(tok_rows: DataFrame, keep_cols, memo_expr) -> DataFrame:
 
 
 def _simhash_blocked(
-    base: DataFrame, bits: int, blocks: int, carry: tuple[str, ...] = ()
+    base: DataFrame, blocks: int, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """Explode an (id, sh[, carry…]) fingerprint table into one row
     per (doc, block): (id, sh, carry…, blk, bval)."""
-    block_bits = bits // blocks
+    block_bits = 64 // blocks
     mask = (1 << block_bits) - 1
     return base.select(
         "id",
@@ -1789,7 +1699,6 @@ def simhash_near_dups(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 8,
-    bits: int = 64,
     blocks: int = 4,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     collapse_exact: bool | None = None,
@@ -1817,7 +1726,7 @@ def simhash_near_dups(
 
     ``blocks`` trades recall against sieve strength: the chance two
     RANDOM fingerprints collide on some block is
-    ~blocks·2^-(bits/blocks) — 4 blocks of 16 bits ≈ 6e-5 (candidates
+    ~blocks·2^-(64/blocks) — 4 blocks of 16 bits ≈ 6e-5 (candidates
     stay near-linear in corpus size), 8 blocks of 8 bits ≈ 3%
     (measured 3× the runtime at sf0.1: the candidate verify, not the
     fingerprinting, dominates). Default 4; raise to 8 only when the
@@ -1830,10 +1739,10 @@ def simhash_near_dups(
     the representative. ``max_bucket=None`` restores all-pairs."""
     if _resolve_collapse(df, text_col, collapse_exact):
         return _simhash_near_dups_collapsed(
-            df, text_col, id_col, max_hamming, bits, blocks, max_bucket
+            df, text_col, id_col, max_hamming, blocks, max_bucket
         )
-    base = simhash_table(df, text_col, id_col, bits)
-    blocked = _simhash_blocked(base, bits, blocks)
+    base = simhash_table(df, text_col, id_col)
+    blocked = _simhash_blocked(base, blocks)
     # Bucket-pair form (see minhash_lsh_candidates): the simhash table
     # behind both sides of the would-be self-join is a full token
     # explode + 64-sum aggregate — recomputing it per side doubles the
@@ -1873,7 +1782,6 @@ def _simhash_near_dups_collapsed(
     text_col: str,
     id_col: str,
     max_hamming: int,
-    bits: int,
     blocks: int,
     max_bucket: int | None,
 ) -> DataFrame:
@@ -1886,8 +1794,8 @@ def _simhash_near_dups_collapsed(
     with grp > 1 are kept for exactly those self entries."""
     grouped = _grouped_by_text(df, text_col, id_col)
     reps = _reps_of(grouped)
-    base = simhash_table(reps, "_txt", "_rid", bits, keep_cols=("grp",))
-    blocked = _simhash_blocked(base, bits, blocks, carry=("grp",))
+    base = simhash_table(reps, "_txt", "_rid", keep_cols=("grp",))
+    blocked = _simhash_blocked(base, blocks, carry=("grp",))
     buckets = (
         blocked.groupBy("blk", "bval")
         .agg(

@@ -974,14 +974,7 @@ def semantic_dedup(
        pure overhead, while on the 10-way-replica sf1 corpus it
        WINS 9× (2.1 vs 19.1 s) — both measured,
        BENCH_semdedup_collapse_sf1_r11.json, output parity verified
-       both ways. Pin True/False to skip the probe. CAUTION with the
-       ``SPARK_GRAFT_COLLAPSE_AUTO=0`` kill switch: it resolves
-       ``collapse_exact=None`` to False — for *this* function that
-       flips the pre-r11 always-collapse default to never-collapse
-       and gives up the measured 9× win on replica-dense corpora
-       (the env var buys lazy construction, not a neutral default);
-       callers who know their corpus is replica-dense should pin
-       ``collapse_exact=True`` when running with the switch off.
+       both ways. Pin True/False to skip the probe.
 
     .. versionchanged:: round 10
        ``collapse_exact`` was pinned ``True`` on an sf0.1

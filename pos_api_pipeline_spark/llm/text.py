@@ -8,8 +8,6 @@ lang, source, n_chars)` table but parameterized by column name.
 
 from __future__ import annotations
 
-import os
-
 import pandas  # noqa: F401 — pandas_udf type hints ('pandas.Series')
 # are strings under `from __future__ import annotations` and resolve
 # against this module's globals at UDF registration time.
@@ -50,24 +48,21 @@ def _plain_scan_bytes(df: DataFrame) -> int | None:
     file-source relations, else None. Walks the ANALYZED logical plan
     (no optimization, no execution — inspecting ``df.rdd`` instead
     would force AQE to execute upstream stages at build time for
-    derived frames; measured doing exactly that)."""
-    try:
-        node = df._jdf.queryExecution().analyzed()
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if n.getClass().getSimpleName() not in _PLAIN_SCAN_NODES:
-                return None
-            it = n.children().iterator()
-            while it.hasNext():
-                stack.append(it.next())
-        total = 0
-        for f in df.inputFiles():
-            p = f[len("file:"):] if f.startswith("file:") else f
-            total += os.path.getsize(p)
-        return total
-    except Exception:
-        return None
+    derived frames; measured doing exactly that) and sums the leaf
+    relations' size statistics, which Spark's file index lists
+    through the Hadoop FileSystem for any scheme (local, s3a, hdfs)."""
+    total = 0
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        n = stack.pop()
+        if n.getClass().getSimpleName() not in _PLAIN_SCAN_NODES:
+            return None
+        if n.children().isEmpty():
+            total += n.stats().sizeInBytes()
+        it = n.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+    return total
 
 
 def spread_small_scan(df: DataFrame, key_col: str) -> DataFrame:
@@ -86,25 +81,13 @@ def spread_small_scan(df: DataFrame, key_col: str) -> DataFrame:
     parallelism) and this is a no-op — the corpus is never shuffled
     for it; derived frames (post-exchange parallelism) are left
     untouched. Measured at sf1: the detector family 2.7-3× (suffix
-    gram 8.1→3.0 s, minhash 9.1→2.9 s).
-    ``SPARK_GRAFT_SCAN_SPREAD=0`` disables."""
-    if os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "") == "0":
-        return df
+    gram 8.1→3.0 s, minhash 9.1→2.9 s)."""
     nbytes = _plain_scan_bytes(df)
     if nbytes is None:
         return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        digits = "".join(ch for ch in raw if ch.isdigit())
-        max_pb = int(digits) if digits else 128 * 1024 * 1024
-        if raw.lower().rstrip("b").endswith(("k", "m", "g")):
-            max_pb *= {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}[
-                raw.lower().rstrip("b")[-1]
-            ]
-    except Exception:
-        max_pb = 128 * 1024 * 1024
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     if nbytes * 2 >= max_pb * target:
         return df
     return df.repartition(target, F.col(key_col))

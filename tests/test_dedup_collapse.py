@@ -289,12 +289,10 @@ def test_megastar_bucket_single_row_parity(spark):
     assert len(uncapped) == 300 * 299 // 2
 
 
-def test_resolve_collapse_kill_switch_and_cache_bounds(spark, monkeypatch):
-    """r11 ADVICE: SPARK_GRAFT_COLLAPSE_AUTO=0 keeps detector
-    construction fully lazy (auto resolves to the uncollapsed plan,
-    no probe action); the probe cache is keyed on the owning
-    session's applicationId and FIFO-bounded."""
-    monkeypatch.delenv("SPARK_GRAFT_COLLAPSE_AUTO", raising=False)
+def test_resolve_collapse_pins_and_cache_bounds(spark, monkeypatch):
+    """Explicit ``collapse_exact`` pins win and leave no probe state;
+    the probe cache is keyed on the owning session's applicationId
+    and FIFO-bounded."""
     docs = spark.createDataFrame(
         [(i, "same text every time") for i in range(10)],
         "doc_id long, text string",
@@ -304,15 +302,11 @@ def test_resolve_collapse_kill_switch_and_cache_bounds(spark, monkeypatch):
     key = next(iter(D._distinct_ratio_cache))
     assert key[0] == spark.sparkContext.applicationId
 
-    # Kill switch: resolves False with zero probe state.
-    monkeypatch.setenv("SPARK_GRAFT_COLLAPSE_AUTO", "0")
+    # Explicit pins always win, with zero probe state.
     D._distinct_ratio_cache.clear()
-    assert D._resolve_collapse(docs, "text", None) is False
-    assert not D._distinct_ratio_cache
-    # Explicit pins always win, switch or no switch.
     assert D._resolve_collapse(docs, "text", True) is True
     assert D._resolve_collapse(docs, "text", False) is False
-    monkeypatch.delenv("SPARK_GRAFT_COLLAPSE_AUTO")
+    assert not D._distinct_ratio_cache
 
     # FIFO bound: the cache never exceeds the configured max.
     monkeypatch.setattr(D, "_DISTINCT_RATIO_CACHE_MAX", 2)
@@ -344,18 +338,12 @@ def test_probe_file_subset_stride_pick():
     assert D._probe_file_subset(small) == sorted(small)
 
 
-def test_sampled_probe_decisions_and_fallbacks(
-    spark, tmp_path, monkeypatch
-):
+def test_sampled_probe_decisions_and_fallbacks(spark, tmp_path):
     """r12: collapse auto-probe reads a stride-picked file subset
     instead of the full corpus. Replica-dense multi-file corpus →
     collapse (agrees with full probe); all-distinct multi-file →
     uncollapsed (agrees); single-file / in-memory corpora fall back
-    to the exact full probe; SPARK_GRAFT_COLLAPSE_PROBE=full pins
-    the full probe."""
-    monkeypatch.delenv("SPARK_GRAFT_COLLAPSE_AUTO", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_COLLAPSE_PROBE", raising=False)
-
+    to the exact full probe."""
     # 10-way replica corpus scattered over 16 files.
     rep = spark.createDataFrame(
         [(i, f"text {i % 200}") for i in range(2000)],
@@ -365,7 +353,7 @@ def test_sampled_probe_decisions_and_fallbacks(
     rep.repartition(16).write.parquet(rep_path)
     rep_df = spark.read.parquet(rep_path)
     assert len(rep_df.inputFiles()) >= D.COLLAPSE_PROBE_MIN_FILES
-    sampled = D._sampled_probe_frame(rep_df, "text")
+    sampled = D._sampled_probe_frame(rep_df, "text", rep_df.inputFiles())
     assert sampled is not None
     assert len(sampled.inputFiles()) < len(rep_df.inputFiles())
     D._distinct_ratio_cache.clear()
@@ -387,12 +375,12 @@ def test_sampled_probe_decisions_and_fallbacks(
 
     # Fallbacks: in-memory frame (no input files) and single-file
     # corpus both take the exact full probe.
-    assert D._sampled_probe_frame(rep, "text") is None
+    assert D._sampled_probe_frame(rep, "text", rep.inputFiles()) is None
     one_path = str(tmp_path / "one")
     rep.coalesce(1).write.parquet(one_path)
     one_df = spark.read.parquet(one_path)
     assert len(one_df.inputFiles()) < D.COLLAPSE_PROBE_MIN_FILES
-    assert D._sampled_probe_frame(one_df, "text") is None
+    assert D._sampled_probe_frame(one_df, "text", one_df.inputFiles()) is None
     D._distinct_ratio_cache.clear()
     assert D._resolve_collapse(one_df, "text", None) is True
 
@@ -400,27 +388,19 @@ def test_sampled_probe_decisions_and_fallbacks(
     # falls back to the full probe rather than probing the wrong
     # column.
     derived = rep_df.withColumn("norm_text", F.lower("text"))
-    assert D._sampled_probe_frame(derived, "norm_text") is None
+    assert (
+        D._sampled_probe_frame(derived, "norm_text", derived.inputFiles())
+        is None
+    )
     D._distinct_ratio_cache.clear()
     assert D._resolve_collapse(derived, "norm_text", None) is True
 
-    # Env pin: full probe for every corpus (file-backed or not).
-    monkeypatch.setenv("SPARK_GRAFT_COLLAPSE_PROBE", "full")
-    D._distinct_ratio_cache.clear()
-    assert D._resolve_collapse(rep_df, "text", None) is True
-    assert D._resolve_collapse(dist_df, "text", None) is False
-    monkeypatch.delenv("SPARK_GRAFT_COLLAPSE_PROBE")
 
-
-def test_cap_guard_skippable_bounds(monkeypatch):
+def test_cap_guard_skippable_bounds():
     """Pure decision table: None stats / None cap never skip; the
     uncollapsed arm skips on the EXACT row count; the collapsed arm
     derates the HLL distinct estimate by _HLL_DISTINCT_SAFETY (1.4 —
-    covers a 5.7-sigma underestimate at rsd 5%); the
-    SPARK_GRAFT_CAP_GUARD_CERTIFY=0 kill switch (for long-lived
-    drivers whose probe cache could stale-certify a mid-session
-    re-ingest) forces the guard everywhere."""
-    monkeypatch.delenv("SPARK_GRAFT_CAP_GUARD_CERTIFY", raising=False)
+    covers a 5.7-sigma underestimate at rsd 5%)."""
     skip = D._cap_guard_skippable
     assert skip(None, 100, collapsed=False) is False
     assert skip((50, 10), None, collapsed=False) is False
@@ -430,10 +410,6 @@ def test_cap_guard_skippable_bounds(monkeypatch):
     # collapsed: bounded by derated HLL distinct, rows irrelevant
     assert skip((1_000_000, 71), 100, collapsed=True) is True  # 71*1.4<100
     assert skip((1_000_000, 72), 100, collapsed=True) is False  # 72*1.4>100
-    # kill switch
-    monkeypatch.setenv("SPARK_GRAFT_CAP_GUARD_CERTIFY", "0")
-    assert skip((100, 10), 100, collapsed=False) is False
-    monkeypatch.delenv("SPARK_GRAFT_CAP_GUARD_CERTIFY")
     # the shared per-arm predicate
     needed = D._cap_guard_needed((100, 10), 100)
     assert needed(False) is False and needed(True) is False
@@ -441,7 +417,7 @@ def test_cap_guard_skippable_bounds(monkeypatch):
     assert D._cap_guard_needed((100, 10), None)(False) is False
 
 
-def test_probe_full_stats_certify_guard_skip(spark, monkeypatch):
+def test_probe_full_stats_certify_guard_skip(spark):
     """r12 follow-up (AB_sf10_semantic_dedup_r12.json measured the
     over-cap stats guard at 1.32x on a provably-safe corpus): when
     the collapse probe's FULL pass proves no bucket can be over-cap,
@@ -451,8 +427,6 @@ def test_probe_full_stats_certify_guard_skip(spark, monkeypatch):
     decisions never certify."""
     from pos_api_pipeline_spark.llm import similarity as S
 
-    monkeypatch.delenv("SPARK_GRAFT_COLLAPSE_AUTO", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_COLLAPSE_PROBE", raising=False)
     # 3-way replica families, in-memory -> full-probe fallback.
     emb = spark.createDataFrame(
         [
@@ -496,3 +470,45 @@ def test_probe_full_stats_certify_guard_skip(spark, monkeypatch):
     assert sorted(map(tuple, p_auto.collect())) == sorted(
         map(tuple, p_pin.collect())
     )
+
+
+def test_probe_cache_reprobes_files_appended_under_same_path(
+    spark, tmp_path
+):
+    """The probe cache is keyed on the input files as well as the
+    plan. Spark's analyzed-plan semanticHash compares file sources by
+    root path, so a plan-only key served a corpus grown by an append
+    under the same path its pre-append stats: the over-cap guard got
+    certified away for a corpus past the cap, and a replica-dense
+    append kept the uncollapsed plan."""
+
+    def write(path, rows, mode="error"):
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode(mode).parquet(path)
+
+    path = str(tmp_path / "grown")
+    write(path, [(i, f"first batch doc {i}") for i in range(50)])
+    first = spark.read.parquet(path)
+    D._distinct_ratio_cache.clear()
+    collapse, stats = D._resolve_collapse_stats(first, "text", None)
+    assert (collapse, stats[0]) == (False, 50)
+    assert D._cap_guard_skippable(stats, 100, collapsed=False) is True
+
+    write(path, [(50 + i, f"second batch doc {i}") for i in range(500)], "append")
+    grown = spark.read.parquet(path)
+    # The plan hash alone cannot tell the two reads apart.
+    assert (
+        first._jdf.queryExecution().analyzed().semanticHash()
+        == grown._jdf.queryExecution().analyzed().semanticHash()
+    )
+    collapse, stats = D._resolve_collapse_stats(grown, "text", None)
+    assert (collapse, stats[0]) == (False, 550)
+    assert D._cap_guard_skippable(stats, 100, collapsed=False) is False
+
+    # A replica-dense append flips the collapse decision itself.
+    dense = str(tmp_path / "dense")
+    write(dense, [(i, f"distinct doc {i}") for i in range(50)])
+    assert D._resolve_collapse(spark.read.parquet(dense), "text", None) is False
+    write(dense, [(50 + i, "boilerplate footer") for i in range(500)], "append")
+    assert D._resolve_collapse(spark.read.parquet(dense), "text", None) is True

@@ -1,15 +1,17 @@
 """Scale-hardening operator tests: skew-safe distinct, bucketed
-co-located joins, small-files compaction."""
+co-located joins, small-files compaction, small-scan input spread."""
 
 from __future__ import annotations
 
 import datetime as dt
 import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark import lake
+from pos_api_pipeline_spark.llm.text import _plain_scan_bytes, spread_small_scan
 from pos_api_pipeline_spark.operators import analytics as A
 
 
@@ -80,3 +82,55 @@ def test_bucketed_join_skips_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     assert "Exchange" not in plan
     assert f.join(d, "k").count() == 100
+
+
+def _small_corpus(spark, tmp_path):
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"document number {i}") for i in range(200)],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _spreads(df) -> bool:
+    return spread_small_scan(df, "doc_id") is not df
+
+
+def test_spread_small_scan_sizes_through_spark(spark, tmp_path, monkeypatch):
+    """Input bytes come from the relation's own size statistics, not
+    a local ``os.path`` walk of ``inputFiles()`` — so the spread
+    works on any Hadoop filesystem scheme, with the same byte count
+    the local walk gives."""
+    docs = _small_corpus(spark, tmp_path)
+    local_bytes = sum(
+        os.path.getsize(f[len("file:"):]) for f in docs.inputFiles()
+    )
+
+    def no_local_fs(path):
+        raise OSError(f"not a local path: {path}")
+
+    monkeypatch.setattr(os.path, "getsize", no_local_fs)
+    assert _plain_scan_bytes(docs) == local_bytes
+    assert _spreads(docs)
+    assert _spreads(docs.filter(F.col("doc_id") > 3).select("doc_id", "text"))
+    # A derived frame's parallelism comes from its exchange: untouched.
+    assert not _spreads(docs.groupBy("doc_id").count())
+
+
+def test_spread_small_scan_reads_max_partition_bytes_units(spark, tmp_path):
+    """``spark.sql.files.maxPartitionBytes`` is read as Spark parses it:
+    ``1t`` is a terabyte (spread), ``1b`` one byte (no spread)."""
+    docs = _small_corpus(spark, tmp_path)
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "1t")
+        assert _spreads(docs)
+        spark.conf.set(key, "1b")
+        assert not _spreads(docs)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

@@ -1,8 +1,7 @@
-"""SWAR-packed SimHash vote sums (llm/dedup.py simhash_table
-bits=64 fast path): 16 packed 4-lane words instead of 64 per-bit
-sums. Contract: bit-identical fingerprints vs the per-bit reference,
-a clear error at the 32768-tokens/doc lane-overflow limit, and the
-general-``bits`` path unchanged.
+"""SWAR-packed SimHash vote sums (llm/dedup.py simhash_table): 16
+packed 4-lane words instead of 64 per-bit sums. Contract:
+bit-identical fingerprints vs the per-bit scalar ``simhash`` column
+and a clear error at the 32768-tokens/doc lane-overflow limit.
 """
 
 import random
@@ -30,27 +29,27 @@ def _mixed_corpus(spark, seed=11, n=60):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_swar_bit_parity_with_perbit(spark):
-    docs = _mixed_corpus(spark)
-    swar = {r["id"]: r["sh"] for r in D.simhash_table(docs).collect()}
+def _table_vs_perbit(docs):
+    """SWAR ``simhash_table`` fingerprints and the per-bit scalar
+    ``simhash`` column's, keyed by doc id (zero-token docs drop from
+    the table, so the reference keeps only ids the table has)."""
+    table = {r["id"]: r["sh"] for r in D.simhash_table(docs).collect()}
     perbit = {
-        r["id"]: r["sh"]
-        for r in D.simhash_table(docs, _force_perbit=True).collect()
+        r["doc_id"]: r["sh"]
+        for r in docs.select("doc_id", D.simhash("text").alias("sh")).collect()
+        if r["doc_id"] in table
     }
+    return table, perbit
+
+
+def test_swar_bit_parity_with_perbit(spark):
+    swar, perbit = _table_vs_perbit(_mixed_corpus(spark))
     assert swar == perbit
     assert len(swar) > 0
 
 
 def test_swar_parity_with_scalar_simhash(spark):
-    docs = _mixed_corpus(spark, seed=23, n=25)
-    table = {r["id"]: r["sh"] for r in D.simhash_table(docs).collect()}
-    scalar = {
-        r["doc_id"]: r["sh"]
-        for r in docs.select(
-            "doc_id", D.simhash("text").alias("sh")
-        ).collect()
-        if r["doc_id"] in table  # zero-token docs drop from the table
-    }
+    table, scalar = _table_vs_perbit(_mixed_corpus(spark, seed=23, n=25))
     assert table == scalar
 
 
@@ -76,9 +75,3 @@ def test_swar_token_limit_guard(spark):
         "doc_id long, text string",
     )
     assert D.simhash_table(ok).count() == 1
-
-
-def test_nondefault_bits_still_perbit(spark):
-    docs = _mixed_corpus(spark, seed=3, n=8)
-    rows = D.simhash_table(docs, bits=16).collect()
-    assert all(0 <= r["sh"] < (1 << 16) for r in rows)

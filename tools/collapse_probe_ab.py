@@ -56,7 +56,7 @@ def _probe_sampled(df, col):
     ran: 'sampled', 'escalated' (gray band → full), or
     'fallback_full' (not file-subsettable)."""
     t0 = time.perf_counter()
-    sampled = D._sampled_probe_frame(df, col)
+    sampled = D._sampled_probe_frame(df, col, df.inputFiles())
     if sampled is None:
         ratio = D._distinct_ratio(df, col)
         return ratio, time.perf_counter() - t0, "fallback_full", None
