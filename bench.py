@@ -2,7 +2,8 @@
 
 Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+   "queries": {name: sec, ...}, "sf": ..., "nproc": ...,
+   "defaultParallelism": ..., "spark.master": ..., "commit": ...}
 
 Execution is forced with the no-op sink (full plan runs, nothing is
 collected to the driver), which is the honest way to time a
@@ -45,6 +46,9 @@ PHASE_CANARY = (
 #: start-canary ratio (and warns on the end canary): a degraded-phase
 #: run must never become a round's headline artifact or a band pin.
 PHASE_RATIO_MAX = 1.15
+#: Host facts every compact stdout line carries (the full set is in
+#: the BENCH_HISTORY.jsonl twin).
+HOST_FIELDS = ("nproc", "defaultParallelism", "spark.master", "commit")
 
 
 def main() -> None:
@@ -52,9 +56,14 @@ def main() -> None:
     round_close = "--round-close" in sys.argv[1:]
     phase_probe = "--phase-probe" in sys.argv[1:]
     import __spark_entry__ as e
+    from perfbench.run import _facts
     from pos_api_pipeline_spark.session import get_spark
 
     spark = get_spark("bench")
+    # Host and session facts (cores, master, parallelism, versions,
+    # commit): numbers from two hosts must be told apart from the
+    # artifact alone.
+    host = _facts(spark, seed=None)
     qs = e.queries()
 
     # Warm-up: JVM JIT, codegen cache, parquet footer reads — touch
@@ -270,6 +279,7 @@ def main() -> None:
         "phase_canary": phase_detail,
         "errors": errors,
         "sf": sf_val,
+        "host": host,
     }
     if round_close:
         accepted = (
@@ -448,6 +458,7 @@ def _compact(payload: dict, budget: int) -> dict:
         "value": payload["value"],
         "unit": payload["unit"],
         "sf": payload["sf"],
+        **{k: payload["host"][k] for k in HOST_FIELDS},
         "n_queries": len(payload["queries"]),
         "total_median_seconds": payload["total_median_seconds"],
         "run_counts": payload.get("run_counts"),

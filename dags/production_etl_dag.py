@@ -15,7 +15,7 @@ env):
 
     POS_LAKE_PATH    parquet lake root              (required)
     POS_STATE_FILE   watermark state file           (required)
-    POS_REPORT_DIR   report output dir              (optional)
+    POS_REPORT_DIR   report and figure output dir   (optional)
     POS_FETCH_FN     "module.path:callable" for the REST page fetcher
                      (required — the API client is deployment-specific)
 
@@ -34,7 +34,8 @@ from pos_api_pipeline_spark.plans.dag import (
     MONTHLY_TASKS,
     SKIP_TASK,
     check_if_first_day_of_month,
-    report_month_for,
+    cumulative_report,
+    monthly_report,
 )
 
 TASK_IDS = [
@@ -82,42 +83,27 @@ def task_branch(*, data_interval_end=None, **_):
     return check_if_first_day_of_month(run_date)
 
 
-def _report_tick(kind: str, run_date: dt.date) -> str:
-    from pos_api_pipeline_spark.plans import pipelines, report
-
-    spark = _spark()
-    lake_path = os.environ["POS_LAKE_PATH"]
-    if kind == "monthly":
-        year, month = report_month_for(run_date)
-        data = pipelines.monthly_report_data(spark, lake_path, year, month)
-        title = f"Monthly Report {year}-{month:02d}"
-        stem = f"monthly_report_{year}-{month:02d}"
-    else:
-        data = pipelines.cumulative_report_data(spark, lake_path)
-        title, stem = "Cumulative Report", "cumulative_report"
-    md = report.render_report(title, data)
-    report_dir = os.environ.get("POS_REPORT_DIR")
-    if report_dir:
-        from pathlib import Path
-
-        rd = Path(report_dir)
-        rd.mkdir(parents=True, exist_ok=True)
-        (rd / f"{stem}.md").write_text(md, encoding="utf-8")
-        report.convert_md_to_pdf(md, rd / f"{stem}.pdf")
-    return md
-
-
 def task_monthly_report(*, data_interval_end=None, **_):
     run_date = (
         data_interval_end.date()
         if data_interval_end is not None
         else dt.date.today()
     )
-    return _report_tick("monthly", run_date)
+    return monthly_report(
+        _spark(),
+        os.environ["POS_LAKE_PATH"],
+        run_date,
+        os.environ.get("POS_REPORT_DIR") or None,
+    )
 
 
 def task_cumulative_report(**_):
-    return _report_tick("cumulative", dt.date.today())
+    md, _figures = cumulative_report(
+        _spark(),
+        os.environ["POS_LAKE_PATH"],
+        os.environ.get("POS_REPORT_DIR") or None,
+    )
+    return md
 
 
 try:  # DAG definition only where a scheduler exists

@@ -25,8 +25,6 @@ import struct
 
 from pos_api_pipeline_spark.llm.png import Image
 
-_FOURCC_DIB = b"\x00\x00\x00\x00"  # biCompression = BI_RGB
-
 
 def is_avi(payload: bytes | None) -> bool:
     """RIFF/AVI magic check (cheap reject before full parse)."""

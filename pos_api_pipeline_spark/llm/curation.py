@@ -94,27 +94,6 @@ def repetition_stats(
     )
 
 
-def filter_repetitive(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
-    max_dup_fraction: float = 0.5,
-    max_top_fraction: float = 0.2,
-) -> DataFrame:
-    """Drop documents whose n-gram repetition exceeds the bounds —
-    the filter form of ``repetition_stats`` (null fractions pass)."""
-    stats = repetition_stats(df, text_col, id_col, n).select(
-        id_col, "dup_ngram_fraction", "top_ngram_fraction"
-    )
-    joined = df.join(stats, id_col, "left")
-    kept = joined.filter(
-        (F.coalesce(F.col("dup_ngram_fraction"), F.lit(0.0)) <= max_dup_fraction)
-        & (F.coalesce(F.col("top_ngram_fraction"), F.lit(0.0)) <= max_top_fraction)
-    )
-    return kept.drop("dup_ngram_fraction", "top_ngram_fraction")
-
-
 # ---------------------------------------------------------------------------
 # Train/test decontamination (benchmark n-gram overlap)
 # ---------------------------------------------------------------------------

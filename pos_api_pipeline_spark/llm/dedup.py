@@ -51,18 +51,6 @@ def exact_dedup(
     )
 
 
-def duplicate_groups(
-    df: DataFrame, key: Column, id_col: str = "doc_id"
-) -> DataFrame:
-    """Groups with >1 member under an arbitrary canonical key
-    (e.g. the fingerprint from llm.text.fingerprint)."""
-    return (
-        df.groupBy(key.alias("dup_key"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # N-gram (shingle) Jaccard near-dup — exact, bucket-joined
 # ---------------------------------------------------------------------------

@@ -162,11 +162,6 @@ def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
     return assets.mapInPandas(batches, schema=ASSET_SCHEMA)
 
 
-def resize_stub(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Backwards-compatible alias for the pre-codec stub name."""
-    return resize_images(assets, width, height)
-
-
 def resample_audio(assets: DataFrame, target_rate: int) -> DataFrame:
     """Audio resample over binary payloads: PCM WAV payloads are
     REALLY decoded → nearest-neighbor resampled → re-encoded
@@ -207,12 +202,6 @@ def resample_audio(assets: DataFrame, target_rate: int) -> DataFrame:
             yield out
 
     return assets.mapInPandas(batches, schema=ASSET_SCHEMA)
-
-
-def sample_frames_stub(assets: DataFrame, every_ms: int) -> DataFrame:
-    """Backwards-compatible alias for the pre-codec stub name — frame
-    sampling is now real for uncompressed AVI (see sample_frames)."""
-    return sample_frames(assets, every_ms)
 
 
 def synthetic_wav_assets(

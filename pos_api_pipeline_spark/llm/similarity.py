@@ -23,7 +23,6 @@ from pos_api_pipeline_spark.llm.dedup import (
     _exploded_id_pairs,
     _exploded_member_pairs,
     _cap_guard_needed,
-    _resolve_collapse,
     _resolve_collapse_stats,
 )
 from pos_api_pipeline_spark.session import local_frame
@@ -1370,9 +1369,7 @@ def pq_codebooks(
     """Deterministic product-quantization codebooks: the first ``k``
     corpus vectors by id, each cut into ``m`` contiguous sub-vectors.
     Same seed-centroid convention as ``ivf_topk`` — deterministic and
-    oracle-reproducible; swap in KMeans-per-subspace for production
-    recall (the consumer below is agnostic to how the codebook was
-    trained).
+    oracle-reproducible.
 
     Returns (subspace, code, cb_slice:array<double>) — m*k tiny rows,
     meant to be broadcast.
@@ -1475,7 +1472,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k: score each query's EXACT
     sub-vectors against every corpus vector's PQ codes via a
@@ -1494,7 +1490,7 @@ def pq_topk(
     oracle folding the same doubles in the same order (a plain SUM()
     would expose cross-engine partial-aggregation order).
     """
-    cb = codebooks if codebooks is not None else pq_codebooks(
+    cb = pq_codebooks(
         corpus, dim, m=m, k=k_codes, id_col=id_col, vec_col=vec_col
     )
     codes = pq_encode(
@@ -1568,7 +1564,6 @@ def ivf_pq_topk(
     vec_col: str = "embedding",
     k: int = 5,
     centroids: DataFrame | None = None,
-    codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """IVFADC (Jégou et al., "Product Quantization for Nearest
     Neighbor Search", TPAMI 2011): IVF coarse routing composed with
@@ -1592,7 +1587,7 @@ def ivf_pq_topk(
         if centroids is not None
         else deterministic_centroids(corpus, n_centroids, id_col, vec_col)
     )
-    cb = codebooks if codebooks is not None else pq_codebooks(
+    cb = pq_codebooks(
         corpus, dim, m=m, k=k_codes, id_col=id_col, vec_col=vec_col
     )
     c = corpus.select(
@@ -1668,104 +1663,6 @@ def ivf_pq_topk(
         totals.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "adc_dist")
-    )
-
-
-def pq_codebooks_kmeans(
-    corpus: DataFrame,
-    dim: int,
-    m: int = 4,
-    k: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 10,
-) -> DataFrame:
-    """KMeans-trained product-quantization codebooks: one independent
-    KMeans fit per subspace over that subspace's sub-vectors — the
-    production alternative to the deterministic seed codebooks
-    (``pq_codebooks``), typically worth a large recall jump at the
-    same code budget. At 100 TB: fit each subspace on a sample; the
-    returned (subspace, code, cb_slice) frame is m*k rows and
-    broadcast by every consumer, so training cost is all that scales.
-
-    Codes are ordered by cluster-center norm (ties by first
-    component) so the codebook, unlike raw MLlib cluster indices, is
-    deterministic for a fixed seed."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sub = dim // m
-    spark = corpus.sparkSession
-    rows = []
-    for s in range(m):
-        train = corpus.select(
-            array_to_vector(
-                F.slice(as_double_array(vec_col), s * sub + 1, sub)
-            ).alias("features")
-        )
-        model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(train)
-        centers = sorted(
-            ([float(x) for x in c] for c in model.clusterCenters()),
-            key=lambda c: (sum(x * x for x in c), c[0] if c else 0.0),
-        )
-        rows.extend((s, i, c) for i, c in enumerate(centers))
-    return local_frame(spark, rows, T.StructType([
-        T.StructField("subspace", T.IntegerType()),
-        T.StructField("code", T.IntegerType()),
-        T.StructField("cb_slice", T.ArrayType(T.DoubleType())),
-    ]))
-
-
-def pq_quantization_error(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    dim: int,
-    m: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Mean squared quantization distortion of a PQ codebook over the
-    corpus — THE codebook-quality number (KMeans-trained books must
-    beat seed books on it; recall follows distortion only when the
-    search metric matches the quantizer's L2 objective). One row:
-    (mse, n_vectors).
-
-    Same shape as ``pq_encode``: explode to (vector, subspace),
-    broadcast the codebook, take the min sub-distance per (vector,
-    subspace), then average the per-vector sums.
-    """
-    sub = dim // m
-    exploded = corpus.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("subspace"),
-                    F.slice(as_double_array(vec_col), s * sub + 1, sub).alias(
-                        "sub_vec"
-                    ),
-                ),
-            )
-        ).alias("e"),
-    ).select("id", "e.subspace", "e.sub_vec")
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("sub_vec"), F.col("cb_slice"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    best = (
-        exploded.join(F.broadcast(codebooks), on="subspace")
-        .withColumn("_d", dist)
-        .groupBy("id", "subspace")
-        .agg(F.min("_d").alias("_dmin"))
-    )
-    per_vec = best.groupBy("id").agg(F.sum("_dmin").alias("_err"))
-    return per_vec.agg(
-        F.avg("_err").alias("mse"),
-        F.count(F.lit(1)).alias("n_vectors"),
     )
 
 

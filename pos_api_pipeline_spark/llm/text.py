@@ -157,25 +157,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def filter_quality(
-    df: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = 5,
-    max_punct_ratio: float = 0.3,
-    max_stopword_ratio: float = 0.8,
-) -> DataFrame:
-    """Quality gate: the standard cheap pre-filter for a training
-    corpus, built on quality_score. Thresholds are arguments, not
-    policy — tune per corpus. Rows failing any bound drop."""
-    scored = quality_score(df, text_col)
-    kept = scored.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.coalesce(F.col("punct_ratio"), F.lit(0.0)) <= max_punct_ratio)
-        & (F.coalesce(F.col("stopword_ratio"), F.lit(0.0)) <= max_stopword_ratio)
-    )
-    return kept.drop("n_tokens", "punct_ratio", "stopword_ratio", "mean_token_len")
-
-
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Lexicon-vote language ID: count marker-word hits per language,
     highest vote wins (ties broken by language code; zero hits →

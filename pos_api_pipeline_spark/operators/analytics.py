@@ -68,57 +68,6 @@ def count_distinct_by(
     return df.groupBy(*keys).agg(agg)
 
 
-def two_stage_count_distinct(
-    df: DataFrame,
-    keys: Sequence[str],
-    id_col: str,
-    alias: str = "unique_count",
-) -> DataFrame:
-    """Skew-safe exact COUNT DISTINCT: stage 1 dedups on
-    (keys, id) — the id spreads a hot group key across the whole
-    cluster — stage 2 counts per key over the already-shrunk frame.
-
-    Semantically identical to ``count_distinct_by``; use when one
-    group holds a disproportionate share of rows (the classic viral
-    key). Same trick as manual salting but the id IS the salt, so no
-    parameter tuning. Nulls in ``id_col`` are not counted, matching
-    countDistinct.
-    """
-    deduped = (
-        df.filter(F.col(id_col).isNotNull())
-        .select(*keys, id_col)
-        .distinct()
-    )
-    return deduped.groupBy(*keys).agg(F.count(F.lit(1)).alias(alias))
-
-
-def salted_grouped_sum(
-    df: DataFrame,
-    keys: Sequence[str],
-    val: str,
-    alias: str = "total",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-safe grouped sum via explicit salting: stage 1 groups on
-    (keys, salt) so a hot key spreads over ``salt_buckets`` reducers,
-    stage 2 merges the partials per key.
-
-    For plain sums Spark's map-side partial aggregation usually makes
-    this unnecessary; it matters when stage-1 state per key is large
-    (collect_list/distinct-like aggregates) or when AQE skew handling
-    is unavailable. Results are identical to a plain groupBy-sum
-    (decimal accumulation recommended upstream when exactness across
-    plans matters).
-    """
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(*keys, "_salt")
-        .agg(F.sum(val).alias("_partial"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias(alias))
-
-
 def grouped_multi_agg(
     df: DataFrame,
     keys: Sequence[str],
@@ -170,23 +119,6 @@ def group_share(
         pct_alias,
         F.col(count_alias) / F.sum(count_alias).over(w) * 100.0,
     )
-
-
-def two_level_agg(
-    df: DataFrame,
-    inner_key,
-    val: str,
-    inner_agg: str = "sum",
-    outer_agg: str = "avg",
-    alias: str = "value",
-) -> DataFrame:
-    """A4 — aggregate of per-group aggregates (reference:
-    cumulative_report.py:45 — mean over per-month sums). Two shuffles,
-    the second over the already-shrunk per-group frame (negligible)."""
-    inner = df.groupBy(inner_key).agg(
-        getattr(F, inner_agg)(val).alias("_inner")
-    )
-    return inner.agg(getattr(F, outer_agg)("_inner").alias(alias))
 
 
 def pivot_matrix(

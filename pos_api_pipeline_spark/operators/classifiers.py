@@ -9,7 +9,7 @@ projections without materialization.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -68,26 +68,6 @@ def standardize_mayo(col: Column | str) -> Column:
     ).otherwise(raw)
 
 
-def rename_combo_subitem(col: Column | str) -> Column:
-    """C7 — combo sub-item renaming (shared helper for the three
-    near-identical blocks at reference
-    reporting/data_preparation.py:163-171,
-    reporting/cumulative_report.py:189-195, 239-245):
-    'smash'->Smash Burger, 'chiken'/'chicken'->Chicken Burger,
-    'coca'->Coca Cola; else passthrough (case-insensitive)."""
-    raw = F.col(col) if isinstance(col, str) else col
-    c = F.lower(raw)
-    return (
-        F.when(c.contains("smash"), F.lit("Smash Burger"))
-        .when(
-            c.contains("chiken") | c.contains("chicken"),
-            F.lit("Chicken Burger"),
-        )
-        .when(c.contains("coca"), F.lit("Coca Cola"))
-        .otherwise(raw)
-    )
-
-
 def period_type(ts_col: Column | str) -> Column:
     """T13 — weekday/weekend classifier
     (reference: reporting/cumulative_report.py:74-76). The reference
@@ -98,7 +78,3 @@ def period_type(ts_col: Column | str) -> Column:
     return F.when(
         F.dayofweek(c).isin(1, 6, 7), F.lit("Weekend")
     ).otherwise(F.lit("Weekday"))
-
-
-def with_order_category(df: DataFrame, src: str = "order_type") -> DataFrame:
-    return df.withColumn("order_category", order_category(src))

@@ -24,11 +24,6 @@ WEEKDAY_ORDER = [
     "Sunday",
 ]
 
-# Spark dayofweek: Sunday=1 .. Saturday=7 → ISO Monday=1 .. Sunday=7
-# sort key for ordered-weekday axes (T7).
-def weekday_sort_key(ts_col):
-    return ((F.dayofweek(ts_col) + 5) % 7) + 1
-
 
 def day_name(ts_col):
     """T6 — English day name. `date_format(..., 'EEEE')` follows the

@@ -11,7 +11,7 @@ at any point).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark.schemas import CURATED_COLUMNS
@@ -74,7 +74,8 @@ def flatten_receipts(receipts: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# C1/C2 — order-type normalization (reference: etl/transform.py:101-157)
+# C1 — order-type normalization (reference: etl/transform.py:101-123;
+# the unwired np.select variant C2 is not ported)
 # ---------------------------------------------------------------------------
 
 
@@ -101,26 +102,6 @@ def homogenize_order_types(
         F.when(c.contains("01"), F.lit("Para llevar"))
         .when(c.contains("-"), F.lit("Mesa 2"))
         .when(c.contains("domicilio"), F.lit("A domicilio"))
-        .when(c.contains("Llevar"), F.lit("Para llevar"))
-        .otherwise(c)
-    )
-    return df.withColumn(col, normalized)
-
-
-def homogenize_order_types_optimized(
-    df: DataFrame, col: str = "order_type"
-) -> DataFrame:
-    """np.select twin (reference: etl/transform.py:125-157).
-
-    Different priority list and different 'Mesa' value than the
-    sequential variant — kept as a separate operator because the
-    reference keeps both; ``run_transform`` uses the sequential one.
-    """
-    c = F.col(col)
-    normalized = (
-        F.when(c.contains("-"), F.lit("Mesa"))
-        .when(c.contains("domicilio"), F.lit("A domicilio"))
-        .when(c.contains("01"), F.lit("Para llevar"))
         .when(c.contains("Llevar"), F.lit("Para llevar"))
         .otherwise(c)
     )
@@ -159,13 +140,6 @@ def with_time_slots(df: DataFrame, ts_col: str = "datetime") -> DataFrame:
     )
 
 
-def to_utc_minus_6(df: DataFrame, ts_col: str) -> Column:
-    """tz-rule variant (reference: etl/transform.py:159-169) — defined
-    but NOT wired into the curation chain, mirroring the reference
-    where ``change_time_to_utc_minus_6`` exists unused."""
-    return F.to_utc_timestamp(F.col(ts_col), "America/Mexico_City")
-
-
 # ---------------------------------------------------------------------------
 # run_transform composition (reference: etl/transform.py:199-222)
 # ---------------------------------------------------------------------------
@@ -175,8 +149,8 @@ def run_transform(receipts: DataFrame) -> DataFrame:
     """Full curation chain: flatten → homogenize → time slots → conform.
 
     Mirrors the reference composition (etl/transform.py:217-219);
-    ``change_time_to_utc_minus_6`` is intentionally absent from the
-    chain, as in the reference. Output conforms to CURATED_SCHEMA
+    ``change_time_to_utc_minus_6`` (T3) is absent from the chain, as in
+    the reference, and is not ported. Output conforms to CURATED_SCHEMA
     column order.
     """
     flat = flatten_receipts(receipts)

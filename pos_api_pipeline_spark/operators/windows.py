@@ -1,4 +1,6 @@
-"""Window / dedup / sort / union operators (SURVEY.md §2.6 W1–W5).
+"""Window operators (SURVEY.md §2.6 W1–W2, plus C14's lag window).
+W3 (global sort) and W5 (UNION ALL) are the plain Spark calls
+``orderBy(F.desc(...))`` and ``unionByName(...)`` at their call sites.
 
 The W1 window dedup is THE canonical cleanup step the reference runs
 before every report (latest version of each receipt line wins). At
@@ -38,20 +40,6 @@ def window_dedup(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """W5 — UNION ALL by name (reference: etl/load.py:196,
-    reporting/data_preparation.py:195). ``allowMissingColumns`` fills
-    typed nulls like pandas concat does."""
-    return a.unionByName(b, allowMissingColumns=True)
-
-
-def sort_desc(df: DataFrame, col: str) -> DataFrame:
-    """W3 — global sort (reference: cumulative_report.py:157, 314, 569).
-    Range-partitioned exchange; at scale prefer top-k (limit) when the
-    consumer only reads the head."""
-    return df.orderBy(F.desc(col))
 
 
 def pct_change_over(

@@ -18,9 +18,11 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from pos_api_pipeline_spark.operators.combos import explode_combo_items
 from pos_api_pipeline_spark.plans import pipelines, report
 from pos_api_pipeline_spark.plans.plots import generate_all_report_figures
 
@@ -43,6 +45,59 @@ def report_month_for(run_date: dt.date) -> tuple[int, int]:
     monthly_report.py:634-650)."""
     last_day_prev = run_date.replace(day=1) - dt.timedelta(days=1)
     return last_day_prev.year, last_day_prev.month
+
+
+def _deliver(md: str, report_dir: str | None, stem: str) -> None:
+    """Deliverables: markdown + PDF per report (reference:
+    reporting/utils.py conversion step)."""
+    if report_dir is None:
+        return
+    rd = Path(report_dir)
+    rd.mkdir(parents=True, exist_ok=True)
+    (rd / f"{stem}.md").write_text(md, encoding="utf-8")
+    report.convert_md_to_pdf(md, rd / f"{stem}.pdf")
+
+
+def monthly_report(
+    spark: SparkSession,
+    lake_path: str,
+    run_date: dt.date,
+    report_dir: str | None = None,
+) -> str:
+    """The monthly report task: render the month that just closed,
+    write it to ``report_dir`` when given, return the markdown. The
+    cleaned frame is unpersisted before returning."""
+    year, month = report_month_for(run_date)
+    cleaned, sections = pipelines.monthly_report_data(
+        spark, lake_path, year, month
+    )
+    try:
+        md = report.render_report(f"Monthly Report {year}-{month:02d}", sections)
+    finally:
+        cleaned.unpersist()
+    _deliver(md, report_dir, f"monthly_report_{year}-{month:02d}")
+    return md
+
+
+def cumulative_report(
+    spark: SparkSession, lake_path: str, report_dir: str | None = None
+) -> tuple[str, list[str]]:
+    """The cumulative report task: render the all-history report and,
+    when ``report_dir`` is given, write it with every report figure
+    drawn from the same cleaned frame. Returns (markdown, figure
+    paths); the cleaned frame is unpersisted before returning."""
+    cleaned, sections = pipelines.cumulative_report_data(spark, lake_path)
+    figures = []
+    try:
+        md = report.render_report("Cumulative Report", sections)
+        if report_dir is not None:
+            figures = generate_all_report_figures(
+                cleaned, explode_combo_items(cleaned), report_dir
+            )
+    finally:
+        cleaned.unpersist()
+    _deliver(md, report_dir, "cumulative_report")
+    return md, [str(p) for p in figures]
 
 
 def run_production_etl(
@@ -79,49 +134,15 @@ def run_production_etl(
         statuses[SKIP_TASK] = "success"
     else:
         statuses[SKIP_TASK] = "skipped"
-        year, month = report_month_for(run_date)
-
-        monthly = pipelines.monthly_report_data(spark, lake_path, year, month)
-        monthly_md = report.render_report(
-            f"Monthly Report {year}-{month:02d}", monthly
+        statuses["monthly_report_md"] = monthly_report(
+            spark, lake_path, run_date, report_dir
         )
         statuses["run_monthly_report_task"] = "success"
-        statuses["monthly_report_md"] = monthly_md
-
-        cumulative = pipelines.cumulative_report_data(spark, lake_path)
-        cumulative_md = report.render_report("Cumulative Report", cumulative)
+        md, figures = cumulative_report(spark, lake_path, report_dir)
+        statuses["cumulative_report_md"] = md
         statuses["run_cumulative_report_task"] = "success"
-        statuses["cumulative_report_md"] = cumulative_md
-
         if report_dir is not None:
-            from pos_api_pipeline_spark import lake
-            from pos_api_pipeline_spark.operators.cleaning import (
-                clean_for_reporting,
-            )
-            from pos_api_pipeline_spark.operators.combos import (
-                explode_combo_items,
-            )
-            from pos_api_pipeline_spark.operators.windows import window_dedup
-
-            cleaned = clean_for_reporting(
-                window_dedup(lake.read_lake(spark, lake_path))
-            ).cache()
-            figures = generate_all_report_figures(
-                cleaned, explode_combo_items(cleaned), report_dir
-            )
-            cleaned.unpersist()
-            statuses["figures"] = [str(p) for p in figures]
-            # Deliverables: markdown + PDF per report (reference:
-            # reporting/utils.py conversion step).
-            from pathlib import Path
-
-            rd = Path(report_dir)
-            for name, md in (
-                (f"monthly_report_{year}-{month:02d}", monthly_md),
-                ("cumulative_report", cumulative_md),
-            ):
-                (rd / f"{name}.md").write_text(md, encoding="utf-8")
-                report.convert_md_to_pdf(md, rd / f"{name}.pdf")
+            statuses["figures"] = figures
 
     statuses["end"] = "success"
     return statuses

@@ -19,15 +19,17 @@ The three entry points of the reference, rebuilt Spark-first:
   cleaning → KPIs, monthly trend, day×hour heatmap, weekday/weekend,
   combo analyses, basket rules.
 
-The reference reuses one materialized pandas frame across ~7
-analytics implicitly; in Spark that reuse must be explicit —
-``.cache()`` at the fan-out point, unpersist at the end
-(SURVEY.md §4).
+Both reports read one composition, ``_cleaned_lake``. The reference
+reuses one materialized pandas frame across ~7 analytics implicitly;
+in Spark that reuse must be explicit — ``.cache()`` at the fan-out
+point, unpersist at the end (SURVEY.md §4). Each report function
+returns its cached frame with its sections, and the caller unpersists
+it once the sections are rendered (``plans/dag.py``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark import lake
@@ -86,22 +88,35 @@ def daily_incremental_run(
     return {"rows": curated.count(), "watermark": new_wm or wm}
 
 
+def _cleaned_lake(
+    spark: SparkSession, lake_path: str, where: Column | None = None
+) -> DataFrame:
+    """The frame every report reads: lake scan (optionally filtered)
+    → W1 window dedup (latest version of each line wins) → reporting
+    clean."""
+    df = lake.read_lake(spark, lake_path)
+    if where is not None:
+        df = df.filter(where)
+    return clean_for_reporting(window_dedup(df))
+
+
 def monthly_report_data(
     spark: SparkSession,
     lake_path: str,
     year: int,
     month: int,
-) -> dict[str, DataFrame]:
+) -> tuple[DataFrame, dict[str, DataFrame]]:
     """§3.2 — the monthly comparison report's data layer: every
     analytic as a DataFrame keyed by name (rendering is a separate,
-    driver-side concern).
+    driver-side concern). Returns ``(cleaned, sections)``: ``cleaned``
+    is the cached frame the sections fan out from, which the caller
+    unpersists after rendering.
 
     The reference compares the report month with the PREVIOUS month
     (and crashes in January computing it, monthly_report.py:40 — we
     roll the year instead, implementing the intent)."""
     prev_year, prev_month = (year, month - 1) if month > 1 else (year - 1, 12)
     months = [(year, month), (prev_year, prev_month)]
-    df = lake.read_lake(spark, lake_path)
     # Partition-pruned predicate, same shape as the reference's WHERE
     # (year='Y' AND month='M') OR (year='Y2' AND month='M2')
     # (monthly_report.py:61-63) — Catalyst prunes to two directories.
@@ -112,13 +127,11 @@ def monthly_report_data(
             F.lpad(F.col("month").cast("string"), 2, "0") == f"{m:02d}"
         )
         cond = c if cond is None else (cond | c)
-    pruned = df.filter(cond)
-    deduped = window_dedup(pruned)  # W1: latest version of each line wins
     # The reference's split (monthly_report.py:656-676): every
     # comparison analytic runs on cleaned_df; ONLY top-products runs
     # on the exploded frame, sliced to the report month by
     # shifted_time's '%Y-%m' tag. Cache cleaned — it fans out 4 ways.
-    cleaned = clean_for_reporting(deduped).withColumn(
+    cleaned = _cleaned_lake(spark, lake_path, cond).withColumn(
         "month_tag", F.date_format("datetime", "yyyy-MM")
     ).cache()
     exploded = explode_combo_items(cleaned)
@@ -127,7 +140,7 @@ def monthly_report_data(
     this_month = exploded.filter(
         F.date_format("shifted_time", "yyyy-MM") == tag
     )
-    out = {
+    sections = {
         "top_products": A.top_k(this_month, "item_name", k=5),
         "weekday_orders": A.count_distinct_by(
             cleaned.withColumn("order_category", order_category("order_type")),
@@ -145,18 +158,19 @@ def monthly_report_data(
             F.countDistinct("receipt_number").alias("n_receipts"),
         ),
     }
-    return out
+    return cleaned, sections
 
 
 def cumulative_report_data(
     spark: SparkSession, lake_path: str
-) -> dict[str, DataFrame]:
-    """§3.3 — the all-history report's data layer."""
-    df = lake.read_lake(spark, lake_path)
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """§3.3 — the all-history report's data layer. Returns
+    ``(cleaned, sections)`` like ``monthly_report_data``; the report
+    figures read the same ``cleaned`` frame."""
     # Reference split (cumulative_report.py:729-745): all KPIs/plots
     # run on cleaned_df (combo rows intact — their total_money counts
     # once); ONLY basket mining runs on the exploded frame.
-    cleaned = clean_for_reporting(window_dedup(df)).cache()
+    cleaned = _cleaned_lake(spark, lake_path).cache()
     exploded = explode_combo_items(cleaned)
 
     heatmap = A.pivot_matrix(
@@ -166,7 +180,7 @@ def cumulative_report_data(
         pivot_values=list(range(24)),
     )
     _, rules = frequent_itemsets_and_rules(exploded)
-    out = {
+    sections = {
         "kpis": cleaned.agg(
             F.sum("total_money").alias("total_revenue"),
             F.countDistinct("receipt_number").alias("n_receipts"),
@@ -189,4 +203,4 @@ def cumulative_report_data(
         "combo_mayo": analyze_combo_choices_with_mayo(cleaned),
         "basket_rules": rules,
     }
-    return out
+    return cleaned, sections

@@ -132,12 +132,3 @@ def read_parquet(spark: SparkSession, path: str):
         return df
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load driver testdata parquet tables as DataFrames.
-
-    Returns a dict name -> DataFrame. Reads are lazy; Catalyst prunes
-    columns/partitions per downstream query.
-    """
-    return {n: read_parquet(spark, f"{sf_dir}/{n}.parquet") for n in names}

@@ -1,12 +1,13 @@
-"""Watermark state (SURVEY.md §2.1 S14–S16).
+"""Watermark state (SURVEY.md §2.1 S14–S15).
 
 Batch-incremental offset tracking, mirroring the reference's JSON
 state file (reference: etl/extract.py:201-252): read with a
 month-start fallback, advance to max(updated_at) only after a
 successful load (at-least-once redelivery on failure). The
-data-derived fallback (S16) re-derives the watermark from the lake's
-max shifted_time. The streaming twin of all this is the Structured
-Streaming checkpoint + ``withWatermark`` (see streaming module).
+reference's lake-derived alternative (S16) is on no entry point's
+path and is not ported. The streaming twin of all this is the
+Structured Streaming checkpoint + ``withWatermark`` (see streaming
+module).
 """
 
 from __future__ import annotations
@@ -18,8 +19,6 @@ import zoneinfo
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from pos_api_pipeline_spark import lake
 
 STATE_KEY = "last_successful_extraction_timestamp"
 
@@ -58,19 +57,3 @@ def update_last_timestamp(state_file: str, receipts: DataFrame) -> str | None:
     with open(state_file, "w") as f:
         json.dump({STATE_KEY: row.wm}, f, indent=2)
     return row.wm
-
-
-def watermark_from_lake(spark, lake_path: str) -> str | None:
-    """S16 — data-derived watermark: max shifted_time across the lake
-    (reference: etl/extract.py:254-296 reads only the
-    lexicographically-latest partition; with Hive-partitioned data
-    Catalyst prunes to the same files from a max() over the partition
-    columns, so we express the intent directly).
-
-    Only a missing lake means "no watermark"; any read error on an
-    existing one (corrupt footer, permissions) propagates."""
-    if not lake.lake_exists(spark, lake_path):
-        return None
-    df = spark.read.parquet(lake_path)
-    row = df.agg(F.max("shifted_time").alias("wm")).collect()[0]
-    return row.wm.strftime("%Y-%m-%dT%H:%M:%S.000Z") if row.wm else None

@@ -13,7 +13,6 @@ from pos_api_pipeline_spark.operators.classifiers import (
     beverage_category,
     order_category,
     period_type,
-    rename_combo_subitem,
     standardize_beverage_name,
     standardize_mayo,
 )
@@ -56,12 +55,6 @@ def test_group_share_sums_to_100(pos):
     assert sum(r.percentage for r in mesa) == pytest.approx(100.0)
 
 
-def test_two_level_agg(pos):
-    # avg over per-receipt sums: r1=70, r2=50, r3=30, r4=50 -> 50
-    out = A.two_level_agg(pos, "receipt_number", "price").collect()[0]
-    assert out.value == pytest.approx(50.0)
-
-
 def test_pivot_matrix(pos):
     wide = A.pivot_matrix(
         pos, "order_type", "item_name",
@@ -96,13 +89,6 @@ def test_window_dedup_latest_wins(spark):
     assert {(r.receipt_number, r.v) for r in out} == {("r1", 2.0), ("r2", 3.0)}
 
 
-def test_union_all_missing_columns(spark):
-    a = spark.createDataFrame([(1, "x")], "id long, extra string")
-    b = spark.createDataFrame([(2,)], "id long")
-    out = W.union_all(a, b)
-    assert out.count() == 2 and set(out.columns) == {"id", "extra"}
-
-
 def test_pct_change(spark):
     df = spark.createDataFrame(
         [("2025-01", 100.0), ("2025-02", 150.0), ("2025-03", 75.0)],
@@ -124,14 +110,12 @@ def test_classifiers(spark):
         order_category("order_type").alias("oc"),
         beverage_category("item").alias("bc"),
         standardize_mayo("mayo").alias("mayo"),
-        rename_combo_subitem("sub").alias("sub"),
         standardize_beverage_name(F.lit("Agua mineral")).alias("bev"),
         period_type("ts").alias("pt"),
     ).collect()[0]
     assert row.oc == "Restaurante"
     assert row.bc == "Malteadas"
     assert row.mayo == "Natural"
-    assert row.sub == "Smash Burger"
     assert row.bev == "Agua Mineral"
     assert row.pt == "Weekend"  # Friday counts as weekend (business rule)
 

@@ -38,6 +38,17 @@ def _payload(n_queries=172, n_errors=20):
         "band_extra_passes": 0,
         "queries": {f"registry_query_name_{i:03d}": (n_queries - i) / 10.0 for i in range(n_queries)},
         "errors": [f"some_really_long_registry_query_name_number_{i:02d}" for i in range(n_errors)],
+        "host": {
+            "nproc": 4,
+            "spark.master": "local[32]",
+            "defaultParallelism": 32,
+            "spark.sql.shuffle.partitions": "32",
+            "spark": "4.0.0",
+            "python": "3.11.7",
+            "commit": "0123456789abcdef0123456789abcdef01234567",
+            "source_sha256": "0123456789abcdef",
+            "seed": None,
+        },
     }
 
 
@@ -55,14 +66,31 @@ def test_error_heavy_round_still_carries_query_timings(compact):
     # Budget small enough that 20 long error names alone overflow the
     # fixed fields: the trim must free space that the fill loop then
     # spends on at least one per-query timing (the ADVICE r7 defect
-    # was zero query entries despite available space).
-    out = compact(_payload(), budget=450)
+    # was zero query entries despite available space). The budget is
+    # 450 chars plus the footprint of the host facts every line carries.
+    host = _payload()["host"]
+    budget = 450 + len(json.dumps(
+        {k: host[k] for k in ("nproc", "defaultParallelism", "spark.master", "commit")}
+    ))
+    out = compact(_payload(), budget=budget)
     line = json.dumps(out)
-    assert len(line) <= 450
+    assert len(line) <= budget
     assert len(out["error_names"]) < 20  # trim engaged
     assert len(out["queries"]) >= 1  # freed budget was used
     # Slowest query survives.
     assert max(_payload()["queries"].values()) in out["queries"].values()
+
+
+@pytest.mark.parametrize("n_errors", [0, 20])
+def test_compact_line_carries_host_facts(compact, n_errors):
+    """Every stdout line names the host it ran on, so numbers from two
+    hosts are never compared unknowingly."""
+    payload = _payload(n_errors=n_errors)
+    out = compact(payload, budget=1900)
+    assert len(json.dumps(out)) <= 1900
+    for k in ("nproc", "defaultParallelism", "spark.master", "commit"):
+        assert out[k] == payload["host"][k]
+    assert len(out["queries"]) > 0
 
 
 def test_no_errors_path_unchanged(compact):

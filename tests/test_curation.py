@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from pos_api_pipeline_spark.llm.curation import (
     contamination,
     decontaminate,
-    filter_repetitive,
     normalize_text,
     redact_pii,
     repetition_stats,
@@ -38,12 +37,6 @@ def test_repetition_stats_hand_computed(spark):
     r1 = out[1]
     assert (r1.n_ngrams, r1.top_count) == (0, 0)
     assert r1.dup_ngram_fraction is None and r1.top_ngram_fraction is None
-
-
-def test_filter_repetitive_drops_degenerate_doc(spark):
-    docs = _docs(spark, ["spam spam spam spam spam", "a b c d e f g"])
-    kept = filter_repetitive(docs, n=2, max_dup_fraction=0.5).collect()
-    assert [r.doc_id for r in kept] == [1]
 
 
 def test_contamination_hand_computed(spark):

@@ -1,71 +1,11 @@
-"""Direct units for public helpers that had no dedicated coverage —
-found by a repo-wide usage audit (round 6). Each is tiny on purpose:
-the goal is that every public function in the package is exercised by
-at least one registry oracle or one test.
+"""Direct units for public helpers that no registry query reaches.
+Each is tiny on purpose. ``tests/test_public_surface.py`` lists every
+such helper and why it stays.
 """
 
 from __future__ import annotations
 
 import json
-
-from pyspark.sql import functions as F
-
-
-def test_duplicate_groups_flags_only_multi_member_keys(spark):
-    from pos_api_pipeline_spark.llm.dedup import duplicate_groups
-
-    df = spark.createDataFrame(
-        [(0, "aa"), (1, "aa"), (2, "bb"), (3, "aa"), (4, "cc")],
-        "doc_id long, fp string",
-    )
-    out = {r.dup_key: r for r in duplicate_groups(df, F.col("fp")).collect()}
-    assert set(out) == {"aa"}  # bb/cc are singletons
-    assert out["aa"].n_docs == 3 and out["aa"].keep_id == 0
-
-
-def test_sort_desc_global_order(spark):
-    from pos_api_pipeline_spark.operators.windows import sort_desc
-
-    df = spark.createDataFrame([(1,), (3,), (2,)], "v int")
-    assert [r.v for r in sort_desc(df, "v").collect()] == [3, 2, 1]
-
-
-def test_to_utc_minus_6_applies_tz_rules(spark):
-    from pos_api_pipeline_spark.operators.transform import to_utc_minus_6
-
-    df = spark.createDataFrame(
-        [("2025-01-15 12:00:00",), ("2025-07-15 12:00:00",)], "ts string"
-    ).select(F.col("ts").cast("timestamp").alias("ts"))
-    out = df.select(
-        to_utc_minus_6(df, "ts").alias("shifted"), "ts"
-    ).collect()
-    # Mexico City abolished DST in 2022: both seasons shift by 6h.
-    for r in out:
-        assert (r.shifted - r.ts).total_seconds() == 6 * 3600
-
-
-def test_weekday_sort_key_monday_first(spark):
-    from pos_api_pipeline_spark.operators.cleaning import weekday_sort_key
-
-    df = spark.createDataFrame(
-        # 2025-07-21 is a Monday
-        [(f"2025-07-{20 + i:02d}",) for i in range(1, 8)], "d string"
-    ).select(F.col("d").cast("date").alias("d"))
-    got = [r.k for r in df.select(weekday_sort_key("d").alias("k")).collect()]
-    assert got == [1, 2, 3, 4, 5, 6, 7]  # Mon..Sun
-
-
-def test_with_order_category_column(spark):
-    from pos_api_pipeline_spark.operators.classifiers import (
-        with_order_category,
-    )
-
-    df = spark.createDataFrame(
-        [("Delivery",), ("Sucursal",), (None,)], "order_type string"
-    )
-    out = with_order_category(df)
-    assert "order_category" in out.columns
-    assert out.count() == 3
 
 
 def test_load_items_json_declared_schema(spark, tmp_path):
@@ -81,15 +21,6 @@ def test_load_items_json_declared_schema(spark, tmp_path):
     df = load_items_json(spark, str(p))
     assert df.columns == ["id", "item_name", "price"]
     assert df.count() == 3
-
-
-def test_load_tables_lazy_dict(spark):
-    from pos_api_pipeline_spark.session import load_tables
-
-    t = load_tables(spark, "/root/testdata/sf0.001", "region", "nation")
-    assert set(t) == {"region", "nation"}
-    assert t["region"].count() == 5
-    assert "n_name" in t["nation"].columns
 
 
 def test_fetch_all_historical_paginates_both_feeds(spark):
@@ -108,17 +39,6 @@ def test_fetch_all_historical_paginates_both_feeds(spark):
     )
     assert [r.receipt_number for r in receipts.collect()] == ["r1", "r2"]
     assert items.count() == 1
-
-
-def test_sample_frames_stub_alias(spark):
-    from pos_api_pipeline_spark.llm.multimodal import (
-        sample_frames_stub,
-        synthetic_avi_assets,
-    )
-
-    assets = synthetic_avi_assets(spark, n=1, n_frames=4, fps=10)
-    out = sample_frames_stub(assets, every_ms=100)
-    assert out.count() == 4
 
 
 def test_unimax_allocation_budget_conserved(spark):

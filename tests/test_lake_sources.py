@@ -248,22 +248,6 @@ def test_enrich_with_items(spark):
     assert out["Mystery"].price_vs_catalog is None
 
 
-def test_watermark_from_lake(spark, tmp_path):
-    path = str(tmp_path / "lake")
-    df = _curated_rows(
-        spark, [("r1", "Burger", dt.datetime(2025, 7, 21, 10, 0), 50.0)]
-    )
-    lake.write_partitioned(df, path)
-    assert state.watermark_from_lake(spark, path) == "2025-07-21T10:00:00.000Z"
-    assert state.watermark_from_lake(spark, str(tmp_path / "missing")) is None
-    # An existing but unreadable lake is an error, not "no watermark".
-    corrupt = tmp_path / "corrupt"
-    corrupt.mkdir()
-    (corrupt / "part-0.parquet").write_bytes(b"not parquet")
-    with pytest.raises(Exception, match="(?i)footer"):
-        state.watermark_from_lake(spark, str(corrupt))
-
-
 def test_csv_and_single_parquet_sinks(spark, tmp_path):
     df = _curated_rows(
         spark,

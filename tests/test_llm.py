@@ -224,30 +224,6 @@ def test_connected_components_nonconvergence_raises(spark):
     assert partial.count() == 6
 
 
-def test_salted_grouped_sum_matches_plain(spark):
-    from pos_api_pipeline_spark.operators.analytics import (
-        grouped_sum,
-        salted_grouped_sum,
-    )
-
-    rows = [("hot", float(i)) for i in range(200)] + [("cold", 1.0)]
-    df = spark.createDataFrame(rows, "k string, v double")
-    plain = {r.k: r.total for r in grouped_sum(df, ["k"], "v").collect()}
-    salted = {r.k: r.total for r in salted_grouped_sum(df, ["k"], "v").collect()}
-    assert salted == plain
-
-
-def test_filter_quality(spark):
-    df = spark.createDataFrame(
-        [(0, "a good long enough document with several words"),
-         (1, "shorty"),
-         (2, "!!! ??? ### $$$ %%% ^^^ &&& *** ((( )))")],
-        "doc_id long, text string",
-    )
-    kept = {r.doc_id for r in text.filter_quality(df).collect()}
-    assert kept == {0}  # 1 too short, 2 too punctuation-heavy
-
-
 @pytest.fixture(scope="module")
 def vectors(spark):
     rows = [
@@ -463,11 +439,11 @@ def test_multimodal_feature_extraction(spark):
 
 
 def test_multimodal_stub_raises(spark):
-    from pos_api_pipeline_spark.llm.multimodal import resize_stub
+    from pos_api_pipeline_spark.llm.multimodal import resize_images
 
     assets = synthetic_assets(spark, n=2)
     with pytest.raises(Exception, match="codec library"):
-        resize_stub(assets, 32, 32).collect()
+        resize_images(assets, 32, 32).collect()
 
 
 def _checkerboard_png(w=8, h=8):

@@ -120,14 +120,15 @@ def test_daily_run_then_reports(spark, tmp_path, api_pages):
     )
     assert status2["rows"] == 0
 
-    monthly = pipelines.monthly_report_data(spark, lake_path, 2025, 8)
+    cleaned, monthly = pipelines.monthly_report_data(spark, lake_path, 2025, 8)
     top = monthly["top_products"].collect()
     assert top[0].item_name == "Doble Chicken"
     kpis = {r.month_tag: r for r in monthly["kpis"].collect()}
     assert kpis["2025-08"].n_receipts == 1
     assert kpis["2025-07"].n_receipts == 2  # previous month included
+    cleaned.unpersist()
 
-    cumulative = pipelines.cumulative_report_data(spark, lake_path)
+    cleaned, cumulative = pipelines.cumulative_report_data(spark, lake_path)
     k = cumulative["kpis"].collect()[0]
     assert k.n_receipts == 3
     assert k.total_revenue == 200.0
@@ -138,6 +139,7 @@ def test_daily_run_then_reports(spark, tmp_path, api_pages):
         "Cumulative", {"kpis": cumulative["kpis"]}
     )
     assert "total_revenue" in md and md.startswith("# Cumulative")
+    cleaned.unpersist()
 
 
 def test_monthly_handles_january(spark, tmp_path, api_pages):
@@ -147,8 +149,34 @@ def test_monthly_handles_january(spark, tmp_path, api_pages):
     state_file = str(tmp_path / "s.json")
     _seed_state(state_file)
     pipelines.daily_incremental_run(spark, api_pages, lake_path, state_file)
-    monthly = pipelines.monthly_report_data(spark, lake_path, 2025, 1)
+    cleaned, monthly = pipelines.monthly_report_data(spark, lake_path, 2025, 1)
     assert monthly["kpis"].count() == 0  # no Jan/Dec data — but no crash
+    cleaned.unpersist()
+
+
+@pytest.mark.parametrize("with_report_dir", [False, True])
+def test_month_end_tick_leaves_no_cached_frames(
+    spark, tmp_path, api_pages, with_report_dir
+):
+    """A first-of-month tick unpersists every frame it caches, so a
+    long backfill does not gain one cached frame per month."""
+    import datetime as dt
+
+    from pos_api_pipeline_spark.plans import dag
+
+    state_file = str(tmp_path / "state.json")
+    _seed_state(state_file)
+    spark.catalog.clearCache()
+    statuses = dag.run_production_etl(
+        spark,
+        dt.date(2025, 9, 1),
+        api_pages,
+        str(tmp_path / "lake"),
+        state_file,
+        report_dir=str(tmp_path / "out") if with_report_dir else None,
+    )
+    assert statuses["run_cumulative_report_task"] == "success"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_daily_run_tracks_items_scd2(spark, tmp_path, api_pages):

@@ -241,36 +241,6 @@ def test_bpe_train_stops_when_fully_merged(spark):
     assert merges[0][:2] == ("a", "b") and len(merges) == 1
 
 
-def test_kmeans_codebooks_reduce_quantization_error(spark):
-    from pos_api_pipeline_spark.llm.similarity import (
-        pq_codebooks,
-        pq_codebooks_kmeans,
-        pq_quantization_error,
-        pq_topk,
-    )
-    from pos_api_pipeline_spark.session import read_parquet
-
-    emb = read_parquet(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    trained = pq_codebooks_kmeans(emb, dim=64, m=4, k=16)
-    assert trained.count() == 64  # 4 subspaces x 16 codes
-
-    seed = pq_codebooks(emb, dim=64, m=4, k=16)
-    e_seed = pq_quantization_error(emb, seed, dim=64, m=4).collect()[0]
-    e_trained = pq_quantization_error(emb, trained, dim=64, m=4).collect()[0]
-    # KMeans minimizes exactly this objective per subspace — it must
-    # beat arbitrary seed vectors on distortion (recall depends on the
-    # search metric and need not follow; see pq_quantization_error).
-    assert e_trained.mse < e_seed.mse, (e_trained.mse, e_seed.mse)
-    assert e_trained.n_vectors == e_seed.n_vectors == emb.count()
-
-    # Trained codebooks drop into the same ADC search path.
-    out = pq_topk(
-        emb, emb.filter("vec_id < 3"), dim=64, m=4, k_codes=16, k=3,
-        codebooks=trained,
-    )
-    assert out.count() == 9
-
-
 def test_bpe_encode_corpus_matches_fold_segments(spark):
     """The replace-chain doc encoder must agree word-for-word with the
     fold-based vocab segmentation under a TRAINED merge table."""

@@ -1,5 +1,4 @@
-"""Scale-hardening operator tests: skew-safe distinct, bucketed
-co-located joins, small-files compaction, small-scan input spread."""
+"""Scale-hardening operator tests: bucketed co-located joins, small-files compaction, small-scan input spread."""
 
 from __future__ import annotations
 
@@ -12,29 +11,6 @@ from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark import lake
 from pos_api_pipeline_spark.llm.text import _plain_scan_bytes, spread_small_scan
-from pos_api_pipeline_spark.operators import analytics as A
-
-
-def test_two_stage_count_distinct_matches_exact(spark):
-    rows = [("hot", f"u{i % 7}") for i in range(100)] + [("cold", "u1")]
-    df = spark.createDataFrame(rows, "k string, uid string")
-    exact = {
-        r.k: r.unique_count
-        for r in A.count_distinct_by(df, ["k"], "uid").collect()
-    }
-    staged = {
-        r.k: r.unique_count
-        for r in A.two_stage_count_distinct(df, ["k"], "uid").collect()
-    }
-    assert staged == exact == {"hot": 7, "cold": 1}
-
-
-def test_two_stage_ignores_null_ids(spark):
-    df = spark.createDataFrame(
-        [("k", "a"), ("k", None), ("k", "a")], "k string, uid string"
-    )
-    out = A.two_stage_count_distinct(df, ["k"], "uid").collect()
-    assert out[0].unique_count == 1
 
 
 def test_compact_partitions(spark, tmp_path):

@@ -14,7 +14,6 @@ from pyspark.sql import Row
 from pos_api_pipeline_spark.operators.transform import (
     flatten_receipts,
     homogenize_order_types,
-    homogenize_order_types_optimized,
     run_transform,
     with_time_slots,
 )
@@ -104,15 +103,6 @@ def test_homogenize_sequential_semantics(spark):
     assert got["Para Llevar"] == "Para llevar"
     assert got["Mostrador"] == "Mostrador"
     assert got[None] is None
-
-
-def test_homogenize_optimized_priority(spark):
-    # np.select variant (etl/transform.py:125-157): '-' outranks '01'
-    # and maps to 'Mesa' (not 'Mesa 2').
-    df = spark.createDataFrame([("Mesa -01",)], "order_type string")
-    assert (
-        homogenize_order_types_optimized(df).collect()[0].order_type == "Mesa"
-    )
 
 
 def test_time_slots(spark):
