@@ -738,103 +738,24 @@ def apply_pair_dedup(
     module (id_a < id_b by construction). Keep-lowest-id is the
     standard greedy policy: it needs no connected components and one
     anti-join applies it. Chains (a~b, b~c but not a~c) keep only the
-    lowest member — see ``connected_components`` for the exact
-    group structure when cluster identity matters.
+    lowest member; ``dedupe_corpus_cc`` keeps one member per connected
+    component instead, for when cluster identity matters.
     """
     drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(drop_ids, on=id_col, how="left_anti")
 
 
 def connected_components(
-    pairs: DataFrame, max_iterations: int = 10, strict: bool = True
-) -> DataFrame:
-    """Connected components over a near-dup pair graph by iterative
-    label propagation: every node's label converges to the minimum id
-    reachable from it. Returns (id, component).
-
-    Each round is two shuffles (propagate labels across edges, take
-    the min per node) and advances labels ONE edge-hop, so convergence
-    takes O(diameter) rounds — near-dup clusters are shallow (a hub
-    doc connecting its variants), so the default bound is generous.
-    Iteration stops early at fixpoint (checked with a cheap count).
-    If the fixpoint is NOT reached within ``max_iterations`` the
-    labels are wrong for some nodes (one component would get several
-    representatives downstream), so ``strict=True`` raises; pass
-    strict=False to get the partial labels plus a warning. For deep
-    graphs raise max_iterations, or use the large-star/small-star
-    algorithm (Kiveris et al.) / GraphFrames-Pregel for O(log n)
-    rounds.
-
-    Each round's labels are localCheckpointed (after the convergence
-    count has materialized them): DataFrame actions never reuse
-    earlier actions' shuffle output, so without the cut each
-    convergence check would recompute EVERY previous round from the
-    pair detector on up — O(k^2) total work and a plan that deepens
-    per round (measured 2.5x on the survivors query). The checkpoint
-    both caches the ~node-count rows and truncates the lineage so
-    round k's plan is one round deep regardless of k.
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .cache()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-    converged = False
-    for _ in range(max_iterations):
-        # Each node adopts min(own label, neighbors' labels).
-        neighbor_labels = (
-            edges.join(labels, edges.dst == labels.id)
-            .select(F.col("src").alias("id"), "component")
-        )
-        new_labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        msg = (
-            f"connected_components did not converge within "
-            f"{max_iterations} iterations; labels are partial (some "
-            f"components carry multiple representatives). Raise "
-            f"max_iterations or use a large-star/small-star variant."
-        )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels
-
-
-def connected_components_star(
     pairs: DataFrame, max_iterations: int = 20, strict: bool = True
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond"): converges in O(log n) rounds instead of label
-    propagation's O(diameter) — the documented scale path for DEEP
-    pair graphs (long chains of pairwise near-dups), where
-    ``connected_components`` needs one round per hop.
+    """Connected components over a near-dup pair graph by alternating
+    large-star / small-star (Kiveris et al. 2014, "Connected
+    Components in MapReduce and Beyond"). Returns (id, component) for
+    every node in ``pairs``, component = minimum id in the component.
+    Converges in O(log n) rounds, so deep pair graphs (long chains of
+    pairwise near-dups) cost no more rounds than shallow hub clusters;
+    it measured faster than one-hop label propagation on the
+    survivors query too, which is why it is the one CC path.
 
     large-star: every node u sends its strictly-larger neighbors to
     m = min(N(u) ∪ {u}); small-star: edges oriented high→low, every
@@ -845,26 +766,30 @@ def connected_components_star(
     (node → component root).
 
     Convergence is detected by an order-independent edge-set
-    checksum (count + two independent hash sums); each round is
-    localCheckpointed for the same lineage reasons as
-    ``connected_components``. Output: (id, component) for every node
-    in ``pairs``, component = minimum id in the component — identical
-    labels to ``connected_components`` (property-tested)."""
+    checksum (count + two independent hash folds). Each round is
+    localCheckpointed: DataFrame actions never reuse earlier
+    actions' shuffle output, so without the cut each checksum would
+    recompute every previous round from the pair detector up — O(k^2)
+    work and a plan that deepens per round. If the edge set is still
+    changing after ``max_iterations`` rounds, ``strict=True`` raises;
+    ``strict=False`` warns and returns one row per node with the
+    minimum label seen, which may be coarser than the true
+    components."""
     # ONE eager checkpoint of the raw pair stream: the pair DETECTOR
     # subtree (LSH banding, bucket expansion, ...) is typically the
     # expensive part, and both derivations below need it — separate
     # eager checkpoints of all_nodes and e each re-ran the detector
     # from the scan up (measured: one full detector pass of the two
-    # removed, near_dup_components_star 4.8 -> 3.6 s at sf0.1).
+    # removed, the survivors query 4.8 -> 3.6 s at sf0.1).
     raw = pairs.select(
         F.col("id_a").cast("long").alias("a"),
         F.col("id_b").cast("long").alias("b"),
     ).localCheckpoint(eager=True)
     # all_nodes from the RAW pairs — a node appearing only in a
     # self-pair (a == a) must still come back as its own singleton
-    # component, exactly like connected_components. Lazy: consumed
-    # exactly once (the final roots anti-join), so it rides the
-    # output action as one cheap scan of the raw checkpoint.
+    # component. Lazy: consumed exactly once (the final roots
+    # anti-join), so it rides the output action as one cheap scan of
+    # the raw checkpoint.
     all_nodes = (
         raw.select(F.col("a").alias("id"))
         .union(raw.select(F.col("b").alias("id")))
@@ -930,8 +855,7 @@ def connected_components_star(
     for _ in range(max_iterations):
         # eager=False: the convergence checksum is the action that
         # materializes each round's checkpoint — one Spark job per
-        # round instead of checkpoint-job + checksum-job (the same
-        # fold connected_components uses for its labels frames).
+        # round instead of checkpoint-job + checksum-job.
         e = small_star(large_star(e)).localCheckpoint(eager=False)
         cur = checksum(e)
         if cur == prev:
@@ -940,7 +864,7 @@ def connected_components_star(
         prev = cur
     if not converged:
         msg = (
-            f"connected_components_star did not converge within "
+            f"connected_components did not converge within "
             f"{max_iterations} rounds (pathological for O(log n) — "
             f"check the pair graph)."
         )
@@ -968,24 +892,11 @@ def connected_components_star(
 
 
 def dedupe_corpus_cc(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    algorithm: str = "label_prop",
+    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Exact-group dedup: keep the minimum-id representative of each
-    connected component (vs the greedy pairwise policy).
-
-    ``algorithm``: 'label_prop' (O(diameter) rounds — cheapest for
-    the shallow clusters near-dup graphs produce) or 'star'
-    (large-star/small-star, O(log n) rounds — the deep-chain scale
-    path; identical labels, both oracle-checked)."""
-    if algorithm == "star":
-        comps = connected_components_star(pairs)
-    elif algorithm == "label_prop":
-        comps = connected_components(pairs)
-    else:
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
+    connected component (vs the greedy pairwise policy)."""
+    comps = connected_components(pairs)
     drop = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )

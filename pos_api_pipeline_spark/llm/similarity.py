@@ -144,44 +144,17 @@ def centroids_for_corpus(
     return max(4, min(1 << 20, math.ceil(n_vectors / target_cluster_size)))
 
 
-def hyperplane_bucket(
-    vec: Column, dim: int, n_planes: int = 8, table: int = 0
-) -> Column:
-    """Random-hyperplane LSH bucket id: bit p = sign(vec · plane_p).
-    Cosine-similar vectors land in the same bucket with high
-    probability; the bucket id is an integer join key. ``table``
-    selects a disjoint plane set (planes table*n_planes ..
-    table*n_planes+n_planes-1) so multiple independent tables can be
-    OR-ed for recall (banding, like the MinHash bands)."""
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        signs = [
-            float(_plane_sign(table * n_planes + p, d)) for d in range(dim)
-        ]
-        proj = F.aggregate(
-            # One Literal node per plane (F.lit on the whole list), not
-            # dim unrolled lits: same evaluation, ~2x less driver-side
-            # expression construction, which showed up as ~1.5 s of
-            # per-call build time on the 3-table banded queries.
-            F.zip_with(vec, F.lit(signs), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return bucket
-
-
 def _bucket_expr(
     vec_name: str, dim: int, n_planes: int, table: int
 ) -> Column:
-    """hyperplane_bucket as ONE parsed SQL expression over the named
-    column — identical fold order and values (verified bit-equal),
-    built once per (name, dim, planes, table) per context (see
-    llm.exprcache: construction measured ~2 s per banded query)."""
+    """Random-hyperplane LSH bucket id of the named vector column:
+    bit p = sign(vec · plane_p), so cosine-similar vectors land in the
+    same bucket with high probability and the id is an integer join
+    key. ``table`` selects a disjoint plane set (planes
+    table*n_planes .. table*n_planes+n_planes-1) so independent tables
+    can be OR-ed for recall. Built as ONE parsed SQL expression, once
+    per (name, dim, planes, table) per context (see llm.exprcache:
+    construction measured ~2 s per banded query)."""
     from pos_api_pipeline_spark.llm.exprcache import memo_expr
 
     def build() -> Column:

@@ -2511,10 +2511,10 @@ def q_pq_adc_topk(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Connected-components dedup, oracle-gated end to end: MinHash
-# candidate pairs -> iterative min-label propagation -> quality-aware
+# candidate pairs -> large-star/small-star components -> quality-aware
 # survivor per cluster. The DuckDB twin reproduces the components
 # with a recursive-CTE transitive closure (min reachable id ==
-# converged min-label), so the iterative Spark operator gets a full
+# component label), so the iterative Spark operator gets a full
 # hash-match CORRECTNESS row, not just units.
 # ---------------------------------------------------------------------------
 
@@ -2626,35 +2626,6 @@ def q_prototype_prune_half(spark, sf_dir):
     flag, hash-matched per row."""
     emb = _t(spark, sf_dir, "embeddings")
     return S.prototype_prune(emb, keep_fraction=0.5)
-
-
-@register("near_dup_components_star", _NEAR_DUP_SURVIVORS_SQL)
-def q_near_dup_components_star(spark, sf_dir):
-    """Same survivors as near_dup_cluster_survivors but through the
-    O(log n)-round large-star/small-star components
-    (llm/dedup.py:connected_components_star, Kiveris et al. 2014) —
-    sharing the recursive-CTE oracle proves the two algorithms label
-    identically under the hash gate."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_candidates(docs, num_hashes=16, bands=4)
-    comps = D.connected_components_star(pairs)
-    toks = docs.select(
-        "doc_id", F.size(X.tokens("text")).alias("n_tokens")
-    )
-    members = comps.select(
-        F.col("id").alias("doc_id"), "component"
-    ).join(toks, "doc_id")
-    best = F.min(
-        F.struct(
-            (-F.col("n_tokens")).alias("neg_tokens"),
-            F.col("doc_id").alias("d"),
-        )
-    )
-    return members.groupBy("component").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        best.getField("d").alias("survivor_doc_id"),
-        (-best.getField("neg_tokens")).cast("long").alias("survivor_tokens"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2998,13 +2969,13 @@ def q_bpe_learned_merges(spark, sf_dir):
     """First 6 learned BPE merges over documents, as (rank, left,
     right, merged, total) — the fitted-model table a tokenizer
     trainer ships. Trained via the EXACT batched refresh
-    (llm/bpe.py:bpe_train_batched), hash-checked against the SQL
+    (llm/bpe.py:bpe_train), hash-checked against the SQL
     sequential-training replay — proving batch == sequential on the
     real corpus, not just units."""
-    from pos_api_pipeline_spark.llm.bpe import bpe_train_batched
+    from pos_api_pipeline_spark.llm.bpe import bpe_train
 
     docs = _t(spark, sf_dir, "documents")
-    merges = bpe_train_batched(docs, n_merges=6)
+    merges = bpe_train(docs, n_merges=6)
     rows = [
         (i + 1, l, r, l + r, t) for i, (l, r, t) in enumerate(merges)
     ]
@@ -3631,18 +3602,15 @@ _REGISTRY["bpe_learned_merges"] = (
 @register("bpe_corpus_encoding", _bpe_replay_sql(6))
 def q_bpe_corpus_encoding(spark, sf_dir):
     """Train a 6-merge BPE tokenizer on the corpus (llm/bpe.py:
-    bpe_train — iterative driver loop, like the FPGrowth fit), then
+    bpe_train — batched driver loop, like the FPGrowth fit), then
     encode every document with the replace-chain fast path
     (bpe_encode_corpus). The oracle replays the training rounds in
     SQL, so merge selection, tiebreaks, AND the greedy encode are all
     hash-checked end to end."""
-    from pos_api_pipeline_spark.llm.bpe import (
-        bpe_encode_corpus,
-        bpe_train_batched,
-    )
+    from pos_api_pipeline_spark.llm.bpe import bpe_encode_corpus, bpe_train
 
     docs = _t(spark, sf_dir, "documents")
-    merges = bpe_train_batched(docs, n_merges=6)
+    merges = bpe_train(docs, n_merges=6)
     enc = bpe_encode_corpus(docs, merges)
     return enc.select(
         "doc_id",

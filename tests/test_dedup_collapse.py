@@ -169,11 +169,9 @@ def test_ngram_jaccard_max_family_bounds_expansion(spark):
     assert exact == n * (n - 1) // 2
 
 
-def test_ngram_jaccard_max_family_cross_guard_components(spark):
+def test_ngram_jaccard_max_family_cross_guard_components(spark, cc_reference):
     """Cross-family fan-out past the cap -> two stars; the capped and
     exact outputs have identical connected components."""
-    from pos_api_pipeline_spark.llm.dedup import connected_components
-
     text_a = "alpha beta gamma delta epsilon zeta eta theta"
     text_b = "alpha beta gamma delta epsilon zeta eta iota"
     rows = [(i, text_a) for i in range(30)] + [
@@ -185,11 +183,7 @@ def test_ngram_jaccard_max_family_cross_guard_components(spark):
     assert capped.count() < exact.count()
 
     def comps(pairs):
-        labeled = connected_components(pairs.select("id_a", "id_b")).collect()
-        groups: dict = {}
-        for r in labeled:
-            groups.setdefault(r.component, set()).add(r.id)
-        return frozenset(frozenset(g) for g in groups.values())
+        return cc_reference(pairs.select("id_a", "id_b").collect())
 
     assert comps(capped) == comps(exact)
 

@@ -208,20 +208,23 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    # A 6-node path needs ~5 one-hop rounds; max_iterations=1 cannot
-    # converge → strict mode raises instead of silently returning
-    # partial labels (ADVICE r01).
+    # A 6-node path cannot reach a star forest in one large-star /
+    # small-star round, so strict mode raises instead of silently
+    # returning partial labels.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(pairs, max_iterations=1)
-    # Non-strict: warns, returns partial labels for all 6 nodes.
+    # Non-strict: warns, and the min-label reduction still returns
+    # exactly one row per node, so dedupe_corpus_cc never drops a
+    # node twice or keeps two rows for it.
     with pytest.warns(RuntimeWarning, match="did not converge"):
         partial = dedup.connected_components(
             pairs, max_iterations=1, strict=False
-        )
-    assert partial.count() == 6
+        ).collect()
+    assert sorted(r.id for r in partial) == [1, 2, 3, 4, 5, 6]
+    assert all(r.component <= r.id for r in partial)
 
 
 @pytest.fixture(scope="module")
@@ -1210,12 +1213,7 @@ def test_bm25_ranks_matching_docs(spark):
     assert m[3] == 1 and m[1] == 1
 
 
-def test_connected_components_star_matches_label_prop(spark):
-    from pos_api_pipeline_spark.llm.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
+def test_connected_components_matches_union_find(spark, cc_reference):
     # chain + triangle + pair + hub
     pairs = (
         [(i, i + 1) for i in range(8)]
@@ -1223,45 +1221,28 @@ def test_connected_components_star_matches_label_prop(spark):
         + [(40, x) for x in range(41, 46)]
     )
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    star = {r.id: r.component for r in connected_components_star(df).collect()}
-    lp = {r.id: r.component for r in connected_components(df).collect()}
-    assert star == lp
-    assert star[8] == 0 and star[22] == 20 and star[45] == 40
+    got = {r.id: r.component for r in dedup.connected_components(df).collect()}
+    assert got == cc_reference(pairs)
+    assert got[8] == 0 and got[22] == 20 and got[45] == 40
 
 
-def test_connected_components_star_handles_deep_chains(spark):
-    """A 30-hop chain needs 30 label-propagation rounds but only
-    O(log n) star rounds — the scale case the variant exists for."""
-    import pytest
-
-    from pos_api_pipeline_spark.llm.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
+def test_connected_components_handles_deep_chains(spark):
+    """A 30-hop chain converges within the default round bound: the
+    large-star/small-star rounds grow with log n, not with the
+    chain's diameter."""
     chain = [(i, i + 1) for i in range(30)]
     df = spark.createDataFrame(chain, "id_a long, id_b long")
     labels = {
-        r.id: r.component for r in connected_components_star(df).collect()
+        r.id: r.component for r in dedup.connected_components(df).collect()
     }
     assert set(labels.values()) == {0} and len(labels) == 31
-    # label propagation's default bound genuinely can't do this
-    with pytest.raises(RuntimeError):
-        connected_components(df, max_iterations=5)
 
 
-def test_connected_components_star_keeps_self_pair_singletons(spark):
-    from pos_api_pipeline_spark.llm.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 2), (7, 7)], "id_a long, id_b long"
-    )
-    star = {r.id: r.component for r in connected_components_star(df).collect()}
-    lp = {r.id: r.component for r in connected_components(df).collect()}
-    assert star == lp == {1: 1, 2: 1, 7: 7}
+def test_connected_components_keeps_self_pair_singletons(spark, cc_reference):
+    pairs = [(1, 2), (7, 7)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {r.id: r.component for r in dedup.connected_components(df).collect()}
+    assert got == cc_reference(pairs) == {1: 1, 2: 1, 7: 7}
 
 
 def test_prototype_prune_keeps_hardest_per_cluster(spark):

@@ -154,38 +154,6 @@ def test_ivf_pq_single_probe_stays_in_cell(spark):
 # --- BPE trainer: canonical semantics vs a hand-rolled reference ----
 
 
-def _ref_bpe(word_counts, n_merges):
-    """Canonical Sennrich-style BPE on a word-frequency dict, with
-    the module's deterministic tie-break (count desc, left, right)."""
-
-    def apply(syms, l, r):
-        out, i = [], 0
-        while i < len(syms):
-            if i < len(syms) - 1 and syms[i] == l and syms[i + 1] == r:
-                out.append(l + r)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        return out
-
-    vocab = {w: list(w) for w in word_counts}
-    merges = []
-    for _ in range(n_merges):
-        counts = {}
-        for w, syms in vocab.items():
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + word_counts[w]
-        if not counts:
-            break
-        (l, r), total = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((l, r, total))
-        vocab = {w: apply(s, l, r) for w, s in vocab.items()}
-    return merges, vocab
-
-
 def test_merge_pair_in_seq_is_canonical_on_runs(spark):
     from pos_api_pipeline_spark.llm.bpe import merge_pair_in_seq
     from pyspark.sql import functions as F
@@ -203,8 +171,8 @@ def test_merge_pair_in_seq_is_canonical_on_runs(spark):
     assert got == [["aa", "aa", "a"], ["aa", "a"], ["b", "aa", "b"]]
 
 
-def test_bpe_train_matches_reference(spark):
-    from pos_api_pipeline_spark.llm.bpe import bpe_segment_vocab, bpe_train
+def test_bpe_train_matches_reference(spark, bpe_reference):
+    from pos_api_pipeline_spark.llm.bpe import bpe_train
 
     texts = [
         "low low low lower lower lowest",
@@ -213,23 +181,9 @@ def test_bpe_train_matches_reference(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    wc = {}
-    for t in texts:
-        for w in t.split():
-            wc[w] = wc.get(w, 0) + 1
-    ref_merges, ref_vocab = _ref_bpe(wc, 6)
-
-    merges = bpe_train(docs, n_merges=6)
-    assert merges == ref_merges
-
-    seg = {
-        r.word: (list(r.segments), r.n)
-        for r in bpe_segment_vocab(docs, merges).collect()
-    }
-    assert set(seg) == set(ref_vocab)
-    for w in ref_vocab:
-        assert seg[w][0] == ref_vocab[w], w
-        assert seg[w][1] == wc[w]
+    ref_merges, _ = bpe_reference(texts, 6)
+    for batch in (1, 64):
+        assert bpe_train(docs, n_merges=6, batch=batch) == ref_merges
 
 
 def test_bpe_train_stops_when_fully_merged(spark):
@@ -241,16 +195,11 @@ def test_bpe_train_stops_when_fully_merged(spark):
     assert merges[0][:2] == ("a", "b") and len(merges) == 1
 
 
-def test_bpe_encode_corpus_matches_fold_segments(spark):
+def test_bpe_encode_corpus_matches_fold_segments(spark, bpe_reference):
     """The replace-chain doc encoder must agree word-for-word with the
-    fold-based vocab segmentation under a TRAINED merge table."""
-    from pyspark.sql import functions as F
-
-    from pos_api_pipeline_spark.llm.bpe import (
-        bpe_encode_corpus,
-        bpe_segment_vocab,
-        bpe_train,
-    )
+    reference trainer's final word segmentation under a TRAINED merge
+    table."""
+    from pos_api_pipeline_spark.llm.bpe import bpe_encode_corpus, bpe_train
 
     texts = [
         "low low low lower lower lowest",
@@ -261,10 +210,8 @@ def test_bpe_encode_corpus_matches_fold_segments(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     merges = bpe_train(docs, n_merges=6)
-    seg = {
-        r.word: list(r.segments)
-        for r in bpe_segment_vocab(docs, merges).collect()
-    }
+    ref_merges, seg = bpe_reference(texts, 6)
+    assert merges == ref_merges
     out = {
         r.doc_id: r for r in bpe_encode_corpus(docs, merges).collect()
     }
@@ -287,10 +234,10 @@ def test_bpe_encode_canonical_runs_and_roundtrip(spark):
     assert "".join(r.bpe_tokens) == "aaaaabaab"
 
 
-def test_bpe_train_batched_matches_sequential(spark):
+def test_bpe_train_batched_matches_sequential(spark, bpe_reference):
     """The batched trainer is EXACT: same merge table (pairs AND
-    counts) as the one-job-per-merge loop on a natural corpus."""
-    from pos_api_pipeline_spark.llm.bpe import bpe_train, bpe_train_batched
+    counts) as one-merge-at-a-time BPE on a natural corpus."""
+    from pos_api_pipeline_spark.llm.bpe import bpe_train
 
     texts = [
         "low low low lower lower lowest",
@@ -300,52 +247,53 @@ def test_bpe_train_batched_matches_sequential(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    seq = bpe_train(docs, n_merges=12)
+    seq, _ = bpe_reference(texts, 12)
     for batch in (1, 4, 64):
-        assert bpe_train_batched(docs, n_merges=12, batch=batch) == seq
+        assert bpe_train(docs, n_merges=12, batch=batch) == seq
 
 
-def test_bpe_train_batched_tie_adversarial(spark):
+def test_bpe_train_batched_tie_adversarial(spark, bpe_reference):
     """Head-of-list tie between an accepted pair and an interacting
     one: the strict cut must shrink the batch to the sequential step.
     Corpus 'xab'*N: (a,b)=(x,a)=N tie -> merge (a,b) first (lex), and
     the SECOND merge must be the spawned (x,ab), which a naive batch
     would never see."""
-    from pos_api_pipeline_spark.llm.bpe import bpe_train, bpe_train_batched
+    from pos_api_pipeline_spark.llm.bpe import bpe_train
 
+    texts = ["xab xab xab"] * 3
     docs = spark.createDataFrame(
-        [(i, "xab xab xab") for i in range(3)], "doc_id long, text string"
+        list(enumerate(texts)), "doc_id long, text string"
     )
-    seq = bpe_train(docs, n_merges=2)
+    seq, _ = bpe_reference(texts, 2)
     assert [m[:2] for m in seq] == [("a", "b"), ("x", "ab")]
-    assert bpe_train_batched(docs, n_merges=2, batch=64) == seq
+    assert bpe_train(docs, n_merges=2, batch=64) == seq
 
 
-def test_bpe_train_batched_symbol_collision_adversarial(spark):
+def test_bpe_train_batched_symbol_collision_adversarial(spark, bpe_reference):
     """Merged-symbol resurrection: once 'ab' exists as a symbol, a
     later (a, b) candidate re-creates it and feeds pairs involving
     'ab' beyond any single old count — the existing_merged check must
     end the batch there. Sequential equality is the oracle."""
-    from pos_api_pipeline_spark.llm.bpe import bpe_train, bpe_train_batched
+    from pos_api_pipeline_spark.llm.bpe import bpe_train
 
     # 'ab' merges first (count 12 via 'abab'); 'zazb' keeps separate
     # a/b alive next to z so (a,b) never reappears but (z,a)/(b,z)
     # stay candidates alongside pairs involving the merged 'ab'.
+    texts = ["abab abab abab abab abab abab", "zazb zazb zazb"]
     docs = spark.createDataFrame(
-        [(0, "abab abab abab abab abab abab"), (1, "zazb zazb zazb")],
-        "doc_id long, text string",
+        list(enumerate(texts)), "doc_id long, text string"
     )
     for n in (3, 6):
-        seq = bpe_train(docs, n_merges=n)
+        seq, _ = bpe_reference(texts, n)
         for batch in (2, 64):
-            assert bpe_train_batched(docs, n_merges=n, batch=batch) == seq
+            assert bpe_train(docs, n_merges=n, batch=batch) == seq
 
 
-def test_bpe_train_batched_property(spark):
+def test_bpe_train_batched_property(spark, bpe_reference):
     """Randomized corpora: batched == sequential for every batch size."""
     import random
 
-    from pos_api_pipeline_spark.llm.bpe import bpe_train, bpe_train_batched
+    from pos_api_pipeline_spark.llm.bpe import bpe_train
 
     rng = random.Random(42)
     for trial in range(4):
@@ -359,8 +307,8 @@ def test_bpe_train_batched_property(spark):
         docs = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
         )
-        seq = bpe_train(docs, n_merges=8)
-        got = bpe_train_batched(docs, n_merges=8, batch=8)
+        seq, _ = bpe_reference(texts, 8)
+        got = bpe_train(docs, n_merges=8, batch=8)
         assert got == seq, (trial, texts, got, seq)
 
 def test_exact_batch_prefix_truncated_tail_tie():

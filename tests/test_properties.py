@@ -385,23 +385,22 @@ doc = st.lists(word, min_size=0, max_size=12).map(" ".join)
 
 @given(st.lists(doc, min_size=1, max_size=12), st.integers(0, 8))
 @settings(**SETTINGS)
-def test_bpe_encode_roundtrip_and_fold_parity(spark, texts, n_merges):
+def test_bpe_encode_roundtrip_and_fold_parity(
+    spark, bpe_reference, texts, n_merges
+):
     """For ANY corpus and ANY trained merge count: (1) concatenating a
     doc's BPE tokens reproduces its lowercased concatenated words,
-    (2) the replace-chain encoder agrees word-for-word with the
-    fold-based segmenter."""
-    from pos_api_pipeline_spark.llm.bpe import (
-        bpe_encode_corpus,
-        bpe_segment_vocab,
-        bpe_train,
-    )
+    (2) the trainer and the replace-chain encoder agree word-for-word
+    with the pure-Python reference BPE."""
+    from pos_api_pipeline_spark.llm.bpe import bpe_encode_corpus, bpe_train
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     merges = bpe_train(df, n_merges=n_merges)
+    ref_merges, seg = bpe_reference(texts, n_merges)
+    assert merges == ref_merges
     enc = {r.doc_id: list(r.bpe_tokens) for r in bpe_encode_corpus(df, merges).collect()}
-    seg = {r.word: list(r.segments) for r in bpe_segment_vocab(df, merges).collect()}
     for i, t in enumerate(texts):
         words = t.lower().split()
         assert "".join(enc[i]) == "".join(words)
@@ -561,15 +560,14 @@ def test_weighted_median_matches_python(spark, pairs):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_star_cap_preserves_connected_components(spark, variants, cap):
+def test_star_cap_preserves_connected_components(
+    spark, cc_reference, variants, cap
+):
     """The hot-bucket star cap's design claim: capped pair output has
     the SAME connected components as the uncapped all-pairs output —
     the representative keeps every bucket member reachable, so
     cluster-level dedup decisions are unchanged at any cap."""
-    from pos_api_pipeline_spark.llm.dedup import (
-        connected_components,
-        minhash_lsh_candidates,
-    )
+    from pos_api_pipeline_spark.llm.dedup import minhash_lsh_candidates
 
     rows = [
         (i, f"the shared quick brown fox variant {v} jumps over the dog")
@@ -580,13 +578,7 @@ def test_star_cap_preserves_connected_components(spark, variants, cap):
     exact = minhash_lsh_candidates(docs, max_bucket=None)
 
     def comps(pairs):
-        if not pairs.take(1):
-            return frozenset()
-        labeled = connected_components(pairs).collect()
-        groups: dict = {}
-        for r in labeled:
-            groups.setdefault(r.component, set()).add(r.id)
-        return frozenset(frozenset(g) for g in groups.values())
+        return cc_reference(pairs.select("id_a", "id_b").collect())
 
     assert comps(capped) == comps(exact)
 
@@ -664,7 +656,9 @@ def test_unimax_waterfill_invariants(spark, sizes, frac):
     st.integers(min_value=1, max_value=5),
 )
 @settings(**{**SETTINGS, "max_examples": 6})
-def test_embedding_star_cap_cc_and_collapse_parity(spark, members, cap):
+def test_embedding_star_cap_cc_and_collapse_parity(
+    spark, cc_reference, members, cap
+):
     """Embedding-family twins of the minhash star-cap property plus
     the collapse rewrite claim (r12 row-grain paths included —
     ``cap`` down to 1 forces every multi-member bucket through the
@@ -677,7 +671,6 @@ def test_embedding_star_cap_cc_and_collapse_parity(spark, members, cap):
     replicas (identical (family, slot) tuples), within-family
     near-dups (cosine ~= 1), and near-orthogonal cross-family
     vectors (cosine ~= 0)."""
-    from pos_api_pipeline_spark.llm.dedup import connected_components
     from pos_api_pipeline_spark.llm.similarity import (
         embedding_near_dup_pairs,
     )
@@ -713,13 +706,7 @@ def test_embedding_star_cap_cc_and_collapse_parity(spark, members, cap):
     )
 
     def comps(pair_df):
-        if not pair_df.take(1):
-            return frozenset()
-        labeled = connected_components(pair_df).collect()
-        groups: dict = {}
-        for r in labeled:
-            groups.setdefault(r.component, set()).add(r.id)
-        return frozenset(frozenset(g) for g in groups.values())
+        return cc_reference(pair_df.select("id_a", "id_b").collect())
 
     expected = comps(plain)
     # (a) both arms' capped outputs preserve the components.
