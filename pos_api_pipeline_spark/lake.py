@@ -29,7 +29,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark.operators.windows import window_dedup
-from pos_api_pipeline_spark.schemas import CURATED_SCHEMA, conform
+from pos_api_pipeline_spark.schemas import CURATED_SCHEMA, LAKE_SCHEMA, conform
+from pos_api_pipeline_spark.session import read_parquet
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -91,9 +92,10 @@ def write_partitioned(
 
 
 def read_lake(spark: SparkSession, path: str) -> DataFrame:
-    """S10 — lake scan; partition filters on year/month prune files
-    (PruneFileSourcePartitions — verify via .explain PartitionFilters)."""
-    return spark.read.parquet(path)
+    """S10 — lake scan with the fixed ``LAKE_SCHEMA`` (no inference job;
+    ``month=07`` reads back as ``'07'``, not an inferred int 7). Filters
+    on year/month prune files (verify via .explain PartitionFilters)."""
+    return spark.read.schema(LAKE_SCHEMA).parquet(path)
 
 
 def merge_and_overwrite(
@@ -123,14 +125,7 @@ def merge_and_overwrite(
         # batch (silent data loss). Only a genuinely absent lake means
         # 'first write'.
         if lake_exists(spark, path):
-            # Drop the read-back partition columns and re-derive them:
-            # partition-type inference reads month=07 back as int 7,
-            # and a type-coerced union would write to a DIFFERENT
-            # directory (month=7) than the original (month=07),
-            # silently duplicating instead of overwriting.
-            existing = with_partition_columns(
-                spark.read.parquet(path).drop("year", "month")
-            )
+            existing = read_lake(spark, path)
             # Restrict history to the affected partitions only — a
             # broadcast semi-join on (year, month) lets Catalyst prune
             # the scan to those directories.
@@ -211,7 +206,7 @@ def scd2_merge(
         ).withColumn("is_current", F.lit(True))
         out.write.mode("overwrite").parquet(dim_path)
         return
-    dim = spark.read.parquet(dim_path)
+    dim = read_parquet(spark, dim_path)
 
     # Skip updates identical to the current version (hash compare).
     cur = dim.filter(F.col("is_current"))
@@ -286,9 +281,7 @@ def compact_partitions(
     overhead. Dynamic overwrite + repartition on the partition columns
     rewrites each directory in place.
     """
-    df = with_partition_columns(
-        spark.read.parquet(path).drop("year", "month")
-    )
+    df = read_lake(spark, path)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:

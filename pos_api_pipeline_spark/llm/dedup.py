@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark.llm.exprcache import memo_expr
 from pos_api_pipeline_spark.llm.text import spread_small_scan, tokens
+from pos_api_pipeline_spark.session import read_parquet
 
 
 def portable_hash64(c: Column) -> Column:
@@ -1855,7 +1856,7 @@ def near_dups_against_index(
         if bands_df is not None
         else minhash_bands(delta, text_col, id_col, n, num_hashes, bands)
     )
-    idx = spark.read.parquet(path).select("band", "bhash")
+    idx = read_parquet(spark, path).select("band", "bhash")
     return (
         nb.join(idx, ["band", "bhash"], "left_semi")
         .select(F.col("id").alias(id_col))

@@ -23,10 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pos_api_pipeline_spark.lake import lake_exists
 from pos_api_pipeline_spark.llm.dedup import minhash_lsh_candidates, apply_pair_dedup
 from pos_api_pipeline_spark.llm.packing import pack_concat
 from pos_api_pipeline_spark.llm.sampling import select_by_token_budget
 from pos_api_pipeline_spark.llm.text import gopher_quality_flags, tokens
+from pos_api_pipeline_spark.session import read_parquet
 
 
 def curate(
@@ -107,8 +109,7 @@ def materialize_training_set(
         .partitionBy("shard")
         .parquet(out_dir)
     )
-    spark = docs.sparkSession
-    return spark.read.parquet(out_dir)
+    return read_parquet(docs.sparkSession, out_dir)
 
 
 def training_set_stats(materialized: DataFrame) -> DataFrame:
@@ -187,23 +188,11 @@ def run_corpus_curation_tick(
     )
     out["rule_filter_task"] = "success"
 
-    from pyspark.errors import AnalysisException
-
-    corpus_exists = True
-    try:
-        old = spark.read.parquet(corpus_dir)
-        old.schema  # force analysis so a missing path surfaces HERE
-    except AnalysisException as e:
-        # Only "path does not exist" means first tick; any other read
-        # failure (permissions, corrupt footer) must fail the tick —
-        # treating it as an empty lake would re-append the whole
-        # delta as duplicates.
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        corpus_exists = False
-        old = None
-    if corpus_exists:
-        delta = cross_corpus_exact_dedup(delta, old)
+    # Only a missing corpus means first tick; any other read failure
+    # (permissions, corrupt footer) must fail the tick — treating it as
+    # an empty corpus would re-append the whole delta as duplicates.
+    if lake_exists(spark, corpus_dir):
+        delta = cross_corpus_exact_dedup(delta, read_parquet(spark, corpus_dir))
         # probe with the already-materialized bands, narrowed to the
         # docs still alive (a semi join on ids — no re-hashing)
         live_bands = delta_bands.join(

@@ -120,12 +120,9 @@ def monthly_report_data(
     # Partition-pruned predicate, same shape as the reference's WHERE
     # (year='Y' AND month='M') OR (year='Y2' AND month='M2')
     # (monthly_report.py:61-63) — Catalyst prunes to two directories.
-    # Cast year: partition-type inference may read it back as int.
     cond = None
     for y, m in months:
-        c = (F.col("year").cast("string") == str(y)) & (
-            F.lpad(F.col("month").cast("string"), 2, "0") == f"{m:02d}"
-        )
+        c = (F.col("year") == str(y)) & (F.col("month") == f"{m:02d}")
         cond = c if cond is None else (cond | c)
     # The reference's split (monthly_report.py:656-676): every
     # comparison analytic runs on cleaned_df; ONLY top-products runs

@@ -82,6 +82,12 @@ CURATED_SCHEMA = T.StructType(
 
 CURATED_COLUMNS = [f.name for f in CURATED_SCHEMA.fields]
 
+# The lake as ``lake.with_partition_columns`` lays it out: string
+# year=YYYY/month=MM partitions (month zero-padded) after the columns.
+LAKE_SCHEMA = T.StructType(
+    CURATED_SCHEMA.fields + [T.StructField(c, T.StringType()) for c in ("year", "month")]
+)
+
 
 def conform(df, schema: T.StructType = CURATED_SCHEMA):
     """Project + cast a DataFrame to a schema contract.

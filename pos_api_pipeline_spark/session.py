@@ -103,26 +103,38 @@ def local_frame(spark: SparkSession, rows: Iterable, schema: StructType) -> Data
 
 
 def read_parquet(spark: SparkSession, path: str):
-    """Read parquet, tolerating TIMESTAMP(NANOS) columns.
+    """Read parquet with the schema its footer declares: building the
+    frame runs no Spark job, where inference runs one per read.
+
+    pyarrow reads one footer on the driver. A file Spark wrote carries
+    Spark's own schema in its metadata (pyarrow reports its INT96
+    timestamps as nanos); other files map through ``from_arrow_schema``
+    with naive timestamps as ``timestamp_ntz``, as Spark infers them.
+    Hive partition columns still come from the directory names.
 
     Spark's vectorized reader rejects parquet nanosecond timestamps
     (PARQUET_TYPE_ILLEGAL). For files that carry them we flip the
     ``nanosAsLong`` legacy conf, read the nanos as int64, and convert
     to microsecond timestamps explicitly — all columnar, no UDF.
-    pyarrow only inspects the footer (cheap at any scale).
     """
     import pyarrow.dataset as ds
     import pyarrow.types as pat
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import _parse_datatype_json_string
 
     schema = ds.dataset(path).schema
+    written = (schema.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if written:
+        return spark.read.schema(_parse_datatype_json_string(written.decode())).parquet(path)
     nano_cols = [
         name
         for name, typ in zip(schema.names, schema.types)
         if pat.is_timestamp(typ) and typ.unit == "ns"
     ]
     if not nano_cols:
-        return spark.read.parquet(path)
+        declared = from_arrow_schema(schema, prefer_timestamp_ntz=True)
+        return spark.read.schema(declared).parquet(path)
     prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:

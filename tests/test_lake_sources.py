@@ -74,6 +74,30 @@ def test_merge_and_overwrite_dedups_latest(spark, tmp_path):
     assert not os.path.isdir(f"{path}/year=2025/month=7")
 
 
+def _file_bytes(root):
+    return {p.relative_to(root): p.read_bytes() for p in root.rglob("*") if p.is_file()}
+
+
+def test_merge_onto_unreadable_month_raises_and_keeps_files(spark, tmp_path):
+    """The lake is read with a declared schema, so a corrupt file is only
+    opened by the merge's write job; that job must fail before the
+    dynamic overwrite replaces anything."""
+    path = str(tmp_path / "lake")
+    lake.merge_and_overwrite(
+        spark,
+        _curated_rows(spark, [("r1", "Burger", dt.datetime(2025, 7, 21, 10, 0), 50.0)]),
+        path,
+    )
+    month = tmp_path / "lake" / "year=2025" / "month=07"
+    (month / "part-99999-corrupt.parquet").write_bytes(b"not a parquet file")
+    before = _file_bytes(month)
+    later = _curated_rows(spark, [("r2", "Papas", dt.datetime(2025, 7, 22, 9, 0), 30.0)])
+    with pytest.raises(Exception):
+        lake.merge_and_overwrite(spark, later, path)
+    assert _file_bytes(month) == before
+    assert not os.path.isdir(f"{path}/year=2025/month=7")
+
+
 def test_json_roundtrip(spark, tmp_path):
     from pos_api_pipeline_spark.schemas import RECEIPT_SCHEMA
 

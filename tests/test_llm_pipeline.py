@@ -98,6 +98,43 @@ def test_corpus_curation_tick_lifecycle(spark, tmp_path):
     assert spark.read.parquet(corpus).count() == 11
 
 
+def test_corpus_tick_raises_on_unreadable_corpus(spark, tmp_path):
+    """Only a missing corpus means first tick: a corpus holding a file
+    that is not parquet fails the tick, and nothing is appended to the
+    corpus or the band index."""
+    import pytest
+
+    from pos_api_pipeline_spark.llm.pipeline import run_corpus_curation_tick
+
+    corpus = str(tmp_path / "corpus")
+    index = str(tmp_path / "band_index")
+
+    def doc(i):
+        return f"the data and value of run {i} " + " ".join(
+            f"w{i}x{j}" for j in range(12)
+        )
+
+    def batch(ids):
+        return spark.createDataFrame(
+            [(i, doc(i)) for i in ids], "doc_id long, text string"
+        )
+
+    run_corpus_curation_tick(spark, batch(range(3)), corpus, index)
+    (tmp_path / "corpus" / "part-0.parquet").write_bytes(b"not a parquet file")
+
+    def snapshot():
+        return {
+            p.relative_to(tmp_path): p.read_bytes()
+            for p in tmp_path.rglob("*")
+            if p.is_file()
+        }
+
+    before = snapshot()
+    with pytest.raises(Exception):
+        run_corpus_curation_tick(spark, batch(range(10, 13)), corpus, index)
+    assert snapshot() == before
+
+
 def test_corpus_tick_prunes_intra_delta_near_dups(spark, tmp_path):
     """Two near-dup (non-identical) docs arriving in the SAME tick:
     only the lower id survives — the standing index can't catch them

@@ -22,6 +22,7 @@ get_spark's settings (tz pinning, AQE, shuffle partitions).
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -95,7 +96,7 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
 
     if vanilla:

@@ -3,7 +3,7 @@
 # (stamped with wall time) to PHASE_PROBES_r13.jsonl. Pause by touching
 # /tmp/probe_pause (used while timing runs are in flight so the probe JVM
 # does not perturb them).
-cd /root/repo
+cd "$(dirname "$0")/.."
 while true; do
   if [ ! -f /tmp/probe_pause ]; then
     line=$(timeout 300 python bench.py --phase-probe 2>/dev/null | tail -1)

@@ -18,10 +18,12 @@ Usage: python tools/plan_audit.py [sf_dir] [out_md]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Queries whose nested-loop joins are deliberate one-row-scalar or
 # brute-force-baseline broadcasts (see tests/test_plans.py).
@@ -92,7 +94,7 @@ def audit_plan(plan: str) -> dict[str, object]:
     }
 
 
-SNAPSHOT = "PLAN_SNAPSHOT.json"
+SNAPSHOT = os.path.join(REPO, "PLAN_SNAPSHOT.json")
 
 
 def diff_snapshots(prev: dict, cur: dict) -> list[str]:
@@ -185,7 +187,6 @@ def main() -> int:
             f"{flagged if flagged else 'none'}\n"
         )
     import json
-    import os
 
     snapshot = {name: a for name, a in audits.items()}
     regressions = []

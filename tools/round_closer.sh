@@ -6,7 +6,7 @@
 # attempt's JSON line to ROUND_CLOSE_ATTEMPTS_r13.jsonl and stops on
 # the first accepted run. Pause with /tmp/probe_pause (shared with the
 # phase watcher) so attempts never overlap foreground timing work.
-cd /root/repo
+cd "$(dirname "$0")/.."
 while true; do
   if [ ! -f /tmp/probe_pause ]; then
     line=$(timeout 2400 python bench.py --round-close 2>/dev/null | tail -1)
