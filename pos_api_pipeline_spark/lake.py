@@ -67,7 +67,6 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    max_records_per_file: int | None = None,
 ) -> None:
     """S9 — schema-enforced partitioned parquet sink.
 
@@ -76,19 +75,15 @@ def write_partitioned(
     the partition columns — one shuffle partition per (year, month),
     so months write in parallel and each directory gets a handful of
     well-sized files rather than one file per input task (the classic
-    small-files failure). File size within a month is bounded with
-    ``maxRecordsPerFile`` when given; AQE coalescing handles tiny
-    months. (Note ``repartition(1, 'year', 'month')`` would be wrong:
-    the leading int is the TOTAL partition count, funnelling every
-    month through a single task.)
+    small-files failure). AQE coalescing handles tiny months. (Note
+    ``repartition(1, 'year', 'month')`` would be wrong: the leading
+    int is the TOTAL partition count, funnelling every month through
+    a single task.)
     """
     curated = conform(df, CURATED_SCHEMA)
     parted = with_partition_columns(curated)
     parted = parted.repartition("year", "month")
-    writer = parted.write.mode(mode)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy("year", "month").parquet(path)
+    parted.write.mode(mode).partitionBy("year", "month").parquet(path)
 
 
 def read_lake(spark: SparkSession, path: str) -> DataFrame:
@@ -300,16 +295,14 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 8,
-    sort_col: str | None = None,
 ) -> None:
     """Bucketed managed table: later equi-joins/aggregations on
     ``bucket_col`` between co-bucketed tables skip the shuffle
     entirely (verify: the join plan has no Exchange). The lake-layer
     answer to 'this join runs every hour on the same key'."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.format("parquet").saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).format(
+        "parquet"
+    ).saveAsTable(table)
 
 
 def recover_partitions(spark: SparkSession, table: str) -> None:
@@ -322,7 +315,6 @@ def write_sorted(
     df: DataFrame,
     path: str,
     sort_cols: Sequence[str],
-    partition_cols: Sequence[str] = (),
     mode: str = "overwrite",
 ) -> None:
     """Layout-optimized parquet: range-repartition on ``sort_cols``
@@ -339,14 +331,9 @@ def write_sorted(
     when the upstream partitioning is round-robin (every file still
     spans the whole domain — unit-verified), and range partitioning
     alone leaves row groups inside a file unsorted. The range
-    exchange is a sampled shuffle, paid once at write time; it
-    composes with ``partition_cols`` (Hive pruning first, then
-    file/row-group skipping)."""
+    exchange is a sampled shuffle, paid once at write time."""
     out = df.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
-    writer = out.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
+    out.write.mode(mode).parquet(path)
 
 
 def zorder_key(cols: Sequence[str], bits: int = 16) -> Column:
@@ -448,7 +435,6 @@ def write_with_bloom(
     path: str,
     bloom_cols: Sequence[str],
     expected_ndv: int = 100_000,
-    partition_cols: Sequence[str] = (),
 ) -> None:
     """Parquet sink with split-block bloom filters on the named
     columns — the file-level structure behind point-lookup data
@@ -467,8 +453,6 @@ def write_with_bloom(
         w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
             f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv)
         )
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
     w.parquet(path)
 
 

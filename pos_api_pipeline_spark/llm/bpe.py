@@ -35,14 +35,11 @@ from pyspark.sql import functions as F
 from pos_api_pipeline_spark.llm.text import tokens
 
 
-def bpe_word_vocab(
-    docs: DataFrame, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
-    """(word, n, seq) working vocabulary: distinct whitespace tokens
-    with corpus frequencies and their initial character sequences.
-    One explode + one shuffle on the word."""
-    c = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    words = docs.select(F.explode(tokens(c)).alias("word"))
+def bpe_word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(word, n, seq) working vocabulary: distinct lowercased
+    whitespace tokens with corpus frequencies and their initial
+    character sequences. One explode + one shuffle on the word."""
+    words = docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("word"))
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
     seq = F.filter(F.split(F.col("word"), ""), lambda ch: ch != "")
     return vocab.withColumn("seq", seq)
@@ -175,7 +172,6 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    lowercase: bool = True,
     batch: int = 64,
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the
@@ -198,9 +194,7 @@ def bpe_train(
     Driver state stays O(model): ``4*batch + 16`` collected rows per
     refresh and the merge table itself.
     """
-    vocab = bpe_word_vocab(docs, text_col, lowercase).localCheckpoint(
-        eager=False
-    )
+    vocab = bpe_word_vocab(docs, text_col).localCheckpoint(eager=False)
     merges: list[tuple[str, str, int]] = []
     top_n = 4 * batch + 16
     while len(merges) < n_merges:
@@ -252,12 +246,10 @@ def _wrap_seq(arr: Column) -> Column:
     return joined
 
 
-def _doc_symbol_string(text_col: str, lowercase: bool = True) -> Column:
-    """The whole document as one wrapped-symbol string: each char
-    wrapped in US inside each word, words joined by RS."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    if lowercase:
-        c = F.lower(c)
+def _doc_symbol_string(text_col: str) -> Column:
+    """The whole lowercased document as one wrapped-symbol string:
+    each char wrapped in US inside each word, words joined by RS."""
+    c = F.lower(F.col(text_col))
     c = F.replace(F.replace(c, F.lit(_US)), F.lit(_RS))
     toks = tokens(c)
     per_word = F.transform(
@@ -303,7 +295,6 @@ def bpe_encode_corpus(
     merges: list[tuple[str, str, int]] | list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
 ) -> DataFrame:
     """Encode every document with a learned merge table: the ordered
     subword token stream plus the stats a data-mixing layer needs
@@ -313,15 +304,13 @@ def bpe_encode_corpus(
     Direct per-document form: one string-expression chain over the
     corpus, no join, no shuffle — encoding is embarrassingly parallel.
     """
-    enc = apply_merges_joined(_doc_symbol_string(text_col, lowercase), merges)
+    enc = apply_merges_joined(_doc_symbol_string(text_col), merges)
     toks = F.filter(
         F.split(enc, f"[{_US}{_RS}]"), lambda t: t != ""
     )
     return docs.select(
         F.col(id_col),
-        F.size(tokens(F.lower(F.col(text_col)) if lowercase else F.col(text_col))).cast(
-            "long"
-        ).alias("n_words"),
+        F.size(tokens(F.lower(F.col(text_col)))).cast("long").alias("n_words"),
         F.size(toks).cast("long").alias("n_tokens"),
         toks.alias("bpe_tokens"),
     )

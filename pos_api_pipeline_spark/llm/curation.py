@@ -390,16 +390,15 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_fraction: float = 0.0,
-    exact: bool = False,
 ) -> DataFrame:
     """Drop documents whose contamination_fraction exceeds
     ``max_fraction`` (default: any benchmark overlap at all drops the
-    document — the conservative pre-training policy). ``exact=True``
-    probes raw shingle strings instead of xxhash64 keys (see
-    ``contamination`` for the collision tradeoff)."""
-    scores = contamination(
-        docs, benchmark, n, text_col, id_col, exact=exact
-    ).select(id_col, "contamination_fraction")
+    document — the conservative pre-training policy). Shingles probe
+    as xxhash64 keys (see ``contamination`` for the collision
+    tradeoff)."""
+    scores = contamination(docs, benchmark, n, text_col, id_col).select(
+        id_col, "contamination_fraction"
+    )
     return (
         docs.join(scores, id_col, "left")
         .filter(

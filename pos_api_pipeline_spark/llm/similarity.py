@@ -1536,7 +1536,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVFADC (Jégou et al., "Product Quantization for Nearest
     Neighbor Search", TPAMI 2011): IVF coarse routing composed with
@@ -1555,11 +1554,7 @@ def ivf_pq_topk(
     the m partial distances with the same sorted sequential fold as
     ``pq_topk`` (bit-identical to the oracle's ordered list_reduce).
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else deterministic_centroids(corpus, n_centroids, id_col, vec_col)
-    )
+    cents = deterministic_centroids(corpus, n_centroids, id_col, vec_col)
     cb = pq_codebooks(
         corpus, dim, m=m, k=k_codes, id_col=id_col, vec_col=vec_col
     )
@@ -2076,7 +2071,6 @@ def sq8_recall_at_k(
 def prototypicality_scores(
     corpus: DataFrame,
     n_centroids: int = 16,
-    centroids: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -2086,11 +2080,7 @@ def prototypicality_scores(
     (``assign_nearest_centroids`` with the similarity kept). Cosine
     rounded to 9 dp for cross-engine determinism. Output:
     (id_col, centroid_id, prototypicality)."""
-    cents = (
-        centroids
-        if centroids is not None
-        else deterministic_centroids(corpus, n_centroids, id_col, vec_col)
-    )
+    cents = deterministic_centroids(corpus, n_centroids, id_col, vec_col)
     v = corpus.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("vec")
     )
@@ -2107,31 +2097,23 @@ def prototype_prune(
     corpus: DataFrame,
     keep_fraction: float,
     n_centroids: int = 16,
-    centroids: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_hardest: bool = True,
 ) -> DataFrame:
     """Cluster-balanced prototypicality pruning: within every
     cluster, keep ceil(keep_fraction · cluster size) examples —
-    the LEAST prototypical (hardest) by default, per the
-    abundant-data regime of Sorscher et al.; ``keep_hardest=False``
-    keeps the most prototypical (the scarce-data regime).
+    the LEAST prototypical (hardest), per the abundant-data regime
+    of Sorscher et al.
 
     Per-cluster ranking (two window functions over the same
     partition — one sort) keeps the class balance that a global
     score cutoff would destroy. Output: every corpus vector with its
     score and a ``kept`` flag — filter on it, or audit the boundary.
     """
-    scores = prototypicality_scores(
-        corpus, n_centroids, centroids, id_col, vec_col
+    scores = prototypicality_scores(corpus, n_centroids, id_col, vec_col)
+    w = Window.partitionBy("centroid_id").orderBy(
+        F.asc("prototypicality"), F.asc(id_col)
     )
-    order = (
-        [F.asc("prototypicality"), F.asc(id_col)]
-        if keep_hardest
-        else [F.desc("prototypicality"), F.asc(id_col)]
-    )
-    w = Window.partitionBy("centroid_id").orderBy(*order)
     wc = Window.partitionBy("centroid_id")
     return scores.select(
         id_col,

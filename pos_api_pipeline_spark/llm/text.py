@@ -382,14 +382,12 @@ def strip_html(
     )
 
 
-def merge_pair_counts(
-    df: DataFrame, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
-    """Adjacent-token-pair frequencies — the statistic behind one BPE
-    merge step (the highest-count pair is the next merge a tokenizer
-    trainer would apply). Reference scope: the token-counting family
-    (SURVEY.md §2 text analysis); this extends it toward tokenizer
-    training.
+def merge_pair_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Adjacent lowercased token-pair frequencies — the statistic
+    behind one BPE merge step (the highest-count pair is the next
+    merge a tokenizer trainer would apply). Reference scope: the
+    token-counting family (SURVEY.md §2 text analysis); this extends
+    it toward tokenizer training.
 
     Pure Catalyst: zip the token array against itself shifted by one
     (two slices of the SAME materialized array — no re-tokenization),
@@ -399,10 +397,7 @@ def merge_pair_counts(
     distinct pair per partition — the 100 TB shape for global
     vocabulary statistics.
     """
-    c = F.col(text_col)
-    if lowercase:
-        c = F.lower(c)
-    toks = tokens(c)
+    toks = tokens(F.lower(F.col(text_col)))
     n1 = F.greatest(F.size(toks) - F.lit(1), F.lit(0))
     pairs = F.zip_with(
         F.slice(toks, 1, n1),
@@ -422,16 +417,15 @@ def hashed_linear_scores(
     weights: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     threshold: float = 0.0,
 ) -> DataFrame:
     """fastText-style linear text classifier over hashed bag-of-words
-    features: each token hashes to one of ``n_buckets`` buckets, the
-    document's score is the mean bucket weight over its tokens
-    (repeats count — bag, not set), and ``keep`` thresholds it. This
-    is the model-based quality filter that sits next to the heuristic
-    ones (``quality_scores``): swap in trained weights and the same
-    plan serves a real classifier.
+    features: each lowercased token hashes to one of ``n_buckets``
+    buckets, the document's score is the mean bucket weight over its
+    tokens (repeats count — bag, not set), and ``keep`` thresholds
+    it. This is the model-based quality filter that sits next to the
+    heuristic ones (``quality_scores``): swap in trained weights and
+    the same plan serves a real classifier.
 
     ``weights``: optional (bucket, w_int) frame with integer
     milliweights (weight * 1000) — broadcast, so the corpus side is
@@ -447,9 +441,9 @@ def hashed_linear_scores(
     """
     from pos_api_pipeline_spark.llm.dedup import portable_hash64
 
-    c = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     ex = df.select(
-        F.col(id_col).alias("id"), F.explode_outer(tokens(c)).alias("tok")
+        F.col(id_col).alias("id"),
+        F.explode_outer(tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     bucket = F.pmod(portable_hash64(F.col("tok")), F.lit(n_buckets))
     if weights is None:

@@ -50,22 +50,11 @@ def count_distinct_by(
     keys: Sequence[str],
     id_col: str,
     alias: str = "unique_count",
-    approx: bool = False,
 ) -> DataFrame:
     """A2 — COUNT DISTINCT per group
     (reference: reporting/data_preparation.py:71, 371-374;
-    cumulative_report.py:79-87, 111).
-
-    ``approx=True`` switches to HyperLogLog++
-    (approx_count_distinct) — the 100 TB path when exactness isn't
-    required: one pass, fixed-size sketches, no distinct expansion.
-    """
-    agg = (
-        F.approx_count_distinct(id_col).alias(alias)
-        if approx
-        else F.countDistinct(id_col).alias(alias)
-    )
-    return df.groupBy(*keys).agg(agg)
+    cumulative_report.py:79-87, 111)."""
+    return df.groupBy(*keys).agg(F.countDistinct(id_col).alias(alias))
 
 
 def grouped_multi_agg(
@@ -125,12 +114,10 @@ def pivot_matrix(
     df: DataFrame,
     index: str,
     columns: str,
-    values: str | None = None,
-    agg: str = "count",
     fill: float = 0,
     pivot_values: Sequence | None = None,
 ) -> DataFrame:
-    """A10 — long→wide pivot + fillna(0)
+    """A10 — long→wide row-count pivot + fillna(0)
     (reference: cumulative_report.py:114, monthly_report.py:237-238,
     306-307).
 
@@ -139,16 +126,13 @@ def pivot_matrix(
     cardinality would explode the schema). The reference pivots are
     day×hour and small category sets — bounded.
     """
-    agg_expr = (
-        F.count(F.lit(1)) if agg == "count" else getattr(F, agg)(values)
-    )
     piv = df.groupBy(index)
     piv = (
         piv.pivot(columns, list(pivot_values))
         if pivot_values is not None
         else piv.pivot(columns)
     )
-    return piv.agg(agg_expr).na.fill(fill)
+    return piv.agg(F.count(F.lit(1))).na.fill(fill)
 
 
 def preserve_empty_groups(
@@ -162,9 +146,11 @@ def preserve_empty_groups(
     Spark's groupBy drops groups with no rows; the reference's ordered
     categorical keeps all 7 weekdays (reference:
     reporting/data_preparation.py:49-50, 71). Left-join from the
-    (broadcast) dimension and zero-fill the aggregate columns.
+    dimension and zero-fill the aggregate columns. The join carries
+    no broadcast hint: Spark cannot build the preserved side of a left
+    outer join, so a hint on the dimension is dropped with a warning.
     """
-    out = F.broadcast(dimension).join(aggregated, on=list(on), how="left")
+    out = dimension.join(aggregated, on=list(on), how="left")
     return out.na.fill({c: 0 for c in fill_zero_cols})
 
 
@@ -172,16 +158,14 @@ def basket_lists(
     df: DataFrame,
     basket_key: str = "receipt_number",
     item_col: str = "item_name",
-    distinct: bool = True,
 ) -> DataFrame:
     """A12 — transaction basket building
     (reference: cumulative_report.py:137). ``collect_set`` (distinct)
     because FPGrowth requires unique items per basket — the reference
     feeds apriori one-hot encoded baskets which are implicitly
     distinct."""
-    collect = F.collect_set if distinct else F.collect_list
     return df.groupBy(basket_key).agg(
-        F.array_sort(collect(item_col)).alias("items")
+        F.array_sort(F.collect_set(item_col)).alias("items")
     )
 
 

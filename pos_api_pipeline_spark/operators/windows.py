@@ -19,7 +19,6 @@ def window_dedup(
     df: DataFrame,
     keys: Sequence[str] = ("receipt_number", "item_name"),
     order_col: str = "shifted_time",
-    descending: bool = True,
     tiebreakers: Sequence[str] = (),
 ) -> DataFrame:
     """W1/W2 — ROW_NUMBER dedup, latest wins
@@ -31,9 +30,8 @@ def window_dedup(
     Extra ``tiebreakers`` pin a total order for oracle-stable output
     on synthetic data where the order key ties.
     """
-    order = F.desc(order_col) if descending else F.asc(order_col)
     w = Window.partitionBy(*keys).orderBy(
-        order, *[F.asc(t) for t in tiebreakers]
+        F.desc(order_col), *[F.asc(t) for t in tiebreakers]
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))

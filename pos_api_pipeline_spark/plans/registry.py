@@ -300,7 +300,6 @@ def q_dedup_latest_line(spark, sf_dir):
         li,
         keys=("l_orderkey", "l_partkey"),
         order_col="l_shipdate",
-        descending=True,
         tiebreakers=("l_linenumber",),
     )
     return deduped.select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")

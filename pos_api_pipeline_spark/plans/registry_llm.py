@@ -2387,7 +2387,7 @@ def q_purchase_funnel(spark, sf_dir):
 )
 def q_bpe_top_merges(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    counts = X.merge_pair_counts(d, "text", lowercase=True)
+    counts = X.merge_pair_counts(d, "text")
     return counts.orderBy(F.desc("n"), F.asc("pair")).limit(20)
 
 

@@ -1,11 +1,12 @@
 """SparkSession factory tuned for this engine.
 
 Local-mode defaults mirror what the cluster profile would be at scale:
-AQE on (runtime re-planning, skew-join splitting, partition
-coalescing), shuffle partitions sized to cores rather than the
-200-partition default, Arrow enabled for the pandas boundary, and the
-session timezone pinned to UTC so results are oracle-comparable
-(DuckDB timestamps are UTC-naive).
+shuffle partitions sized to the cores rather than the 200-partition
+default, Arrow enabled for the pandas boundary, and the session
+timezone pinned to UTC so results are oracle-comparable (DuckDB
+timestamps are UTC-naive). AQE (runtime re-planning, skew-join
+splitting, partition coalescing) and runtime bloom-filter injection
+are on by Spark's own defaults.
 """
 
 from __future__ import annotations
@@ -20,34 +21,27 @@ from pyspark.sql.types import StructType
 def get_spark(
     app_name: str = "pos_api_pipeline_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    Every conf here is cluster-relevant, not a local hack:
-    - AQE + skew-join handles hot keys (e.g. a viral receipt/user id)
-      without manual salting in the common case.
-    - ``autoBroadcastJoinThreshold`` stays at default; dimension joins
-      additionally carry explicit ``F.broadcast`` hints in operators.
+    Every conf set here differs from Spark's own default:
+    - ``spark.sql.shuffle.partitions`` follows the master's
+      ``defaultParallelism`` (one shuffle partition per task slot)
+      unless ``extra_conf`` sets it.
     - ``session.timeZone=UTC`` keeps timestamp semantics deterministic
       across engines and clusters.
+    - Arrow for the pandas boundary, zstd parquet, no UI, and a
+      driver heap sized for local mode.
+    ``autoBroadcastJoinThreshold`` stays at default; dimension joins
+    additionally carry explicit ``F.broadcast`` hints in operators.
+    Everything else, ``spark.driver.maxResultSize`` included, is
+    Spark's default and overridable through ``extra_conf``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Runtime bloom-filter injection: build a bloom filter from the
-        # filtered dimension side and push it into the fact scan —
-        # prunes row groups before the join at 100 TB; harmless locally.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
@@ -55,21 +49,14 @@ def get_spark(
         # local mode = driver-only: the driver heap IS the executor
         # memory; size it for 32 task threads' shuffle state.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # Broadcast creation serializes task results through the
-        # driver; the 1g default trips on legitimately-sized (tens of
-        # MB per partition) broadcast builds at the sf10 probe scale.
-        # Scoped via env (sf10 probe scripts export it) instead of a
-        # global 4g: raising it for every session would weaken the
-        # collect-size guard suite-wide — a runaway collect in any
-        # query could eat 4g of driver heap before erroring.
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_GRAFT_MAX_RESULT_SIZE", "1g"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

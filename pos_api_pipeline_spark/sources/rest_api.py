@@ -27,7 +27,6 @@ dependence in tests.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,12 +41,11 @@ FetchPage = Callable[[str | None], tuple[list[dict], str | None]]
 
 def paginate(
     fetch_page: FetchPage,
-    politeness_sleep: float = 0.0,
     max_pages: int | None = None,
 ) -> Iterable[dict]:
     """Cursor pagination loop (reference: etl/extract.py:60-104 walks
-    pages newest-first with a 0.5 s politeness sleep — the sleep is a
-    caller knob here, default off for tests)."""
+    pages newest-first with a 0.5 s politeness sleep between pages;
+    no caller here talks to a rate-limited server, so none sleeps)."""
     cursor: str | None = None
     pages = 0
     while True:
@@ -56,8 +54,6 @@ def paginate(
         pages += 1
         if cursor is None or (max_pages is not None and pages >= max_pages):
             return
-        if politeness_sleep:
-            time.sleep(politeness_sleep)
 
 
 def receipts_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -74,12 +70,11 @@ def fetch_all_historical(
     spark: SparkSession,
     fetch_receipts_page: FetchPage,
     fetch_items_page: FetchPage,
-    politeness_sleep: float = 0.0,
 ) -> tuple[DataFrame, DataFrame]:
     """S1 — full-history scan: paginate receipts + one-shot items
     (reference: etl/extract.py:44-104)."""
-    receipts = list(paginate(fetch_receipts_page, politeness_sleep))
-    items = list(paginate(fetch_items_page, politeness_sleep))
+    receipts = list(paginate(fetch_receipts_page))
+    items = list(paginate(fetch_items_page))
     return receipts_to_df(spark, receipts), items_to_df(spark, items)
 
 

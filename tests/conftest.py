@@ -11,7 +11,6 @@ def spark(tmp_path_factory):
     s = get_spark(
         "tests",
         master="local[4]",
-        shuffle_partitions=4,
         extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     yield s

@@ -49,13 +49,12 @@ print(json.dumps({{'canary_s': round(time.perf_counter() - t0, 3)}}))
 
 
 def _run_cell(repo: str, cell: str) -> dict:
-    env = dict(os.environ, SPARK_GRAFT_MAX_RESULT_SIZE="4g")
     body = _probe.CELLS[cell]
     try:
         proc = subprocess.run(
             [sys.executable, "-c",
              _probe.STUB.format(repo=repo, sf10=SF10, body=body)],
-            capture_output=True, text=True, env=env, cwd=repo,
+            capture_output=True, text=True, cwd=repo,
             timeout=3600,
         )
     except subprocess.TimeoutExpired:

@@ -67,7 +67,7 @@ SF10 = {sf10!r}
 from pos_api_pipeline_spark.session import get_spark, read_parquet
 from pos_api_pipeline_spark.llm import dedup as D
 from pos_api_pipeline_spark.llm import similarity as S
-spark = get_spark('sf10_probe')
+spark = get_spark('sf10_probe', extra_conf={{'spark.driver.maxResultSize': '4g'}})
 t0 = time.perf_counter()
 {body}
 print(json.dumps({{'count': out, 'seconds': round(time.perf_counter() - t0, 2)}}))
@@ -82,12 +82,10 @@ def main() -> None:
     names = [a for a in args if not a.endswith(".json")] or list(CELLS)
     results = {}
     for name in names:
-        env = dict(os.environ, SPARK_GRAFT_MAX_RESULT_SIZE="4g")
         proc = subprocess.run(
             [sys.executable, "-c", STUB.format(repo=REPO, sf10=SF10, body=CELLS[name])],
             capture_output=True,
             text=True,
-            env=env,
         )
         line = (proc.stdout.strip().splitlines() or [""])[-1]
         try:
