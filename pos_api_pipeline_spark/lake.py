@@ -152,18 +152,18 @@ def write_single_parquet(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
-def write_orc(
-    df: DataFrame, path: str, partition_cols: Sequence[str] = ()
-) -> None:
+def write_orc(df: DataFrame, path: str, partition_cols: Sequence[str]) -> None:
     """ORC sink — the second columnar lake format Spark supports
     natively (Hive-ecosystem consumers often require ORC where the
     parquet lake serves everything else). Same layout contract as the
-    parquet sinks: optional Hive-style partition directories, zstd
-    compression, predicate pushdown and column pruning on read."""
-    w = df.write.mode("overwrite").option("compression", "zstd")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.orc(path)
+    parquet sinks: Hive-style partition directories, zstd compression,
+    predicate pushdown and column pruning on read."""
+    (
+        df.write.mode("overwrite")
+        .option("compression", "zstd")
+        .partitionBy(*partition_cols)
+        .orc(path)
+    )
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -369,8 +369,8 @@ def write_zordered(
     df: DataFrame,
     path: str,
     cols: Sequence[str],
+    n_files: int,
     bits: int = 16,
-    n_files: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Z-order-clustered parquet over two numeric columns: each column
@@ -389,8 +389,7 @@ def write_zordered(
     ``n_files`` pins the range-partition count: an EXPLICIT count is
     exempt from AQE partition coalescing, which otherwise merges a
     small write into one file and erases the layout (skipping needs
-    many narrow files). Leave None to let AQE size the write — right
-    at production scale, wrong for small benchmarks.
+    many narrow files).
     """
     a, b = cols
     bounds = df.agg(
@@ -417,13 +416,9 @@ def write_zordered(
         .withColumn("_zkey", zorder_key(["_za", "_zb"], bits))
         .drop("_alo", "_ahi", "_blo", "_bhi", "_za", "_zb")
     )
-    ranged = (
-        keyed.repartitionByRange(n_files, "_zkey")
-        if n_files
-        else keyed.repartitionByRange("_zkey")
-    )
     (
-        ranged.sortWithinPartitions("_zkey")
+        keyed.repartitionByRange(n_files, "_zkey")
+        .sortWithinPartitions("_zkey")
         .drop("_zkey")
         .write.mode(mode)
         .parquet(path)
@@ -482,7 +477,6 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key_cols: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """CDC-style diff of two table snapshots: one row per key that was
     ``added``, ``removed``, or ``changed`` (unchanged keys are dropped
@@ -491,18 +485,15 @@ def snapshot_diff(
     a null-tagged concat, so one full outer join on the key is the
     only shuffle and wide rows never travel twice.
 
-    ``compare_cols`` defaults to every non-key column the two
-    snapshots share (order-insensitive, name-based). Values are
+    The compared columns are every non-key column the two snapshots
+    share (order-insensitive, name-based). Values are
     length-prefixed before hashing, so nulls, empty strings, and
     values containing the join separator all hash distinctly.
 
     Output: key columns + change_type ('added'|'removed'|'changed').
     """
     keys = list(key_cols)
-    if compare_cols is None:
-        shared = [c for c in old.columns if c in set(new.columns)]
-        compare_cols = [c for c in shared if c not in set(keys)]
-    cmp_cols = list(compare_cols)
+    cmp_cols = [c for c in old.columns if c in new.columns and c not in keys]
 
     def hashed(df: DataFrame, tag: str) -> DataFrame:
         # Length-prefixed tokens ('<len>:<value>' or 'N' for null) make

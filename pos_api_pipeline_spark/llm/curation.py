@@ -183,206 +183,6 @@ def contamination(
     )
 
 
-def gram_bloom_filter(
-    keys: DataFrame,
-    key_col: str = "h",
-    num_bits: int | None = None,
-    num_hashes: int = 5,
-) -> tuple[DataFrame, int, int]:
-    """Distributed Bloom filter over a long key column, built with
-    DataFrame ops (Spark's own bloom_filter_agg is not exposed to
-    SQL): each key sets ``num_hashes`` bits at positions
-    (h + i·h') mod m (Kirsch–Mitzenmacher double hashing, h' a
-    re-hash of the key), bits are packed 64 per word via a
-    ``bit_or`` partial aggregation on the word index, and the whole
-    filter collapses to ONE row carrying a ``map<long,long>`` — the
-    repo's scalar-carry pattern, so probing is a broadcast of the
-    filter bytes, never of the key set.
-
-    ``num_bits`` defaults to ~10 bits per key (next power of two,
-    ≥ 16384) → ≈0.9 % false positives at 5 hashes. Returns
-    (one-row frame with column ``bf``, num_bits, num_hashes)."""
-    if num_bits is None:
-        n_keys = keys.select(key_col).distinct().count()
-        num_bits = max(16384, 1 << (10 * max(n_keys, 1)).bit_length())
-    elif num_bits < 64 or num_bits % 64 != 0:
-        # The dense word array holds num_bits // 64 longs; a bit in a
-        # partial top word would silently fall outside it, turning
-        # Bloom "guaranteed miss" into a false negative (and the probe
-        # side's element_at out-of-range under ANSI).
-        raise ValueError(
-            f"num_bits must be a multiple of 64 (>= 64), got {num_bits}"
-        )
-    # reduce mod m BEFORE combining: raw h1 + i*h2 overflows long
-    # under ANSI mode; pmod keeps every term < num_bits (≤ 2^40ish)
-    h1 = F.pmod(F.col(key_col), F.lit(num_bits))
-    h2 = F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_bits))
-    bits = F.explode(
-        F.array(
-            *[
-                F.pmod(h1 + F.lit(i).cast("long") * h2, F.lit(num_bits))
-                for i in range(num_hashes)
-            ]
-        )
-    ).alias("bit")
-    words = (
-        keys.select(bits)
-        .select(
-            F.shiftright(F.col("bit"), 6).alias("word"),
-            F.call_function(
-                "shiftleft",
-                F.lit(1).cast("long"),
-                F.col("bit").bitwiseAND(F.lit(63)).cast("int"),
-            ).alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
-    # Dense array, NOT a map: Spark's map element_at is a LINEAR scan
-    # of the entries (ArrayBasedMapData), which turned the probe into
-    # O(words) per hash — 51 s at sf1. The dense form pays zeros for
-    # empty words but probes O(1); practical to ~2^30 bits (128 MB
-    # row). Beyond that, probe the words frame with a shuffled join
-    # instead of a scalar carry.
-    n_words = num_bits // 64
-    bf = words.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("word", "bits"))
-        ).alias("_m")
-    ).select(
-        F.transform(
-            F.sequence(F.lit(0).cast("long"), F.lit(n_words - 1).cast("long")),
-            lambda w: F.coalesce(
-                F.element_at(F.col("_m"), w), F.lit(0).cast("long")
-            ),
-        ).alias("bf")
-    )
-    return bf, num_bits, num_hashes
-
-
-def _bloom_might_contain(
-    key, num_bits: int, num_hashes: int, bf_col: str = "bf"
-):
-    """Probe predicate for ``gram_bloom_filter`` output: true iff
-    every probed bit is set. ``bf`` is a dense word array, so each
-    probe is one O(1) element_at (1-based)."""
-    h1 = F.pmod(key, F.lit(num_bits))
-    h2 = F.pmod(F.xxhash64(key), F.lit(num_bits))
-    def probe(i):
-        bit = F.pmod(h1 + i.cast("long") * h2, F.lit(num_bits))
-        word = F.shiftright(bit, 6)
-        mask = F.call_function(
-            "shiftleft",
-            F.lit(1).cast("long"), bit.bitwiseAND(F.lit(63)).cast("int")
-        )
-        return (
-            F.element_at(F.col(bf_col), (word + 1).cast("int"))
-            .bitwiseAND(mask)
-            != 0
-        )
-    return F.forall(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)), probe
-    )
-
-
-def contamination_bloom(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str | None = None,
-    num_bits: int | None = None,
-    num_hashes: int = 5,
-) -> DataFrame:
-    """``contamination`` for the regime where the benchmark gram set
-    outgrows the broadcast threshold (cross-corpus dedup, very large
-    eval suites): instead of broadcasting the distinct gram hashes
-    (8 bytes/gram), broadcast a Bloom filter (~10 BITS/gram — ~6×
-    smaller, tunable), probe it map-side, and send only the
-    candidate grams (true hits + the ~1 % false positives) through
-    an exact shuffled semi-probe against the un-broadcast benchmark
-    set. Bloom misses are guaranteed misses, so the exact verify
-    restores bit-identical output to ``contamination`` — the filter
-    only decides how little of the corpus stream reaches the
-    shuffle.
-
-    Same output contract as ``contamination`` (hashed probe path).
-    """
-    from pos_api_pipeline_spark.llm.dedup import with_shingles
-
-    bench_text = bench_text_col or text_col
-    # localCheckpoint (r12, guide §3.3): the distinct benchmark gram
-    # set has THREE consumers — the sizing count, the Bloom build and
-    # the exact verify join — and the lambda-bearing shingle tree
-    # never canonicalizes, so each consumer re-scanned and
-    # re-shingled the benchmark. Materialize it once.
-    bench_sh = (
-        with_shingles(
-            benchmark.select(F.col(bench_text).alias("text")).withColumn(
-                "_bid", F.monotonically_increasing_id()
-            ),
-            text_col="text",
-            id_col="_bid",
-            n=n,
-            out_col="sh",
-            hashed=True,
-        )
-        .select(F.explode_outer("sh").alias("h"))
-        .filter(F.col("h").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    bf, num_bits, num_hashes = gram_bloom_filter(
-        bench_sh, "h", num_bits, num_hashes
-    )
-    doc_sh = with_shingles(
-        docs, text_col=text_col, id_col=id_col, n=n, out_col="sh",
-        hashed=True,
-    ).withColumn("n_shingles", F.size("sh"))
-    # One NULL marker row per document rides the candidate stream
-    # (r12): it passes the Bloom gate (null-safe OR), matches nothing
-    # in the verify join, and keeps every doc — including
-    # zero-shingle and zero-candidate ones — alive to the single
-    # per-id aggregation. The pre-r12 form re-scanned the corpus for
-    # a (id, n_shingles) base frame and joined the counts back to it
-    # (corpus-grain join at scale); the marker costs one 16-byte row
-    # per doc through the shuffle instead.
-    ex = doc_sh.select(
-        "id",
-        "n_shingles",
-        F.explode(
-            F.concat(
-                F.array(F.lit(None).cast("long")), F.coalesce(
-                    F.col("sh"), F.array().cast("array<long>")
-                )
-            )
-        ).alias("h"),
-    )
-    cand = ex.join(F.broadcast(bf)).filter(
-        F.col("h").isNull()
-        | _bloom_might_contain(F.col("h"), num_bits, num_hashes)
-    )
-    verified = cand.join(
-        bench_sh.withColumn("_hit", F.lit(1)), "h", "left"
-    )
-    per_id = verified.groupBy("id").agg(
-        F.max("n_shingles").alias("n_shingles"),
-        F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_contaminated"),
-    )
-    return per_id.select(
-        F.col("id").alias(id_col),
-        F.col("n_shingles").cast("long").alias("n_shingles"),
-        F.col("n_contaminated").cast("long").alias("n_contaminated"),
-        F.when(
-            F.col("n_shingles") > 0,
-            F.col("n_contaminated") / F.col("n_shingles"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("contamination_fraction"),
-    )
-
-
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,

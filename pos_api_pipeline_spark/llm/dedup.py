@@ -551,7 +551,7 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 1000,
+    max_df: int = 1000,
     collapse_exact: bool | None = None,
     max_family: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
@@ -592,8 +592,8 @@ def ngram_jaccard_pairs(
     bucket is O(m); only the filter sees it), the standard DF-cap
     from web-scale dedup pipelines (e.g. CCNet). The cost is exact
     recall for pairs whose ONLY overlap is capped shingles — pairs
-    that at DF > 1000 have Jaccard ≈ 0 anyway. Pass ``max_df=None``
-    for the exact inverted index.
+    that at DF > 1000 have Jaccard ≈ 0 anyway. A ``max_df`` at or
+    above the corpus size is the exact inverted index.
 
     Join keys are 60-bit shingle hashes (portable_hash64): collisions
     are ~2^-60 — negligible. Jaccard is exact integer arithmetic —
@@ -633,9 +633,7 @@ def ngram_jaccard_pairs(
     exploded = shingled.select(
         "id", "n_shingles", F.explode_outer("shingles").alias("shingle")
     ).filter(F.col("shingle").isNotNull())
-    bucket_ok = F.size("members") > 1
-    if max_df is not None:
-        bucket_ok = bucket_ok & (F.size("members") <= max_df)
+    bucket_ok = (F.size("members") > 1) & (F.size("members") <= max_df)
     buckets = (
         exploded.groupBy("shingle")
         .agg(
@@ -666,7 +664,7 @@ def _ngram_jaccard_pairs_collapsed(
     id_col: str,
     n: int,
     threshold: float,
-    max_df: int | None,
+    max_df: int,
     max_family: int | None,
 ) -> DataFrame:
     """Distinct-text-grain inverted index (see ngram_jaccard_pairs
@@ -693,9 +691,7 @@ def _ngram_jaccard_pairs_collapsed(
     weight = F.aggregate(
         m, F.lit(0).cast("long"), lambda acc, g: acc + g["grp"]
     )
-    bucket_ok = weight > 1
-    if max_df is not None:
-        bucket_ok = bucket_ok & (weight <= max_df)
+    bucket_ok = (weight > 1) & (weight <= max_df)
     buckets = (
         exploded.groupBy("shingle")
         .agg(
@@ -909,39 +905,26 @@ def dedupe_corpus(
     text_col: str = "text",
     id_col: str = "doc_id",
     method: str = "exact",
-    **kwargs,
 ) -> DataFrame:
-    """End-to-end corpus dedup: detect with the chosen method, keep
-    one representative per duplicate group/pair.
+    """Corpus dedup by a whole-document key, keeping the lowest id of
+    each group.
 
-    methods: 'exact' (byte-identical), 'fingerprint' (token-set),
-    'jaccard' (exact n-gram similarity), 'minhash' (LSH candidates —
-    the 100 TB path), 'minhash_confirmed' (LSH candidates + exact
-    Jaccard verify — the precision-preserving 100 TB path),
-    'simhash' (hamming blocks).
+    methods: 'exact' (byte-identical, md5 of the text), 'fingerprint'
+    (token-set, ``text.fingerprint``). For near-duplicates compose
+    ``apply_pair_dedup(df, <detector>(df, ...))`` with a pair detector
+    (``ngram_jaccard_pairs``, ``minhash_lsh_candidates``,
+    ``minhash_confirmed_pairs``, ``simhash_near_dups``).
     """
     if method == "exact":
-        keep = df.groupBy(F.md5(F.col(text_col)).alias("_h")).agg(
-            F.min(id_col).alias(id_col)
-        )
-        return df.join(keep.select(id_col), on=id_col, how="left_semi")
-    if method == "fingerprint":
+        groups = df.groupBy(F.md5(F.col(text_col)).alias("_h"))
+    elif method == "fingerprint":
         from pos_api_pipeline_spark.llm.text import fingerprint
 
-        fp = fingerprint(df, text_col, out_col="_fp")
-        keep = fp.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-        return df.join(keep.select(id_col), on=id_col, how="left_semi")
-    if method == "jaccard":
-        pairs = ngram_jaccard_pairs(df, text_col, id_col, **kwargs)
-    elif method == "minhash":
-        pairs = minhash_lsh_candidates(df, text_col, id_col, **kwargs)
-    elif method == "minhash_confirmed":
-        pairs = minhash_confirmed_pairs(df, text_col, id_col, **kwargs)
-    elif method == "simhash":
-        pairs = simhash_near_dups(df, text_col, id_col, **kwargs)
+        groups = fingerprint(df, text_col, out_col="_fp").groupBy("_fp")
     else:
         raise ValueError(f"unknown dedup method: {method}")
-    return apply_pair_dedup(df, pairs, id_col)
+    keep = groups.agg(F.min(id_col).alias(id_col))
+    return df.join(keep.select(id_col), on=id_col, how="left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -1868,50 +1851,28 @@ def keep_best_duplicate(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    score: Column | None = None,
-    method: str = "exact",
 ) -> DataFrame:
-    """Survivor selection by QUALITY: within each duplicate group keep
-    the highest-scoring member (ties → lowest id) instead of the
-    blanket lowest-id rule in ``dedupe_corpus``. This is how web-scale
-    pipelines actually dedup — when a page exists in five crawls you
-    keep the longest / highest-quality capture, not the smallest id.
-
-    ``score`` is any Column (default: text length); plug in
-    ``quality_score`` outputs or model scores. ``method``: 'exact'
-    (byte-identical md5 groups) or 'fingerprint' (order-insensitive
-    token-set groups, catches shuffled boilerplate).
+    """Survivor selection by length: within each token-set duplicate
+    group (``text.fingerprint``: order-insensitive, catches shuffled
+    boilerplate) keep the longest member (ties → lowest id) instead of
+    the blanket lowest-id rule in ``dedupe_corpus``. This is how
+    web-scale pipelines actually dedup — when a page exists in five
+    crawls you keep the longest capture, not the smallest id.
 
     Shape: one row_number window partitioned by the group hash —
     a single shuffle on a fixed-width key, same cost as the dedup
-    itself; no join, no collect. Deterministic for any score
-    expression both engines can evaluate, so it oracle-checks.
+    itself; no join, no collect. Deterministic, so it oracle-checks.
     """
-    if score is None:
-        score = F.length(F.col(text_col))
-    if method == "exact":
-        key = F.md5(F.col(text_col))
-    elif method == "fingerprint":
-        key = F.md5(
-            F.array_join(
-                F.array_sort(
-                    F.array_distinct(
-                        F.transform(tokens(text_col), lambda t: F.lower(t))
-                    )
-                ),
-                " ",
-            )
-        )
-    else:
-        raise ValueError(f"unknown keep_best method: {method}")
     from pyspark.sql import Window
+
+    from pos_api_pipeline_spark.llm.text import fingerprint
 
     w = Window.partitionBy("_grp").orderBy(
         F.desc("_score"), F.asc(id_col)
     )
     return (
-        df.withColumn("_grp", key)
-        .withColumn("_score", score)
+        fingerprint(df, text_col, out_col="_grp")
+        .withColumn("_score", F.length(F.col(text_col)))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_grp", "_score", "_rn")

@@ -24,7 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark.lake import lake_exists
-from pos_api_pipeline_spark.llm.dedup import minhash_lsh_candidates, apply_pair_dedup
+from pos_api_pipeline_spark.llm.dedup import (
+    apply_pair_dedup,
+    dedupe_corpus,
+    minhash_lsh_candidates,
+)
 from pos_api_pipeline_spark.llm.packing import pack_concat
 from pos_api_pipeline_spark.llm.sampling import select_by_token_budget
 from pos_api_pipeline_spark.llm.text import gopher_quality_flags, tokens
@@ -48,12 +52,9 @@ def curate(
         .filter("keep")
         .select("doc_id", "text")
     )
-    keep = flt.groupBy(F.md5("text").alias("_h")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    dd = flt.join(keep.select("doc_id"), "doc_id", "left_semi")
-    # collapse_exact=False: dd is already exact-text-deduped two
-    # lines up, so every replica family has size 1 — the collapse's
+    dd = dedupe_corpus(flt, method="exact")
+    # collapse_exact=False: dd is already exact-text-deduped just
+    # above, so every replica family has size 1 — the collapse's
     # distinct-text groupBy + expansion joins would be pure overhead.
     surv = apply_pair_dedup(
         dd, minhash_lsh_candidates(dd, collapse_exact=False)
@@ -170,10 +171,7 @@ def run_corpus_curation_tick(
         .filter("keep")
         .select("doc_id", "text")
     )
-    keep = flt.groupBy(F.md5("text").alias("_h")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    delta = flt.join(keep.select("doc_id"), "doc_id", "left_semi")
+    delta = dedupe_corpus(flt, method="exact")
     # Intra-delta near-dup prune, mirroring curate(): the standing
     # index only knows the CORPUS, so near-dup pairs arriving in the
     # same tick must be resolved here or they both survive forever.

@@ -132,8 +132,8 @@ def centroids_for_corpus(
     as the corpus grows is what bounds SemDeDup's and IVF's
     in-cluster work: SemDeDup at corpus scale runs ~100k clusters so
     each holds a few hundred vectors, and IVF probe cost is
-    n_probe/n_centroids of the corpus. ``semantic_dedup`` and
-    ``ivf_topk`` use this when ``n_centroids`` is None (one count()
+    n_probe/n_centroids of the corpus. ``semantic_dedup`` uses this
+    when ``n_centroids`` is None (one count()
     of the corpus — model-selection state, same cost class as a
     KMeans fit); callers with a known corpus size can call it
     directly and stay fully lazy."""
@@ -415,18 +415,15 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_centroids: int | None = 16,
+    n_centroids: int = 16,
     n_probe: int = 4,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize the corpus against a centroid
     set, search only the ``n_probe`` clusters nearest each query.
-
-    ``n_centroids=None`` auto-scales the cell count with
-    ``centroids_for_corpus`` (one corpus count(), then per-cell
-    population stays ~constant as the corpus grows — probe cost is
-    n_probe/n_centroids of the corpus, so a fixed 16 would degrade
-    toward full scan at 100×).
+    Probe cost is n_probe/n_centroids of the corpus, so scale
+    ``n_centroids`` with the corpus (``centroids_for_corpus``) or a
+    fixed count degrades toward full scan as the corpus grows.
 
     ``centroids`` defaults to the first ``n_centroids`` corpus vectors
     by id — deterministic and oracle-friendly; pass
@@ -442,8 +439,6 @@ def ivf_topk(
     subplans with differing attribute ids never reuse). The cache
     entry is n_centroids rows — negligible, evicted LRU.
     """
-    if centroids is None and n_centroids is None:
-        n_centroids = centroids_for_corpus(corpus.count())
     cents = (
         centroids
         if centroids is not None
@@ -883,7 +878,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_centroids: int | None = 16,
-    centroids: DataFrame | None = None,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     collapse_exact: bool | None = None,
 ) -> DataFrame:
@@ -901,8 +895,8 @@ def semantic_dedup(
     inside the bucket's array expression. In-cluster work is quadratic
     in cluster population; two guards bound it: scale ``n_centroids``
     with corpus size — ``n_centroids=None`` does it automatically via
-    ``centroids_for_corpus`` (or pass trained ``kmeans_centroids``) —
-    exactly like ``planes_for_corpus`` scales LSH planes, and clusters over
+    ``centroids_for_corpus`` — exactly like ``planes_for_corpus``
+    scales LSH planes, and clusters over
     ``max_bucket`` members fall back to star pairs against the
     lowest-id member (the shared ``_capped_bucket_pairs`` hot-bucket
     guard). Star pairs are semantically right for SemDeDup: every
@@ -980,13 +974,9 @@ def semantic_dedup(
     # evaluates 2x (the r11 shape) instead of 3x (measured 1.32x on
     # sf10, AB_sf10_semantic_dedup_r12.json).
     guard = _cap_guard_needed(probe_stats, max_bucket)
-    if centroids is None and n_centroids is None:
+    if n_centroids is None:
         n_centroids = centroids_for_corpus(corpus.count())
-    cents = (
-        centroids
-        if centroids is not None
-        else deterministic_centroids(corpus, n_centroids, id_col, vec_col)
-    )
+    cents = deterministic_centroids(corpus, n_centroids, id_col, vec_col)
     v = corpus.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("vec")
     )
@@ -1890,7 +1880,7 @@ def sq8_minmax(
 
     One partial-aggregable pass — 2·dim min/max aggregates, map-side
     combined, so the full corpus reduces to one row without a wide
-    shuffle. Broadcast the result into encode/search plans."""
+    shuffle. Broadcast the result into the search plan."""
     v = as_double_array(vec_col)
     aggs = []
     for d in range(dim):
@@ -1927,26 +1917,6 @@ def _sq8_code(x: Column, s: Column) -> Column:
     )
 
 
-def sq8_encode(
-    corpus: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Encode the corpus to int8-range codes: (id, codes array<int>).
-
-    Map-only after the one-row stats broadcast — the corpus never
-    shuffles. Store the codes table instead of raw vectors for an 8×
-    smaller lake footprint; search decodes on the fly (``sq8_topk``)."""
-    st = stats if stats is not None else sq8_minmax(corpus, dim, vec_col)
-    v = as_double_array(vec_col)
-    return corpus.crossJoin(F.broadcast(st)).select(
-        F.col(id_col),
-        F.zip_with(v, _sq8_pairs(), _sq8_code).alias("codes"),
-    )
-
-
 def sq8_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1954,53 +1924,29 @@ def sq8_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codes: DataFrame | None = None,
-    stats: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric SQ8 search: corpus encoded to int codes, queries
     stay full-precision; cosine is computed against the DEQUANTIZED
     corpus vectors (x̂_d = mn_d + code_d·range_d/255).
 
-    Same scale shape as ``brute_force_topk`` — the (encoded) corpus
-    never shuffles; only per-query candidate rows move into the rank
-    exchange — but the scan side can read the 8×-smaller codes table:
-    pass a stored ``codes`` frame (``sq8_encode`` output, (id, codes))
-    together with its training ``stats`` row and the raw-vector
-    corpus is never touched at all. Output: (query_id, neighbor_id,
-    adc_cosine, rank), ties broken by neighbor id."""
-    if (codes is None) != (stats is None):
-        raise ValueError("pass codes and stats together (or neither)")
-    if codes is not None:
-        decoded = codes.select(F.col(id_col), "codes").crossJoin(
-            F.broadcast(stats)
-        ).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.zip_with(
-                F.col("codes"),
-                _sq8_pairs(),
-                lambda c, s: s["mn"] + c * (s["mx"] - s["mn"]) / F.lit(255.0),
-            ).alias("dvec"),
-        )
-    else:
-        # Self-train path: fuse encode∘decode into ONE projection
-        # against ONE broadcast stats row. The encode-then-decode
-        # form referenced the stats frame twice, and broadcast
-        # subplans carrying lambda expressions never canonicalize
-        # equal, so the one-row min/max aggregate ran as two full
-        # corpus passes (two HashAggregate+Exchange subtrees in the
-        # plan; guide 2.4 — don't compute the same thing twice).
-        # _sq8_code yields the identical int the stored-codes path
-        # would read, so dvec is bit-identical either way.
-        st = sq8_minmax(corpus, dim, vec_col)
-        decoded = corpus.crossJoin(F.broadcast(st)).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.zip_with(
-                as_double_array(vec_col),
-                _sq8_pairs(),
-                lambda x, s: s["mn"]
-                + _sq8_code(x, s) * (s["mx"] - s["mn"]) / F.lit(255.0),
-            ).alias("dvec"),
-        )
+    Same scale shape as ``brute_force_topk`` — the corpus never
+    shuffles; only per-query candidate rows move into the rank
+    exchange. Encode and decode fuse into ONE projection against ONE
+    broadcast stats row, so the one-row min/max aggregate runs once: a
+    broadcast subplan carrying lambda expressions never canonicalizes
+    equal, so a second reference to the stats frame would rerun the
+    full corpus pass. Output: (query_id, neighbor_id, adc_cosine,
+    rank), ties broken by neighbor id."""
+    st = sq8_minmax(corpus, dim, vec_col)
+    decoded = corpus.crossJoin(F.broadcast(st)).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.zip_with(
+            as_double_array(vec_col),
+            _sq8_pairs(),
+            lambda x, s: s["mn"]
+            + _sq8_code(x, s) * (s["mx"] - s["mn"]) / F.lit(255.0),
+        ).alias("dvec"),
+    )
     decoded = decoded.select("*", _norm(F.col("dvec")).alias("_dn"))
     q = queries.select(
         F.col(id_col).alias("query_id"),

@@ -414,7 +414,6 @@ def merge_pair_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 def hashed_linear_scores(
     df: DataFrame,
     n_buckets: int = 1024,
-    weights: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.0,
@@ -424,14 +423,12 @@ def hashed_linear_scores(
     buckets, the document's score is the mean bucket weight over its
     tokens (repeats count — bag, not set), and ``keep`` thresholds
     it. This is the model-based quality filter that sits next to the
-    heuristic ones (``quality_scores``): swap in trained weights and
-    the same plan serves a real classifier.
+    heuristic ones (``quality_scores``).
 
-    ``weights``: optional (bucket, w_int) frame with integer
-    milliweights (weight * 1000) — broadcast, so the corpus side is
-    map-only plus one per-document aggregation. When omitted, weights
-    come from hashing the bucket id (a deterministic stand-in model,
-    uniform on [-1, 1]) and no join is needed at all.
+    The integer milliweight (weight * 1000) of each bucket comes from
+    hashing the bucket id — a deterministic stand-in model, uniform on
+    [-1, 1] — so no join is needed at all: the corpus side is map-only
+    plus one per-document aggregation.
 
     Exactness: weights stay INTEGER through the per-document sum (a
     bigint — no float addition-order drift), divided once by
@@ -446,35 +443,14 @@ def hashed_linear_scores(
         F.explode_outer(tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     bucket = F.pmod(portable_hash64(F.col("tok")), F.lit(n_buckets))
-    if weights is None:
-        w_int = (
-            F.pmod(
-                portable_hash64(
-                    F.concat(F.lit("w:"), bucket.cast("string"))
-                ),
-                F.lit(2001),
-            )
-            - F.lit(1000)
+    w_int = (
+        F.pmod(
+            portable_hash64(F.concat(F.lit("w:"), bucket.cast("string"))),
+            F.lit(2001),
         )
-        tagged = ex.withColumn(
-            "_w", F.when(F.col("tok").isNotNull(), w_int)
-        )
-    else:
-        wb = weights.select(
-            F.col("bucket").cast("long").alias("_bkt"),
-            F.col("w_int").cast("long").alias("_w_join"),
-        )
-        tagged = (
-            ex.withColumn("_bkt", bucket)
-            .join(F.broadcast(wb), "_bkt", "left")
-            .withColumn(
-                "_w",
-                F.when(
-                    F.col("tok").isNotNull(),
-                    F.coalesce(F.col("_w_join"), F.lit(0)),
-                ),
-            )
-        )
+        - F.lit(1000)
+    )
+    tagged = ex.withColumn("_w", F.when(F.col("tok").isNotNull(), w_int))
     agg = tagged.groupBy("id").agg(
         F.count("tok").alias("n_tokens"),
         F.sum("_w").alias("_sum_w"),

@@ -17,7 +17,6 @@ from pos_api_pipeline_spark.llm import similarity as S
 from pos_api_pipeline_spark.llm import text as X
 from pos_api_pipeline_spark.llm.dedup import _HASH_A, _HASH_B, _MERSENNE
 from pos_api_pipeline_spark.llm.similarity import _plane_sign
-from pos_api_pipeline_spark.operators import skew as K
 from pos_api_pipeline_spark.operators.basket import item_pair_counts
 from pos_api_pipeline_spark.plans.registry import (
     _REGISTRY,
@@ -451,17 +450,15 @@ def q_lsh_bucket_skew_stats(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Skew stress — deliberately hot-keyed variants at bench grain.
 #
-# VERDICT r6/r7 item: the skew *mitigations* (salted_join, the LSH
-# star cap, AQE skew-join) existed and were unit-tested, but nothing
-# at bench grain ever ran them against an actually skewed input, so
-# their cost was unmeasured round-over-round. These three entries
-# manufacture power-law skew from the driver's own tables inside the
-# query (no extra fixture files): the events entries collapse half of
-# all user_ids onto one hot user, the documents entry collapses a
-# fifth of all texts onto one byte-identical string (⇒ one mega
-# bucket in every band). Each is hash-oracled: salting and the star
-# cap are exact rewrites, so DuckDB computes the same answer from the
-# plain formulation.
+# The skew mitigations (AQE skew-join, the LSH star cap) run here
+# against an actually skewed input, so their cost is measured at bench
+# grain. These two entries manufacture power-law skew from the
+# benchmark's own tables inside the query (no extra fixture files): the
+# events entry collapses half of all user_ids onto one hot user, the
+# documents entry collapses a fifth of all texts onto one
+# byte-identical string (⇒ one mega bucket in every band). Each is
+# hash-oracled: the star cap is an exact rewrite, so DuckDB computes
+# the same answer from the plain formulation.
 # ---------------------------------------------------------------------------
 
 # Half of all events land on user 0: CASE WHEN user_id % 2 = 0.
@@ -498,28 +495,11 @@ def _skewed_events(spark, sf_dir):
     return ev, dim
 
 
-@register("skew_salted_hot_user_spend", _SKEW_EVENTS_SQL)
-def q_skew_salted_hot_user_spend(spark, sf_dir):
-    """salted_join under real skew: half the fact side shares one key,
-    the dim is replicated once per salt, and the shuffle_hash hint
-    pins the shuffled regime (broadcast would make the salt dead
-    weight at this SF — on the 100 TB tier the dim outgrows the
-    broadcast threshold and this is the plan that runs). Oracle = the
-    plain join: salting is an exact rewrite."""
-    ev, dim = _skewed_events(spark, sf_dir)
-    joined = K.salted_join(ev, dim, on="uid", n_salts=16, hint="shuffle_hash")
-    return joined.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        _sum_dec("value", "total_value"),
-    )
-
-
 @register("skew_aqe_hot_user_spend", _SKEW_EVENTS_SQL)
 def q_skew_aqe_hot_user_spend(spark, sf_dir):
-    """The unsalted twin on the same skewed input: sort-merge (hinted)
-    with AQE's skew-join left to split the hot partition at runtime.
-    Benched next to skew_salted_hot_user_spend each round so the two
-    mitigation strategies stay comparable on identical data."""
+    """Hot-key join under real skew: half the fact side shares one
+    key, the join is sort-merge (hinted) and AQE's skew-join splits the
+    hot partition at runtime. Oracle = the plain join."""
     ev, dim = _skewed_events(spark, sf_dir)
     joined = ev.join(dim.hint("merge"), "uid")
     return joined.groupBy("segment").agg(
@@ -1453,40 +1433,6 @@ def q_contamination_check(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     return contamination(docs, bench, n=3)
-
-
-@register(
-    "contamination_bloom_check",
-    rf"""
-    WITH t AS ({_DUCK_SHINGLES3}),
-    bench AS (SELECT DISTINCT unnest(sh) AS g FROM t WHERE doc_id % 50 = 0),
-    e AS (SELECT doc_id, unnest(sh) AS g FROM t),
-    hits AS (SELECT e.doc_id, CAST(count(*) AS BIGINT) AS nc
-             FROM e JOIN bench USING (g) GROUP BY 1)
-    SELECT t.doc_id,
-           CAST(len(t.sh) AS BIGINT) AS n_shingles,
-           coalesce(h.nc, 0) AS n_contaminated,
-           CASE WHEN len(t.sh) > 0
-                THEN CAST(coalesce(h.nc, 0) AS DOUBLE) / len(t.sh)
-                ELSE 0.0
-           END AS contamination_fraction
-    FROM t LEFT JOIN hits h USING (doc_id)
-    """,
-)
-def q_contamination_bloom_check(spark, sf_dir):
-    """Bloom-prefiltered decontamination
-    (llm/curation.py:contamination_bloom) — the regime where the
-    benchmark gram set outgrows the broadcast threshold: broadcast a
-    DataFrame-built Bloom filter (~10 bits/gram, one map<long,long>
-    scalar-carry row), probe map-side, exact-verify only the
-    candidates through a shuffled semi-probe. Bloom misses are
-    guaranteed misses, so the output — and this oracle, shared with
-    contamination_check — is bit-identical to the broadcast path."""
-    from pos_api_pipeline_spark.llm.curation import contamination_bloom
-
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    return contamination_bloom(docs, bench, n=3)
 
 
 @register(
@@ -3690,7 +3636,7 @@ def q_dedup_keep_best(spark, sf_dir):
     LONGEST member (ties → lowest id) — the keep-best-capture policy
     real crawls use, vs the lowest-id rule in dedupe_corpus."""
     docs = _t(spark, sf_dir, "documents")
-    return D.keep_best_duplicate(docs, method="fingerprint")
+    return D.keep_best_duplicate(docs)
 
 
 @register(
@@ -3818,10 +3764,7 @@ def q_curation_pipeline_e2e(spark, sf_dir):
         .filter("keep")
         .select("doc_id", "text")
     )
-    keep = flt.groupBy(F.md5("text").alias("_h")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    dd = flt.join(keep.select("doc_id"), "doc_id", "left_semi")
+    dd = D.dedupe_corpus(flt, method="exact")
     # dd is exact-text-deduped just above: skip the rule-7 collapse
     # (all families are singletons; see llm/pipeline.py twin).
     pairs = D.minhash_lsh_candidates(dd, collapse_exact=False)

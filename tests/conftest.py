@@ -83,3 +83,30 @@ def _ref_bpe(texts, n_merges):
 @pytest.fixture(scope="session")
 def bpe_reference():
     return _ref_bpe
+
+
+def _sq8_codes(emb, dim):
+    """{vec_id: codes} of ``emb`` as ``sq8_topk``'s fused projection
+    quantizes it: the same stats row and per-component code."""
+    from pyspark.sql import functions as F
+
+    from pos_api_pipeline_spark.llm.similarity import (
+        _sq8_code,
+        _sq8_pairs,
+        as_double_array,
+        sq8_minmax,
+    )
+
+    st = sq8_minmax(emb, dim)
+    coded = emb.crossJoin(F.broadcast(st)).select(
+        "vec_id",
+        F.zip_with(as_double_array("embedding"), _sq8_pairs(), _sq8_code).alias(
+            "codes"
+        ),
+    )
+    return {r.vec_id: r.codes for r in coded.collect()}
+
+
+@pytest.fixture(scope="session")
+def sq8_codes():
+    return _sq8_codes

@@ -456,22 +456,3 @@ def test_rfm_segments_scalable_monotone_and_windowless(spark):
     # the scale guarantee: no Window operator anywhere in the plan
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
-
-
-def test_rfm_segments_scalable_approx_mode(spark):
-    import datetime as dt
-
-    from pos_api_pipeline_spark.operators.analytics import (
-        rfm_segments_scalable,
-    )
-
-    rows = [
-        (c, dt.datetime(2024, 1, 1 + c % 20), float(50 * (c % 7 + 1)))
-        for c in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows, "o_custkey long, o_orderdate timestamp, o_totalprice double"
-    )
-    out = rfm_segments_scalable(df, approx=True).collect()
-    assert len(out) == 200
-    assert all(1 <= r.r <= 4 and 1 <= r.f <= 4 and 1 <= r.m <= 4 for r in out)

@@ -486,10 +486,10 @@ def test_snapshot_diff_classifies_changes(spark):
     )
     got = {r.k: r.change_type for r in snapshot_diff(old, new, ["k"]).collect()}
     assert got == {1: "removed", 3: "changed", 4: "added"}  # 2 unchanged → absent
-    # restricting compare columns hides the change
+    # only shared columns are compared: dropping v hides the change
     got2 = {
         r.k: r.change_type
-        for r in snapshot_diff(old, new, ["k"], compare_cols=["s"]).collect()
+        for r in snapshot_diff(old.drop("v"), new.drop("v"), ["k"]).collect()
     }
     assert got2 == {1: "removed", 4: "added"}
     # null vs empty-string must differ (null-tagged concat)

@@ -123,9 +123,12 @@ def test_dedupe_corpus_methods(docs):
     assert exact == {0, 1, 2, 4}  # only the byte-identical dup (3) dropped
     fp = {r.doc_id for r in dedup.dedupe_corpus(docs, method="fingerprint").collect()}
     assert fp == {0, 1, 2}  # reordering (4) also collapses
+    # near-dups: compose a pair detector with apply_pair_dedup
     jac = {
         r.doc_id
-        for r in dedup.dedupe_corpus(docs, method="jaccard", threshold=0.3).collect()
+        for r in dedup.apply_pair_dedup(
+            docs, dedup.ngram_jaccard_pairs(docs, threshold=0.3)
+        ).collect()
     }
     assert 0 in jac and 3 not in jac and 2 in jac
     with pytest.raises(ValueError, match="unknown dedup method"):
@@ -398,7 +401,7 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     uncapped = {
         (r.id_a, r.id_b)
         for r in dedup.ngram_jaccard_pairs(
-            docs, threshold=0.0, max_df=None
+            docs, threshold=0.0, max_df=len(rows)
         ).collect()
     }
     assert len(uncapped) == 100 * 99 // 2 + 1  # all hot pairs + the real one
@@ -422,7 +425,7 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     exact = {
         (r.id_a, r.id_b, r.shared)
         for r in dedup.ngram_jaccard_pairs(
-            docs, threshold=0.0, max_df=None
+            docs, threshold=0.0, max_df=len(rows)
         ).collect()
     }
     assert default == exact
@@ -784,7 +787,7 @@ def test_semantic_dedup_no_pairs_above_threshold_keeps_all(vectors):
     assert all(r.kept for r in out)
 
 
-def test_hashed_linear_scores_with_supplied_weights(spark):
+def test_hashed_linear_scores_hand_computed(spark):
     from pos_api_pipeline_spark.llm.dedup import portable_hash64
     from pos_api_pipeline_spark.llm.text import hashed_linear_scores
 
@@ -792,38 +795,29 @@ def test_hashed_linear_scores_with_supplied_weights(spark):
         [(0, "good good bad"), (1, "bad"), (2, "")],
         "doc_id long, text string",
     )
-    # Find the buckets 'good' and 'bad' hash into, then weight them.
-    b = {
-        r.tok: r.b
+    # The stand-in model's milliweight of each token's bucket.
+    bucket = F.pmod(portable_hash64(F.col("tok")), F.lit(64))
+    w = {
+        r.tok: r.w
         for r in spark.createDataFrame([("good",), ("bad",)], "tok string")
-        .select("tok", F.pmod(portable_hash64(F.col("tok")), F.lit(64)).alias("b"))
+        .select(
+            "tok",
+            (
+                F.pmod(
+                    portable_hash64(F.concat(F.lit("w:"), bucket.cast("string"))),
+                    F.lit(2001),
+                )
+                - F.lit(1000)
+            ).alias("w"),
+        )
         .collect()
     }
-    weights = spark.createDataFrame(
-        [(int(b["good"]), 1000), (int(b["bad"]), -500)], "bucket long, w_int long"
-    )
-    out = {
-        r.doc_id: r
-        for r in hashed_linear_scores(
-            docs, n_buckets=64, weights=weights
-        ).collect()
-    }
-    # doc 0: (1000 + 1000 - 500) / (1000 * 3) = 0.5
-    assert out[0].score == 0.5 and out[0].keep
-    assert out[1].score == -0.5 and not out[1].keep
+    out = {r.doc_id: r for r in hashed_linear_scores(docs, n_buckets=64).collect()}
+    assert out[0].score == (2 * w["good"] + w["bad"]) / 3000.0
+    assert out[0].keep == (out[0].score > 0)
+    assert out[1].score == w["bad"] / 1000.0
     # empty doc: row preserved, zero score, not kept at threshold 0
     assert out[2].n_tokens == 0 and out[2].score == 0.0 and not out[2].keep
-
-
-def test_hashed_linear_scores_unknown_bucket_weight_is_zero(spark):
-    from pos_api_pipeline_spark.llm.text import hashed_linear_scores
-
-    docs = spark.createDataFrame([(0, "mystery")], "doc_id long, text string")
-    weights = spark.createDataFrame([(0, 0)], "bucket long, w_int long").filter(
-        "bucket < 0"
-    )  # empty model
-    r = hashed_linear_scores(docs, n_buckets=8, weights=weights).collect()[0]
-    assert r.score == 0.0 and r.n_tokens == 1
 
 
 def test_l2_normalize_unit_norms_and_zero_vector_passthrough(spark):
@@ -966,25 +960,8 @@ def test_keep_best_duplicate_picks_highest_score(spark):
         ],
         "doc_id long, text string",
     )
-    kept = sorted(
-        r.doc_id
-        for r in dedup.keep_best_duplicate(docs, method="fingerprint").collect()
-    )
+    kept = sorted(r.doc_id for r in dedup.keep_best_duplicate(docs).collect())
     assert kept == [1, 3]
-    # Exact method groups byte-identical only: 0 and 2 differ from 1.
-    kept_exact = sorted(
-        r.doc_id for r in dedup.keep_best_duplicate(docs, method="exact").collect()
-    )
-    assert kept_exact == [0, 1, 2, 3]
-    # Custom score: prefer SHORTEST via negative length.
-    kept_short = sorted(
-        r.doc_id
-        for r in dedup.keep_best_duplicate(
-            docs, method="fingerprint", score=-F.length("text")
-        ).collect()
-    )
-    assert kept_short == [0, 3]  # 'b a' (3 chars) beats 'a b' on id tie? no:
-    # lengths: doc0=3, doc2=3 → tie → lowest id 0 wins.
 
 
 def test_minhash_confirmed_pairs_filters_false_positives(spark):
@@ -1098,16 +1075,16 @@ def test_dedupe_corpus_minhash_confirmed(docs):
     # still collapses exact/reordered duplicates.
     kept = {
         r.doc_id
-        for r in dedup.dedupe_corpus(
-            docs, method="minhash_confirmed", threshold=0.9
+        for r in dedup.apply_pair_dedup(
+            docs, dedup.minhash_confirmed_pairs(docs, threshold=0.9)
         ).collect()
     }
     assert 0 in kept and 3 not in kept and 2 in kept
     # At a permissive threshold the near-dup is dropped too.
     loose = {
         r.doc_id
-        for r in dedup.dedupe_corpus(
-            docs, method="minhash_confirmed", threshold=0.3
+        for r in dedup.apply_pair_dedup(
+            docs, dedup.minhash_confirmed_pairs(docs, threshold=0.3)
         ).collect()
     }
     assert loose <= kept and 1 not in loose
@@ -1309,15 +1286,11 @@ def test_kmv_small_union_reduces_to_exact(spark):
     assert row.n_common > 0  # docs 0 and 2 share every shingle
 
 
-def test_sq8_encode_decode_bounds(spark):
+def test_sq8_code_decode_bounds(spark, sq8_codes):
     """SQ8 codes live in [0,255]; degenerate (constant) dimensions
     encode 0; dequantized values stay inside the trained min/max box
     and within half a quantization step of the input."""
-    from pos_api_pipeline_spark.llm.similarity import (
-        sq8_encode,
-        sq8_minmax,
-        sq8_topk,
-    )
+    from pos_api_pipeline_spark.llm.similarity import sq8_minmax, sq8_topk
 
     rows = [
         (0, [0.0, 1.0, 5.0, -2.0]),
@@ -1325,7 +1298,7 @@ def test_sq8_encode_decode_bounds(spark):
         (2, [0.5, 1.0, 2.5, 0.0]),
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    enc = {r.vec_id: r.codes for r in sq8_encode(emb, dim=4).collect()}
+    enc = sq8_codes(emb, 4)
     assert all(0 <= c <= 255 for codes in enc.values() for c in codes)
     # dim 1 is constant -> degenerate range -> code 0 everywhere
     assert all(codes[1] == 0 for codes in enc.values())
@@ -1363,41 +1336,3 @@ def test_sq8_recall_perfect_on_coarse_corpus(spark):
     row = sq8_recall_at_k(emb, dim=8, k=3, n_queries=4).collect()[0]
     assert row.n_truth_pairs == 12
     assert row.recall_at_3 == 1.0
-
-
-def test_sq8_search_from_stored_codes_table(spark, tmp_path):
-    """The 8x storage path end-to-end: encode once, persist the codes
-    table + stats to parquet, search from the STORED artifacts — the
-    results must equal searching the raw vectors directly."""
-    from pos_api_pipeline_spark.llm.similarity import (
-        sq8_encode,
-        sq8_minmax,
-        sq8_topk,
-    )
-
-    import pytest
-
-    rows = [
-        (i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(8)])
-        for i in range(20)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    st = sq8_minmax(emb, dim=8)
-    codes = sq8_encode(emb, dim=8, stats=st)
-    codes.write.parquet(str(tmp_path / "codes"))
-    st.write.parquet(str(tmp_path / "stats"))
-    stored_codes = spark.read.parquet(str(tmp_path / "codes"))
-    stored_stats = spark.read.parquet(str(tmp_path / "stats"))
-    qs = emb.filter(F.col("vec_id") < 3)
-    direct = sq8_topk(emb, qs, dim=8, k=4)
-    from_store = sq8_topk(
-        emb.select("vec_id"),  # raw vectors deliberately absent
-        qs,
-        dim=8,
-        k=4,
-        codes=stored_codes,
-        stats=stored_stats,
-    )
-    assert sorted(direct.collect()) == sorted(from_store.collect())
-    with pytest.raises(ValueError):
-        sq8_topk(emb, qs, dim=8, codes=stored_codes)  # stats missing

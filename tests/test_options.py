@@ -1,17 +1,34 @@
-"""Option ratchet: every defaulted parameter that picks a branch of a
-public package function is set to another value by some call, or is
-named here with the reason it stays.
+"""Option ratchet: every option of a public package function that picks
+a branch is reached both ways by real callers, or is named here with
+the reason it stays.
 
 A parameter picks a branch when an ``if`` statement or conditional
-expression in its function's body tests it. The calls are every call
-to the function by name or attribute in the package, ``tools/``,
-``bench.py``, ``perfbench/``, ``dags/``, ``__spark_entry__.py`` and
-``tests/``. An argument sets a non-default value unless it is a
-literal equal to the default, or the caller's own parameter passed on
-unchanged whose callers never set it. A ``*args`` or ``**kwargs``
-splat sets every parameter it could reach. A new option that only its
-default reaches fails this test; setting an allow-listed one fails it
-too, until its entry is removed.
+expression in its function's body tests it. The calls counted are
+every call to the function by name or attribute outside ``tests/``:
+the package, ``tools/``, ``bench.py``, ``perfbench/``, ``dags/`` and
+``__spark_entry__.py``. A function that ``tests/test_public_surface.py``
+allow-lists has no caller outside the tests, so for it the calls in
+``tests/`` count too. Three checks:
+
+1. A defaulted branching parameter is set to another value by some
+   call. An argument sets a non-default value unless it is a literal
+   equal to the default, or the caller's own parameter passed on
+   unchanged whose callers never set it. A ``*args`` or ``**kwargs``
+   splat sets every parameter it could reach.
+2. A defaulted branching parameter is left at its default by some
+   call, so the default's branch runs. Here every call counts, the
+   tests' included: a test that runs the default's branch keeps it
+   exercised, and the check catches a default no call leaves in
+   place. A call leaves it there when it omits it, passes a literal
+   equal to the default, passes the caller's own defaulted parameter
+   on, or splats.
+3. Every string arm ``p == "x"`` of a parameter ``p`` is passed by
+   some call: ``"x"`` as a literal, a non-literal argument, a splat,
+   or ``"x"`` as the default of a call that leaves ``p`` there.
+
+A new option or arm that only tests reach fails here; so does
+reaching an allow-listed option from real code, until its entry is
+removed.
 """
 
 from __future__ import annotations
@@ -22,22 +39,59 @@ import pathlib
 import pos_api_pipeline_spark
 
 _DELIVERY = "reference S17 delivery setting; the DAG has no delivery setting yet"
+_SIZE = "size threshold tests shrink to reach the large-input arm"
+_ITEMS = "reference items fetch; the DAG has no items endpoint setting"
+_PIN = "per-call pin of the auto-probed collapse (ROADMAP standing decision)"
+_PROBED = "text column name the collapse probe reads; the name picks no branch"
 
 ALLOWED = {
     ("send_report_by_email", "attach_pdf"): _DELIVERY,
     ("send_report_by_email", "use_starttls"): _DELIVERY,
     ("send_report_by_email", "username"): _DELIVERY,
     ("send_report_by_email", "password"): _DELIVERY,
+    ("connected_components", "strict"): "non-convergence guard: raise instead of warn",
+    ("semantic_dedup", "collapse_exact"): _PIN,
+    ("embedding_near_dup_pairs", "collapse_exact"): _PIN,
+    ("ngram_jaccard_pairs", "collapse_exact"): _PIN,
+    ("simhash_near_dups", "collapse_exact"): _PIN,
+    ("ngram_jaccard_pairs", "text_col"): _PROBED,
+    ("minhash_lsh_candidates", "text_col"): _PROBED,
+    ("simhash_near_dups", "text_col"): _PROBED,
+    ("repeated_spans_exact", "min_len"): "the branch only rejects out-of-range input",
+    ("select_by_token_budget", "max_edge_rows"): _SIZE,
+    ("centroids_for_corpus", "target_cluster_size"): _SIZE,
+    ("daily_incremental_run", "fetch_items_page"): _ITEMS,
+    ("daily_incremental_run", "items_dim_path"): _ITEMS,
 }
 
 _UNKNOWN = object()
 
 
+def _repo() -> pathlib.Path:
+    return pathlib.Path(pos_api_pipeline_spark.__file__).parent.parent
+
+
 def _sources(repo: pathlib.Path) -> list[pathlib.Path]:
     files = [repo / "bench.py", repo / "__spark_entry__.py"]
-    for d in ("pos_api_pipeline_spark", "tools", "perfbench", "dags", "tests"):
+    for d in ("pos_api_pipeline_spark", "tools", "perfbench", "dags"):
         files += sorted((repo / d).rglob("*.py"))
-    return files
+    return [p for p in files if not p.name.startswith("test_")]
+
+
+def _test_sources(repo: pathlib.Path) -> list[pathlib.Path]:
+    return sorted((repo / "tests").rglob("*.py"))
+
+
+def _surface_allowed(repo: pathlib.Path) -> set[str]:
+    """Names ``tests/test_public_surface.py`` allow-lists: reached only
+    from the tests."""
+    tree = ast.parse((repo / "tests" / "test_public_surface.py").read_text())
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "ALLOWED" for t in node.targets
+        ):
+            return {k.value for k in node.value.keys}
+    raise AssertionError("test_public_surface.py has no ALLOWED")
 
 
 def _literal(node):
@@ -68,6 +122,29 @@ def _tested_names(fn: ast.FunctionDef) -> set[str]:
     }
 
 
+def _string_arms(fn: ast.FunctionDef) -> set[tuple[str, str]]:
+    """(param, "x") for every ``param == "x"`` comparison in ``fn``."""
+    names = {p.arg for p in fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs}
+    arms = set()
+    for node in ast.walk(fn):
+        if not (
+            isinstance(node, ast.Compare)
+            and len(node.ops) == 1
+            and isinstance(node.ops[0], ast.Eq)
+        ):
+            continue
+        left, right = node.left, node.comparators[0]
+        for a, b in ((left, right), (right, left)):
+            if (
+                isinstance(a, ast.Name)
+                and a.id in names
+                and isinstance(b, ast.Constant)
+                and isinstance(b.value, str)
+            ):
+                arms.add((a.id, b.value))
+    return arms
+
+
 def _calls(paths: list[pathlib.Path]):
     """(callee name, call node, enclosing top-level function or None)."""
     for path in paths:
@@ -82,9 +159,8 @@ def _calls(paths: list[pathlib.Path]):
                     yield name, node, owner
 
 
-def _set_params(positional, defaults, call):
-    """{param: argument node} a call passes a non-default-looking value
-    to, or None for "every parameter" (a splat)."""
+def _passed(positional, call):
+    """{param: argument node} of a call, or None for a splat."""
     out = {}
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
@@ -95,15 +171,14 @@ def _set_params(positional, defaults, call):
         if kw.arg is None:
             return None
         out[kw.arg] = kw.value
-    return {
-        k: v
-        for k, v in out.items()
-        if k in defaults
-        and ((lit := _literal(v)) is _UNKNOWN or lit != defaults[k])
-    }
+    return out
 
 
-def _unset_options(repo: pathlib.Path) -> set[tuple[str, str]]:
+def _scan(repo: pathlib.Path, test_callers: set[str] | None):
+    """Package functions, their signatures and their counted calls as
+    (argument map or None for a splat, owner name, owner's defaults).
+    Calls in ``tests/`` count for the names in ``test_callers``, or for
+    every name when it is None."""
     pkg = repo / "pos_api_pipeline_spark"
     fns = {
         node.name: node
@@ -112,25 +187,42 @@ def _unset_options(repo: pathlib.Path) -> set[tuple[str, str]]:
         if isinstance(node, ast.FunctionDef)
     }
     sig = {name: _params(fn) for name, fn in fns.items()}
+    calls: dict[str, list] = {name: [] for name in fns}
+    for paths, only in ((_sources(repo), None), (_test_sources(repo), test_callers)):
+        for name, call, owner in _calls(paths):
+            if name not in sig or (only is not None and name not in only):
+                continue
+            owner_defaults = sig[owner.name][1] if owner and owner.name in sig else {}
+            calls[name].append(
+                (_passed(sig[name][0], call), owner and owner.name, owner_defaults)
+            )
+    return fns, sig, calls
+
+
+def _sets_non_default(arg, default) -> bool:
+    return (lit := _literal(arg)) is _UNKNOWN or lit != default
+
+
+def _unset_options(repo: pathlib.Path) -> set[tuple[str, str]]:
+    fns, sig, calls = _scan(repo, _surface_allowed(repo))
     # set[(fn, param)] holds once any call sets it: a literal or an
     # expression does at once; a bare name of the caller's own
     # defaulted parameter does when that parameter is set (fixpoint).
     is_set: set[tuple[str, str]] = set()
     forwards: list[tuple[tuple[str, str], tuple[str, str]]] = []
-    for name, call, owner in _calls(_sources(repo)):
-        if name not in sig:
-            continue
-        positional, defaults = sig[name]
-        passed = _set_params(positional, defaults, call)
-        if passed is None:
-            is_set |= {(name, p) for p in defaults}
-            continue
-        owner_defaults = sig[owner.name][1] if owner and owner.name in sig else {}
-        for p, arg in passed.items():
-            if isinstance(arg, ast.Name) and arg.id in owner_defaults:
-                forwards.append(((owner.name, arg.id), (name, p)))
-            else:
-                is_set.add((name, p))
+    for name, per_call in calls.items():
+        defaults = sig[name][1]
+        for passed, owner, owner_defaults in per_call:
+            if passed is None:
+                is_set |= {(name, p) for p in defaults}
+                continue
+            for p, arg in passed.items():
+                if p not in defaults or not _sets_non_default(arg, defaults[p]):
+                    continue
+                if isinstance(arg, ast.Name) and arg.id in owner_defaults:
+                    forwards.append(((owner, arg.id), (name, p)))
+                else:
+                    is_set.add((name, p))
     grew = True
     while grew:
         grew = False
@@ -147,6 +239,60 @@ def _unset_options(repo: pathlib.Path) -> set[tuple[str, str]]:
     }
 
 
+def _leaves_default(passed, p, default, owner_defaults) -> bool:
+    if passed is None or p not in passed:
+        return True
+    arg = passed[p]
+    if isinstance(arg, ast.Name) and arg.id in owner_defaults:
+        return True
+    return not _sets_non_default(arg, default)
+
+
+def _always_overridden(repo: pathlib.Path) -> set[tuple[str, str]]:
+    fns, sig, calls = _scan(repo, None)
+    return {
+        (name, p)
+        for name, fn in fns.items()
+        if not name.startswith("_") and calls[name]
+        for p, default in sig[name][1].items()
+        if p in _tested_names(fn)
+        and not any(
+            _leaves_default(passed, p, default, od) for passed, _, od in calls[name]
+        )
+    }
+
+
+def _may_pass(passed, p, value, default) -> bool:
+    """Whether a call can hand ``value`` to ``p``: a splat or a
+    non-literal argument can; an omitted ``p`` passes its default."""
+    if passed is None:
+        return True
+    if p not in passed:
+        return default == value
+    return _literal(passed[p]) in (value, _UNKNOWN)
+
+
+def _unpassed_arms(repo: pathlib.Path) -> set[tuple[str, str, str]]:
+    fns, sig, calls = _scan(repo, _surface_allowed(repo))
+    return {
+        (name, p, value)
+        for name, fn in fns.items()
+        if not name.startswith("_")
+        for p, value in _string_arms(fn)
+        if not any(
+            _may_pass(passed, p, value, sig[name][1].get(p, _UNKNOWN))
+            for passed, _, _ in calls[name]
+        )
+    }
+
+
 def test_every_branching_option_is_set_by_a_caller():
-    repo = pathlib.Path(pos_api_pipeline_spark.__file__).parent.parent
-    assert _unset_options(repo) == set(ALLOWED)
+    assert _unset_options(_repo()) == set(ALLOWED)
+
+
+def test_no_branching_default_is_overridden_by_every_call():
+    assert _always_overridden(_repo()) == set()
+
+
+def test_every_dispatch_arm_is_passed_by_a_caller():
+    assert _unpassed_arms(_repo()) == set()

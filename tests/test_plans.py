@@ -8,6 +8,8 @@ fails here, not in production."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 
 import __spark_entry__ as entry
@@ -211,9 +213,6 @@ def test_sa_repeated_spans_gram_cover_shape(spark):
 # the ONLY places a nested-loop/cartesian strategy is acceptable.
 CROSS_JOIN_OK = {
     "ann_cosine_topk",
-    # one-row Bloom-filter scalar carry (dense word array) probed
-    # map-side before the exact verify
-    "contamination_bloom_check",
     "lsh_ann_topk",
     "ivf_ann_topk",
     # IVF/SemDeDup centroid assignment scores the corpus against a
@@ -276,6 +275,32 @@ CROSS_JOIN_OK = {
     # broadcast) plus BM25's one-row N+avgdl scalar
     "hybrid_rrf_fusion",
 }
+
+
+def _plan_audit_scalar_broadcast_ok() -> set[str]:
+    path = pathlib.Path(entry.__file__).parent / "tools" / "plan_audit.py"
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "SCALAR_BROADCAST_OK" for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError("tools/plan_audit.py has no SCALAR_BROADCAST_OK")
+
+
+def test_plan_allow_lists_name_registered_queries():
+    """A deleted query cannot leave its allow-list entry behind."""
+    registered = set(entry.queries())
+    assert CROSS_JOIN_OK - registered == set()
+    assert _plan_audit_scalar_broadcast_ok() - registered == set()
+
+
+def test_no_two_queries_share_an_oracle():
+    """Two queries with one oracle answer the same question twice: a
+    second path stays only as a measured twin, and none has won."""
+    by_sql: dict[str, list[str]] = {}
+    for name, sql in entry.oracle_sql().items():
+        by_sql.setdefault(" ".join(sql.split()), []).append(name)
+    assert [sorted(v) for v in by_sql.values() if len(v) > 1] == []
 
 
 def test_no_accidental_cartesian_products(spark):

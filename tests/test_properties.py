@@ -474,9 +474,7 @@ def test_minhash_confirmed_subset_of_exact_jaccard(spark, texts):
     )
     exact = {
         (r.id_a, r.id_b): round(r.jaccard, 10)
-        for r in dedup.ngram_jaccard_pairs(
-            df, threshold=0.2, max_df=None
-        ).collect()
+        for r in dedup.ngram_jaccard_pairs(df, threshold=0.2).collect()
     }
     confirmed = {
         (r.id_a, r.id_b): round(r.jaccard, 10)
@@ -596,16 +594,16 @@ def test_star_cap_preserves_connected_components(
     )
 )
 @settings(**SETTINGS)
-def test_sq8_quantization_invariants(spark, vecs):
+def test_sq8_quantization_invariants(spark, sq8_codes, vecs):
     """SQ8 invariants over arbitrary corpora: codes always in
     [0, 255]; dequantized values within half a quantization step of
     the input; constant dimensions decode exactly."""
-    from pos_api_pipeline_spark.llm.similarity import sq8_encode, sq8_minmax
+    from pos_api_pipeline_spark.llm.similarity import sq8_minmax
 
     rows = [(i, v) for i, v in enumerate(vecs)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     st_row = sq8_minmax(emb, dim=4).collect()[0]
-    codes = {r.vec_id: r.codes for r in sq8_encode(emb, dim=4).collect()}
+    codes = sq8_codes(emb, 4)
     for i, v in rows:
         for d in range(4):
             c = codes[i][d]

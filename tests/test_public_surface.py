@@ -75,7 +75,6 @@ ALLOWED = {
     "dedupe_corpus_cc": "ROADMAP standing decision: entity-resolution semantics use it",
     "decontaminate": "COVERAGE document-level benchmark decontamination",
     "build_band_index": "COVERAGE standing MinHash band index for incremental dedup",
-    "sq8_encode": "COVERAGE stored 8-bit codes for scalar-quantized search",
     "planes_for_corpus": "LSH plane-count sizing rule for callers who know the corpus size",
     # per-row references
     "cosine": "column form of the fold the search paths inline with cached norms",

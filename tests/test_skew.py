@@ -1,79 +1,9 @@
-"""salted_join: result parity with the plain join + the salt actually
-spreads a hot key."""
+"""Skew mitigations under hot keys: the LSH star caps, the row-grain
+mega-cluster paths and AQE's skew-join split."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from pos_api_pipeline_spark.operators.skew import SALT, salted_join
-
-
-@pytest.fixture()
-def skewed(spark):
-    # 90% of rows share key 1 — the power-law regime.
-    big = spark.createDataFrame(
-        [(1, i) for i in range(900)] + [(k, k) for k in range(2, 102)],
-        "k int, payload int",
-    )
-    small = spark.createDataFrame(
-        [(1, "hot"), (2, "a"), (3, "b"), (999, "orphan")], "k int, tag string"
-    )
-    return big, small
-
-
-def test_salted_inner_parity(spark, skewed):
-    big, small = skewed
-    plain = big.join(small, "k").groupBy("k", "tag").count()
-    salted = salted_join(big, small, "k", n_salts=8).groupBy(
-        "k", "tag"
-    ).count()
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
-
-
-def test_salted_left_parity(spark, skewed):
-    big, small = skewed
-    plain = sorted(
-        map(tuple, big.join(small, "k", "left").collect())
-    )
-    salted = sorted(
-        map(tuple, salted_join(big, small, "k", n_salts=4, how="left").collect())
-    )
-    assert plain == salted
-
-
-def test_hot_key_spreads_over_salts(spark, skewed):
-    big, _ = skewed
-    salted = big.withColumn(
-        SALT, F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(8))
-    )
-    n = (
-        salted.filter(F.col("k") == 1)
-        .select(SALT)
-        .distinct()
-        .count()
-    )
-    assert n == 8  # 900 rows of one key hit every salt bucket
-
-
-def test_rejects_unsound_join_types(spark, skewed):
-    big, small = skewed
-    with pytest.raises(ValueError):
-        salted_join(big, small, "k", how="full")
-
-
-def test_salted_join_stays_equi_join(spark, skewed):
-    big, small = skewed
-    plan = (
-        salted_join(big, small, "k", n_salts=8)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -273,41 +203,15 @@ def test_repeated_substring_hot_gram_window_completes(spark):
 
 
 # ---------------------------------------------------------------------------
-# Plan proofs for the two shuffled-skew mitigations the bench entries
-# (registry_llm skew_*) time each round: the hint pins salted_join to
-# the shuffled regime, and AQE's skew-join actually splits a hot
-# sort-merge partition under this session's configuration.
+# Plan proof for the shuffled-skew mitigation the bench entry
+# (registry_llm skew_aqe_hot_user_spend) times each round: AQE's
+# skew-join actually splits a hot sort-merge partition under this
+# session's configuration.
 # ---------------------------------------------------------------------------
 
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_salted_join_hint_forces_shuffled_hash(spark, skewed):
-    big, small = skewed
-    plan = _executed_plan(
-        salted_join(big, small, "k", n_salts=8, hint="shuffle_hash")
-    )
-    assert "ShuffledHashJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-    # and the salt is part of the join key, so the hot key's rows
-    # hash to n_salts different reducers
-    assert SALT in plan
-
-
-def test_salted_join_unhinted_broadcasts_small_dim(spark, skewed):
-    # the flip side of the hint: at tiny scale AQE's runtime re-plan
-    # broadcasts the replicated dim (local frames carry no stats, so
-    # the conversion lands in the final adaptive plan, not the
-    # initial one) — which is exactly why the bench entry must pin
-    # the strategy to measure the shuffled regime at all
-    big, small = skewed
-    joined = salted_join(big, small, "k", n_salts=8)
-    joined.collect()  # run THIS QueryExecution so AQE finalizes it
-    plan = _executed_plan(joined)
-    assert "isFinalPlan=true" in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_aqe_skew_join_split_engages(spark):

@@ -29,9 +29,6 @@ sys.path.insert(0, REPO)
 # brute-force-baseline broadcasts (see tests/test_plans.py).
 SCALAR_BROADCAST_OK = {
     "ann_cosine_topk",
-    # one-row Bloom-filter scalar carry (dense word array) probed
-    # map-side before the exact verify
-    "contamination_bloom_check",
     "lsh_ann_topk",
     "ivf_ann_topk",
     "ivf_recall_at_k",
