@@ -106,7 +106,6 @@ def contamination(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str | None = None,
-    exact: bool = False,
 ) -> DataFrame:
     """Per-document benchmark contamination: how many of the
     document's distinct n-gram shingles appear anywhere in the
@@ -120,15 +119,11 @@ def contamination(
     travel as xxhash64 keys so the probe side carries 8 bytes per
     shingle, not the string.
 
-    Collision tradeoff of the hashed default: a 64-bit collision
-    between an unrelated corpus shingle and a benchmark shingle is a
+    Collision tradeoff of the hashes: a 64-bit collision between an
+    unrelated corpus shingle and a benchmark shingle is a
     false-positive hit (~1e13 doc shingles x 1e7 bench shingles /
     2^64 ≈ a handful of spurious drops at 100 TB). The direction is
-    conservative — contamination is over-, never under-reported. Pass
-    ``exact=True`` to probe the raw shingle strings instead: zero
-    false positives, portable across hash implementations, at the
-    cost of shipping strings (still broadcast-sized — eval sets are
-    small).
+    conservative — contamination is over-, never under-reported.
 
     Returns (id_col, n_shingles, n_contaminated,
     contamination_fraction) for every input document, zeros for
@@ -146,7 +141,7 @@ def contamination(
             id_col="_bid",
             n=n,
             out_col="sh",
-            hashed=not exact,
+            hashed=True,
         )
         .select(F.explode_outer("sh").alias("h"))
         .filter(F.col("h").isNotNull())
@@ -158,7 +153,7 @@ def contamination(
         id_col=id_col,
         n=n,
         out_col="sh",
-        hashed=not exact,
+        hashed=True,
     ).withColumn("n_shingles", F.size("sh"))
     ex = doc_sh.select(
         "id", "n_shingles", F.explode_outer("sh").alias("h")

@@ -66,7 +66,15 @@ def train_quality_model(
         maxIter=max_iter, regParam=reg_param, featuresCol="features",
         labelCol="label",
     )
-    return lr.fit(feats)
+    model = lr.fit(feats)
+    # Drop the training summary, which nothing here reads. Spark 4.1's
+    # binary summary holds the SparkSession, and ``transform`` ships
+    # the model, summary included, to its tasks. A session that has
+    # run an ``Observation`` (every daily tick does) holds an
+    # ObservationManager that does not serialize, so scoring would
+    # fail with "Task not serializable".
+    model._java_obj.setSummary(df.sparkSession._jvm.scala.Option.empty())
+    return model
 
 
 def model_quality_scores(

@@ -4,12 +4,13 @@ The three entry points of the reference, rebuilt Spark-first:
 
 - ``daily_incremental_run`` (reference: main.py:24-75): watermark →
   fetch → transform → merge-upsert → watermark advance. The transform
-  chain is one lazy Catalyst plan. A non-empty tick runs four actions
-  over the batch: the ``isEmpty`` check, the lake merge write, the
-  watermark ``max()`` and the final ``count()`` of curated rows (plus
-  the items SCD2 merge when an items fetcher is given); an empty batch
-  stops after the first. The batch is a ``LocalRelation``, so none of
-  them starts a Python worker.
+  chain is one lazy Catalyst plan. The batch is a ``LocalRelation``, so
+  the ``isEmpty`` check folds into it and runs no job; an empty batch
+  stops there. A non-empty tick runs one action over the batch, the
+  lake merge write (plus the items SCD2 merge when an items fetcher is
+  given). The new watermark ``max(updated_at)`` and the count of
+  curated rows ride on that write as observed metrics, and the batch
+  is read as one partition, so every stage over it runs one task.
 - ``monthly_report_data`` (reference:
   reporting/monthly_report.py:634-692): two-month partition-pruned
   scan → window dedup → clean → combo explode → analytics fan-out
@@ -29,7 +30,7 @@ it once the sections are rendered (``plans/dag.py``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pos_api_pipeline_spark import lake
@@ -72,10 +73,19 @@ def daily_incremental_run(
 
     wm = state.read_last_timestamp(state_file)
     new_receipts = fetch_incremental(spark, fetch_receipts_page, wm)
-    # Empty batch short-circuit (reference: main.py:43-45).
+    # Empty batch short-circuit (reference: main.py:43-45). It runs no
+    # job because it folds into the LocalRelation; under the coalesce
+    # below it would run one.
     if new_receipts.isEmpty():
         return {"rows": 0, "watermark": wm}
-    curated = run_transform(new_receipts)
+    # A page holds at most fetch_incremental's limit of receipts, one
+    # task's worth; a LocalRelation scan splits into
+    # min(rows, defaultParallelism) tasks. The watermark and the row
+    # count are observed on the lake write instead of computed by two
+    # more actions. Unnamed observations get unique metric names.
+    watermark, rows = Observation(), Observation()
+    batch = new_receipts.coalesce(1).observe(watermark, F.max("updated_at").alias("wm"))
+    curated = run_transform(batch).observe(rows, F.count(F.lit(1)).alias("n"))
     lake.merge_and_overwrite(spark, curated, lake_path)
     if fetch_items_page is not None and items_dim_path is not None:
         items = items_to_df(spark, list(paginate(fetch_items_page)))
@@ -84,8 +94,11 @@ def daily_incremental_run(
             spark, items_dim_path, items,
             key="id", ts_col="updated", tracked_cols=["item_name", "price"],
         )
-    new_wm = state.update_last_timestamp(state_file, new_receipts)
-    return {"rows": curated.count(), "watermark": new_wm or wm}
+    # Read only after the merge returned: a failed write never reaches
+    # Observation.get (which would wait forever) and leaves the
+    # watermark where it was (at-least-once redelivery).
+    new_wm = state.update_last_timestamp(state_file, watermark.get["wm"])
+    return {"rows": rows.get["n"], "watermark": new_wm or wm}
 
 
 def _cleaned_lake(

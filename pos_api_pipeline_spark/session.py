@@ -33,6 +33,17 @@ def get_spark(
       across engines and clusters.
     - Arrow for the pandas boundary, zstd parquet, no UI, and a
       driver heap sized for local mode.
+    - ``spark.python.sql.dataFrameDebugging.enabled=false`` stops
+      PySpark from capturing the Python call site of every Column and
+      DataFrame call (about four Py4J round trips each): building the
+      daily tick's plan took 0.16–0.21 s without it, 0.25–0.39 s with
+      it (medians, 4-vCPU host). The trade: a runtime error's
+      ``== DataFrame ==`` context names a JVM frame instead of
+      ``file.py:line``; its error class, message and Python traceback
+      are unchanged. PySpark reads this conf once per process, so it
+      goes on ``SparkSession.builder``, before any Column exists;
+      ``extra_conf`` set to ``"true"`` in a fresh process restores the
+      Python lines.
     ``autoBroadcastJoinThreshold`` stays at default; dimension joins
     additionally carry explicit ``F.broadcast`` hints in operators.
     Everything else, ``spark.driver.maxResultSize`` included, is
@@ -46,6 +57,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local mode = driver-only: the driver heap IS the executor
         # memory; size it for 32 task threads' shuffle state.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))

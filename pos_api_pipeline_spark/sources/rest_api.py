@@ -10,9 +10,9 @@ comparison into the plan.
 A fetched page lands as one Arrow table, which Spark turns into a JVM
 ``LocalRelation`` (``session.local_frame``). A page is a few hundred
 receipts, far below ``spark.sql.execution.arrow.localRelationThreshold``.
-Catalyst folds the watermark filter into the relation, and the tick's
-actions over the batch (the empty check, the lake merge, the watermark
-max) run as JVM tasks without a Python worker. Handing the page to
+Catalyst folds the watermark filter into the relation, so the tick's
+empty check runs no job, and its one action over the batch, the lake
+merge, runs as JVM tasks without a Python worker. Handing the page to
 ``createDataFrame`` as a Python list instead gives a PythonRDD split into
 ``defaultParallelism`` slices that every action re-runs in Python
 workers. Every row still passes the schema's type verifier first, so

@@ -17,9 +17,6 @@ import json
 import os
 import zoneinfo
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 STATE_KEY = "last_successful_extraction_timestamp"
 
 
@@ -45,15 +42,16 @@ def read_last_timestamp(
     )
 
 
-def update_last_timestamp(state_file: str, receipts: DataFrame) -> str | None:
-    """S15 — advance the watermark to max(updated_at) of the batch
-    (reference: etl/extract.py:228-252). Returns the new watermark,
-    or None for an empty batch (watermark not advanced — exactly the
-    at-least-once behavior of the reference, main.py:43-45)."""
-    row = receipts.agg(F.max("updated_at").alias("wm")).collect()[0]
-    if row.wm is None:
+def update_last_timestamp(state_file: str, watermark: str | None) -> str | None:
+    """S15 — advance the watermark to the batch's max(updated_at)
+    (reference: etl/extract.py:228-252), which the caller observed on
+    its successful load. Returns the new watermark, or None when there
+    is none (an empty batch, or no ``updated_at`` in it): the state
+    file is then left as it was — exactly the at-least-once behavior
+    of the reference, main.py:43-45."""
+    if watermark is None:
         return None
     os.makedirs(os.path.dirname(state_file) or ".", exist_ok=True)
     with open(state_file, "w") as f:
-        json.dump({STATE_KEY: row.wm}, f, indent=2)
-    return row.wm
+        json.dump({STATE_KEY: watermark}, f, indent=2)
+    return watermark

@@ -105,21 +105,6 @@ def test_redact_pii_overlapping_span_counted_once(spark):
     assert r.n_emails + r.n_ips + r.n_phones == r.redacted.count("<")
 
 
-def test_contamination_exact_matches_hashed(spark):
-    docs = _docs(spark, ["x y z w", "p q r s", "t"])
-    bench = spark.createDataFrame([("y z",)], "text string")
-    hashed = {
-        r.doc_id: r for r in contamination(docs, bench, n=2).collect()
-    }
-    exact = {
-        r.doc_id: r
-        for r in contamination(docs, bench, n=2, exact=True).collect()
-    }
-    for k in hashed:
-        assert hashed[k].n_contaminated == exact[k].n_contaminated
-        assert hashed[k].n_shingles == exact[k].n_shingles
-
-
 def test_normalize_text_hand_computed(spark):
     df = _docs(spark, ["  Hello\t WORLD \x01 again  "])
     r = normalize_text(df).collect()[0]

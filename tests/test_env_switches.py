@@ -40,3 +40,10 @@ def test_session_relies_on_spark_defaults_for_aqe_and_result_size(spark):
     ):
         assert spark.conf.get(key) == "true", key
     assert not spark.sparkContext.getConf().contains("spark.driver.maxResultSize")
+
+
+def test_session_skips_per_call_call_site_capture(spark):
+    # PySpark otherwise records the Python file and line of every
+    # Column and DataFrame call for error contexts, at about four Py4J
+    # round trips a call.
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

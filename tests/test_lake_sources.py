@@ -188,22 +188,19 @@ def test_rest_pagination(spark):
     assert [r["receipt_number"] for r in rows] == ["a", "b"]
 
 
-def test_watermark_state_roundtrip(spark, tmp_path):
+def test_watermark_state_roundtrip(tmp_path):
     sf = str(tmp_path / "state.json")
     # Fallback: month start in UTC ISO format.
     wm0 = state.read_last_timestamp(sf)
     assert wm0.endswith("Z") and "T" in wm0
-    df = spark.createDataFrame(
-        [("2025-07-21T10:00:00Z",), ("2025-07-22T10:00:00Z",)],
-        "updated_at string",
-    )
-    wm = state.update_last_timestamp(sf, df)
+    wm = state.update_last_timestamp(sf, "2025-07-22T10:00:00Z")
     assert wm == "2025-07-22T10:00:00Z"
     assert state.read_last_timestamp(sf) == wm
     assert json.load(open(sf))[state.STATE_KEY] == wm
-    # Empty batch: watermark not advanced (at-least-once redelivery).
-    empty = spark.createDataFrame([], "updated_at string")
-    assert state.update_last_timestamp(sf, empty) is None
+    # No watermark (empty batch): not advanced (at-least-once redelivery).
+    before = open(sf, "rb").read()
+    assert state.update_last_timestamp(sf, None) is None
+    assert open(sf, "rb").read() == before
     assert state.read_last_timestamp(sf) == wm
 
 

@@ -142,6 +142,134 @@ def test_daily_run_then_reports(spark, tmp_path, api_pages):
     cleaned.unpersist()
 
 
+def _run_in_group(spark, group, fn):
+    """(fn(), [numTasks of each stage of each job fn ran]) from the
+    status tracker. The listener bus is asynchronous and in order, so
+    once a marker job run after fn shows as finished, every job fn ran
+    is in the tracker too."""
+    import time
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+        sc.setJobGroup(group + "-marker", group)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    (marker,) = st.getJobIdsForGroup(group + "-marker")
+    deadline = time.monotonic() + 30
+    while st.getJobInfo(marker).status != "SUCCEEDED":
+        assert time.monotonic() < deadline
+        time.sleep(0.05)
+    jobs = [
+        [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+        for j in st.getJobIdsForGroup(group)
+    ]
+    return result, jobs
+
+
+def test_daily_tick_job_and_task_budget(spark, tmp_path, api_pages):
+    """A tick lands its page as one partition and observes the
+    watermark and row count on the lake write: at most 4 jobs, one task
+    per stage over the batch, and no job at all for an empty page."""
+    lake_path = str(tmp_path / "lake")
+    state_file = str(tmp_path / "state.json")
+
+    def tick():
+        return pipelines.daily_incremental_run(
+            spark, api_pages, lake_path, state_file
+        )
+
+    _seed_state(state_file)
+    status, jobs = _run_in_group(spark, "tick-first", tick)
+    assert status == {"rows": 4, "watermark": "2025-08-02T12:00:00.000Z"}
+    assert 1 <= len(jobs) <= 4
+    # No lake yet: every stage of the first tick reads only the batch.
+    assert all(n == 1 for stages in jobs for n in stages), jobs
+
+    # The same page again is past the watermark: nothing to do.
+    status, jobs = _run_in_group(spark, "tick-empty", tick)
+    assert status == {"rows": 0, "watermark": "2025-08-02T12:00:00.000Z"}
+    assert jobs == []
+
+    # Redelivered into an existing lake (the merge reads history too).
+    _seed_state(state_file)
+    status, jobs = _run_in_group(spark, "tick-merge", tick)
+    assert status["rows"] == 4
+    assert 1 <= len(jobs) <= 4, jobs
+
+
+@pytest.fixture()
+def edge_page():
+    """One page past watermark 2025-07-01: a receipt with no line
+    items, one with a null ``updated_at``, and one redelivered receipt
+    (created before the watermark) whose later ``updated_at`` the
+    watermark filter must keep out of the new watermark."""
+    plain = _receipt("2-1", "2025-07-21T16:00:00.000Z", "Mesa 2",
+                     ["Doble Chicken", "Papas Fritas"])
+    no_items = _receipt("2-2", "2025-07-22T17:00:00.000Z", "Para Llevar", [])
+    no_items["updated_at"] = "2025-07-25T09:00:00.000Z"
+    no_update = _receipt("2-3", "2025-07-23T12:00:00.000Z", "Mesa 1",
+                         ["Malteada Chocolate"])
+    no_update["updated_at"] = None
+    redelivered = _receipt("1-9", "2025-06-30T20:00:00.000Z", "Mesa 3",
+                           ["Papas Fritas"])
+    redelivered["updated_at"] = "2025-07-30T08:00:00.000Z"
+    return [plain, no_items, no_update, redelivered]
+
+
+def test_observed_rows_and_watermark_match_the_batch(spark, tmp_path, edge_page):
+    from pos_api_pipeline_spark.operators.transform import run_transform
+    from pos_api_pipeline_spark.sources import rest_api, state
+
+    wm = "2025-07-01T00:00:00.000Z"
+    state_file = str(tmp_path / "state.json")
+    _seed_state(state_file, wm)
+    fetch = lambda cursor: (edge_page, None)  # noqa: E731
+    batch = rest_api.fetch_incremental(spark, fetch, wm)
+    expected_rows = run_transform(batch).count()
+    expected_wm = max(
+        r["updated_at"] for r in edge_page
+        if r["created_at"] > wm and r["updated_at"] is not None
+    )
+    assert expected_rows == 4  # 2 items + 1 empty-items row + 1 item
+    assert expected_wm == "2025-07-25T09:00:00.000Z"
+
+    status = pipelines.daily_incremental_run(
+        spark, fetch, str(tmp_path / "lake"), state_file
+    )
+    assert status == {"rows": expected_rows, "watermark": expected_wm}
+    assert state.read_last_timestamp(state_file) == expected_wm
+
+
+def test_failed_merge_leaves_watermark_and_reads_no_observation(
+    spark, tmp_path, edge_page, monkeypatch
+):
+    from pyspark.sql import Observation
+
+    state_file = tmp_path / "state.json"
+    _seed_state(str(state_file), "2025-07-01T00:00:00.000Z")
+    before = state_file.read_bytes()
+
+    def failing_merge(*args, **kwargs):
+        raise RuntimeError("lake write failed")
+
+    def never(self):
+        # Observation.get waits for an action that never ran.
+        pytest.fail("Observation.get reached after a failed merge")
+
+    monkeypatch.setattr(pipelines.lake, "merge_and_overwrite", failing_merge)
+    monkeypatch.setattr(Observation, "get", property(never))
+    with pytest.raises(RuntimeError, match="lake write failed"):
+        pipelines.daily_incremental_run(
+            spark, lambda cursor: (edge_page, None),
+            str(tmp_path / "lake"), str(state_file),
+        )
+    assert state_file.read_bytes() == before
+
+
 def test_monthly_handles_january(spark, tmp_path, api_pages):
     # Reference crashes on month-1==0 (monthly_report.py:40); we roll
     # the year — January compares against December of the prior year.
