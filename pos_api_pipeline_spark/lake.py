@@ -110,34 +110,29 @@ def merge_and_overwrite(
     in one write).
     """
     new_curated = with_partition_columns(conform(new_df, CURATED_SCHEMA))
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # Existence check, NOT try/except around the read: a transient
-        # read error must propagate — swallowing it would make the
-        # dynamic overwrite replace affected months with just the new
-        # batch (silent data loss). Only a genuinely absent lake means
-        # 'first write'.
-        if lake_exists(spark, path):
-            existing = read_lake(spark, path)
-            # Restrict history to the affected partitions only — a
-            # broadcast semi-join on (year, month) lets Catalyst prune
-            # the scan to those directories.
-            months = new_curated.select("year", "month").distinct()
-            affected = existing.join(F.broadcast(months), ["year", "month"], "left_semi")
-            merged = affected.unionByName(new_curated)
-        else:
-            merged = new_curated
-        deduped = window_dedup(merged, keys=keys, order_col=order_col)
-        (
-            deduped.repartition("year", "month")
-            .write.mode("overwrite")
-            .partitionBy("year", "month")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # Existence check, NOT try/except around the read: a transient
+    # read error must propagate — swallowing it would make the
+    # dynamic overwrite replace affected months with just the new
+    # batch (silent data loss). Only a genuinely absent lake means
+    # 'first write'.
+    if lake_exists(spark, path):
+        existing = read_lake(spark, path)
+        # Restrict history to the affected partitions only — a
+        # broadcast semi-join on (year, month) lets Catalyst prune
+        # the scan to those directories.
+        months = new_curated.select("year", "month").distinct()
+        affected = existing.join(F.broadcast(months), ["year", "month"], "left_semi")
+        merged = affected.unionByName(new_curated)
+    else:
+        merged = new_curated
+    deduped = window_dedup(merged, keys=keys, order_col=order_col)
+    (
+        deduped.repartition("year", "month")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("year", "month")
+        .parquet(path)
+    )
 
 
 def write_csv(df: DataFrame, path: str) -> None:
@@ -276,18 +271,14 @@ def compact_partitions(
     overhead. Dynamic overwrite + repartition on the partition columns
     rewrites each directory in place.
     """
-    df = read_lake(spark, path)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(files_per_partition, "year", "month")
-            .write.mode("overwrite")
-            .partitionBy("year", "month")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        read_lake(spark, path)
+        .repartition(files_per_partition, "year", "month")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("year", "month")
+        .parquet(path)
+    )
 
 
 def write_bucketed(

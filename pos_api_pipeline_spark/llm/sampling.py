@@ -673,7 +673,7 @@ def temperature_mixture_rates(
 def unimax_allocation(
     df: DataFrame,
     strata_col: str,
-    size_col: str | None = None,
+    size_col: str,
     budget_frac: float = 0.5,
     max_epochs: float = 2.0,
 ) -> DataFrame:
@@ -696,7 +696,9 @@ def unimax_allocation(
     hundred languages/domains at most), so the single-partition
     window is over an inherently tiny aggregate, not the corpus.
 
-    Budget is ``floor(budget_frac * total_units + 0.5)`` — derived
+    A stratum's units are the sum of its rows' ``size_col`` (e.g.
+    characters or tokens). Budget is
+    ``floor(budget_frac * total_units + 0.5)`` — derived
     from the corpus so the op is scale-free. Determinism: budget and
     sizes are exact BIGINTs; caps/levels are IEEE doubles computed in
     the identical expression shape on both engines; outputs rounded
@@ -706,15 +708,11 @@ def unimax_allocation(
     cap order — capped strata show epochs == max_epochs, uncapped
     share the water level.
     """
-    sized = df.filter(F.col(strata_col).isNotNull())
-    if size_col is None:
-        counts = sized.groupBy(strata_col).agg(
-            F.count(F.lit(1)).alias("n_units")
-        )
-    else:
-        counts = sized.groupBy(strata_col).agg(
-            F.sum(size_col).cast("long").alias("n_units")
-        )
+    counts = (
+        df.filter(F.col(strata_col).isNotNull())
+        .groupBy(strata_col)
+        .agg(F.sum(size_col).cast("long").alias("n_units"))
+    )
     # One corpus pass: the tiny per-stratum frame feeds both the
     # budget scalar and the water-filling windows (r12, guide §3.3 —
     # same rationale as temperature_mixture_rates above).

@@ -9,6 +9,13 @@ quantizer built from deterministic seed centroids.
 At 100 TB the pattern is: broadcast the (small) query set, compute
 partial top-k per partition (TakeOrderedAndProject after a window
 rank), never materialize the full similarity matrix.
+
+Each bit-parity decision the DuckDB oracles replay is written once and
+every index variant calls it: the cosine operand order
+(``_cos_normed``), the per-query ``(score, neighbor_id asc)`` rank
+(``_top_k_per_query``), the subspace-ordered ADC fold
+(``_adc_top_k``), the recall@k hit share (``recall_at_k``) and the
+lowest-id over-cap representative (``_split_over_cap``).
 """
 
 from __future__ import annotations
@@ -44,13 +51,76 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _cos_normed(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms: one dot fold, then
+    ``/ (na * nb)``. Every cosine in this module is this expression in
+    this operand order — the order the DuckDB oracles replay — so the
+    inline form (``cosine``), norms hoisted below a join and norms
+    carried in member structs all score bit-identically."""
+    return _dot(a, b) / (na * nb)
+
+
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity between two double-array columns."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return _cos_normed(a, b, _norm(a), _norm(b))
 
 
 def as_double_array(col: str) -> Column:
     return F.transform(F.col(col), lambda x: x.cast("double"))
+
+
+# (id, vector, norm) column names of the two sides a search pairs up.
+_QUERY = ("query_id", "qvec", "_qn")
+_CORPUS = ("neighbor_id", "cvec", "_cn")
+
+
+def _normed_side(
+    df: DataFrame, side: tuple[str, str, str], id_col: str, vec: Column,
+    *extra: Column,
+) -> DataFrame:
+    """``df`` as one side of a search: id and vector under ``side``'s
+    names, ``extra`` columns between them, and the vector's norm. The
+    norm is folded here, below the join (a join child is a real
+    materialization barrier, unlike a projection), once per row — an
+    inline ``cosine()`` re-folds both norms per candidate PAIR."""
+    id_alias, vec_alias, norm_alias = side
+    return df.select(
+        F.col(id_col).alias(id_alias), *extra, vec.alias(vec_alias)
+    ).select("*", _norm(F.col(vec_alias)).alias(norm_alias))
+
+
+def _pair_cosine() -> Column:
+    """Cosine of a joined query-side x corpus-side row over the two
+    hoisted norms."""
+    return _cos_normed(F.col("qvec"), F.col("cvec"), F.col("_qn"), F.col("_cn"))
+
+
+def _exact_scored(corpus: DataFrame, queries: DataFrame, score: str) -> DataFrame:
+    """Every (corpus row, query) pair of two normed sides except self
+    pairs, with its cosine as ``score``. The query set is broadcast, so
+    the corpus never shuffles."""
+    return (
+        corpus.crossJoin(F.broadcast(queries))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn(score, _pair_cosine())
+    )
+
+
+def _top_k_per_query(
+    scored: DataFrame, k: int, by: Column, cols: list, tie: str = "neighbor_id"
+) -> DataFrame:
+    """Each query's first ``k`` rows ordered by ``by``, ties to the
+    lowest ``tie``, numbered 1..k as ``rank``; then ``cols``. Only the
+    candidate rows move in the rank exchange, and the window partitions
+    by query_id so each query ranks independently. row_number, not
+    rank, so a tie never returns more than k rows, and the tie order
+    makes the rows the oracles replay deterministic."""
+    w = Window.partitionBy("query_id").orderBy(by, F.asc(tie))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*cols)
+    )
 
 
 def brute_force_topk(
@@ -64,40 +134,13 @@ def brute_force_topk(
     rank per query, keep k.
 
     Output: (query_id, neighbor_id, cosine, rank). Ties broken by
-    neighbor id for determinism. The corpus is never shuffled — only
-    the per-query candidate rows move in the rank exchange, and the
-    window partitions by query_id so each query ranks independently.
-
-    Norms are hoisted below the join (a join child is a real
-    materialization barrier, unlike a projection): an inline
-    ``cosine()`` re-folds both norms per PAIR — 3 folds/pair instead
-    of 1 dot/pair + 1 norm/row. Same multiply/divide order, so values
-    are bit-identical.
+    neighbor id for determinism. The corpus is never shuffled.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec_col).alias("qvec"),
-    ).select("*", _norm(F.col("qvec")).alias("_qn"))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("cvec"),
-    ).select("*", _norm(F.col("cvec")).alias("_cn"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    q = _normed_side(queries, _QUERY, id_col, as_double_array(vec_col))
+    c = _normed_side(corpus, _CORPUS, id_col, as_double_array(vec_col))
+    return _top_k_per_query(
+        _exact_scored(c, q, "cosine"), k, F.desc("cosine"),
+        ["query_id", "neighbor_id", "cosine", "rank"],
     )
 
 
@@ -222,20 +265,14 @@ def lsh_topk(
     population constant as the corpus grows; add tables to buy back
     recall."""
     q = _multi_table_buckets(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double_array(vec_col).alias("qvec"),
-        ).select("*", _norm(F.col("qvec")).alias("_qn")),
+        _normed_side(queries, _QUERY, id_col, as_double_array(vec_col)),
         "qvec",
         dim,
         n_planes,
         n_tables,
     )
     c = _multi_table_buckets(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_array(vec_col).alias("cvec"),
-        ).select("*", _norm(F.col("cvec")).alias("_cn")),
+        _normed_side(corpus, _CORPUS, id_col, as_double_array(vec_col)),
         "cvec",
         dim,
         n_planes,
@@ -243,25 +280,15 @@ def lsh_topk(
     )
     # Distinct BEFORE scoring: a pair can meet in several tables;
     # dedup on ids only, so each candidate's cosine is computed once.
-    # Norms ride from below the join (one fold per input row, not per
-    # candidate pair) — same multiply order as cosine(), bit-identical.
     cand = (
         c.join(F.broadcast(q), on=["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "qvec", "_qn", "neighbor_id", "cvec", "_cn")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn(
-        "cosine",
-        _dot(F.col("qvec"), F.col("cvec")) / (F.col("_qn") * F.col("_cn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_k_per_query(
+        cand.withColumn("cosine", _pair_cosine()), k, F.desc("cosine"),
+        ["query_id", "neighbor_id", "cosine", "rank"],
     )
 
 
@@ -337,6 +364,7 @@ def assign_nearest_centroids(
     the row norm once per CENTROID (n_centroids x per row) and the
     centroid norm once per pair."""
     cents_n = cents.select("*", _norm(F.col("cvec_c")).alias("_ccn"))
+    rows = df.select("*", _norm(F.col(vec_alias)).alias("_vn"))
     if n == 1:
         # Nearest-1 is a row-local argmax, not a shuffle: the
         # centroids are broadcast model state either way, so collect
@@ -369,9 +397,8 @@ def assign_nearest_centroids(
             F.transform(
                 F.col("_cents"),
                 lambda c: F.struct(
-                    (
-                        _dot(F.col(vec_alias), c["cv"])
-                        / (F.col("_vn") * c["cn"])
+                    _cos_normed(
+                        F.col(vec_alias), c["cv"], F.col("_vn"), c["cn"]
                     ).alias("_s"),
                     (-c["cid"]).alias("_negc"),
                 ),
@@ -383,18 +410,17 @@ def assign_nearest_centroids(
         if keep_sim:
             out_cols.append(F.col("_b._s").alias("_sim"))
         return (
-            df.select("*", _norm(F.col(vec_alias)).alias("_vn"))
-            .crossJoin(F.broadcast(carr))
+            rows.crossJoin(F.broadcast(carr))
             .withColumn("_b", best)
             .select(*out_cols)
         )
     scored = (
-        df.select("*", _norm(F.col(vec_alias)).alias("_vn"))
-        .crossJoin(F.broadcast(cents_n))
+        rows.crossJoin(F.broadcast(cents_n))
         .withColumn(
             "_sim",
-            _dot(F.col(vec_alias), F.col("cvec_c"))
-            / (F.col("_vn") * F.col("_ccn")),
+            _cos_normed(
+                F.col(vec_alias), F.col("cvec_c"), F.col("_vn"), F.col("_ccn")
+            ),
         )
     )
     w = Window.partitionBy(id_alias).orderBy(
@@ -448,72 +474,35 @@ def ivf_topk(
     def nearest_clusters(df, id_alias, vec_alias, n):
         return assign_nearest_centroids(df, cents, id_alias, vec_alias, n)
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("cvec"),
-    ).select("*", _norm(F.col("cvec")).alias("_cn"))
+    c = _normed_side(corpus, _CORPUS, id_col, as_double_array(vec_col))
     # each corpus vec → 1 cluster; each query → n_probe clusters
     assigned = nearest_clusters(c, "neighbor_id", "cvec", 1)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec_col).alias("qvec"),
-    ).select("*", _norm(F.col("qvec")).alias("_qn"))
+    q = _normed_side(queries, _QUERY, id_col, as_double_array(vec_col))
     probed = nearest_clusters(q, "query_id", "qvec", n_probe)
-
-    # Norms ride from below the cluster join (one fold per input row)
-    # — the inline cosine() re-folded both per candidate pair; same
-    # multiply order, bit-identical scores.
     scored = (
         assigned.join(F.broadcast(probed), on="centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("_qn") * F.col("_cn")),
-        )
+        .withColumn("cosine", _pair_cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_k_per_query(
+        scored, k, F.desc("cosine"), ["query_id", "neighbor_id", "cosine", "rank"]
     )
 
 
-
-
-
-
-def _members_with_norm(id_c: str = "id", vec_c: str = "vec") -> Column:
-    """collect_list payload for _cos_pair_struct members: (id, vec,
-    nrm) with the norm evaluated row-side."""
-    return F.struct(
-        F.col(id_c).alias("id"),
-        F.col(vec_c).alias("vec"),
-        _norm(F.col(vec_c)).alias("nrm"),
-    )
-
-
-def _grp_cosine(a: Column, b: Column) -> Column:
-    """Cosine between two (vec, nrm) member structs — the same dot /
-    (nrm_a * nrm_b) expression as the uncollapsed pair kernel, so
-    scores are bit-identical (dot and multiply are symmetric in
-    IEEE)."""
-    return _dot(a["vec"], b["vec"]) / (a["nrm"] * b["nrm"])
+def _member_cosine(a: Column, b: Column) -> Column:
+    """Cosine between two (vec, nrm) member structs."""
+    return _cos_normed(a["vec"], b["vec"], a["nrm"], b["nrm"])
 
 
 def _cos_pair_struct(a: Column, b: Column) -> Column:
     """(id_a, id_b, cosine) pair struct of two (id, vec, nrm)
     members — the pair builder for the embedding family's two-stage
     expansion. One dot fold + a divide per pair (norms precomputed
-    per member); the exact operation sequence of ``cosine()``, so
-    values stay bit-identical to the DuckDB oracles."""
+    per member)."""
     return F.struct(
         a["id"].alias("id_a"),
         b["id"].alias("id_b"),
-        (_dot(a["vec"], b["vec"]) / (a["nrm"] * b["nrm"])).alias("cosine"),
+        _member_cosine(a, b).alias("cosine"),
     )
 
 
@@ -524,7 +513,7 @@ def _grp_cos_pair_struct(a: Column, b: Column) -> Column:
     return F.struct(
         a["ids"].alias("ids_a"),
         b["ids"].alias("ids_b"),
-        _grp_cosine(a, b).alias("cosine"),
+        _member_cosine(a, b).alias("cosine"),
         (a["id"] == b["id"]).alias("within"),
     )
 
@@ -539,10 +528,58 @@ def _grp_self_entries(m: Column) -> Column:
     )
 
 
+def _member_buckets(src: DataFrame, keys: list[str], collapsed: bool) -> DataFrame:
+    """``src`` rows grouped by ``keys`` into sorted (id, vec, nrm[,
+    ids]) member arrays, the norm evaluated row-side; only buckets that
+    owe a pair survive: 2+ members or, collapsed, a lone group of 2+
+    exact-duplicate ids. The frame is tiny in ROWS but each row carries
+    quadratic in-bucket pair work; AQE would coalesce it to 1-2 tasks
+    by byte size and serialize that work, so the fan-out is pinned."""
+    fields = [
+        F.col("id").alias("id"),
+        F.col("vec").alias("vec"),
+        _norm(F.col("vec")).alias("nrm"),
+    ]
+    owes = F.size("members") > 1
+    if collapsed:
+        fields.append(F.col("ids").alias("ids"))
+        owes = owes | F.exists("members", lambda g: F.size(g["ids"]) > 1)
+    return (
+        src.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct(*fields))).alias("members"))
+        .filter(owes)
+        .repartition(src.sparkSession.sparkContext.defaultParallelism)
+    )
 
 
+def _split_over_cap(
+    src: DataFrame, keys: list[str], rep: list[str], max_bucket: int
+) -> tuple[DataFrame, DataFrame]:
+    """Split ``src`` rows grouped by ``keys`` at the star cap:
+    ``(over, under)``. ``over`` holds one row per group of more than
+    ``max_bucket`` rows — its keys and its lowest-(id, vec) row's
+    ``rep`` fields as ``_rep_<field>``, the star representative —
+    from a count + min-struct pre-aggregation (a map-combined shuffle
+    of ~1 tiny row per group per task; no members array is built, so
+    resident memory is O(1)/row at any group size). ``under`` is
+    ``src`` without those groups, by a broadcast anti-join.
 
-
+    ``over`` is cached: it is model state (hot groups are rare by
+    construction) consumed by both the star branch and the anti-join,
+    and an uncached tiny frame would re-run the full stats scan per
+    consumer (lambda-laden subplans never reuse)."""
+    over = (
+        src.groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("_bn"),
+            F.min(F.struct(*rep)).alias("_rep"),
+        )
+        .filter(F.col("_bn") > max_bucket)
+        .select(*keys, *[F.col(f"_rep.{f}").alias(f"_rep_{f}") for f in rep])
+        .cache()
+    )
+    under = src.join(F.broadcast(over.select(*keys)), keys, "left_anti")
+    return over, under
 
 
 def embedding_near_dup_pairs(
@@ -599,9 +636,8 @@ def embedding_near_dup_pairs(
        (the array form's unspillable aggregation buffer measured an
        OOM between 600k and 1.2M vector members at 16g,
        BENCH_megastar_embedding_r12.json; the row-grain form clears
-       1.2M+). Pair values are bit-identical (same operand order as
-       ``_cos_pair_struct`` with the rep on the left, which is also
-       how the array star orders them). The guard's stats
+       1.2M+). Pair values are bit-identical: both forms score with
+       ``_cos_normed`` with the rep on the left. The guard's stats
        pre-aggregation is skipped entirely when the collapse probe's
        full-corpus pass proves no bucket can be over-cap
        (``dedup._cap_guard_skippable`` — exact rows bound the
@@ -626,7 +662,7 @@ def embedding_near_dup_pairs(
     base = df.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("vec")
     )
-    par = df.sparkSession.sparkContext.defaultParallelism
+    keys = ["tbl", "bucket"]
     if not collapse_exact:
         v = _multi_table_buckets(base, "vec", dim, n_planes, n_tables)
         # Over-cap buckets take a ROW-GRAIN star path (r12): members
@@ -637,17 +673,14 @@ def embedding_near_dup_pairs(
         # one group's buffer) — measured OOM at 16g between 600k and
         # 1.2M members (BENCH_megastar_embedding_r12.json), where
         # the text family's string members ride to 3M+. The star
-        # output is linear, so no array is needed at all: aggregate
-        # each bucket to (count, lowest-id member) — a map-combined
-        # shuffle of ~1 tiny row per bucket per task — broadcast the
-        # over-cap survivors, and compute each member's cosine
-        # against its bucket representative per ROW (O(1) resident,
-        # any bucket size). Under-cap buckets keep the exact r11
-        # array plan via an anti-join on the same broadcast. Costs
-        # one extra corpus-lineage scan (the stats pass) — at scale
-        # a columnar (id, vec) projection — and buys an unbounded
-        # mega-bucket regime; the wide members shuffle it rides
-        # next to is unchanged.
+        # output is linear, so no array is needed at all: split the
+        # over-cap buckets off (``_split_over_cap``) and compute each
+        # member's cosine against its bucket representative per ROW
+        # (O(1) resident, any bucket size). Under-cap buckets keep
+        # the exact r11 array plan. Costs one extra corpus-lineage
+        # scan (the stats pass) — at scale a columnar (id, vec)
+        # projection — and buys an unbounded mega-bucket regime; the
+        # wide members shuffle it rides next to is unchanged.
         big_pairs = None
         if guard(False):
             # Plan-shape choice, measured not guessed: a window over
@@ -664,75 +697,35 @@ def embedding_near_dup_pairs(
             # cheaper than an extra corpus-wide shuffle. Locked in
             # test_plans.py (embedding_near_dups = 3 scans, both
             # stats joins broadcast).
-            # Cached like deterministic_centroids: the stats frame is
-            # model state (one row per OVER-CAP bucket — hot buckets
-            # are rare by construction), consumed by both the star
-            # branch and the anti-join, and an uncached tiny frame
-            # would re-run the full stats scan per consumer
-            # (lambda-laden subplans never reuse).
-            over_stats = (
-                v.groupBy("tbl", "bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("_bn"),
-                    F.min(F.struct("id", "vec")).alias("_rep"),
-                )
-                .filter(F.col("_bn") > max_bucket)
-                .select(
-                    "tbl",
-                    "bucket",
-                    F.col("_rep.id").alias("_rep_id"),
-                    F.col("_rep.vec").alias("_rep_vec"),
-                )
-                .cache()
+            over_stats, under = _split_over_cap(
+                v, keys, ["id", "vec"], max_bucket
             )
-            # Same operand order as _cos_pair_struct(a=rep, b=member)
-            # — dot fold over components, then / (nrm_a * nrm_b) —
-            # so a pair meeting a small bucket in one table and a
-            # mega bucket in another dedups bit-exactly in the
-            # distinct below.
+            # The rep is the left operand, as in _cos_pair_struct, so
+            # a pair meeting a small bucket in one table and a mega
+            # bucket in another dedups bit-exactly in the distinct
+            # below.
             big_pairs = (
-                v.join(F.broadcast(over_stats), ["tbl", "bucket"])
+                v.join(F.broadcast(over_stats), keys)
                 .filter(F.col("id") != F.col("_rep_id"))
                 .select(
                     F.col("_rep_id").alias("id_a"),
                     F.col("id").alias("id_b"),
-                    (
-                        _dot(F.col("_rep_vec"), F.col("vec"))
-                        / (_norm(F.col("_rep_vec")) * _norm(F.col("vec")))
-                    ).alias("cosine"),
+                    cosine(F.col("_rep_vec"), F.col("vec")).alias("cosine"),
                 )
                 .filter(F.col("cosine") >= threshold)
             )
-            v = v.join(
-                F.broadcast(over_stats.select("tbl", "bucket")),
-                ["tbl", "bucket"],
-                "left_anti",
-            )
+            v = under
         # Bucket-pair form, not a self-join on bucket: lambda-bearing
         # plans defeat exchange reuse, so the join would scan +
         # re-hash the corpus once per side. A pair meeting in several
         # tables is deduped after the explode (cosine is bit-identical
         # across tables — same fold over the same doubles).
-        buckets = (
-            v.groupBy("tbl", "bucket")
-            .agg(
-                F.array_sort(
-                    F.collect_list(_members_with_norm())
-                ).alias("members")
-            )
-            .filter(F.size("members") > 1)
-        )
-        # The bucket frame is tiny in ROWS but each row carries
-        # quadratic in-bucket pair work; AQE would coalesce it to 1-2
-        # tasks by byte size and serialize that work. Explicit
-        # numPartitions pins the fan-out.
-        buckets = buckets.repartition(par)
         # Two-stage expansion with the cosine computed in the pair
         # builder and the threshold applied in-array (see
         # dedup._exploded_member_pairs): survivors-only explode,
         # resident O(bucket).
         pairs = _exploded_member_pairs(
-            buckets,
+            _member_buckets(v, keys, False),
             max_bucket=max_bucket,
             pair_builder=_cos_pair_struct,
             pair_filter=lambda pr: pr["cosine"] >= threshold,
@@ -761,35 +754,18 @@ def embedding_near_dup_pairs(
     # _exploded_id_pairs tail identically.
     big_flat = None
     if guard(True):
-        over_stats = (
-            v.groupBy("tbl", "bucket")
-            .agg(
-                F.count(F.lit(1)).alias("_bn"),
-                F.min(F.struct("id", "vec", "ids")).alias("_rep"),
-            )
-            .filter(F.col("_bn") > max_bucket)
-            .select(
-                "tbl",
-                "bucket",
-                F.col("_rep.id").alias("_rep_id"),
-                F.col("_rep.vec").alias("_rep_vec"),
-                F.col("_rep.ids").alias("_rep_ids"),
-            )
-            .cache()  # model-state tiny: one row per hot bucket
+        over_stats, under = _split_over_cap(
+            v, keys, ["id", "vec", "ids"], max_bucket
         )
-        joined = v.join(F.broadcast(over_stats), ["tbl", "bucket"])
-        # Per group row: its star cross pair vs the rep (cosine in
-        # _grp_cosine's operand order, a=rep) and its self pair
-        # (cosine = dot(vec,vec)/(nrm*nrm), same expression the
-        # self_entries hook folds) — built in one array so the
-        # threshold filter runs before the explode, like pair_filter.
+        joined = v.join(F.broadcast(over_stats), keys)
+        # Per group row: its star cross pair vs the rep (a=rep, as in
+        # _grp_cos_pair_struct) and its self pair — built in one
+        # array so the threshold filter runs before the explode, like
+        # pair_filter.
         cross = F.when(
             F.col("id") != F.col("_rep_id"),
             F.struct(
-                (
-                    _dot(F.col("_rep_vec"), F.col("vec"))
-                    / (_norm(F.col("_rep_vec")) * _norm(F.col("vec")))
-                ).alias("cosine"),
+                cosine(F.col("_rep_vec"), F.col("vec")).alias("cosine"),
                 F.lit(False).alias("within"),
                 F.col("_rep_ids").alias("ids_a"),
                 F.col("ids").alias("ids_b"),
@@ -798,10 +774,7 @@ def embedding_near_dup_pairs(
         self_p = F.when(
             F.size("ids") > 1,
             F.struct(
-                (
-                    _dot(F.col("vec"), F.col("vec"))
-                    / (_norm(F.col("vec")) * _norm(F.col("vec")))
-                ).alias("cosine"),
+                cosine(F.col("vec"), F.col("vec")).alias("cosine"),
                 F.lit(True).alias("within"),
                 F.col("ids").alias("ids_a"),
                 F.col("ids").alias("ids_b"),
@@ -824,33 +797,12 @@ def embedding_near_dup_pairs(
                 F.col("p.ids_b").alias("_ids_b"),
             )
         )
-        v = v.join(
-            F.broadcast(over_stats.select("tbl", "bucket")),
-            ["tbl", "bucket"],
-            "left_anti",
-        )
-    member = F.struct(
-        F.col("id").alias("id"),
-        F.col("vec").alias("vec"),
-        _norm(F.col("vec")).alias("nrm"),
-        F.col("ids").alias("ids"),
-    )
-    # Keep singleton buckets whose lone group still owes within-group
-    # pairs (2+ exact-duplicate ids).
-    buckets = (
-        v.groupBy("tbl", "bucket")
-        .agg(F.array_sort(F.collect_list(member)).alias("members"))
-        .filter(
-            (F.size("members") > 1)
-            | F.exists("members", lambda g: F.size(g["ids"]) > 1)
-        )
-        .repartition(par)
-    )
+        v = under
     # Two-stage group-pair expansion (dedup._exploded_member_pairs):
     # cosine computed in the pair builder, threshold applied
     # in-array, self entries for replica families via the hook.
     exploded = _exploded_member_pairs(
-        buckets,
+        _member_buckets(v, keys, True),
         max_bucket=max_bucket,
         pair_builder=_grp_cos_pair_struct,
         self_entries=_grp_self_entries,
@@ -980,6 +932,7 @@ def semantic_dedup(
     v = corpus.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("vec")
     )
+    keys = ["centroid_id"]
     if not collapse_exact:
         assigned = assign_nearest_centroids(v, cents, "id", "vec", 1)
         # Over-cap clusters take the ROW-GRAIN star path (r12, same
@@ -987,11 +940,9 @@ def semantic_dedup(
         # vector-carrying members array is an unspillable
         # aggregation-buffer row (measured OOM between 600k and 1.2M
         # members at 16g), while its star output is linear — so
-        # aggregate each cluster to (count, lowest-id member),
-        # broadcast the over-cap survivors, and mark each member
+        # split the over-cap clusters off and mark each member
         # dropped by a per-row cosine against its cluster
-        # representative. Under-cap clusters keep the r11 array plan
-        # via the anti-join.
+        # representative. Under-cap clusters keep the r11 array plan.
         pair_src = assigned
         over_stats = None
         if guard(False):
@@ -999,51 +950,19 @@ def semantic_dedup(
             # lambda-bearing cosine expressions below any
             # centroid_id exchange defeat ReuseExchange exactly as
             # in embedding_near_dup_pairs, so the stats
-            # pre-aggregation (tiny map-combined shuffle, cached —
-            # one row per hot cluster) + broadcast joins is the
-            # cheap shape. Unlike the pair function, the mega-
-            # cluster drop decision FUSES into the final output
-            # join below (kept is per-row computable from the
-            # broadcast rep), so the expensive centroid-assignment
-            # lineage evaluates 3x total (output join, under-cap
-            # array path, once-run stats) — not 4x.
-            over_stats = (
-                assigned.groupBy("centroid_id")
-                .agg(
-                    F.count(F.lit(1)).alias("_bn"),
-                    F.min(F.struct("id", "vec")).alias("_rep"),
-                )
-                .filter(F.col("_bn") > max_bucket)
-                .select(
-                    "centroid_id",
-                    F.col("_rep.id").alias("_rep_id"),
-                    F.col("_rep.vec").alias("_rep_vec"),
-                )
-                .cache()
+            # pre-aggregation + broadcast joins is the cheap shape.
+            # Unlike the pair function, the mega-cluster drop
+            # decision FUSES into the final output join below (kept
+            # is per-row computable from the broadcast rep), so the
+            # expensive centroid-assignment lineage evaluates 3x
+            # total (output join, under-cap array path, once-run
+            # stats) — not 4x.
+            over_stats, pair_src = _split_over_cap(
+                assigned, keys, ["id", "vec"], max_bucket
             )
-            pair_src = assigned.join(
-                F.broadcast(over_stats.select("centroid_id")),
-                "centroid_id",
-                "left_anti",
-            )
-        buckets = (
-            pair_src.groupBy("centroid_id")
-            .agg(
-                F.array_sort(F.collect_list(_members_with_norm())).alias(
-                    "members"
-                )
-            )
-            .filter(F.size("members") > 1)
-        )
-        # n_centroids rows carrying quadratic in-cluster work: pin the
-        # fan-out so AQE's byte-size coalescing doesn't serialize it
-        # (see embedding_near_dup_pairs).
-        buckets = buckets.repartition(
-            corpus.sparkSession.sparkContext.defaultParallelism
-        )
         dropped = (
             _exploded_member_pairs(
-                buckets,
+                _member_buckets(pair_src, keys, False),
                 max_bucket=max_bucket,
                 pair_builder=_cos_pair_struct,
                 pair_filter=lambda pr: pr["cosine"] >= threshold,
@@ -1056,17 +975,11 @@ def semantic_dedup(
         mega_drop = F.lit(False)
         if over_stats is not None:
             out = out.join(F.broadcast(over_stats), "centroid_id", "left")
-            # Same operand order as _cos_pair_struct(a=rep, b=member).
+            # The rep is the left operand, as in _cos_pair_struct.
             mega_drop = (
                 F.col("_rep_id").isNotNull()
                 & (F.col("id") != F.col("_rep_id"))
-                & (
-                    (
-                        _dot(F.col("_rep_vec"), F.col("vec"))
-                        / (_norm(F.col("_rep_vec")) * _norm(F.col("vec")))
-                    )
-                    >= threshold
-                )
+                & (cosine(F.col("_rep_vec"), F.col("vec")) >= threshold)
             )
         return out.join(dropped, "id", "left").select(
             F.col("id").alias(id_col),
@@ -1090,42 +1003,10 @@ def semantic_dedup(
     pair_src = assigned
     over_stats = None
     if guard(True):
-        over_stats = (
-            assigned.groupBy("centroid_id")
-            .agg(
-                F.count(F.lit(1)).alias("_bn"),
-                F.min(F.struct("id", "vec")).alias("_rep"),
-            )
-            .filter(F.col("_bn") > max_bucket)
-            .select(
-                "centroid_id",
-                F.col("_rep.id").alias("_rep_id"),
-                F.col("_rep.vec").alias("_rep_vec"),
-            )
-            .cache()  # model-state tiny: one row per hot cluster
+        over_stats, pair_src = _split_over_cap(
+            assigned, keys, ["id", "vec"], max_bucket
         )
-        pair_src = assigned.join(
-            F.broadcast(over_stats.select("centroid_id")),
-            "centroid_id",
-            "left_anti",
-        )
-    member = F.struct(
-        F.col("id").alias("id"),
-        F.col("vec").alias("vec"),
-        _norm(F.col("vec")).alias("nrm"),
-        F.col("ids").alias("ids"),
-    )
-    # Keep singleton clusters whose lone family still owes
-    # within-family drops.
-    buckets = (
-        pair_src.groupBy("centroid_id")
-        .agg(F.array_sort(F.collect_list(member)).alias("members"))
-        .filter(
-            (F.size("members") > 1)
-            | F.exists("members", lambda g: F.size(g["ids"]) > 1)
-        )
-        .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    )
+    buckets = _member_buckets(pair_src, keys, True)
     m = F.col("members")
     # Per family g: self_ok = its self-cosine reaches the threshold
     # (drops every non-minimum replica id); lim = the smallest
@@ -1139,7 +1020,7 @@ def semantic_dedup(
             g["ids"].alias("ids"),
             g["id"].alias("rep"),
             lim.alias("lim"),
-            (_grp_cosine(g, g) >= threshold).alias("ok"),
+            (_member_cosine(g, g) >= threshold).alias("ok"),
         )
 
     all_fams = F.transform(
@@ -1150,7 +1031,7 @@ def semantic_dedup(
                     F.filter(
                         m,
                         lambda o: (o["id"] != g["id"])
-                        & (_grp_cosine(o, g) >= threshold),
+                        & (_member_cosine(o, g) >= threshold),
                     ),
                     lambda o: o["id"],
                 )
@@ -1163,7 +1044,7 @@ def semantic_dedup(
         lambda g: _fam(
             F.when(
                 (g["id"] != F.element_at(m, 1)["id"])
-                & (_grp_cosine(F.element_at(m, 1), g) >= threshold),
+                & (_member_cosine(F.element_at(m, 1), g) >= threshold),
                 F.element_at(m, 1)["id"],
             ),
             g,
@@ -1195,24 +1076,14 @@ def semantic_dedup(
     mega_drop = F.lit(False)
     if over_stats is not None:
         per_vec = per_vec.join(F.broadcast(over_stats), "centroid_id", "left")
-        # Star-arm semantics per family, row-grain (bit-identical
-        # cosine expressions to _grp_cosine): self_ok drops every
+        # Star-arm semantics per family, row-grain, with the rep the
+        # left operand as in star_fams: self_ok drops every
         # non-minimum replica id; lim = the cluster rep's id when
         # this family is over-threshold with the rep — drops every
         # id above it.
-        self_ok = (
-            _dot(F.col("vec"), F.col("vec"))
-            / (_norm(F.col("vec")) * _norm(F.col("vec")))
-        ) >= threshold
-        lim_hit = (
-            (F.col("_fam_rep") != F.col("_rep_id"))
-            & (
-                (
-                    _dot(F.col("_rep_vec"), F.col("vec"))
-                    / (_norm(F.col("_rep_vec")) * _norm(F.col("vec")))
-                )
-                >= threshold
-            )
+        self_ok = cosine(F.col("vec"), F.col("vec")) >= threshold
+        lim_hit = (F.col("_fam_rep") != F.col("_rep_id")) & (
+            cosine(F.col("_rep_vec"), F.col("vec")) >= threshold
         )
         mega_drop = F.col("_rep_id").isNotNull() & (
             (self_ok & (F.col("id") != F.col("_fam_rep")))
@@ -1314,10 +1185,88 @@ def centroid_outlier_scores(
         .select(
             group_col,
             id_col,
-            (
-                _dot(v, F.col("centroid")) / (_norm(v) * F.col("_cn"))
-            ).alias("centroid_cosine"),
+            _cos_normed(v, F.col("centroid"), _norm(v), F.col("_cn")).alias(
+                "centroid_cosine"
+            ),
         )
+    )
+
+
+def _subspaces(vec: Column, m: int, sub: int, name: str) -> Column:
+    """``vec`` exploded to ``m`` rows ``e`` = (subspace, ``name``), one
+    per contiguous ``sub``-wide slice — the PQ split shared by the
+    codebooks, the encoder and the ADC lookup table."""
+    return F.explode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda s: F.struct(
+                s.alias("subspace"),
+                F.slice(vec, s * sub + 1, sub).alias(name),
+            ),
+        )
+    ).alias("e")
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance as a sequential double fold over the
+    components — bit-identical across engines."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _adc_top_k(
+    codes: DataFrame,
+    queries: DataFrame,
+    cb: DataFrame,
+    on: list[str],
+    dim: int,
+    m: int,
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """PQ asymmetric-distance scoring and ranking: each query's EXACT
+    sub-vectors against the corpus ``codes`` (neighbor_id, subspace,
+    code[, query_id]) through a per-query lookup table of queries x m
+    x k_codes rows (tiny, broadcast), joined on ``on``; one hash
+    aggregation on (query_id, neighbor_id) then sums the m partial
+    distances.
+
+    Determinism: the partial distances are collected, sorted by
+    subspace, and summed with a sequential fold — bit-identical to an
+    oracle folding the same doubles in the same order (a plain SUM()
+    would expose cross-engine partial-aggregation order).
+
+    Output: (query_id, neighbor_id, rank, adc_dist), k per query."""
+    q_sub = queries.select(
+        F.col(id_col).alias("query_id"),
+        _subspaces(as_double_array(vec_col), m, dim // m, "q_slice"),
+    ).select("query_id", "e.subspace", "e.q_slice")
+    lut = q_sub.join(F.broadcast(cb), on="subspace").select(
+        "query_id",
+        "subspace",
+        "code",
+        _sq_dist(F.col("q_slice"), F.col("cb_slice")).alias("d"),
+    )
+    totals = (
+        codes.join(F.broadcast(lut), on=on)
+        .groupBy("query_id", "neighbor_id")
+        .agg(
+            F.aggregate(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col("subspace"), F.col("d")))
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x["d"],
+            ).alias("adc_dist")
+        )
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+    return _top_k_per_query(
+        totals, k, F.asc("adc_dist"), ["query_id", "neighbor_id", "rank", "adc_dist"]
     )
 
 
@@ -1348,18 +1297,7 @@ def pq_codebooks(
     )
     w = Window.orderBy("_seed_id")
     coded = seeds.withColumn("code", F.row_number().over(w) - 1)
-    slices = coded.select(
-        "code",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("subspace"),
-                    F.slice(F.col("_v"), s * sub + 1, sub).alias("cb_slice"),
-                ),
-            )
-        ).alias("e"),
-    )
+    slices = coded.select("code", _subspaces(F.col("_v"), m, sub, "cb_slice"))
     return slices.select("e.subspace", "code", "e.cb_slice")
 
 
@@ -1396,28 +1334,10 @@ def pq_encode(
     )
     sub = dim // m
     exploded = corpus.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("subspace"),
-                    F.slice(as_double_array(vec_col), s * sub + 1, sub).alias(
-                        "sub_vec"
-                    ),
-                ),
-            )
-        ).alias("e"),
+        F.col(id_col), _subspaces(as_double_array(vec_col), m, sub, "sub_vec")
     ).select(id_col, "e.subspace", "e.sub_vec")
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("sub_vec"), F.col("cb_slice"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     scored = exploded.join(F.broadcast(cb), on="subspace").withColumn(
-        "_d", dist
+        "_d", _sq_dist(F.col("sub_vec"), F.col("cb_slice"))
     )
     return (
         scored.groupBy(id_col, "subspace")
@@ -1445,13 +1365,9 @@ def pq_topk(
     Scale shape: the LUT is queries x m x k_codes rows (tiny,
     broadcast); the corpus codes table joins it map-side on
     (subspace, code), then one hash aggregation on
-    (query_id, neighbor_id) sums the m partial distances. No
-    all-pairs float work, no shuffle of raw vectors.
-
-    Determinism: the m partial distances are collected, sorted by
-    subspace, and summed with a sequential fold — bit-identical to an
-    oracle folding the same doubles in the same order (a plain SUM()
-    would expose cross-engine partial-aggregation order).
+    (query_id, neighbor_id) sums the m partial distances in
+    subspace order (``_adc_top_k``). No all-pairs float work, no
+    shuffle of raw vectors.
     """
     cb = pq_codebooks(
         corpus, dim, m=m, k=k_codes, id_col=id_col, vec_col=vec_col
@@ -1462,56 +1378,8 @@ def pq_topk(
     ).select(
         F.col(id_col).alias("neighbor_id"), "subspace", "code"
     )
-    sub = dim // m
-    q_sub = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("subspace"),
-                    F.slice(as_double_array(vec_col), s * sub + 1, sub).alias(
-                        "q_slice"
-                    ),
-                ),
-            )
-        ).alias("e"),
-    ).select("query_id", "e.subspace", "e.q_slice")
-    lut = q_sub.join(F.broadcast(cb), on="subspace").select(
-        "query_id",
-        "subspace",
-        "code",
-        F.aggregate(
-            F.zip_with(
-                F.col("q_slice"),
-                F.col("cb_slice"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("d"),
-    )
-    scored = codes.join(F.broadcast(lut), on=["subspace", "code"])
-    totals = (
-        scored.groupBy("query_id", "neighbor_id")
-        .agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("subspace"), F.col("d")))
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["d"],
-            ).alias("adc_dist")
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        totals.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
+    return _adc_top_k(
+        codes, queries, cb, ["subspace", "code"], dim, m, id_col, vec_col, k
     )
 
 
@@ -1541,8 +1409,8 @@ def ivf_pq_topk(
     queries x n_probe rows, always broadcast — restrict the code
     stream BEFORE the LUT join, so non-probed cells never reach the
     ADC arithmetic. One hash aggregation on (query, neighbor) sums
-    the m partial distances with the same sorted sequential fold as
-    ``pq_topk`` (bit-identical to the oracle's ordered list_reduce).
+    the m partial distances with ``pq_topk``'s ``_adc_top_k``
+    (bit-identical to the oracle's ordered list_reduce).
     """
     cents = deterministic_centroids(corpus, n_centroids, id_col, vec_col)
     cb = pq_codebooks(
@@ -1570,57 +1438,9 @@ def ivf_pq_topk(
     routed = codes.join(assigned, "neighbor_id").join(
         F.broadcast(probed), "centroid_id"
     )
-
-    sub = dim // m
-    q_sub = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.alias("subspace"),
-                    F.slice(as_double_array(vec_col), s * sub + 1, sub).alias(
-                        "q_slice"
-                    ),
-                ),
-            )
-        ).alias("e"),
-    ).select("query_id", "e.subspace", "e.q_slice")
-    lut = q_sub.join(F.broadcast(cb), on="subspace").select(
-        "query_id",
-        "subspace",
-        "code",
-        F.aggregate(
-            F.zip_with(
-                F.col("q_slice"),
-                F.col("cb_slice"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("d"),
-    )
-    scored = routed.join(F.broadcast(lut), on=["query_id", "subspace", "code"])
-    totals = (
-        scored.groupBy("query_id", "neighbor_id")
-        .agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("subspace"), F.col("d")))
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["d"],
-            ).alias("adc_dist")
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        totals.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
+    return _adc_top_k(
+        routed, queries, cb, ["query_id", "subspace", "code"], dim, m,
+        id_col, vec_col, k,
     )
 
 
@@ -1675,36 +1495,20 @@ def hard_negatives(
 
     Output: (query_id, query_label, neighbor_id, neighbor_label,
     cosine, rank)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
+    q = _normed_side(
+        queries, _QUERY, id_col, as_double_array(vec_col),
         F.col(label_col).alias("query_label"),
-        as_double_array(vec_col).alias("qvec"),
-    ).select("*", _norm(F.col("qvec")).alias("_qn"))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
+    )
+    c = _normed_side(
+        corpus, _CORPUS, id_col, as_double_array(vec_col),
         F.col(label_col).alias("neighbor_label"),
-        as_double_array(vec_col).alias("cvec"),
-    ).select("*", _norm(F.col("cvec")).alias("_cn"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .filter(F.col("neighbor_label") != F.col("query_label"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("_qn") * F.col("_cn")),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
+    scored = _exact_scored(c, q, "cosine").filter(
+        F.col("neighbor_label") != F.col("query_label")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            "cosine", "rank",
-        )
+    return _top_k_per_query(
+        scored, k, F.desc("cosine"),
+        ["query_id", "query_label", "neighbor_id", "neighbor_label", "cosine", "rank"],
     )
 
 
@@ -1735,17 +1539,10 @@ def knn_predict_labels(
         .groupBy("query_id", "neighbor_label")
         .agg(F.count(F.lit(1)).alias("n_votes"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_votes"), F.asc("neighbor_label")
-    )
-    pred = (
-        votes.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .select(
-            "query_id",
-            F.col("neighbor_label").alias("predicted_label"),
-            "n_votes",
-        )
+    pred = _top_k_per_query(
+        votes, 1, F.desc("n_votes"),
+        ["query_id", F.col("neighbor_label").alias("predicted_label"), "n_votes"],
+        tie="neighbor_label",
     )
     truth = queries.select(
         F.col(id_col).alias("query_id"),
@@ -1821,6 +1618,36 @@ def random_projection(
     return df.select(F.col(id_col), proj.alias("projected"))
 
 
+def recall_at_k(
+    corpus: DataFrame,
+    queries: DataFrame,
+    approx: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Recall@k of an approximate top-k against exact brute-force
+    truth for ``queries`` over ``corpus``: one row (recall_at_{k},
+    n_truth_pairs), the share of truth pairs the approximate search
+    also returned.
+
+    ``approx`` is top-k output: <= n_queries*k rows BY CONSTRUCTION at
+    any corpus size, so it is broadcast — the planner only sees an
+    unknown-size aggregate and falls back to a sort-merge join (2
+    exchanges + 2 sorts) without the hint (guide 3.1)."""
+    exact = brute_force_topk(corpus, queries, id_col, vec_col, k).select(
+        "query_id", "neighbor_id"
+    )
+    hits = approx.select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
+    marked = exact.join(F.broadcast(hits), ["query_id", "neighbor_id"], "left")
+    return marked.agg(
+        (F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias(
+            f"recall_at_{k}"
+        ),
+        F.count(F.lit(1)).alias("n_truth_pairs"),
+    )
+
+
 def projection_recall_at_k(
     df: DataFrame,
     dim: int,
@@ -1838,28 +1665,10 @@ def projection_recall_at_k(
     proj = random_projection(df, dim, out_dim, id_col, vec_col).select(
         F.col(id_col), F.col("projected").alias("embedding")
     )
-    qs_o = df.filter(F.col(id_col) < n_queries)
     qs_p = proj.filter(F.col(id_col) < n_queries)
-    exact = brute_force_topk(df, qs_o, id_col, vec_col, k).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
-        brute_force_topk(proj, qs_p, id_col, "embedding", k)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    # approx is top-k output: <= n_queries*k rows BY CONSTRUCTION at
-    # any corpus size, so broadcast it — the planner only sees an
-    # unknown-size aggregate and falls back to a sort-merge join
-    # (2 exchanges + 2 sorts) without the hint (guide 3.1).
-    marked = exact.join(
-        F.broadcast(approx), ["query_id", "neighbor_id"], "left"
-    )
-    return marked.agg(
-        (F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias(
-            f"recall_at_{k}"
-        ),
-        F.count(F.lit(1)).alias("n_truth_pairs"),
+    approx = brute_force_topk(proj, qs_p, id_col, "embedding", k)
+    return recall_at_k(
+        df, df.filter(F.col(id_col) < n_queries), approx, k, id_col, vec_col
     )
 
 
@@ -1938,36 +1747,21 @@ def sq8_topk(
     full corpus pass. Output: (query_id, neighbor_id, adc_cosine,
     rank), ties broken by neighbor id."""
     st = sq8_minmax(corpus, dim, vec_col)
-    decoded = corpus.crossJoin(F.broadcast(st)).select(
-        F.col(id_col).alias("neighbor_id"),
+    decoded = _normed_side(
+        corpus.crossJoin(F.broadcast(st)),
+        _CORPUS,
+        id_col,
         F.zip_with(
             as_double_array(vec_col),
             _sq8_pairs(),
             lambda x, s: s["mn"]
             + _sq8_code(x, s) * (s["mx"] - s["mn"]) / F.lit(255.0),
-        ).alias("dvec"),
+        ),
     )
-    decoded = decoded.select("*", _norm(F.col("dvec")).alias("_dn"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec_col).alias("qvec"),
-    ).select("*", _norm(F.col("qvec")).alias("_qn"))
-    scored = (
-        decoded.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "adc_cosine",
-            _dot(F.col("qvec"), F.col("dvec"))
-            / (F.col("_qn") * F.col("_dn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_cosine", "rank")
+    q = _normed_side(queries, _QUERY, id_col, as_double_array(vec_col))
+    return _top_k_per_query(
+        _exact_scored(decoded, q, "adc_cosine"), k, F.desc("adc_cosine"),
+        ["query_id", "neighbor_id", "adc_cosine", "rank"],
     )
 
 
@@ -1984,27 +1778,8 @@ def sq8_recall_at_k(
     8× compression costs any neighbors on THIS corpus before the
     codes table replaces raw vectors."""
     qs = corpus.filter(F.col(id_col) < n_queries)
-    exact = brute_force_topk(corpus, qs, id_col, vec_col, k).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
-        sq8_topk(corpus, qs, dim, k, id_col, vec_col)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    # approx is top-k output: <= n_queries*k rows BY CONSTRUCTION at
-    # any corpus size, so broadcast it — the planner only sees an
-    # unknown-size aggregate and falls back to a sort-merge join
-    # (2 exchanges + 2 sorts) without the hint (guide 3.1).
-    marked = exact.join(
-        F.broadcast(approx), ["query_id", "neighbor_id"], "left"
-    )
-    return marked.agg(
-        (F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias(
-            f"recall_at_{k}"
-        ),
-        F.count(F.lit(1)).alias("n_truth_pairs"),
-    )
+    approx = sq8_topk(corpus, qs, dim, k, id_col, vec_col)
+    return recall_at_k(corpus, qs, approx, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------

@@ -294,35 +294,14 @@ def cohort_retention(
     )
 
 
-def rfm_segments(
-    orders: DataFrame,
-    customer_col: str = "o_custkey",
-    ts_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    n_bins: int = 4,
-    exact_ntile: bool = False,
+def _rfm_per_customer(
+    orders: DataFrame, customer_col: str, ts_col: str, amount_col: str
 ) -> DataFrame:
-    """RFM segmentation: per customer recency (days since last order,
-    relative to the corpus max date so the result is deterministic),
-    frequency (order count), monetary (decimal-exact total), each
-    scored into ``n_bins`` quantile bins. Recency bin ``n_bins`` =
-    most recent (conventional: higher is better on every axis).
-
-    By DEFAULT this delegates to ``rfm_segments_scalable``
-    (percentile-boundary bucketing — no single-partition window in
-    the plan), because the customer frame is hundreds of millions of
-    rows at 100 TB and ntile needs a global sort through ONE task.
-    Pass ``exact_ntile=True`` for the equal-size-bin ntile semantics
-    (three global-sort windows over the per-customer frame — fine on
-    small frames, a scale trap past ~10⁷ customers; the two differ
-    only in boundary-tie placement).
-
-    Output: (customer, recency_days, frequency, monetary, r, f, m,
-    rfm_segment)."""
-    if not exact_ntile:
-        return rfm_segments_scalable(
-            orders, customer_col, ts_col, amount_col, n_bins
-        )
+    """(customer, frequency, monetary, recency_days) per customer, the
+    frame both RFM scorers bin: recency is days since the customer's
+    last order relative to the corpus max date (a one-row broadcast),
+    so the result is deterministic; monetary is a decimal-exact
+    total."""
     per_cust = orders.groupBy(F.col(customer_col).alias("customer")).agg(
         F.max(ts_col).alias("_last"),
         F.count(F.lit(1)).alias("frequency"),
@@ -336,9 +315,39 @@ def rfm_segments(
         ).alias("monetary"),
     )
     maxd = orders.agg(F.max(ts_col).alias("_maxd"))
-    scored = per_cust.crossJoin(F.broadcast(maxd)).withColumn(
-        "recency_days", F.datediff(F.col("_maxd"), F.col("_last")).cast("long")
+    return (
+        per_cust.crossJoin(F.broadcast(maxd))
+        .withColumn(
+            "recency_days",
+            F.datediff(F.col("_maxd"), F.col("_last")).cast("long"),
+        )
+        .drop("_last", "_maxd")
     )
+
+
+def rfm_segments(
+    orders: DataFrame,
+    customer_col: str = "o_custkey",
+    ts_col: str = "o_orderdate",
+    amount_col: str = "o_totalprice",
+    n_bins: int = 4,
+) -> DataFrame:
+    """RFM segmentation: per customer recency (days since last order,
+    relative to the corpus max date so the result is deterministic),
+    frequency (order count), monetary (decimal-exact total), each
+    scored into ``n_bins`` equal-size ntile bins. Recency bin
+    ``n_bins`` = most recent (conventional: higher is better on every
+    axis).
+
+    Three global-sort windows over the per-customer frame — fine on
+    small frames, a scale trap past ~10⁷ customers, where
+    ``rfm_segments_scalable`` (percentile-boundary bucketing, no
+    single-partition window) is the shape; the two differ only in
+    boundary-tie placement.
+
+    Output: (customer, recency_days, frequency, monetary, r, f, m,
+    rfm_segment)."""
+    scored = _rfm_per_customer(orders, customer_col, ts_col, amount_col)
     r = F.ntile(n_bins).over(
         Window.orderBy(F.desc("recency_days"), F.asc("customer"))
     )
@@ -391,27 +400,7 @@ def rfm_segments_scalable(
 
     Output: (customer, recency_days, frequency, monetary, r, f, m,
     rfm_segment) — same schema as ``rfm_segments``."""
-    per_cust = orders.groupBy(F.col(customer_col).alias("customer")).agg(
-        F.max(ts_col).alias("_last"),
-        F.count(F.lit(1)).alias("frequency"),
-        (
-            F.sum(
-                F.floor(
-                    F.col(amount_col) * F.lit(100.0) + F.lit(0.5)
-                ).cast("decimal(38,0)")
-            ).cast("double")
-            / F.lit(100.0)
-        ).alias("monetary"),
-    )
-    maxd = orders.agg(F.max(ts_col).alias("_maxd"))
-    scored = (
-        per_cust.crossJoin(F.broadcast(maxd))
-        .withColumn(
-            "recency_days",
-            F.datediff(F.col("_maxd"), F.col("_last")).cast("long"),
-        )
-        .drop("_last", "_maxd")
-    )
+    scored = _rfm_per_customer(orders, customer_col, ts_col, amount_col)
     pcts = [k / n_bins for k in range(1, n_bins)]
     pct_arr = "array(" + ",".join(str(p) for p in pcts) + ")"
     cuts = F.broadcast(

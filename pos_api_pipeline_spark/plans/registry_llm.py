@@ -922,23 +922,8 @@ def q_ivf_recall_at_k(spark, sf_dir):
     regressions are visible alongside latency."""
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 20)
-    exact = S.brute_force_topk(emb, qs, k=10).select("query_id", "neighbor_id")
-    approx = (
-        S.ivf_topk(emb, qs, dim=64, k=10, n_centroids=16, n_probe=4)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    # approx is top-k output (<= n_queries*k rows at any scale):
-    # broadcast it or the planner sort-merge-joins two tiny sides.
-    marked = exact.join(
-        F.broadcast(approx), on=["query_id", "neighbor_id"], how="left"
-    )
-    return marked.agg(
-        (F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias(
-            "recall_at_10"
-        ),
-        F.count(F.lit(1)).alias("n_truth_pairs"),
-    )
+    approx = S.ivf_topk(emb, qs, dim=64, k=10, n_centroids=16, n_probe=4)
+    return S.recall_at_k(emb, qs, approx, k=10)
 
 
 # Oracle attached below via _REGISTRY (needs _ivf_pq_sql, defined
@@ -951,26 +936,11 @@ def q_ivf_pq_recall_at_k(spark, sf_dir):
     routing-only loss ivf_recall_at_k tracks."""
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 20)
-    exact = S.brute_force_topk(emb, qs, k=10).select("query_id", "neighbor_id")
-    approx = (
-        S.ivf_pq_topk(
-            emb, qs, dim=64, m=_PQ_M, k_codes=_PQ_K,
-            n_centroids=16, n_probe=4, k=10,
-        )
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
+    approx = S.ivf_pq_topk(
+        emb, qs, dim=64, m=_PQ_M, k_codes=_PQ_K,
+        n_centroids=16, n_probe=4, k=10,
     )
-    # approx is top-k output (<= n_queries*k rows at any scale):
-    # broadcast it or the planner sort-merge-joins two tiny sides.
-    marked = exact.join(
-        F.broadcast(approx), on=["query_id", "neighbor_id"], how="left"
-    )
-    return marked.agg(
-        (F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1))).alias(
-            "recall_at_10"
-        ),
-        F.count(F.lit(1)).alias("n_truth_pairs"),
-    )
+    return S.recall_at_k(emb, qs, approx, k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -3590,24 +3560,12 @@ def q_ivf_trained_recall_at_k(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 20)
     cents = S.kmeans_centroids(emb, n_centroids=16)
-    exact = S.brute_force_topk(emb, qs, k=10).select("query_id", "neighbor_id")
-    approx = (
-        S.ivf_topk(emb, qs, dim=64, k=10, n_centroids=16, n_probe=4,
-                   centroids=cents)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
+    approx = S.ivf_topk(
+        emb, qs, dim=64, k=10, n_centroids=16, n_probe=4, centroids=cents
     )
-    # approx is top-k output (<= n_queries*k rows at any scale):
-    # broadcast it or the planner sort-merge-joins two tiny sides.
-    marked = exact.join(
-        F.broadcast(approx), on=["query_id", "neighbor_id"], how="left"
-    )
-    return marked.agg(
-        F.count(F.lit(1)).alias("n_truth_pairs"),
-        (
-            (F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1)))
-            >= F.lit(0.35)
-        ).alias("recall_floor_met"),
+    return S.recall_at_k(emb, qs, approx, k=10).select(
+        "n_truth_pairs",
+        (F.col("recall_at_10") >= F.lit(0.35)).alias("recall_floor_met"),
     )
 
 

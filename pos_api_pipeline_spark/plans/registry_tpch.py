@@ -1592,15 +1592,13 @@ def q_weekly_cohort_retention(spark, sf_dir):
 def q_rfm_customer_segments(spark, sf_dir):
     """RFM quantile segmentation (operators/analytics.py:
     rfm_segments): aggregate-then-window, decimal-exact monetary,
-    unique-tiebreak ntiles so both engines bin identically.
-    ``exact_ntile=True`` is the deliberate parity twin of this ntile
-    oracle; the DEFAULT rfm_segments path delegates to the
-    windowless percentile-boundary plan (rfm_segments_scalable,
-    oracled separately)."""
+    unique-tiebreak ntiles so both engines bin identically. The
+    windowless percentile-boundary plan (rfm_segments_scalable) is
+    oracled separately."""
     from pos_api_pipeline_spark.operators.analytics import rfm_segments
 
     o = _t(spark, sf_dir, "orders")
-    return rfm_segments(o, exact_ntile=True)
+    return rfm_segments(o)
 
 
 @register(

@@ -95,14 +95,12 @@ def maintain_daily_metrics(
                 F.count(F.lit(1)).alias("n_lines"),
             )
         )
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        (
+            fresh.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("date")
+            .parquet(agg_path)
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            fresh.write.mode("overwrite").partitionBy("date").parquet(agg_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return (
         receipt_stream.writeStream.foreachBatch(update)

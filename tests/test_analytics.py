@@ -226,7 +226,7 @@ def test_rfm_segments_monotone_bins(spark):
     df = spark.createDataFrame(
         rows, "o_custkey long, o_orderdate timestamp, o_totalprice double"
     )
-    res = rfm_segments(df, exact_ntile=True)
+    res = rfm_segments(df)
     out = {r.customer: r for r in res.collect()}
     assert len(out) == 8
     # Best customer on every axis gets the top segment, worst the bottom.
@@ -236,26 +236,6 @@ def test_rfm_segments_monotone_bins(spark):
     fs = [out[c].f for c in range(8)]
     ms = [out[c].m for c in range(8)]
     assert fs == sorted(fs) and ms == sorted(ms)
-
-
-def test_rfm_segments_default_is_windowless_delegate(spark):
-    import datetime as dt
-
-    from pos_api_pipeline_spark.operators.analytics import rfm_segments
-
-    rows = []
-    for c in range(8):
-        for j in range(c + 1):
-            rows.append((c, dt.datetime(2024, 1, 1 + c), float(100 * (c + 1))))
-    df = spark.createDataFrame(
-        rows, "o_custkey long, o_orderdate timestamp, o_totalprice double"
-    )
-    res = rfm_segments(df)  # default: scalable percentile-boundary path
-    out = {r.customer: r for r in res.collect()}
-    assert out[7].rfm_segment == "444" and out[0].rfm_segment == "111"
-    # the defused trap: NO single-partition ntile window by default
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
 
 
 def test_daily_anomaly_scores_flags_the_spike(spark):

@@ -42,6 +42,8 @@ def test_fetch_all_historical_paginates_both_feeds(spark):
 
 
 def test_unimax_allocation_budget_conserved(spark):
+    from pyspark.sql import functions as F
+
     from pos_api_pipeline_spark.llm.sampling import unimax_allocation
 
     rows = [(i, ["en"] * 60 + ["de"] * 25 + ["zh"] * 10 + ["fr"] * 5)
@@ -51,7 +53,10 @@ def test_unimax_allocation_budget_conserved(spark):
          for lang in [rows[0][1][i]]],
         "doc_id long, lang string",
     )
-    out = unimax_allocation(df, "lang", budget_frac=0.5, max_epochs=2.0)
+    out = unimax_allocation(
+        df.withColumn("n_chars", F.lit(1)), "lang", size_col="n_chars",
+        budget_frac=0.5, max_epochs=2.0,
+    )
     got = {r.lang: r for r in out.collect()}
     # budget = 50 units; caps: fr 10, zh 20, de 50, en 120
     total = sum(r.allocation for r in got.values())

@@ -98,6 +98,36 @@ def test_merge_onto_unreadable_month_raises_and_keeps_files(spark, tmp_path):
     assert not os.path.isdir(f"{path}/year=2025/month=7")
 
 
+def test_merge_overwrites_dynamically_under_static_session_conf(spark, tmp_path):
+    """The merge asks for dynamic overwrite on its own write: a session
+    left at ``static`` keeps the untouched month's files and its conf."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        path = str(tmp_path / "lake")
+        lake.merge_and_overwrite(
+            spark,
+            _curated_rows(
+                spark,
+                [
+                    ("r1", "Burger", dt.datetime(2025, 7, 21, 10, 0), 50.0),
+                    ("r2", "Papas", dt.datetime(2025, 8, 2, 11, 0), 30.0),
+                ],
+            ),
+            path,
+        )
+        august = tmp_path / "lake" / "year=2025" / "month=08"
+        before = _file_bytes(august)
+        later = _curated_rows(spark, [("r3", "Agua", dt.datetime(2025, 7, 22, 9, 0), 20.0)])
+        lake.merge_and_overwrite(spark, later, path)
+        assert _file_bytes(august) == before
+        assert lake.read_lake(spark, path).count() == 3
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_json_roundtrip(spark, tmp_path):
     from pos_api_pipeline_spark.schemas import RECEIPT_SCHEMA
 

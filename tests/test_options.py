@@ -3,9 +3,13 @@ a branch is reached both ways by real callers, or is named here with
 the reason it stays.
 
 A parameter picks a branch when an ``if`` statement or conditional
-expression in its function's body tests it. The calls counted are
-every call to the function by name or attribute outside ``tests/``:
-the package, ``tools/``, ``bench.py``, ``perfbench/``, ``dags/`` and
+expression in its function's body tests it. Where the test passes it
+on as an argument of a package function, it picks a branch only if
+that function's parameter does — by the same rule, or because the
+function returns a call that hands the parameter to a package
+function whose parameter picks a branch. The calls counted are every
+call to the function by name or attribute outside ``tests/``: the
+package, ``tools/``, ``bench.py``, ``perfbench/``, ``dags/`` and
 ``__spark_entry__.py``. A function that ``tests/test_public_surface.py``
 allow-lists has no caller outside the tests, so for it the calls in
 ``tests/`` count too. Three checks:
@@ -16,12 +20,11 @@ allow-lists has no caller outside the tests, so for it the calls in
    unchanged whose callers never set it. A ``*args`` or ``**kwargs``
    splat sets every parameter it could reach.
 2. A defaulted branching parameter is left at its default by some
-   call, so the default's branch runs. Here every call counts, the
-   tests' included: a test that runs the default's branch keeps it
-   exercised, and the check catches a default no call leaves in
-   place. A call leaves it there when it omits it, passes a literal
-   equal to the default, passes the caller's own defaulted parameter
-   on, or splats.
+   call, so the default's branch runs. A call leaves it there when it
+   omits it, passes a literal equal to the default, passes the
+   caller's own defaulted parameter on, or splats. A default every
+   counted call overrides is named in ``OVERRIDDEN`` with the reason
+   it stays.
 3. Every string arm ``p == "x"`` of a parameter ``p`` is passed by
    some call: ``"x"`` as a literal, a non-literal argument, a splat,
    or ``"x"`` as the default of a call that leaves ``p`` there.
@@ -42,7 +45,7 @@ _DELIVERY = "reference S17 delivery setting; the DAG has no delivery setting yet
 _SIZE = "size threshold tests shrink to reach the large-input arm"
 _ITEMS = "reference items fetch; the DAG has no items endpoint setting"
 _PIN = "per-call pin of the auto-probed collapse (ROADMAP standing decision)"
-_PROBED = "text column name the collapse probe reads; the name picks no branch"
+_RANGE = "the branch only rejects out-of-range input"
 
 ALLOWED = {
     ("send_report_by_email", "attach_pdf"): _DELIVERY,
@@ -54,14 +57,23 @@ ALLOWED = {
     ("embedding_near_dup_pairs", "collapse_exact"): _PIN,
     ("ngram_jaccard_pairs", "collapse_exact"): _PIN,
     ("simhash_near_dups", "collapse_exact"): _PIN,
-    ("ngram_jaccard_pairs", "text_col"): _PROBED,
-    ("minhash_lsh_candidates", "text_col"): _PROBED,
-    ("simhash_near_dups", "text_col"): _PROBED,
-    ("repeated_spans_exact", "min_len"): "the branch only rejects out-of-range input",
+    ("repeated_spans_exact", "min_len"): _RANGE,
     ("select_by_token_budget", "max_edge_rows"): _SIZE,
     ("centroids_for_corpus", "target_cluster_size"): _SIZE,
     ("daily_incremental_run", "fetch_items_page"): _ITEMS,
     ("daily_incremental_run", "items_dim_path"): _ITEMS,
+}
+
+# Defaults every counted call overrides, so only tests run the
+# default's branch.
+_ONE_PARTITION = "ungrouped form; a constant group key would put every row in one window partition"
+OVERRIDDEN = {
+    ("standardize_columns", "by"): _ONE_PARTITION,
+    ("weighted_sample_without_replacement", "strata_col"): _ONE_PARTITION,
+    ("semantic_dedup", "n_centroids"): "the registry passes the default through the constant its oracle shares",
+    ("with_shingles", "hashed"): "string shingles are the reference the hashed ones are pinned to",
+    ("chunk_documents", "overlap"): _RANGE,
+    ("repeated_substring_spans", "k"): _RANGE,
 }
 
 _UNKNOWN = object()
@@ -112,14 +124,59 @@ def _params(fn: ast.FunctionDef):
     return positional, {k: _literal(v) for k, v in defaults.items()}
 
 
-def _tested_names(fn: ast.FunctionDef) -> set[str]:
-    return {
-        n.id
-        for node in ast.walk(fn)
-        if isinstance(node, (ast.If, ast.IfExp))
-        for n in ast.walk(node.test)
-        if isinstance(n, ast.Name)
-    }
+def _handed_on(expr, fns, picks) -> dict[int, bool]:
+    """{id of a bare-name argument node: whether the parameter it lands
+    in picks a branch} for every package-function call in ``expr``."""
+    out = {}
+    for call in ast.walk(expr):
+        if not isinstance(call, ast.Call):
+            continue
+        f = call.func
+        callee = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if callee not in fns:
+            continue
+        passed = _passed(_params(fns[callee])[0], call) or {}
+        for p, arg in passed.items():
+            if isinstance(arg, ast.Name):
+                out[id(arg)] = p in picks(callee)
+    return out
+
+
+def _branching(fns: dict[str, ast.FunctionDef]):
+    """``(tested, picks)``: ``tested(name)`` is the names an ``if`` test
+    in package function ``name`` picks a branch on; ``picks(name)``
+    adds the names it returns into a package call whose parameter picks
+    a branch (see the module docstring)."""
+    memo: dict[str, set[str]] = {}
+
+    def named(expr, default: bool) -> set[str]:
+        handed = _handed_on(expr, fns, picks)
+        return {
+            n.id
+            for n in ast.walk(expr)
+            if isinstance(n, ast.Name) and handed.get(id(n), default)
+        }
+
+    def tested(name: str) -> set[str]:
+        return {
+            n
+            for node in ast.walk(fns[name])
+            if isinstance(node, (ast.If, ast.IfExp))
+            for n in named(node.test, True)
+        }
+
+    def picks(name: str) -> set[str]:
+        if name not in memo:
+            memo[name] = set()  # a recursive call adds nothing
+            memo[name] = tested(name) | {
+                n
+                for node in ast.walk(fns[name])
+                if isinstance(node, ast.Return) and node.value is not None
+                for n in named(node.value, False)
+            }
+        return memo[name]
+
+    return tested, picks
 
 
 def _string_arms(fn: ast.FunctionDef) -> set[tuple[str, str]]:
@@ -174,11 +231,11 @@ def _passed(positional, call):
     return out
 
 
-def _scan(repo: pathlib.Path, test_callers: set[str] | None):
+def _scan(repo: pathlib.Path):
     """Package functions, their signatures and their counted calls as
     (argument map or None for a splat, owner name, owner's defaults).
-    Calls in ``tests/`` count for the names in ``test_callers``, or for
-    every name when it is None."""
+    Calls in ``tests/`` count only for the names
+    ``tests/test_public_surface.py`` allow-lists."""
     pkg = repo / "pos_api_pipeline_spark"
     fns = {
         node.name: node
@@ -188,6 +245,7 @@ def _scan(repo: pathlib.Path, test_callers: set[str] | None):
     }
     sig = {name: _params(fn) for name, fn in fns.items()}
     calls: dict[str, list] = {name: [] for name in fns}
+    test_callers = _surface_allowed(repo)
     for paths, only in ((_sources(repo), None), (_test_sources(repo), test_callers)):
         for name, call, owner in _calls(paths):
             if name not in sig or (only is not None and name not in only):
@@ -204,7 +262,8 @@ def _sets_non_default(arg, default) -> bool:
 
 
 def _unset_options(repo: pathlib.Path) -> set[tuple[str, str]]:
-    fns, sig, calls = _scan(repo, _surface_allowed(repo))
+    fns, sig, calls = _scan(repo)
+    tested, _ = _branching(fns)
     # set[(fn, param)] holds once any call sets it: a literal or an
     # expression does at once; a bare name of the caller's own
     # defaulted parameter does when that parameter is set (fixpoint).
@@ -234,7 +293,7 @@ def _unset_options(repo: pathlib.Path) -> set[tuple[str, str]]:
         (name, p)
         for name, fn in fns.items()
         if not name.startswith("_")
-        for p in sig[name][1].keys() & _tested_names(fn)
+        for p in sig[name][1].keys() & tested(name)
         if (name, p) not in is_set
     }
 
@@ -249,13 +308,14 @@ def _leaves_default(passed, p, default, owner_defaults) -> bool:
 
 
 def _always_overridden(repo: pathlib.Path) -> set[tuple[str, str]]:
-    fns, sig, calls = _scan(repo, None)
+    fns, sig, calls = _scan(repo)
+    tested, _ = _branching(fns)
     return {
         (name, p)
-        for name, fn in fns.items()
+        for name in fns
         if not name.startswith("_") and calls[name]
         for p, default in sig[name][1].items()
-        if p in _tested_names(fn)
+        if p in tested(name)
         and not any(
             _leaves_default(passed, p, default, od) for passed, _, od in calls[name]
         )
@@ -273,7 +333,7 @@ def _may_pass(passed, p, value, default) -> bool:
 
 
 def _unpassed_arms(repo: pathlib.Path) -> set[tuple[str, str, str]]:
-    fns, sig, calls = _scan(repo, _surface_allowed(repo))
+    fns, sig, calls = _scan(repo)
     return {
         (name, p, value)
         for name, fn in fns.items()
@@ -291,7 +351,7 @@ def test_every_branching_option_is_set_by_a_caller():
 
 
 def test_no_branching_default_is_overridden_by_every_call():
-    assert _always_overridden(_repo()) == set()
+    assert _always_overridden(_repo()) == set(OVERRIDDEN)
 
 
 def test_every_dispatch_arm_is_passed_by_a_caller():

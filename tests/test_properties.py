@@ -626,12 +626,15 @@ def test_unimax_waterfill_invariants(spark, sizes, frac):
     """UniMax water-filling invariants for any stratum profile:
     every allocation within (0, cap]; total allocation equals
     min(budget, sum of caps) up to per-row rounding slack."""
+    from pyspark.sql import functions as F
+
     from pos_api_pipeline_spark.llm.sampling import unimax_allocation
 
     rows = [(i, f"s{si}") for si, n in enumerate(sizes) for i in range(n)]
     df = spark.createDataFrame(rows, "doc_id long, lang string")
     out = unimax_allocation(
-        df, "lang", budget_frac=frac, max_epochs=2.0
+        df.withColumn("n_chars", F.lit(1)), "lang", size_col="n_chars",
+        budget_frac=frac, max_epochs=2.0,
     ).collect()
     budget = float(int(sum(sizes) * frac + 0.5))
     cap_total = 2.0 * sum(sizes)

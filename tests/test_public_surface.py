@@ -77,7 +77,6 @@ ALLOWED = {
     "build_band_index": "COVERAGE standing MinHash band index for incremental dedup",
     "planes_for_corpus": "LSH plane-count sizing rule for callers who know the corpus size",
     # per-row references
-    "cosine": "column form of the fold the search paths inline with cached norms",
     "simhash": _REFERENCE,
     "word_shingles": _REFERENCE,
     # training-set curation
