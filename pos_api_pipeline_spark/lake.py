@@ -7,23 +7,33 @@ etl/load.py:52-105, 162-224). Spark-first replacement:
 
 - ``partitionBy('year','month')`` produces the identical Hive layout
   in one distributed write — the month loop disappears.
-- merge+dedup upsert = unionByName → W1 window dedup → dynamic
-  partition overwrite, which rewrites ONLY the partitions present in
-  the incoming batch. This implements the reference's *stated intent*;
-  the reference itself has a bug where the deduped frame is computed
-  but the un-deduped new rows are written (etl/load.py:210-223) —
-  documented deviation (SURVEY.md §7.4.8).
+- merge+dedup upsert is append-or-rewrite, decided per batch on its
+  keys. A batch none of whose keys is stored in its months is
+  window-deduped alone and appended: new files in its partitions,
+  no stored file touched (the reference's uuid-suffixed per-run
+  files). A batch whose keys match stored rows — matched null-safely,
+  as the W1 window groups them (a receipt with no line items carries
+  a null ``item_name``), through a hash of the keys — or one too large
+  to probe from the driver rewrites its months: unionByName → W1
+  window dedup (latest wins) → dynamic partition overwrite of ONLY
+  those months, one file each. This implements the reference's
+  *stated intent*; the reference itself has a bug where the deduped
+  frame is computed but the un-deduped new rows are written
+  (etl/load.py:210-223) — documented deviation (SURVEY.md §7.4.8).
+- Appends leave one small file per month per batch; the month-end
+  tick (``plans/dag.py``) compacts the month that just closed.
 
-Scale notes: dynamic overwrite touches O(affected months), not the
-table; the dedup window shuffles only the union'd batch + affected
-partitions, never full history. Writers ``repartition`` by the
-partition columns so each month lands as a few well-sized files
-instead of one file per task (the classic small-files failure).
+Scale notes: an append touches only the batch; a rewrite touches
+O(affected months), never the table, and its dedup window shuffles
+only the batch + affected partitions. The full-load writer
+``repartition``s by the partition columns so each month lands as a
+few well-sized files instead of one file per task (the classic
+small-files failure).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -93,6 +103,49 @@ def read_lake(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(LAKE_SCHEMA).parquet(path)
 
 
+def in_months(months: Iterable[tuple[int | str | None, int | str | None]]) -> Column:
+    """Static predicate on the year=/month= partition columns selecting
+    ``months`` ((year, month) pairs), the shape of the reference's
+    ``WHERE (year='Y' AND month='M') OR ...`` (monthly_report.py:61-63):
+    Catalyst prunes the scan to those directories at planning time.
+    Ints are formatted as the lake writes them; the lake's own strings
+    pass through unchanged, including the ``(None, 'null')`` partition a
+    null ``shifted_time`` lands in. No months selects nothing."""
+    cond = F.lit(False)
+    for y, m in dict.fromkeys(
+        (
+            y if y is None or isinstance(y, str) else str(y),
+            m if m is None or isinstance(m, str) else f"{m:02d}",
+        )
+        for y, m in months
+    ):
+        cond = cond | (F.col("year").eqNullSafe(y) & F.col("month").eqNullSafe(m))
+    return cond
+
+
+#: A batch of up to this many rows is probed for stored keys from the
+#: driver and appended in one task (a page is a few hundred rows). A
+#: larger one rewrites its months, the distributed path.
+_PROBE_ROWS = 10_000
+
+
+def _stored_keys_collide(
+    stored: DataFrame, hashes: set[int], keys: Sequence[str]
+) -> bool:
+    """Whether a row of ``stored`` may carry a batch key: one job that
+    matches ``xxhash64`` of the key columns against the batch's hashes.
+    Equal keys hash equal, nulls included, so a stored key is never
+    missed; a hash clash only sends the batch down the rewrite, which
+    is always correct. The hashes form one ``IN`` list, parsed in one
+    call and run as a hash set."""
+    if not hashes:
+        return False
+    cols = ", ".join(f"`{k}`" for k in keys)
+    values = ", ".join(f"{h}L" for h in hashes)
+    match = F.expr(f"xxhash64({cols}) IN ({values})")
+    return bool(stored.filter(match).select(*keys).collect())
+
+
 def merge_and_overwrite(
     spark: SparkSession,
     new_df: DataFrame,
@@ -100,34 +153,71 @@ def merge_and_overwrite(
     keys=("receipt_number", "item_name"),
     order_col: str = "shifted_time",
 ) -> None:
-    """W4 — incremental upsert: union affected partitions with the new
-    batch, window-dedup (latest wins), dynamically overwrite only
-    those partitions.
+    """W4 — incremental upsert: append the batch when none of its keys
+    is stored in its months, else rewrite those months (latest wins).
 
-    Matches the reference's intent at etl/load.py:162-224 (read month
-    → concat → dedup → write), minus its write-path bug, plus
-    correctness under concurrent months (all affected months handled
-    in one write).
+    The month and the ``xxhash64`` of the keys of each batch row come
+    to the driver, at most ``_PROBE_ROWS`` of them; over a
+    ``LocalRelation`` that takes no job, the projection folds into the
+    relation. One job then looks for a stored row of those months with
+    one of the hashes (``_stored_keys_collide``): a key matches
+    null-safely, as the W1 window groups keys (a receipt with no line
+    items carries a null ``item_name``).
+
+    - No match (every daily tick: the watermark keeps redelivered
+      receipts out): the batch alone is window-deduped as one
+      partition and appended — one task, no shuffle, no stored file
+      touched.
+    - A match, or a batch over ``_PROBE_ROWS`` rows: the affected
+      months are unioned with the batch, window-deduped (latest wins)
+      and dynamically overwritten, the reference's read month → concat
+      → dedup → write (etl/load.py:162-224) minus its write-path bug,
+      with every affected month handled in one write. Each rewritten
+      month lands as one file.
+
+    A missing lake is the first write. A cross-month redelivery (a key
+    stored in a month the batch does not touch) is out of scope, as in
+    the reference's per-month merge.
     """
-    new_curated = with_partition_columns(conform(new_df, CURATED_SCHEMA))
+    batch = with_partition_columns(conform(new_df, CURATED_SCHEMA))
+    probe = (
+        batch.select("year", "month", F.xxhash64(*keys).alias("h"))
+        .limit(_PROBE_ROWS + 1)
+        .collect()
+    )
+    small = len(probe) <= _PROBE_ROWS
+    if small:
+        # One partition satisfies the window's clustering, so the dedup
+        # plans no exchange and each month gets one file.
+        batch = batch.coalesce(1)
     # Existence check, NOT try/except around the read: a transient
-    # read error must propagate — swallowing it would make the
-    # dynamic overwrite replace affected months with just the new
-    # batch (silent data loss). Only a genuinely absent lake means
-    # 'first write'.
-    if lake_exists(spark, path):
-        existing = read_lake(spark, path)
-        # Restrict history to the affected partitions only — a
-        # broadcast semi-join on (year, month) lets Catalyst prune
-        # the scan to those directories.
-        months = new_curated.select("year", "month").distinct()
-        affected = existing.join(F.broadcast(months), ["year", "month"], "left_semi")
-        merged = affected.unionByName(new_curated)
-    else:
-        merged = new_curated
-    deduped = window_dedup(merged, keys=keys, order_col=order_col)
+    # read error must propagate — swallowing it would make the write
+    # treat a stored month as absent. Only a genuinely absent lake
+    # means 'first write'.
+    exists = lake_exists(spark, path)
+    if exists:
+        months = probe if small else batch.select("year", "month").distinct().collect()
+        stored = read_lake(spark, path).filter(
+            in_months((r["year"], r["month"]) for r in months)
+        )
+    if small and not (
+        exists and _stored_keys_collide(stored, {r["h"] for r in probe}, keys)
+    ):
+        (
+            window_dedup(batch, keys=keys, order_col=order_col)
+            .write.mode("append")
+            .partitionBy("year", "month")
+            .parquet(path)
+        )
+        return
+    deduped = window_dedup(
+        stored.unionByName(batch) if exists else batch, keys=keys, order_col=order_col
+    )
+    # One file per month: a page's one or two months go through one
+    # writer task (no second shuffle), a larger batch's through one
+    # task per month.
     (
-        deduped.repartition("year", "month")
+        (deduped.coalesce(1) if small else deduped.repartition("year", "month"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("year", "month")
@@ -260,20 +350,23 @@ def scd2_merge(
 def compact_partitions(
     spark: SparkSession,
     path: str,
-    files_per_partition: int = 1,
+    months: Iterable[tuple[int | str, int | str]],
 ) -> None:
-    """Small-files compaction: rewrite every year=/month= partition to
-    ``files_per_partition`` files.
+    """Small-files compaction: rewrite each year=/month= partition of
+    ``months`` as one file, leaving every other partition untouched.
 
-    Incremental upserts accumulate files per partition (the reference
-    appends uuid-suffixed parquet per run, etl/load.py:217-219); at
-    scale thousands of small files dominate scan cost via open/footer
-    overhead. Dynamic overwrite + repartition on the partition columns
-    rewrites each directory in place.
+    Appending upserts leave one file per month per batch (the
+    reference appends uuid-suffixed parquet per run,
+    etl/load.py:217-219); at scale thousands of small files dominate
+    scan cost via open/footer overhead. The month-end tick compacts
+    the month that just closed. One task reads the named months and
+    the writer's partition sort gives each one file; dynamic
+    overwrite replaces only those directories.
     """
     (
         read_lake(spark, path)
-        .repartition(files_per_partition, "year", "month")
+        .filter(in_months(months))
+        .coalesce(1)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("year", "month")

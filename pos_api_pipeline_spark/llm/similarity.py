@@ -528,6 +528,15 @@ def _grp_self_entries(m: Column) -> Column:
     )
 
 
+def _replica_groups(src: DataFrame) -> DataFrame:
+    """One row per distinct vector of ``src`` (id, vec): its replica
+    ids sorted (``ids``) and the smallest as its rep ``id``, the
+    collapsed arms' unit of work. ``sort_array``, not ``array_sort``:
+    a lambda-bearing sort would block exchange reuse."""
+    grouped = src.groupBy("vec").agg(F.sort_array(F.collect_list("id")).alias("ids"))
+    return grouped.select(F.element_at("ids", 1).alias("id"), "vec", "ids")
+
+
 def _member_buckets(src: DataFrame, keys: list[str], collapsed: bool) -> DataFrame:
     """``src`` rows grouped by ``keys`` into sorted (id, vec, nrm[,
     ids]) member arrays, the norm evaluated row-side; only buckets that
@@ -737,13 +746,7 @@ def embedding_near_dup_pairs(
         if big_pairs is not None:
             pairs = pairs.unionByName(big_pairs)
         return pairs.distinct()
-    grouped = base.groupBy("vec").agg(
-        F.array_sort(F.collect_list("id")).alias("ids")
-    )
-    reps = grouped.select(
-        F.element_at("ids", 1).alias("id"), "vec", "ids"
-    )
-    v = _multi_table_buckets(reps, "vec", dim, n_planes, n_tables)
+    v = _multi_table_buckets(_replica_groups(base), "vec", dim, n_planes, n_tables)
     # Over-cap buckets (counting DISTINCT vector groups) take the
     # same ROW-GRAIN star guard as the uncollapsed arm (r12): a
     # mega-bucket of distinct-but-near-identical groups would build
@@ -986,13 +989,7 @@ def semantic_dedup(
             "centroid_id",
             (F.col("_dup").isNull() & ~mega_drop).alias("kept"),
         )
-    grouped = v.groupBy("vec").agg(
-        F.sort_array(F.collect_list("id")).alias("ids")
-    )
-    reps = grouped.select(
-        F.element_at("ids", 1).alias("id"), "vec", "ids"
-    )
-    assigned = assign_nearest_centroids(reps, cents, "id", "vec", 1)
+    assigned = assign_nearest_centroids(_replica_groups(v), cents, "id", "vec", 1)
     # Over-cap clusters at distinct-GROUP grain take the same
     # ROW-GRAIN guard as every other vector arm (r12): the star
     # arm's per-family decision (self-cosine drop + lim vs the

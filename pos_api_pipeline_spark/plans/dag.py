@@ -22,6 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from pos_api_pipeline_spark import lake
 from pos_api_pipeline_spark.operators.combos import explode_combo_items
 from pos_api_pipeline_spark.plans import pipelines, report
 from pos_api_pipeline_spark.plans.plots import generate_all_report_figures
@@ -112,11 +113,12 @@ def run_production_etl(
     {task_id: status, ...} plus the artifacts produced.
 
     Branch semantics match the Airflow original: the ETL always runs;
-    on the 1st both report tasks run and 'skip_reporting_task' is
-    skipped; any other day the reports are skipped. 'end' succeeds
-    when at least one upstream did (none_failed_min_one_success) —
-    with no failures that is always true, and a failed ETL raises out
-    of this function exactly like a failed Airflow task fails the run.
+    on the 1st the closed month is compacted, both report tasks run
+    and 'skip_reporting_task' is skipped; any other day the reports
+    are skipped. 'end' succeeds when at least one upstream did
+    (none_failed_min_one_success) — with no failures that is always
+    true, and a failed ETL raises out of this function exactly like a
+    failed Airflow task fails the run.
     """
     statuses: dict[str, object] = {"start": "success"}
     etl = pipelines.daily_incremental_run(
@@ -134,6 +136,9 @@ def run_production_etl(
         statuses[SKIP_TASK] = "success"
     else:
         statuses[SKIP_TASK] = "skipped"
+        # The daily ticks appended one file per tick to the month that
+        # just closed; fold them into one before the reports scan it.
+        lake.compact_partitions(spark, lake_path, [report_month_for(run_date)])
         statuses["monthly_report_md"] = monthly_report(
             spark, lake_path, run_date, report_dir
         )
@@ -163,10 +168,10 @@ def backfill(
 
     Idempotency is inherited, not re-implemented: the daily ETL's
     watermark state makes replayed fetches incremental, and the
-    merge-overwrite upsert (W1 latest-wins dedup + dynamic partition
-    overwrite) converges when a day is run twice — so a backfill over
-    an already-processed range is safe, exactly like re-running an
-    Airflow interval. First-of-month ticks regenerate their reports,
+    append-or-rewrite upsert (a redelivered key rewrites its months
+    with W1 latest-wins dedup) converges when a day is run twice — so
+    a backfill over an already-processed range is safe, exactly like
+    re-running an Airflow interval. First-of-month ticks regenerate their reports,
     which is precisely what a reporting backfill is for.
     """
     if start_date > end_date:

@@ -3,14 +3,17 @@
 The three entry points of the reference, rebuilt Spark-first:
 
 - ``daily_incremental_run`` (reference: main.py:24-75): watermark →
-  fetch → transform → merge-upsert → watermark advance. The transform
-  chain is one lazy Catalyst plan. The batch is a ``LocalRelation``, so
-  the ``isEmpty`` check folds into it and runs no job; an empty batch
-  stops there. A non-empty tick runs one action over the batch, the
-  lake merge write (plus the items SCD2 merge when an items fetcher is
-  given). The new watermark ``max(updated_at)`` and the count of
-  curated rows ride on that write as observed metrics, and the batch
-  is read as one partition, so every stage over it runs one task.
+  fetch → transform → merge-upsert → watermark advance. The batch is
+  a ``LocalRelation``, so the ``isEmpty`` check folds into it and runs
+  no job; an empty batch stops there. A non-empty tick computes the
+  curated page once, as one task, and pulls it to the driver as an
+  Arrow table (a page is at most ``fetch_incremental``'s limit of
+  receipts); the new watermark ``max(updated_at)`` rides on that job
+  as an observed metric. The page is re-landed as a ``LocalRelation``
+  for the lake merge, which on the append path (no stored key
+  collides) runs two more jobs: the key probe and the one-task
+  append. A tick is 3 jobs; a redelivered page rewrites its months
+  in 4 (plus the items SCD2 merge when an items fetcher is given).
 - ``monthly_report_data`` (reference:
   reporting/monthly_report.py:634-692): two-month partition-pruned
   scan → window dedup → clean → combo explode → analytics fan-out
@@ -78,15 +81,16 @@ def daily_incremental_run(
     # below it would run one.
     if new_receipts.isEmpty():
         return {"rows": 0, "watermark": wm}
-    # A page holds at most fetch_incremental's limit of receipts, one
-    # task's worth; a LocalRelation scan splits into
-    # min(rows, defaultParallelism) tasks. The watermark and the row
-    # count are observed on the lake write instead of computed by two
-    # more actions. Unnamed observations get unique metric names.
-    watermark, rows = Observation(), Observation()
+    # A LocalRelation scan splits into min(rows, defaultParallelism)
+    # tasks; a page is one task's worth. The page is computed once
+    # here and re-landed, so the merge's key collect folds into the
+    # relation and its write scans no receipt and runs no explode.
+    # The watermark is observed on this job instead of computed by
+    # another action; an unnamed observation gets a unique metric name.
+    watermark = Observation()
     batch = new_receipts.coalesce(1).observe(watermark, F.max("updated_at").alias("wm"))
-    curated = run_transform(batch).observe(rows, F.count(F.lit(1)).alias("n"))
-    lake.merge_and_overwrite(spark, curated, lake_path)
+    page = run_transform(batch).toArrow()
+    lake.merge_and_overwrite(spark, spark.createDataFrame(page), lake_path)
     if fetch_items_page is not None and items_dim_path is not None:
         items = items_to_df(spark, list(paginate(fetch_items_page)))
         items = items.withColumn("updated", F.current_timestamp())
@@ -94,11 +98,10 @@ def daily_incremental_run(
             spark, items_dim_path, items,
             key="id", ts_col="updated", tracked_cols=["item_name", "price"],
         )
-    # Read only after the merge returned: a failed write never reaches
-    # Observation.get (which would wait forever) and leaves the
+    # Read only after the merge returned: a failed write leaves the
     # watermark where it was (at-least-once redelivery).
     new_wm = state.update_last_timestamp(state_file, watermark.get["wm"])
-    return {"rows": rows.get["n"], "watermark": new_wm or wm}
+    return {"rows": page.num_rows, "watermark": new_wm or wm}
 
 
 def _cleaned_lake(
@@ -130,18 +133,12 @@ def monthly_report_data(
     roll the year instead, implementing the intent)."""
     prev_year, prev_month = (year, month - 1) if month > 1 else (year - 1, 12)
     months = [(year, month), (prev_year, prev_month)]
-    # Partition-pruned predicate, same shape as the reference's WHERE
-    # (year='Y' AND month='M') OR (year='Y2' AND month='M2')
-    # (monthly_report.py:61-63) — Catalyst prunes to two directories.
-    cond = None
-    for y, m in months:
-        c = (F.col("year") == str(y)) & (F.col("month") == f"{m:02d}")
-        cond = c if cond is None else (cond | c)
     # The reference's split (monthly_report.py:656-676): every
     # comparison analytic runs on cleaned_df; ONLY top-products runs
     # on the exploded frame, sliced to the report month by
     # shifted_time's '%Y-%m' tag. Cache cleaned — it fans out 4 ways.
-    cleaned = _cleaned_lake(spark, lake_path, cond).withColumn(
+    # Partition-pruned to the two months (monthly_report.py:61-63).
+    cleaned = _cleaned_lake(spark, lake_path, lake.in_months(months)).withColumn(
         "month_tag", F.date_format("datetime", "yyyy-MM")
     ).cache()
     exploded = explode_combo_items(cleaned)

@@ -2,11 +2,13 @@
 batch loop as a genuine stream.
 
 ``foreachBatch`` gives each micro-batch a plain DataFrame + epoch id,
-so the batch merge/dedup/overwrite path (lake.merge_and_overwrite)
+so the batch append-or-rewrite upsert (lake.merge_and_overwrite)
 runs unchanged per batch with exactly-once effect: the checkpoint
-records the epoch, and re-processing an epoch after failure rewrites
-the same partitions idempotently (the W1 dedup makes replays
-converge).
+records the epoch, and re-processing an epoch after failure finds
+its keys stored by the failed attempt and rewrites the same
+partitions (the W1 dedup makes replays converge). Only a month and a
+key hash per row of a page-sized micro-batch come back to the
+driver; a larger one takes the merge's distributed rewrite.
 
 This is the idiomatic upgrade path SURVEY.md §1.4 names for the
 reference's fetch→transform→merge loop (reference: main.py:24-75).

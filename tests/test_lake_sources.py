@@ -123,10 +123,178 @@ def test_merge_overwrites_dynamically_under_static_session_conf(spark, tmp_path)
         lake.merge_and_overwrite(spark, later, path)
         assert _file_bytes(august) == before
         assert lake.read_lake(spark, path).count() == 3
+        # A redelivered July key takes the rewrite path.
+        resent = _curated_rows(spark, [("r1", "Burger", dt.datetime(2025, 7, 21, 12, 0), 55.0)])
+        lake.merge_and_overwrite(spark, resent, path)
+        assert _file_bytes(august) == before
+        assert lake.read_lake(spark, path).count() == 3
         assert spark.conf.get(key) == "static"
     finally:
         spark.conf.set(key, prev)
 
+
+def test_merge_appends_new_keys_and_keeps_stored_files(spark, tmp_path):
+    """Keys the month does not hold append: a new file beside the
+    stored ones, each of which keeps its name and bytes."""
+    path = str(tmp_path / "lake")
+    lake.merge_and_overwrite(
+        spark,
+        _curated_rows(spark, [("r1", "Burger", dt.datetime(2025, 7, 21, 10, 0), 50.0)]),
+        path,
+    )
+    month = tmp_path / "lake" / "year=2025" / "month=07"
+    before = _file_bytes(month)
+    lake.merge_and_overwrite(
+        spark,
+        _curated_rows(
+            spark,
+            [
+                ("r2", "Burger", dt.datetime(2025, 7, 22, 10, 0), 50.0),
+                ("r1", "Papas", dt.datetime(2025, 7, 21, 10, 0), 30.0),
+            ],
+        ),
+        path,
+    )
+    after = _file_bytes(month)
+    assert {p: after.get(p) for p in before} == before
+    assert len(list(month.glob("*.parquet"))) == 2
+    assert lake.read_lake(spark, path).count() == 3
+
+
+def test_merge_resent_key_with_later_time_replaces_stored_row(spark, tmp_path):
+    """A stored key re-sent with a later ``shifted_time`` collides, and
+    the rewrite keeps only the latest version, even when the month
+    holds appended files."""
+    path = str(tmp_path / "lake")
+    for row in [
+        ("r1", "Burger", dt.datetime(2025, 7, 21, 10, 0), 50.0),
+        ("r2", "Papas", dt.datetime(2025, 7, 22, 10, 0), 30.0),
+    ]:
+        lake.merge_and_overwrite(spark, _curated_rows(spark, [row]), path)
+    month = tmp_path / "lake" / "year=2025" / "month=07"
+    assert len(list(month.glob("*.parquet"))) == 2
+    lake.merge_and_overwrite(
+        spark,
+        _curated_rows(spark, [("r1", "Burger", dt.datetime(2025, 7, 21, 12, 0), 55.0)]),
+        path,
+    )
+    rows = {(r.receipt_number, r.item_name): r for r in lake.read_lake(spark, path).collect()}
+    assert len(rows) == 2
+    assert rows[("r1", "Burger")].price == 55.0
+    assert rows[("r1", "Burger")].shifted_time == dt.datetime(2025, 7, 21, 12, 0)
+    assert rows[("r2", "Papas")].price == 30.0
+
+
+def test_merge_redelivered_null_item_line_is_stored_once(spark, tmp_path):
+    """A receipt with no line items lands with a null ``item_name``;
+    its redelivery matches the stored line null-safely, as the dedup
+    window groups it, so the line is stored once."""
+    path = str(tmp_path / "lake")
+    empty = [("r9", None, dt.datetime(2025, 7, 21, 10, 0), 0.0)]
+    lake.merge_and_overwrite(spark, _curated_rows(spark, empty), path)
+    lake.merge_and_overwrite(spark, _curated_rows(spark, empty), path)
+    later = [("r9", None, dt.datetime(2025, 7, 21, 11, 0), 0.0)]
+    lake.merge_and_overwrite(spark, _curated_rows(spark, later), path)
+    out = lake.read_lake(spark, path).collect()
+    assert len(out) == 1
+    assert out[0].item_name is None
+    assert out[0].shifted_time == dt.datetime(2025, 7, 21, 11, 0)
+
+
+
+def test_merge_null_receipt_date_into_an_existing_lake(spark, tmp_path):
+    """A line with a null ``shifted_time`` lands in the lake's
+    ``year=__HIVE_DEFAULT_PARTITION__/month=null`` partition; merging it
+    into an existing lake appends, and sending it again collides there
+    and leaves it stored once."""
+    path = str(tmp_path / "lake")
+    lake.merge_and_overwrite(
+        spark,
+        _curated_rows(spark, [("r1", "Burger", dt.datetime(2025, 7, 21, 10, 0), 50.0)]),
+        path,
+    )
+    undated = _curated_rows(spark, [("r2", "Papas", None, 30.0)])
+    lake.merge_and_overwrite(spark, undated, path)
+    lake.merge_and_overwrite(spark, undated, path)
+    out = {(r.receipt_number, r.year, r.month) for r in lake.read_lake(spark, path).collect()}
+    assert out == {("r1", "2025", "07"), ("r2", None, "null")}
+    assert os.path.isdir(f"{path}/year=__HIVE_DEFAULT_PARTITION__/month=null")
+
+
+def test_in_months_takes_ints_and_the_lakes_strings(spark, tmp_path):
+    path = str(tmp_path / "lake")
+    lake.write_partitioned(
+        _curated_rows(
+            spark,
+            [
+                ("r1", "Burger", dt.datetime(2025, 7, 21, 10, 0), 50.0),
+                ("r2", "Papas", dt.datetime(2025, 8, 2, 11, 0), 30.0),
+                ("r3", "Agua", None, 20.0),
+            ],
+        ),
+        path,
+    )
+    stored = lake.read_lake(spark, path)
+
+    def picked(months):
+        return sorted(r.receipt_number for r in stored.filter(lake.in_months(months)).collect())
+
+    assert picked([(2025, 7)]) == ["r1"]
+    assert picked([("2025", "08"), (2025, 8)]) == ["r2"]
+    assert picked([(None, "null")]) == ["r3"]
+    assert picked([]) == []
+
+
+def test_merge_rewrite_lands_one_file_per_month(spark, tmp_path):
+    """A colliding batch rewrites each of its months as one file, with
+    the dedup window's shuffle forced to many partitions."""
+    path = str(tmp_path / "lake")
+    rows = [
+        (f"r{i}", "Burger", dt.datetime(2025, 7 + i % 2, 10 + i % 9, 10, 0), 50.0)
+        for i in range(40)
+    ]
+    lake.merge_and_overwrite(spark, _curated_rows(spark, rows), path)
+    later = [(r, item, ts + dt.timedelta(hours=1), 60.0) for r, item, ts, _ in rows[:2]]
+    confs = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        lake.merge_and_overwrite(spark, _curated_rows(spark, later), path)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    for month in ("07", "08"):
+        assert len(list((tmp_path / "lake" / "year=2025" / f"month={month}").glob("*.parquet"))) == 1
+    out = lake.read_lake(spark, path).collect()
+    assert len(out) == 40
+    assert sorted(r.price for r in out if r.receipt_number in ("r0", "r1")) == [60.0, 60.0]
+
+
+def test_merge_over_the_probe_cap_rewrites_its_months(spark, tmp_path, monkeypatch):
+    """A batch larger than the driver probe takes the distributed
+    rewrite, on a first write and into an existing lake alike."""
+    monkeypatch.setattr(lake, "_PROBE_ROWS", 1)
+    path = str(tmp_path / "lake")
+    first = [
+        ("r1", "Burger", dt.datetime(2025, 7, 21, 10, 0), 50.0),
+        ("r1", "Burger", dt.datetime(2025, 7, 21, 9, 0), 40.0),
+        ("r2", None, dt.datetime(2025, 8, 2, 11, 0), 0.0),
+    ]
+    lake.merge_and_overwrite(spark, _curated_rows(spark, first), path)
+    later = [
+        ("r1", "Burger", dt.datetime(2025, 7, 21, 12, 0), 55.0),
+        ("r2", None, dt.datetime(2025, 8, 2, 11, 0), 0.0),
+        ("r3", "Agua", dt.datetime(2025, 8, 3, 9, 0), 20.0),
+    ]
+    lake.merge_and_overwrite(spark, _curated_rows(spark, later), path)
+    out = {(r.receipt_number, r.item_name): r.price for r in lake.read_lake(spark, path).collect()}
+    assert out == {("r1", "Burger"): 55.0, ("r2", None): 0.0, ("r3", "Agua"): 20.0}
+    for month in ("07", "08"):
+        assert len(list((tmp_path / "lake" / "year=2025" / f"month={month}").glob("*.parquet"))) == 1
 
 def test_json_roundtrip(spark, tmp_path):
     from pos_api_pipeline_spark.schemas import RECEIPT_SCHEMA

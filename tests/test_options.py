@@ -3,13 +3,14 @@ a branch is reached both ways by real callers, or is named here with
 the reason it stays.
 
 A parameter picks a branch when an ``if`` statement or conditional
-expression in its function's body tests it. Where the test passes it
-on as an argument of a package function, it picks a branch only if
-that function's parameter does — by the same rule, or because the
-function returns a call that hands the parameter to a package
-function whose parameter picks a branch. The calls counted are every
-call to the function by name or attribute outside ``tests/``: the
-package, ``tools/``, ``bench.py``, ``perfbench/``, ``dags/`` and
+expression in its function's body tests it, or when the function
+returns a call that hands it to a package function whose parameter
+picks a branch. Where an ``if`` test passes it on as an argument of a
+package function, it picks a branch only if that function's parameter
+does, by the same rule. An ``isinstance(p, str)`` test normalizes a
+str-or-Column argument and picks no branch. The calls counted are
+every call to the function by name or attribute outside ``tests/``:
+the package, ``tools/``, ``bench.py``, ``perfbench/``, ``dags/`` and
 ``__spark_entry__.py``. A function that ``tests/test_public_surface.py``
 allow-lists has no caller outside the tests, so for it the calls in
 ``tests/`` count too. Three checks:
@@ -46,6 +47,7 @@ _SIZE = "size threshold tests shrink to reach the large-input arm"
 _ITEMS = "reference items fetch; the DAG has no items endpoint setting"
 _PIN = "per-call pin of the auto-probed collapse (ROADMAP standing decision)"
 _RANGE = "the branch only rejects out-of-range input"
+_CAP = "star cap: tests shrink it to trip it and pass None for the exact all-pairs reference"
 
 ALLOWED = {
     ("send_report_by_email", "attach_pdf"): _DELIVERY,
@@ -62,6 +64,9 @@ ALLOWED = {
     ("centroids_for_corpus", "target_cluster_size"): _SIZE,
     ("daily_incremental_run", "fetch_items_page"): _ITEMS,
     ("daily_incremental_run", "items_dim_path"): _ITEMS,
+    ("embedding_near_dup_pairs", "max_bucket"): _CAP,
+    ("simhash_near_dups", "max_bucket"): _CAP,
+    ("ngram_jaccard_pairs", "max_family"): _CAP,
 }
 
 # Defaults every counted call overrides, so only tests run the
@@ -142,33 +147,49 @@ def _handed_on(expr, fns, picks) -> dict[int, bool]:
     return out
 
 
+def _str_normalized(expr) -> set[int]:
+    """ids of the names ``expr`` tests with ``isinstance(name, str)``:
+    a str-or-Column (or str-or-list) normalization, whose arms build
+    the same value, not a choice between behaviours."""
+    return {
+        id(call.args[0])
+        for call in ast.walk(expr)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Name)
+        and call.func.id == "isinstance"
+        and len(call.args) == 2
+        and isinstance(call.args[0], ast.Name)
+        and isinstance(call.args[1], ast.Name)
+        and call.args[1].id == "str"
+    }
+
+
 def _branching(fns: dict[str, ast.FunctionDef]):
-    """``(tested, picks)``: ``tested(name)`` is the names an ``if`` test
-    in package function ``name`` picks a branch on; ``picks(name)``
-    adds the names it returns into a package call whose parameter picks
-    a branch (see the module docstring)."""
+    """``picks(name)``: the names package function ``name`` picks a
+    branch on, through an ``if`` test or a returned package call (see
+    the module docstring)."""
     memo: dict[str, set[str]] = {}
 
     def named(expr, default: bool) -> set[str]:
         handed = _handed_on(expr, fns, picks)
+        typed = _str_normalized(expr)
         return {
             n.id
             for n in ast.walk(expr)
-            if isinstance(n, ast.Name) and handed.get(id(n), default)
-        }
-
-    def tested(name: str) -> set[str]:
-        return {
-            n
-            for node in ast.walk(fns[name])
-            if isinstance(node, (ast.If, ast.IfExp))
-            for n in named(node.test, True)
+            if isinstance(n, ast.Name)
+            and id(n) not in typed
+            and handed.get(id(n), default)
         }
 
     def picks(name: str) -> set[str]:
         if name not in memo:
             memo[name] = set()  # a recursive call adds nothing
-            memo[name] = tested(name) | {
+            memo[name] = {
+                n
+                for node in ast.walk(fns[name])
+                if isinstance(node, (ast.If, ast.IfExp))
+                for n in named(node.test, True)
+            } | {
                 n
                 for node in ast.walk(fns[name])
                 if isinstance(node, ast.Return) and node.value is not None
@@ -176,7 +197,7 @@ def _branching(fns: dict[str, ast.FunctionDef]):
             }
         return memo[name]
 
-    return tested, picks
+    return picks
 
 
 def _string_arms(fn: ast.FunctionDef) -> set[tuple[str, str]]:
@@ -263,7 +284,7 @@ def _sets_non_default(arg, default) -> bool:
 
 def _unset_options(repo: pathlib.Path) -> set[tuple[str, str]]:
     fns, sig, calls = _scan(repo)
-    tested, _ = _branching(fns)
+    picks = _branching(fns)
     # set[(fn, param)] holds once any call sets it: a literal or an
     # expression does at once; a bare name of the caller's own
     # defaulted parameter does when that parameter is set (fixpoint).
@@ -293,7 +314,7 @@ def _unset_options(repo: pathlib.Path) -> set[tuple[str, str]]:
         (name, p)
         for name, fn in fns.items()
         if not name.startswith("_")
-        for p in sig[name][1].keys() & tested(name)
+        for p in sig[name][1].keys() & picks(name)
         if (name, p) not in is_set
     }
 
@@ -309,13 +330,13 @@ def _leaves_default(passed, p, default, owner_defaults) -> bool:
 
 def _always_overridden(repo: pathlib.Path) -> set[tuple[str, str]]:
     fns, sig, calls = _scan(repo)
-    tested, _ = _branching(fns)
+    picks = _branching(fns)
     return {
         (name, p)
         for name in fns
         if not name.startswith("_") and calls[name]
         for p, default in sig[name][1].items()
-        if p in tested(name)
+        if p in picks(name)
         and not any(
             _leaves_default(passed, p, default, od) for passed, _, od in calls[name]
         )

@@ -171,9 +171,9 @@ def _run_in_group(spark, group, fn):
 
 
 def test_daily_tick_job_and_task_budget(spark, tmp_path, api_pages):
-    """A tick lands its page as one partition and observes the
-    watermark and row count on the lake write: at most 4 jobs, one task
-    per stage over the batch, and no job at all for an empty page."""
+    """A tick computes its page once, as one partition, and observes
+    the watermark on that job: at most 4 jobs, one task per stage over
+    the batch, and no job at all for an empty page."""
     lake_path = str(tmp_path / "lake")
     state_file = str(tmp_path / "state.json")
 
@@ -199,6 +199,118 @@ def test_daily_tick_job_and_task_budget(spark, tmp_path, api_pages):
     status, jobs = _run_in_group(spark, "tick-merge", tick)
     assert status["rows"] == 4
     assert 1 <= len(jobs) <= 4, jobs
+
+
+def _lake_files(lake_path):
+    from pathlib import Path
+
+    return {
+        str(p.relative_to(lake_path)): p.read_bytes()
+        for p in Path(lake_path).rglob("*.parquet")
+    }
+
+
+def test_appending_tick_runs_3_jobs_and_keeps_stored_files(spark, tmp_path):
+    """New keys into months the lake already holds take the append
+    path: at most 3 jobs, and every stored file keeps its name and
+    bytes."""
+    lake_path = str(tmp_path / "lake")
+    state_file = str(tmp_path / "state.json")
+    _seed_state(state_file)
+    first = [
+        _receipt("3-1", "2025-07-21T16:00:00.000Z", "Mesa 2", ["Doble Chicken"]),
+        _receipt("3-2", "2025-08-02T12:00:00.000Z", "Para Llevar", ["Papas Fritas"]),
+    ]
+    later = [
+        _receipt("3-3", "2025-08-03T12:00:00.000Z", "Mesa 1",
+                 ["Doble Chicken", "Papas Fritas"]),
+        _receipt("3-4", "2025-08-04T13:00:00.000Z", "Para Llevar", []),
+    ]
+    pipelines.daily_incremental_run(
+        spark, lambda cursor: (first, None), lake_path, state_file
+    )
+    stored = _lake_files(lake_path)
+
+    status, jobs = _run_in_group(
+        spark, "tick-append",
+        lambda: pipelines.daily_incremental_run(
+            spark, lambda cursor: (later, None), lake_path, state_file
+        ),
+    )
+    assert status == {"rows": 3, "watermark": "2025-08-04T13:00:00.000Z"}
+    assert 1 <= len(jobs) <= 3, jobs
+    after = _lake_files(lake_path)
+    assert {p: after.get(p) for p in stored} == stored
+    assert len(after) == len(stored) + 1  # one new file, in month=08
+    from pos_api_pipeline_spark import lake
+
+    assert lake.read_lake(spark, lake_path).count() == 5
+
+
+def _executed_plan_nodes(spark, label, fn):
+    """(fn(), [(node name, node description)] of every SQL execution
+    fn ran), read from the SQL status store's executed plan graphs.
+    The executions are tagged with ``label`` as their job description;
+    a marker execution run after fn has finished once every earlier
+    listener event is in the store."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobDescription(label)
+    try:
+        result = fn()
+        sc.setJobDescription(label + "-marker")
+        spark.range(1).collect()
+    finally:
+        sc.setJobDescription(None)
+    store = spark._jsparkSession.sharedState().statusStore()
+    deadline = time.monotonic() + 30
+    while True:
+        execs = []
+        n = store.executionsCount()
+        it = store.executionsList(max(0, n - 50), 50).iterator()
+        while it.hasNext():
+            e = it.next()
+            execs.append((e.executionId(), e.description(), e.completionTime().isDefined()))
+        if any(d == label + "-marker" and done for _, d, done in execs):
+            break
+        assert time.monotonic() < deadline
+        time.sleep(0.05)
+    nodes = []
+    for eid, d, _ in execs:
+        if d != label:
+            continue
+        it = store.planGraph(eid).allNodes().iterator()
+        while it.hasNext():
+            n = it.next()
+            nodes.append((n.name(), n.desc()))
+    return result, nodes
+
+
+def test_tick_scans_and_explodes_the_page_once(spark, tmp_path):
+    """Over every job of a tick into an existing lake, the fetched page
+    is scanned once and ``run_transform``'s explode runs once: the
+    merge works on the curated page the tick computed."""
+    lake_path = str(tmp_path / "lake")
+    state_file = str(tmp_path / "state.json")
+    _seed_state(state_file)
+    first = [_receipt("4-1", "2025-07-21T16:00:00.000Z", "Mesa 2", ["Doble Chicken"])]
+    later = [_receipt("4-2", "2025-07-22T16:00:00.000Z", "Mesa 2",
+                      ["Doble Chicken", "Papas Fritas"])]
+    pipelines.daily_incremental_run(
+        spark, lambda cursor: (first, None), lake_path, state_file
+    )
+    status, nodes = _executed_plan_nodes(
+        spark, "tick-plans",
+        lambda: pipelines.daily_incremental_run(
+            spark, lambda cursor: (later, None), lake_path, state_file
+        ),
+    )
+    assert status["rows"] == 2
+    page_scans = [d for name, d in nodes if name == "LocalTableScan" and "line_items" in d]
+    explodes = [d for name, d in nodes if name == "Generate"]
+    assert len(page_scans) == 1, page_scans
+    assert len(explodes) == 1, explodes
 
 
 @pytest.fixture()
@@ -305,6 +417,94 @@ def test_month_end_tick_leaves_no_cached_frames(
     )
     assert statuses["run_cumulative_report_task"] == "success"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _august_pages():
+    """Three daily pages of new receipts, all in August 2025."""
+    return [
+        [_receipt(f"5-{day}-{k}", f"2025-08-{day:02d}T{15 + k}:00:00.000Z",
+                  order, items)
+         for k, (order, items) in enumerate([
+             ("Mesa 2", ["Doble Chicken", "Papas Fritas"]),
+             ("Para Llevar", ["Malteada Chocolate"]),
+             ("A domicilio", []),
+         ])]
+        for day in (10, 11, 12)
+    ]
+
+
+def _tick(spark, run_date, page, lake_path, state_file):
+    from pos_api_pipeline_spark.plans import dag
+
+    return dag.run_production_etl(
+        spark, run_date, lambda cursor: (page, None), lake_path, state_file
+    )
+
+
+def test_month_end_tick_compacts_the_closed_month(spark, tmp_path):
+    """Appending ticks leave one file per tick in August; the
+    first-of-September tick leaves it at one file with the same rows
+    and touches no other month."""
+    import datetime as dt
+
+    from pos_api_pipeline_spark import lake
+
+    lake_path = str(tmp_path / "lake")
+    state_file = str(tmp_path / "state.json")
+    _seed_state(state_file)
+    july = [_receipt("5-0", "2025-07-30T15:00:00.000Z", "Mesa 2", ["Doble Chicken"])]
+    _tick(spark, dt.date(2025, 7, 31), july, lake_path, state_file)
+    pages = _august_pages()
+    for day, page in zip((11, 12, 13), pages):
+        _tick(spark, dt.date(2025, 8, day), page, lake_path, state_file)
+    month = tmp_path / "lake" / "year=2025" / "month=08"
+    assert len(list(month.glob("*.parquet"))) == 3
+
+    def august_rows():
+        rows = lake.read_lake(spark, lake_path).filter(lake.in_months([(2025, 8)]))
+        return sorted(map(tuple, rows.collect()), key=repr)
+
+    before_rows = august_rows()
+    july_files = {p: b for p, b in _lake_files(lake_path).items() if "month=07" in p}
+    # The last page again: past the watermark, so the tick only compacts.
+    statuses = _tick(spark, dt.date(2025, 9, 1), pages[-1], lake_path, state_file)
+    assert statuses["etl_result"]["rows"] == 0
+    assert statuses["run_monthly_report_task"] == "success"
+    assert len(list(month.glob("*.parquet"))) == 1
+    assert august_rows() == before_rows
+    assert {p: b for p, b in _lake_files(lake_path).items() if "month=07" in p} == july_files
+
+
+def test_month_end_reports_match_a_rewrite_every_tick_lake(spark, tmp_path):
+    """The monthly and cumulative markdown over the appended-then-
+    compacted lake are byte-identical to those over a lake whose every
+    tick rewrote its month (each page redelivered once, so its keys
+    collide)."""
+    import datetime as dt
+
+    from pos_api_pipeline_spark.sources import state
+
+    pages = _august_pages()
+    md = {}
+    for kind in ("append", "rewrite"):
+        lake_path = str(tmp_path / kind / "lake")
+        state_file = str(tmp_path / kind / "state.json")
+        (tmp_path / kind).mkdir()
+        _seed_state(state_file)
+        for day, page in zip((11, 12, 13), pages):
+            wm = state.read_last_timestamp(state_file)
+            _tick(spark, dt.date(2025, 8, day), page, lake_path, state_file)
+            if kind == "rewrite":
+                # Redeliver the page: it collides and rewrites August
+                # into one file.
+                _seed_state(state_file, wm)
+                _tick(spark, dt.date(2025, 8, day), page, lake_path, state_file)
+                month = tmp_path / kind / "lake" / "year=2025" / "month=08"
+                assert len(list(month.glob("*.parquet"))) == 1
+        statuses = _tick(spark, dt.date(2025, 9, 1), pages[-1], lake_path, state_file)
+        md[kind] = (statuses["monthly_report_md"], statuses["cumulative_report_md"])
+    assert "# Monthly Report 2025-08" in md["append"][0]
+    assert md["append"] == md["rewrite"]
 
 
 def test_daily_run_tracks_items_scd2(spark, tmp_path, api_pages):

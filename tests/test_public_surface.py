@@ -42,7 +42,6 @@ ALLOWED = {
     "write_zordered": _LAKE,
     "write_with_bloom": _LAKE,
     "write_bucketed": _LAKE,
-    "compact_partitions": _LAKE,
     "write_orc": _LAKE,
     "write_sorted": _LAKE,
     "read_orc": _LAKE,

@@ -29,7 +29,7 @@ def test_compact_partitions(spark, tmp_path):
     lake.write_partitioned(df, path, mode="append")
     before = glob.glob(f"{path}/year=2025/month=07/*.parquet")
     assert len(before) >= 3
-    lake.compact_partitions(spark, path, files_per_partition=1)
+    lake.compact_partitions(spark, path, [(2025, 7)])
     after = glob.glob(f"{path}/year=2025/month=07/*.parquet")
     assert len(after) == 1
     assert lake.read_lake(spark, path).count() == 6  # rows preserved

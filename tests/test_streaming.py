@@ -212,6 +212,25 @@ def test_stream_receipts_to_lake(spark, tmp_path):
         out2 = lake.read_lake(spark, lake_path).collect()
         assert len(out2) == 1
         assert out2[0].time_slot == "11:00-12:00"
+
+        # Third micro-batch: a new receipt beside a second redelivery
+        # of the first; each line is stored once.
+        fresh = dict(receipts[0], receipt_number="1-2")
+        receipts[0]["receipt_date"] = "2025-07-21T18:30:00.000Z"
+        spark.createDataFrame([receipts[0], fresh], RECEIPT_SCHEMA).write.mode(
+            "append"
+        ).parquet(src)
+        q.processAllAvailable()
+        slots = {r.receipt_number: r.time_slot for r in lake.read_lake(spark, lake_path).collect()}
+        assert slots == {"1-1": "12:00-13:00", "1-2": "11:00-12:00"}
+
+        # Fourth: only a new receipt, which appends.
+        spark.createDataFrame(
+            [dict(fresh, receipt_number="1-3")], RECEIPT_SCHEMA
+        ).write.mode("append").parquet(src)
+        q.processAllAvailable()
+        out4 = lake.read_lake(spark, lake_path).collect()
+        assert sorted(r.receipt_number for r in out4) == ["1-1", "1-2", "1-3"]
     finally:
         q.stop()
 
