@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pos_api_pipeline_spark.llm.text import tokens
+
 # ---------------------------------------------------------------------------
 # Repetition statistics (the Gopher repetition filters, per document)
 # ---------------------------------------------------------------------------
@@ -27,9 +29,7 @@ from pyspark.sql import functions as F
 def _all_ngrams(text_col: str, n: int) -> tuple[Column, Column]:
     """(tokens, ALL n-gram occurrences — NOT distinct). Distinctness
     would erase exactly the signal repetition stats measure."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens(F.lower(F.col(text_col)))
     tc = F.col("_toks")
     k = F.size(tc) - (n - 1)
     grams = F.when(
@@ -621,9 +621,7 @@ def _positional_grams(
     after aggregation, when only a handful of rows remain."""
     from pos_api_pipeline_spark.llm.dedup import portable_hash64
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens(F.lower(F.col(text_col)))
     tc = F.col("_toks")
     n_grams_in_doc = F.size(tc) - (k - 1)
     grams = F.when(
@@ -798,10 +796,7 @@ def excise_token_spans(
     # of NULL is NULL — coalescing the token array to empty keeps the
     # "uniformly normalized" contract (cleaned='', n_tokens=0).
     toks = F.coalesce(
-        F.filter(
-            F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-        ),
-        F.array().cast("array<string>"),
+        tokens(F.lower(F.col(text_col))), F.array().cast("array<string>")
     )
     toked = docs.select(
         F.col(id_col).alias("id"), F.col(text_col)

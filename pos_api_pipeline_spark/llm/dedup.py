@@ -196,7 +196,7 @@ def _distinct_ratio(frame: DataFrame, text_col: str) -> float:
 
 def _resolve_collapse(
     df: DataFrame, text_col: str, collapse_exact: bool | None
-) -> bool:
+) -> tuple[bool, tuple[int, int] | None]:
     """Resolve a detector's ``collapse_exact=None`` (auto) via a
     distinct-ratio probe: count + HLL approx-distinct of the text
     column in a single aggregation (the 5 % default rsd is plenty
@@ -205,6 +205,14 @@ def _resolve_collapse(
     already-deduped frames skip the probe entirely) and keeps
     detector construction fully lazy — the auto probe is one bounded
     action at plan-build time.
+
+    Returns ``(collapse, (row_count, hll_distinct) | None)``: the
+    probe's FULL-corpus stats when an exact full pass contributed to
+    the decision. The stats are ``None`` for pinned decisions and
+    sampled-only probes — a file-subset's distinct count is only a
+    LOWER bound on the corpus's, so it can never certify a memory
+    guard away (see ``_cap_guard_skippable``). Full stats come from
+    the single-file/in-memory fallback or a gray-band escalation.
 
     .. versionchanged:: round 12
        The probe is SAMPLED by default: a deterministic stride-picked
@@ -219,20 +227,6 @@ def _resolve_collapse(
        Non-file-backed / single-file / non-parquet corpora fall back
        to the full probe. Decision agreement vs the full probe is
        measured per corpus in BENCH_collapse_probe_r12.json."""
-    return _resolve_collapse_stats(df, text_col, collapse_exact)[0]
-
-
-def _resolve_collapse_stats(
-    df: DataFrame, text_col: str, collapse_exact: bool | None
-) -> tuple[bool, tuple[int, int] | None]:
-    """``_resolve_collapse`` plus the probe's FULL-corpus stats when
-    an exact full pass contributed to the decision: returns
-    ``(collapse, (row_count, hll_distinct) | None)``. The stats are
-    ``None`` for pinned decisions and sampled-only probes — a
-    file-subset's distinct count is only a LOWER bound on the
-    corpus's, so it can never certify a memory guard away (see
-    ``_cap_guard_skippable``). Full stats come from the
-    single-file/in-memory fallback or a gray-band escalation."""
     if collapse_exact is not None:
         return collapse_exact, None
     # An in-memory frame lists no files; its semanticHash already
@@ -318,19 +312,32 @@ def _cap_guard_needed(
     return needed
 
 
-def _grouped_by_text(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(_txt, ids) — one row per DISTINCT text with its sorted replica
-    ids: the rule-7 exact-duplicate collapse surface shared by the
-    jaccard / minhash / simhash near-dup paths. sort_array, NOT
-    array_sort: array_sort carries an implicit lambda comparator and
-    lambda-bearing plans never canonicalize — with it, every consumer
-    of this aggregate plans its own full corpus scan instead of a
-    ReusedExchange."""
-    return (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
-        .groupBy("_txt")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+def _replica_groups(src: DataFrame, key: str) -> DataFrame:
+    """(id, key, ids) — one row per distinct ``key`` of an (id, key)
+    frame with its sorted replica ids and the smallest as its rep
+    ``id``: the rule-7 exact-duplicate collapse surface of every
+    collapsed near-dup arm, text (key = the text) and vector (key =
+    the vector) alike. sort_array, NOT array_sort: array_sort carries
+    an implicit lambda comparator and lambda-bearing plans never
+    canonicalize — with it, every consumer of this aggregate plans
+    its own full corpus scan instead of a ReusedExchange."""
+    grouped = src.groupBy(key).agg(F.sort_array(F.collect_list("id")).alias("ids"))
+    return grouped.select(F.element_at("ids", 1).alias("id"), key, "ids")
+
+
+def _distinct_text_source(
+    df: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, str, str, tuple[str, ...]]:
+    """``(src, text_col, id_col, carry)`` a text detector builds from
+    at distinct-text grain (at doc grain: ``(df, text_col, id_col,
+    ())``): the replica groups, with the family size ``grp`` carried
+    into every bucket member. ``src`` also feeds
+    ``_expand_rep_pairs``."""
+    groups = _replica_groups(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt")),
+        "_txt",
     )
+    return groups.withColumn("grp", F.size("ids")), "_txt", "id", ("grp",)
 
 
 def _expand_rep_pairs(
@@ -340,14 +347,14 @@ def _expand_rep_pairs(
     max_bucket: int | None,
 ) -> DataFrame:
     """Doc-grain expansion of distinct-text-grain pair rows (rule-7
-    collapse): join each side's sorted replica id list from
-    ``grouped`` (whose subplan is lambda-free, so the two mapping
-    joins reuse one exchange instead of rescanning the corpus), then
-    explode within-group i<j pairs for self pairs and (least,
-    greatest)-normalized cross products otherwise, carrying
-    ``value_cols`` through untouched — replicas share one text, so
-    every expanded pair inherits exactly the value the direct doc
-    pair would compute.
+    collapse): join each side's sorted replica id list from the
+    ``_replica_groups`` frame ``grouped`` (whose subplan is
+    lambda-free, so the two mapping joins reuse one exchange instead
+    of rescanning the corpus), then explode within-group i<j pairs
+    for self pairs and (least, greatest)-normalized cross products
+    otherwise, carrying ``value_cols`` through untouched — replicas
+    share one text, so every expanded pair inherits exactly the value
+    the direct doc pair would compute.
 
     Linear expansion guard (``max_bucket``, None disables): a self
     group over the cap emits star id pairs (min id vs each other
@@ -356,12 +363,8 @@ def _expand_rep_pairs(
     linear in replica-family size; connected components rejoin the
     family through the representative, exactly like the bucket-grain
     star cap."""
-    map_a = grouped.select(
-        F.element_at("ids", 1).alias("id_a"), F.col("ids").alias("_ids_a")
-    )
-    map_b = grouped.select(
-        F.element_at("ids", 1).alias("id_b"), F.col("ids").alias("_ids_b")
-    )
+    map_a = grouped.select(F.col("id").alias("id_a"), F.col("ids").alias("_ids_a"))
+    map_b = grouped.select(F.col("id").alias("id_b"), F.col("ids").alias("_ids_b"))
     # shuffle_hash-pinned mapping joins: Catalyst's STATIC size
     # estimate for the post-aggregate rep_pairs is a guess, and at
     # the sf10 probe it picked BuildLeft broadcast — an 8 GB
@@ -516,7 +519,7 @@ def with_shingles(
     hash VALUES must reproduce in the DuckDB oracle — MinHash
     signatures). ``keep_cols`` passes extra columns through untouched
     (e.g. a corpus label for cross-corpus sketches)."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = tokens(F.lower(F.col(text_col)))
     tc = F.col("_toks")
     k = F.size(tc) - (n - 1)
     hash_fn = portable_hash64 if portable else F.xxhash64
@@ -609,21 +612,26 @@ def ngram_jaccard_pairs(
     multiplies the quadratic bucket fan-out. Output is BIT-IDENTICAL
     to the uncollapsed form while no family trips ``max_family``
     (which only exists at collapsed grain — the uncollapsed
-    diagnostic form ignores it): the ``max_df`` cap weighs each bucket by
-    its expanded doc count (sum of group sizes), so cap decisions —
-    and therefore every pair's surviving-bucket ``shared`` count —
-    are unchanged; replica self-pairs are counted per surviving
-    bucket exactly like any other pair; and the groupBy(text) subplan
-    is lambda-free, so the id-expansion joins at the end reuse its
+    diagnostic form ignores it). Parity rests on three invariants:
+    (1) the ``max_df`` cap weighs each bucket by its expanded doc
+    count (sum of group sizes), so the same buckets are dropped —
+    and therefore every pair's surviving-bucket ``shared`` count is
+    unchanged; (2) a replica group contributes one self entry per
+    surviving bucket, so its pairs' ``shared`` counts the same
+    buckets the direct pairs would; (3) n_shingles of a group equals
+    every replica's (identical text). The groupBy(text) subplan is
+    lambda-free, so the id-expansion joins at the end reuse its
     exchange instead of rescanning the corpus.
     """
-    if _resolve_collapse(df, text_col, collapse_exact):
-        return _ngram_jaccard_pairs_collapsed(
-            df, text_col, id_col, n, threshold, max_df, max_family
-        )
-    shingled = with_shingles(df, text_col, id_col, n, hashed=True).withColumn(
-        "n_shingles", F.size("shingles")
+    src, text_col, id_col, carry = (
+        _distinct_text_source(df, text_col, id_col)
+        if _resolve_collapse(df, text_col, collapse_exact)[0]
+        else (df, text_col, id_col, ())
     )
+    collapsed = bool(carry)
+    shingled = with_shingles(
+        src, text_col, id_col, n, hashed=True, keep_cols=carry
+    ).withColumn("n_shingles", F.size("shingles"))
     # explode_outer + post-filter, NOT explode: inner explode makes
     # InferFiltersFromGenerate synthesize `size(arr)>0 AND isnotnull`
     # and push it to the scan, inlining the whole tokenize→shingle
@@ -631,80 +639,29 @@ def ngram_jaccard_pairs(
     # infers nothing; the null row from empty arrays is dropped by a
     # filter on the GENERATED column, which cannot be pushed down.
     exploded = shingled.select(
-        "id", "n_shingles", F.explode_outer("shingles").alias("shingle")
-    ).filter(F.col("shingle").isNotNull())
-    bucket_ok = (F.size("members") > 1) & (F.size("members") <= max_df)
-    buckets = (
-        exploded.groupBy("shingle")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id"), F.col("n_shingles")))
-            ).alias("members")
-        )
-        .filter(bucket_ok)
-    )
-    pairs = _exploded_member_pairs(buckets, fields=("n_shingles",))
-    shared = pairs.groupBy(
-        F.col("p.id_a").alias("id_a"),
-        F.col("p.id_b").alias("id_b"),
-        F.col("p.n_shingles_a").alias("na"),
-        F.col("p.n_shingles_b").alias("nb"),
-    ).agg(F.count(F.lit(1)).alias("shared"))
-    jaccard = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    return (
-        shared.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "shared", "jaccard")
-    )
-
-
-def _ngram_jaccard_pairs_collapsed(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    threshold: float,
-    max_df: int,
-    max_family: int | None,
-) -> DataFrame:
-    """Distinct-text-grain inverted index (see ngram_jaccard_pairs
-    ``collapse_exact``). Bit-parity with the doc-grain form rests on
-    three invariants: (1) the DF cap weighs buckets by expanded doc
-    count, so the same buckets are dropped; (2) a replica group
-    contributes one self entry per surviving bucket, so its pairs'
-    ``shared`` counts the same buckets the direct pairs would; (3)
-    n_shingles of a group equals every replica's (identical text)."""
-    grouped = _grouped_by_text(df, text_col, id_col)
-    reps = _reps_of(grouped)
-    shingled = with_shingles(
-        reps, "_txt", "_rid", n, hashed=True, keep_cols=("grp",)
-    ).withColumn("n_shingles", F.size("shingles"))
-    exploded = shingled.select(
-        "id", "grp", "n_shingles", F.explode_outer("shingles").alias("shingle")
+        "id", *carry, "n_shingles", F.explode_outer("shingles").alias("shingle")
     ).filter(F.col("shingle").isNotNull())
     m = F.col("members")
-    # Expanded doc count, NOT distinct-text count: cap decisions (and
-    # with them every pair's surviving-bucket shared count) must match
-    # the uncollapsed index exactly. Long accumulator: a universal
-    # boilerplate shingle can exceed 2^31 docs at the design scale,
-    # and an int wrap would silently pass (or fail) the cap.
-    weight = F.aggregate(
-        m, F.lit(0).cast("long"), lambda acc, g: acc + g["grp"]
+    # Collapsed: expanded doc count, NOT distinct-text count (parity
+    # invariant 1). Long accumulator: a universal boilerplate shingle
+    # can exceed 2^31 docs at the design scale, and an int wrap would
+    # silently pass (or fail) the cap.
+    weight = (
+        F.aggregate(m, F.lit(0).cast("long"), lambda acc, g: acc + g["grp"])
+        if collapsed
+        else F.size(m)
     )
-    bucket_ok = (weight > 1) & (weight <= max_df)
     buckets = (
         exploded.groupBy("shingle")
         .agg(
             F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("id"), F.col("n_shingles"), F.col("grp"))
-                )
+                F.collect_list(F.struct("id", "n_shingles", *carry))
             ).alias("members")
         )
-        .filter(bucket_ok)
+        .filter((weight > 1) & (weight <= max_df))
     )
     pairs = _exploded_member_pairs(
-        buckets, fields=("n_shingles",), include_selfs=True
+        buckets, fields=("n_shingles",), include_selfs=collapsed
     )
     shared = pairs.groupBy(
         F.col("p.id_a").alias("id_a"),
@@ -713,17 +670,17 @@ def _ngram_jaccard_pairs_collapsed(
         F.col("p.n_shingles_b").alias("nb"),
     ).agg(F.count(F.lit(1)).alias("shared"))
     jaccard = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    rep_pairs = (
+    out = (
         shared.withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "shared", "jaccard")
     )
-    # Expand rep pairs back to doc grain (mapping joins reuse
-    # grouped's exchange — the corpus is not rescanned), with the
-    # linear expansion guard bounding replica-family fan-out.
-    return _expand_rep_pairs(
-        rep_pairs, grouped, ["shared", "jaccard"], max_family
-    )
+    if not collapsed:
+        return out
+    # Expand rep pairs back to doc grain (mapping joins reuse the
+    # replica grouping's exchange — the corpus is not rescanned), with
+    # the linear expansion guard bounding replica-family fan-out.
+    return _expand_rep_pairs(out, src, ["shared", "jaccard"], max_family)
 
 
 def apply_pair_dedup(
@@ -1082,8 +1039,8 @@ def _exploded_member_pairs(
     chunk: int | None | str = "default",
 ) -> DataFrame:
     """One row per bucket pair — the ONE enumerator behind every
-    struct-member bucket-pair path (doc-grain jaccard/minhash/
-    simhash and the three collapsed detectors). ``buckets`` must
+    struct-member bucket-pair path (the jaccard/minhash/simhash
+    detectors at both grains and the embedding family). ``buckets`` must
     have a sorted ``members`` array of structs carrying ``id`` plus
     ``fields``; the result has a single ``p`` struct column with
     ``id_a``/``id_b`` plus ``{f}_a``/``{f}_b``.
@@ -1248,16 +1205,6 @@ def _exploded_member_pairs(
     )
 
 
-def _reps_of(grouped: DataFrame) -> DataFrame:
-    """(_rid, grp, _txt) representative frame of a ``_grouped_by_text``
-    result: smallest replica id, family size, the distinct text."""
-    return grouped.select(
-        F.element_at("ids", 1).alias("_rid"),
-        F.size("ids").alias("grp"),
-        F.col("_txt"),
-    )
-
-
 def lsh_bucket_stats(
     keyed: DataFrame,
     key_cols: list[str],
@@ -1318,11 +1265,16 @@ def minhash_lsh_candidates(
     and runs signaturing + banding + pair enumeration at
     distinct-text grain — crawled corpora are full of exact replicas,
     and each replica re-shingles, re-hashes (num_hashes affine maps
-    per shingle), and re-pairs identically. Replicas share one
-    signature, so every expanded doc pair inherits exactly the
-    ``n_matching_bands`` the direct pair would compute (within-group
-    pairs agree on all bands) — BIT-PARITY with the uncollapsed form
-    whenever no bucket trips ``max_bucket``. Under the cap, the
+    per shingle), and re-pairs identically. BIT-PARITY with the
+    uncollapsed form whenever no bucket trips ``max_bucket`` rests
+    on: (1) replicas share one signature, hence one band row per
+    band — a rep pair's bucket count IS every expanded pair's
+    n_matching_bands; (2) a replica group meets itself in all
+    ``bands`` of its buckets, so one self entry per bucket gives
+    within-group pairs the count ``bands`` the doc-grain form
+    produces; (3) a lone-group bucket (every replica of one text,
+    nothing else) still owes its within-group pairs, so singleton
+    buckets with grp > 1 are kept. Under the cap, the
     collapse counts DISTINCT texts per bucket (a mega-bucket of
     replicas collapses to one member instead of tripping it) and a
     linear guard applies at expansion grain instead — see
@@ -1331,77 +1283,44 @@ def minhash_lsh_candidates(
     ``collapse_exact=False`` to pin exact doc-grain cap semantics
     (e.g. the skew_hot_bucket_star_cap demonstration query).
     """
-    if bands_df is None and _resolve_collapse(df, text_col, collapse_exact):
-        return _minhash_lsh_candidates_collapsed(
-            df, text_col, id_col, n, num_hashes, bands, max_bucket
-        )
+    src, text_col, id_col, carry = (
+        _distinct_text_source(df, text_col, id_col)
+        if bands_df is None and _resolve_collapse(df, text_col, collapse_exact)[0]
+        else (df, text_col, id_col, ())
+    )
+    collapsed = bool(carry)
     banded = (
         bands_df
         if bands_df is not None
-        else minhash_bands(df, text_col, id_col, n, num_hashes, bands)
+        else minhash_bands(
+            src, text_col, id_col, n, num_hashes, bands, keep_cols=carry
+        )
     )
     # Bucket-pair form instead of a self-join on (band, bhash): the
     # lambda-free but multi-stage signature pipeline would be fully
     # recomputed for each join side (lambda-bearing subtrees upstream
     # defeat exchange reuse). One evaluation, two shuffles.
+    owes = F.size("members") > 1
+    if collapsed:
+        owes = owes | F.exists("members", lambda g: g["grp"] > 1)
     buckets = (
         banded.groupBy("band", "bhash")
         .agg(
-            F.array_sort(F.collect_list(F.struct("id"))).alias("members")
-        )
-        .filter(F.size("members") > 1)
-    )
-    pairs = _exploded_member_pairs(buckets, max_bucket=max_bucket)
-    return pairs.groupBy(
-        F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-    ).agg(F.count(F.lit(1)).alias("n_matching_bands"))
-
-
-def _minhash_lsh_candidates_collapsed(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    num_hashes: int,
-    bands: int,
-    max_bucket: int | None,
-) -> DataFrame:
-    """Distinct-text-grain LSH banding (see minhash_lsh_candidates
-    ``collapse_exact``). Parity with the doc-grain form rests on:
-    (1) replicas share one signature, hence one band row per band —
-    a rep pair's bucket count IS every expanded pair's
-    n_matching_bands; (2) a replica group meets itself in all
-    ``bands`` of its buckets, so one self entry per bucket gives
-    within-group pairs the count ``bands`` the doc-grain form
-    produces; (3) a lone-group bucket (every replica of one text,
-    nothing else) still owes its within-group pairs, so singleton
-    buckets with grp > 1 are kept."""
-    grouped = _grouped_by_text(df, text_col, id_col)
-    reps = _reps_of(grouped)
-    banded = minhash_bands(
-        reps, "_txt", "_rid", n, num_hashes, bands, keep_cols=("grp",)
-    )
-    buckets = (
-        banded.groupBy("band", "bhash")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("id", "grp"))).alias(
+            F.array_sort(F.collect_list(F.struct("id", *carry))).alias(
                 "members"
             )
         )
-        .filter(
-            (F.size("members") > 1)
-            | F.exists("members", lambda g: g["grp"] > 1)
-        )
+        .filter(owes)
     )
     pairs = _exploded_member_pairs(
-        buckets, max_bucket=max_bucket, include_selfs=True
+        buckets, max_bucket=max_bucket, include_selfs=collapsed
     )
-    rep_pairs = pairs.groupBy(
+    out = pairs.groupBy(
         F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
     ).agg(F.count(F.lit(1)).alias("n_matching_bands"))
-    return _expand_rep_pairs(
-        rep_pairs, grouped, ["n_matching_bands"], max_bucket
-    )
+    if not collapsed:
+        return out
+    return _expand_rep_pairs(out, src, ["n_matching_bands"], max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -1600,12 +1519,16 @@ def simhash_near_dups(
     collapses). ``True`` groups byte-identical texts FIRST
     and fingerprints + pairs at distinct-text grain (rule-7 collapse,
     see minhash_lsh_candidates): replicas share one fingerprint, so
-    every expanded doc pair inherits exactly the hamming distance the
-    direct pair would compute (within-group pairs are hamming 0) —
-    BIT-PARITY with the uncollapsed form whenever no block bucket
-    trips ``max_bucket``. Under the cap, the collapse counts DISTINCT
-    texts per bucket and applies the linear guard at expansion grain
-    instead (``_expand_rep_pairs``).
+    the candidate set and every expanded doc pair's hamming distance
+    are exactly what the direct pairs would compute — BIT-PARITY with
+    the uncollapsed form whenever no block bucket trips
+    ``max_bucket``. Within-group pairs (hamming 0, always ≤
+    max_hamming) come from one self entry per bucket, deduped with
+    the cross candidates before the hamming check; lone-group buckets
+    with grp > 1 are kept for exactly those self entries. Under the
+    cap, the collapse counts DISTINCT texts per bucket and applies
+    the linear guard at expansion grain instead
+    (``_expand_rep_pairs``).
 
     ``blocks`` trades recall against sieve strength: the chance two
     RANDOM fingerprints collide on some block is
@@ -1620,23 +1543,30 @@ def simhash_near_dups(
     each other member) instead of all pairs — see
     minhash_lsh_candidates; identical docs (hamming 0) still pair via
     the representative. ``max_bucket=None`` restores all-pairs."""
-    if _resolve_collapse(df, text_col, collapse_exact):
-        return _simhash_near_dups_collapsed(
-            df, text_col, id_col, max_hamming, blocks, max_bucket
-        )
-    base = simhash_table(df, text_col, id_col)
-    blocked = _simhash_blocked(base, blocks)
+    src, text_col, id_col, carry = (
+        _distinct_text_source(df, text_col, id_col)
+        if _resolve_collapse(df, text_col, collapse_exact)[0]
+        else (df, text_col, id_col, ())
+    )
+    collapsed = bool(carry)
+    base = simhash_table(src, text_col, id_col, keep_cols=carry)
+    blocked = _simhash_blocked(base, blocks, carry=carry)
     # Bucket-pair form (see minhash_lsh_candidates): the simhash table
     # behind both sides of the would-be self-join is a full token
     # explode + 64-sum aggregate — recomputing it per side doubles the
     # dominant cost. Carrying sh into the bucket also removes any need
     # to join fingerprints back for the hamming check.
+    owes = F.size("members") > 1
+    if collapsed:
+        owes = owes | F.exists("members", lambda g: g["grp"] > 1)
     buckets = (
         blocked.groupBy("blk", "bval")
         .agg(
-            F.array_sort(F.collect_list(F.struct("id", "sh"))).alias("members")
+            F.array_sort(
+                F.collect_list(F.struct("id", "sh", *carry))
+            ).alias("members")
         )
-        .filter(F.size("members") > 1)
+        .filter(owes)
     )
     # Hamming verification runs INSIDE the bucket pair array (see
     # _exploded_member_pairs pair_filter): only true near-dups reach
@@ -1646,6 +1576,7 @@ def simhash_near_dups(
             buckets,
             fields=("sh",),
             max_bucket=max_bucket,
+            include_selfs=collapsed,
             pair_filter=lambda p: F.bit_count(
                 p["sh_a"].bitwiseXOR(p["sh_b"])
             )
@@ -1655,61 +1586,10 @@ def simhash_near_dups(
         .distinct()
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.withColumn("hamming", hamming).select(
-        "id_a", "id_b", "hamming"
-    )
-
-
-def _simhash_near_dups_collapsed(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int,
-    blocks: int,
-    max_bucket: int | None,
-) -> DataFrame:
-    """Distinct-text-grain SimHash blocking (see simhash_near_dups
-    ``collapse_exact``). Replicas share one fingerprint, so the
-    candidate set and hamming distances at rep grain expand verbatim
-    to doc grain; within-group pairs (hamming 0, always ≤
-    max_hamming) come from one self entry per bucket, deduped with
-    the cross candidates before the hamming check. Lone-group buckets
-    with grp > 1 are kept for exactly those self entries."""
-    grouped = _grouped_by_text(df, text_col, id_col)
-    reps = _reps_of(grouped)
-    base = simhash_table(reps, "_txt", "_rid", keep_cols=("grp",))
-    blocked = _simhash_blocked(base, blocks, carry=("grp",))
-    buckets = (
-        blocked.groupBy("blk", "bval")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("id", "sh", "grp"))
-            ).alias("members")
-        )
-        .filter(
-            (F.size("members") > 1)
-            | F.exists("members", lambda g: g["grp"] > 1)
-        )
-    )
-    cand = (
-        _exploded_member_pairs(
-            buckets,
-            fields=("sh",),
-            max_bucket=max_bucket,
-            include_selfs=True,
-            pair_filter=lambda p: F.bit_count(
-                p["sh_a"].bitwiseXOR(p["sh_b"])
-            )
-            <= max_hamming,
-        )
-        .select("p.id_a", "p.id_b", "p.sh_a", "p.sh_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    rep_pairs = cand.withColumn("hamming", hamming).select(
-        "id_a", "id_b", "hamming"
-    )
-    return _expand_rep_pairs(rep_pairs, grouped, ["hamming"], max_bucket)
+    out = cand.withColumn("hamming", hamming).select("id_a", "id_b", "hamming")
+    if not collapsed:
+        return out
+    return _expand_rep_pairs(out, src, ["hamming"], max_bucket)
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,8 @@ from pos_api_pipeline_spark.llm.dedup import (
     _exploded_id_pairs,
     _exploded_member_pairs,
     _cap_guard_needed,
-    _resolve_collapse_stats,
+    _replica_groups,
+    _resolve_collapse,
 )
 from pos_api_pipeline_spark.session import local_frame
 
@@ -528,15 +529,6 @@ def _grp_self_entries(m: Column) -> Column:
     )
 
 
-def _replica_groups(src: DataFrame) -> DataFrame:
-    """One row per distinct vector of ``src`` (id, vec): its replica
-    ids sorted (``ids``) and the smallest as its rep ``id``, the
-    collapsed arms' unit of work. ``sort_array``, not ``array_sort``:
-    a lambda-bearing sort would block exchange reuse."""
-    grouped = src.groupBy("vec").agg(F.sort_array(F.collect_list("id")).alias("ids"))
-    return grouped.select(F.element_at("ids", 1).alias("id"), "vec", "ids")
-
-
 def _member_buckets(src: DataFrame, keys: list[str], collapsed: bool) -> DataFrame:
     """``src`` rows grouped by ``keys`` into sorted (id, vec, nrm[,
     ids]) member arrays, the norm evaluated row-side; only buckets that
@@ -659,7 +651,7 @@ def embedding_near_dup_pairs(
     over the cap emits star id pairs, and a cross-group pair whose
     id fan-out exceeds the cap emits the two stars (a0 x B) U
     (A x b0) instead of the full A x B product."""
-    collapse_exact, probe_stats = _resolve_collapse_stats(
+    collapse_exact, probe_stats = _resolve_collapse(
         df, vec_col, collapse_exact
     )
     # The probe's full-corpus pass (when one ran) can prove the
@@ -746,7 +738,9 @@ def embedding_near_dup_pairs(
         if big_pairs is not None:
             pairs = pairs.unionByName(big_pairs)
         return pairs.distinct()
-    v = _multi_table_buckets(_replica_groups(base), "vec", dim, n_planes, n_tables)
+    v = _multi_table_buckets(
+        _replica_groups(base, "vec"), "vec", dim, n_planes, n_tables
+    )
     # Over-cap buckets (counting DISTINCT vector groups) take the
     # same ROW-GRAIN star guard as the uncollapsed arm (r12): a
     # mega-bucket of distinct-but-near-identical groups would build
@@ -920,7 +914,7 @@ def semantic_dedup(
        member); audit cap engagement as before with
        ``dedup.lsh_bucket_stats``.
     """
-    collapse_exact, probe_stats = _resolve_collapse_stats(
+    collapse_exact, probe_stats = _resolve_collapse(
         corpus, vec_col, collapse_exact
     )
     # As in embedding_near_dup_pairs: when the probe's full-corpus
@@ -989,7 +983,9 @@ def semantic_dedup(
             "centroid_id",
             (F.col("_dup").isNull() & ~mega_drop).alias("kept"),
         )
-    assigned = assign_nearest_centroids(_replica_groups(v), cents, "id", "vec", 1)
+    assigned = assign_nearest_centroids(
+        _replica_groups(v, "vec"), cents, "id", "vec", 1
+    )
     # Over-cap clusters at distinct-GROUP grain take the same
     # ROW-GRAIN guard as every other vector arm (r12): the star
     # arm's per-family decision (self-cosine drop + lim vs the

@@ -79,12 +79,10 @@ def _gram_cover_spans(
     occurrence of one boilerplate gram in a single task), one
     per-doc islands window. Work is O(n·L) hashing + O(n)-row
     shuffles, independent of document length m."""
-    from pos_api_pipeline_spark.llm.text import spread_small_scan
+    from pos_api_pipeline_spark.llm.text import spread_small_scan, tokens
 
     L = min_len
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens(F.lower(F.col(text_col)))
     # r13: gram hashing is scan-stage work — spread low-split inputs
     # (no-op at scale; see text.spread_small_scan).
     toked = spread_small_scan(

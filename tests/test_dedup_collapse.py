@@ -1,16 +1,18 @@
-"""Rule-7 exact-duplicate collapse for the MinHash-LSH and SimHash
-near-dup paths (llm/dedup.py): signatures are computed once per
-DISTINCT text and pairs expand back to doc grain at the very end.
-Contract mirrors the r8 embedding collapse: BIT-PARITY with the
-uncollapsed form whenever no bucket trips max_bucket; under the cap,
-bucket sizes count distinct texts and a linear guard applies at
-expansion grain instead.
+"""Rule-7 exact-duplicate collapse for the n-gram Jaccard, MinHash-LSH
+and SimHash near-dup detectors (llm/dedup.py): shingles and signatures
+are computed once per DISTINCT text and pairs expand back to doc grain
+at the very end. Contract mirrors the r8 embedding collapse:
+BIT-PARITY with the uncollapsed form whenever no bucket trips
+max_bucket (Jaccard: no family trips max_family, and the max_df cap
+counts expanded docs); under the cap, bucket sizes count distinct
+texts and a linear guard applies at expansion grain instead.
 
 Reference behavior: near-dedup over the documents table, same family
 as reference etl/transform.py's drop_duplicates (exact) generalized
 to the standard LLM-corpus near-dup stack.
 """
 
+import collections
 import random
 
 import pytest
@@ -19,7 +21,7 @@ from pyspark.sql import functions as F
 from pos_api_pipeline_spark.llm import dedup as D
 
 
-def _replica_corpus(spark, seed=7, n_groups=12, max_grp=5):
+def _replica_rows(seed=7, n_groups=12, max_grp=5):
     """Mixed corpus: replica groups of varying size over a small text
     space (so near-dup buckets collide across groups too), plus a few
     sub-3-token docs that drop out of shingling."""
@@ -38,34 +40,78 @@ def _replica_corpus(spark, seed=7, n_groups=12, max_grp=5):
     # shuffled ids so group mins aren't contiguous
     ids = [r[0] for r in rows]
     rng.shuffle(ids)
-    rows = [(ids[k], rows[k][1]) for k in range(len(rows))]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return [(ids[k], rows[k][1]) for k in range(len(rows))]
+
+
+def _replica_corpus(spark, seed=7):
+    return spark.createDataFrame(_replica_rows(seed), "doc_id long, text string")
 
 
 def _key_rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-@pytest.mark.parametrize("max_bucket", [None, D.DEFAULT_MAX_BUCKET])
-def test_minhash_collapse_bit_parity_uncapped(spark, max_bucket):
-    docs = _replica_corpus(spark)
-    a = D.minhash_lsh_candidates(docs, max_bucket=max_bucket)
-    b = D.minhash_lsh_candidates(
-        docs, max_bucket=max_bucket, collapse_exact=False
-    )
-    cols = ["id_a", "id_b", "n_matching_bands"]
-    assert _key_rows(a, cols) == _key_rows(b, cols)
+#: detector -> (fixture seed, result columns, run(docs, cap, collapse)).
+#: ``jaccard_max_df`` caps buckets at 8 docs: on the seed-7 fixture
+#: the "fox variant 0" bucket holds 9 docs but 3 distinct texts, so the
+#: two grains agree only if the collapsed DF cap weighs each bucket by
+#: its expanded doc count.
+_PARITY_CASES = {
+    "jaccard": (
+        7,
+        ["id_a", "id_b", "shared", "jaccard"],
+        lambda docs, cap, c: D.ngram_jaccard_pairs(
+            docs, threshold=0.2, max_family=cap, collapse_exact=c
+        ),
+    ),
+    "jaccard_max_df": (
+        7,
+        ["id_a", "id_b", "shared", "jaccard"],
+        lambda docs, cap, c: D.ngram_jaccard_pairs(
+            docs, threshold=0.1, max_df=8, max_family=cap, collapse_exact=c
+        ),
+    ),
+    "minhash": (
+        7,
+        ["id_a", "id_b", "n_matching_bands"],
+        lambda docs, cap, c: D.minhash_lsh_candidates(
+            docs, max_bucket=cap, collapse_exact=c
+        ),
+    ),
+    "simhash": (
+        11,
+        ["id_a", "id_b", "hamming"],
+        lambda docs, cap, c: D.simhash_near_dups(
+            docs, max_hamming=16, max_bucket=cap, collapse_exact=c
+        ),
+    ),
+}
 
 
 @pytest.mark.parametrize("max_bucket", [None, D.DEFAULT_MAX_BUCKET])
-def test_simhash_collapse_bit_parity_uncapped(spark, max_bucket):
-    docs = _replica_corpus(spark, seed=11)
-    a = D.simhash_near_dups(docs, max_hamming=16, max_bucket=max_bucket)
-    b = D.simhash_near_dups(
-        docs, max_hamming=16, max_bucket=max_bucket, collapse_exact=False
-    )
-    cols = ["id_a", "id_b", "hamming"]
+@pytest.mark.parametrize("detector", sorted(_PARITY_CASES))
+def test_collapse_bit_parity_uncapped(spark, detector, max_bucket):
+    """Below the caps the distinct-text grain returns exactly the
+    doc-grain pairs and values, for every text detector."""
+    seed, cols, run = _PARITY_CASES[detector]
+    docs = _replica_corpus(spark, seed=seed)
+    a = run(docs, max_bucket, True)
+    b = run(docs, max_bucket, False)
     assert _key_rows(a, cols) == _key_rows(b, cols)
+    assert _key_rows(b, cols), "vacuous parity: no pairs"
+
+
+def test_jaccard_max_df_case_caps_by_doc_count():
+    """The jaccard_max_df parity case checks the DF-cap weight only if
+    some bucket is over ``max_df`` by doc count and under it by
+    distinct-text count."""
+    docs, texts = collections.Counter(), collections.defaultdict(set)
+    for _, text in _replica_rows(7):
+        toks = text.split()
+        for sh in {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}:
+            docs[sh] += 1
+            texts[sh].add(text)
+    assert any(len(texts[sh]) <= 8 < docs[sh] for sh in docs)
 
 
 def test_minhash_collapse_within_group_counts_all_bands(spark):
@@ -221,9 +267,19 @@ def test_pair_chunk_windows_bit_parity(spark, monkeypatch):
                     docs, collapse_exact=False
                 ).collect())
             ),
+            "mh_c": sorted(
+                map(tuple, D.minhash_lsh_candidates(
+                    docs, collapse_exact=True
+                ).collect())
+            ),
             "sh": sorted(
                 map(tuple, D.simhash_near_dups(
                     docs, max_hamming=20, collapse_exact=False
+                ).collect())
+            ),
+            "sh_c": sorted(
+                map(tuple, D.simhash_near_dups(
+                    docs, max_hamming=20, collapse_exact=True
                 ).collect())
             ),
             "star": sorted(
@@ -292,14 +348,14 @@ def test_resolve_collapse_pins_and_cache_bounds(spark, monkeypatch):
         "doc_id long, text string",
     )
     D._distinct_ratio_cache.clear()
-    assert D._resolve_collapse(docs, "text", None) is True  # replica-dense
+    assert D._resolve_collapse(docs, "text", None)[0] is True  # replica-dense
     key = next(iter(D._distinct_ratio_cache))
     assert key[0] == spark.sparkContext.applicationId
 
     # Explicit pins always win, with zero probe state.
     D._distinct_ratio_cache.clear()
-    assert D._resolve_collapse(docs, "text", True) is True
-    assert D._resolve_collapse(docs, "text", False) is False
+    assert D._resolve_collapse(docs, "text", True)[0] is True
+    assert D._resolve_collapse(docs, "text", False)[0] is False
     assert not D._distinct_ratio_cache
 
     # FIFO bound: the cache never exceeds the configured max.
@@ -351,7 +407,7 @@ def test_sampled_probe_decisions_and_fallbacks(spark, tmp_path):
     assert sampled is not None
     assert len(sampled.inputFiles()) < len(rep_df.inputFiles())
     D._distinct_ratio_cache.clear()
-    assert D._resolve_collapse(rep_df, "text", None) is True
+    assert D._resolve_collapse(rep_df, "text", None)[0] is True
 
     # All-distinct corpus over 16 files → uncollapsed, and the
     # sampled ratio (~1.0) sits above the escalation band so no
@@ -364,7 +420,7 @@ def test_sampled_probe_decisions_and_fallbacks(spark, tmp_path):
     dist.repartition(16).write.parquet(dist_path)
     dist_df = spark.read.parquet(dist_path)
     D._distinct_ratio_cache.clear()
-    assert D._resolve_collapse(dist_df, "text", None) is False
+    assert D._resolve_collapse(dist_df, "text", None)[0] is False
     assert D._distinct_ratio(dist_df, "text") > D.COLLAPSE_AUTO_MAX_DISTINCT
 
     # Fallbacks: in-memory frame (no input files) and single-file
@@ -376,7 +432,7 @@ def test_sampled_probe_decisions_and_fallbacks(spark, tmp_path):
     assert len(one_df.inputFiles()) < D.COLLAPSE_PROBE_MIN_FILES
     assert D._sampled_probe_frame(one_df, "text", one_df.inputFiles()) is None
     D._distinct_ratio_cache.clear()
-    assert D._resolve_collapse(one_df, "text", None) is True
+    assert D._resolve_collapse(one_df, "text", None)[0] is True
 
     # A derived text column that doesn't exist in the raw files
     # falls back to the full probe rather than probing the wrong
@@ -387,7 +443,7 @@ def test_sampled_probe_decisions_and_fallbacks(spark, tmp_path):
         is None
     )
     D._distinct_ratio_cache.clear()
-    assert D._resolve_collapse(derived, "norm_text", None) is True
+    assert D._resolve_collapse(derived, "norm_text", None)[0] is True
 
 
 def test_cap_guard_skippable_bounds():
@@ -430,16 +486,16 @@ def test_probe_full_stats_certify_guard_skip(spark):
         "vec_id long, embedding array<double>",
     )
     D._distinct_ratio_cache.clear()
-    collapse, stats = D._resolve_collapse_stats(emb, "embedding", None)
+    collapse, stats = D._resolve_collapse(emb, "embedding", None)
     assert collapse is True
     assert stats is not None and stats[0] == 120 and 30 <= stats[1] <= 50
     # Cached retrieval returns the same stats.
-    assert D._resolve_collapse_stats(emb, "embedding", None) == (
+    assert D._resolve_collapse(emb, "embedding", None) == (
         collapse,
         stats,
     )
     # Pinned: no probe, no stats.
-    assert D._resolve_collapse_stats(emb, "embedding", True) == (True, None)
+    assert D._resolve_collapse(emb, "embedding", True) == (True, None)
 
     def plan(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
@@ -485,7 +541,7 @@ def test_probe_cache_reprobes_files_appended_under_same_path(
     write(path, [(i, f"first batch doc {i}") for i in range(50)])
     first = spark.read.parquet(path)
     D._distinct_ratio_cache.clear()
-    collapse, stats = D._resolve_collapse_stats(first, "text", None)
+    collapse, stats = D._resolve_collapse(first, "text", None)
     assert (collapse, stats[0]) == (False, 50)
     assert D._cap_guard_skippable(stats, 100, collapsed=False) is True
 
@@ -496,13 +552,13 @@ def test_probe_cache_reprobes_files_appended_under_same_path(
         first._jdf.queryExecution().analyzed().semanticHash()
         == grown._jdf.queryExecution().analyzed().semanticHash()
     )
-    collapse, stats = D._resolve_collapse_stats(grown, "text", None)
+    collapse, stats = D._resolve_collapse(grown, "text", None)
     assert (collapse, stats[0]) == (False, 550)
     assert D._cap_guard_skippable(stats, 100, collapsed=False) is False
 
     # A replica-dense append flips the collapse decision itself.
     dense = str(tmp_path / "dense")
     write(dense, [(i, f"distinct doc {i}") for i in range(50)])
-    assert D._resolve_collapse(spark.read.parquet(dense), "text", None) is False
+    assert D._resolve_collapse(spark.read.parquet(dense), "text", None)[0] is False
     write(dense, [(50 + i, "boilerplate footer") for i in range(500)], "append")
-    assert D._resolve_collapse(spark.read.parquet(dense), "text", None) is True
+    assert D._resolve_collapse(spark.read.parquet(dense), "text", None)[0] is True
